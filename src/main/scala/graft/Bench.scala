@@ -28,12 +28,7 @@ object Bench {
     // surface, UTC) come from the shared [[SessionRecipe]] — the same
     // recipe the production faces (cli) and Verify run, so the bench
     // measures the engine as deployed (r16 verdict #4).
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionRecipe.local(cpus, "WARN")
     // warm the JVM/session so the first measured query isn't charged for init
     spark.range(1000000).selectExpr("sum(id)").collect()
 

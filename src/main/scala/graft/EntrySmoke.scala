@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local replica of the driver's smoke check: SparkEntry.entry rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SessionRecipe.workload(SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionRecipe.local("4", "ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(5)

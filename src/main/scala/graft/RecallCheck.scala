@@ -67,18 +67,10 @@ object RecallCheck {
     (recalls, truth.size)
   }
 
-  private def session(): SparkSession = {
-    val s = SessionRecipe.workload(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--artifact")) { artifact(args(1), args.drop(2).toIndexedSeq); return }
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = session()
+    val spark = SessionRecipe.local("8", "ERROR")
     val e = graft.queries.Queries.t(spark, dir, "embeddings")
     val k = 3
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -115,7 +107,7 @@ object RecallCheck {
 
   /** Write the per-round recall artifact over the given SF dirs. */
   def artifact(outPath: String, dirs: Seq[String]): Unit = {
-    val spark = session()
+    val spark = SessionRecipe.local("8", "ERROR")
     val k = 3
     val perSf = dirs.map { dir =>
       val (h, n) = headline(spark, dir, k)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Clusters, Dedup, Layout, Similarity}
 
@@ -110,12 +110,7 @@ object ScaleProbe {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outJson = args.lift(2).getOrElse("SCALE_PROBE.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionRecipe.local(cpus, "WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // session warmup
 
     val work = s"/tmp/graft_scale_probe_${factor}x"
@@ -447,12 +442,7 @@ object ScaleProbeCc {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outJson = args.lift(1).getOrElse("SCALE_PROBE_CC.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionRecipe.local(cpus, "WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val work = "/tmp/graft_scale_probe_cc"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * The engine's shared session recipe: workload-constant Spark confs
  * every graft session wants, applied by ALL session-building mains
- * (Bench, Verify, the cli faces, the probe tools) so the production
+ * (Bench, Verify, the cli faces, the Profiler) so the production
  * faces and the benchmark measure the same engine (r16 verdict #4:
  * the codegen-cache conf lived only in Bench and the probe mains,
  * leaving SparkEntry/Verify on the 100-entry default).
@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSession
  *   Env-overridable via SPARK_GRAFT_CODEGEN_CACHE.
  * - session timezone UTC: the engine's documented timestamp contract.
  *
- * Deliberately NOT here: master, shuffle partitions, UI — those are
- * per-face choices (the bench's core count is a driver-contract input;
- * the cli respects SPARK_MASTER).
+ * Master, shuffle partitions and UI are per-face choices: the
+ * in-process tools take [[local]] (the bench's core count comes from
+ * SPARK_GRAFT_CPUS), the cli faces take [[cli]] (SPARK_MASTER).
  */
 object SessionRecipe {
   def codegenCacheEntries: String =
@@ -31,4 +31,30 @@ object SessionRecipe {
   def workload(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
     .config("spark.sql.session.timeZone", "UTC")
+
+  /** Bench-shaped in-process session: `local[cores]`, one shuffle
+    * partition per core, UI off. */
+  def local(cores: String, logLevel: String): SparkSession = {
+    val spark = workload(SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** The cli faces' session: master from SPARK_MASTER (default
+    * `local[*]`), shuffle partitions from SPARK_SHUFFLE_PARTITIONS
+    * (default 32). */
+  def cli(appName: String, logLevel: String): SparkSession = {
+    val spark = workload(SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32")))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

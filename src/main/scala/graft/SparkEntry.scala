@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import org.apache.spark.sql.functions._
 import graft.queries.Queries
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,12 +9,7 @@ object Verify {
     // Shared workload confs (SessionRecipe): Verify compiles all ~357
     // plans — on the default 100-entry codegen class cache it recompiled
     // nearly every generated unit it ever revisited (r16 verdict #4).
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionRecipe.local(cpus, "WARN")
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter (driver never sets it).
     val only = sys.env.get("SPARK_GRAFT_ONLY")

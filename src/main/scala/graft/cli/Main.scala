@@ -25,13 +25,7 @@ object Main {
     val args = parse(argv.toList, Args())
     if (args.help || args.config.isEmpty) { println(usage); return }
 
-    val spark = graft.SessionRecipe.workload(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(sparkLevel(args.logLevel))
+    val spark = graft.SessionRecipe.cli("graft-etl", sparkLevel(args.logLevel))
 
     try run(spark, args)
     catch {
@@ -62,7 +56,8 @@ object Main {
         conn = db.getOrElse(Util.expandEnv(pb0.source.conn))),
       destination = pb0.destination.copy(
         file = Util.expandEnv(args.output.getOrElse(pb0.destination.file)),
-        conn = db.getOrElse(Util.expandEnv(pb0.destination.conn))))
+        conn = db.getOrElse(Util.expandEnv(pb0.destination.conn))),
+      analytics = pb0.analytics.map(st => st.copy(params = Util.expandPathParams(st.params))))
 
     val compiled = PipelineCompiler.compile(spark, pb, EngineConfig(fipsMode = args.fips))
 
@@ -184,6 +179,26 @@ object Util {
     })
     pct.replaceAllIn(afterDollar, m =>
       java.util.regex.Matcher.quoteReplacement(sys.env.getOrElse(m.group(1), "")))
+  }
+
+  /** Analytics params that name files or directories (incr_neardup
+    * stateDir, join file, decontaminate refFile, ...). Only these are
+    * env-expanded: SQL and regex params keep their text, where
+    * `'%x%'` is a LIKE pattern, not a variable. */
+  private val pathParams = Set("file", "refFile", "stateDir", "modelDir", "trainPath")
+
+  /** [[expandEnv]] on the path params of one analytics stage, nested
+    * ones (expect's ref_integrity rules) included. */
+  def expandPathParams(params: Map[String, Any]): Map[String, Any] = {
+    import scala.jdk.CollectionConverters._
+    def go(key: String, v: Any): Any = v match {
+      case s: String if pathParams(key) => expandEnv(s)
+      case m: java.util.Map[_, _] =>
+        m.asScala.map { case (k, x) => k -> go(k.toString, x) }.asJava
+      case l: java.util.List[_] => l.asScala.map(go(key, _)).asJava
+      case _ => v
+    }
+    params.map { case (k, v) => k -> go(k, v) }
   }
 
   /** Mask the password in connection-string URIs (util.go:79-112). */

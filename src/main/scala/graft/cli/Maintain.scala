@@ -102,13 +102,7 @@ object Maintain {
     if (argv.isEmpty || argv(0) == "-help" || argv(0) == "--help") {
       println(usage); return
     }
-    val spark = graft.SessionRecipe.workload(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-maintain")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionRecipe.cli("graft-maintain", "WARN")
     val rc =
       try run(spark, argv(0), parseOpts(argv.drop(1).toList))
       finally spark.stop()

@@ -1,6 +1,6 @@
 package graft.compile
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.{AnalyticsStage, SourceConfig}
 import graft.ops.{Clusters, Corpus, Dedup, Layout, Resample, TextAnalysis, Urls}

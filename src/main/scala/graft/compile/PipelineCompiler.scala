@@ -115,11 +115,11 @@ object PipelineCompiler {
           df = df.withColumn(rule.target, srcCol)
         case Some(n) =>
           val out = Transforms(n, Transforms.Ctx(srcCol, srcType, rule.source, fieldOf, params, engine))
-          df = df.withColumn(rule.target, out.value)
-          out.error.foreach { e =>
-            // first error wins, rule order (processor.go:157)
-            df = df.withColumn(ERR, coalesce(col(ERR), e))
-          }
+          // target and error in ONE projection, so the error expression
+          // reads the original source even when the target overwrites it;
+          // first error wins, rule order (processor.go:157)
+          df = df.withColumns(Map(rule.target -> out.value) ++
+            out.error.map(e => ERR -> coalesce(col(ERR), e)))
       }
     }
     // projection: output = mapping targets only (processor.go:145,162)
@@ -213,7 +213,7 @@ object PipelineCompiler {
           val errRows = toFlatten.filter(col(fl.sourceField).isNull)
             .withColumn(ERR, coalesce(col(ERR),
               lit(s"flattening: field '${fl.sourceField}' is not a list")))
-          val errProjected = alignTo(exploded.schema, errRows, fl.targetField)
+          val errProjected = alignTo(exploded.schema, errRows)
           exploded.unionByName(errProjected, allowMissingColumns = true)
         } else exploded
       case _ if fl.errorOnNonList =>
@@ -270,7 +270,7 @@ object PipelineCompiler {
 
   /** Give `rows` the target schema's columns (null-filling the exploded
     * target) so unions line up. */
-  private def alignTo(target: StructType, rows: DataFrame, targetField: String): DataFrame = {
+  private def alignTo(target: StructType, rows: DataFrame): DataFrame = {
     val cols = target.fields.map { f =>
       if (rows.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
     }

@@ -1,7 +1,6 @@
 package graft.config
 
 import org.yaml.snakeyaml.Yaml
-import scala.jdk.CollectionConverters._
 
 /**
  * YAML -> Playbook with defaults, plus accumulated-error validation

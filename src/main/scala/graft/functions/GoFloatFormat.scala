@@ -29,9 +29,8 @@ object GoFloatFormat {
     // Shortest round-tripping digit string. JDK 17's Double.toString is
     // NOT shortest (Ryū landed in JDK 19 — JDK-4511638), so search the
     // precision: the fewest significant digits that parse back exactly.
-    val (digits0, decExp0) = shortestDigits(math.abs(v))
+    val (digits0, decExp) = shortestDigits(math.abs(v))
     var digits = digits0
-    var decExp = decExp0
     // strip trailing zeros ("1.0" -> "1")
     digits = digits.replaceAll("0+$", "")
     if (digits.isEmpty) digits = "0"

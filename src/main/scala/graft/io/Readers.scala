@@ -326,29 +326,6 @@ object Readers {
     else path
   }
 
-  /** Minimal RFC4180 line split (quotes + escaped quotes). */
-  private[io] def splitCsvLine(line: String, delim: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == '"' && i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
-        else if (c == '"') inQ = false
-        else sb.append(c)
-      } else {
-        if (c == '"') inQ = true
-        else if (c == delim) { out += sb.toString; sb.clear() }
-        else sb.append(c)
-      }
-      i += 1
-    }
-    out += sb.toString
-    out.toSeq
-  }
-
   // ------------------------------------------------------------------
   // YAML (reference internal/io/yaml.go:17-65): list-of-maps, fallback
   // single map; empty/null -> 0 records. No Spark source exists;

@@ -1,8 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.config.DestinationConfig
 import graft.transforms.Transforms
 
@@ -120,7 +119,7 @@ object Writers {
       .option("header", "true")
       .option("emptyValue", "")
       .csv(tmp)
-    moveSinglePart(tmp, path, ".csv")
+    moveSinglePart(tmp, path)
   }
 
   /**
@@ -136,13 +135,11 @@ object Writers {
       .option("header", writeHeader.toString)
       .option("emptyValue", "")
       .csv(tmp)
-    val dir = new java.io.File(tmp)
-    val part = dir.listFiles().find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-    val out = new java.io.FileOutputStream(target, /*append=*/ true)
-    try java.nio.file.Files.copy(part.toPath, out)
-    finally out.close()
-    dir.listFiles().foreach(_.delete()); dir.delete()
+    withSinglePart(tmp) { part =>
+      val out = new java.io.FileOutputStream(target, /*append=*/ true)
+      try java.nio.file.Files.copy(part, out)
+      finally out.close()
+    }
   }
 
   /** Newline-delimited JSON (JSONL) — the training-data interchange
@@ -190,7 +187,7 @@ object Writers {
       .option("rootTag", dest.xmlRootTag.getOrElse("records"))
       .option("rowTag", dest.xmlRecordTag.getOrElse("record"))
       .save(tmp)
-    moveSinglePart(tmp, dest.file, ".xml")
+    moveSinglePart(tmp, dest.file)
   }
 
   /** YAML sequence of maps, indent 2 (yaml.go:71-127). */
@@ -229,13 +226,20 @@ object Writers {
   }
 
   /** Move the single part file of a one-partition write to `path`. */
-  private[io] def moveSinglePart(tmpDir: String, path: String, ext: String): Unit = {
+  private def moveSinglePart(tmpDir: String, path: String): Unit =
+    withSinglePart(tmpDir) { part =>
+      val target = new java.io.File(path)
+      if (target.exists()) target.delete()
+      java.nio.file.Files.move(part, target.toPath)
+    }
+
+  /** Hand the part file of a one-partition write in `tmpDir` to `use`,
+    * then delete `tmpDir`. */
+  private def withSinglePart(tmpDir: String)(use: java.nio.file.Path => Unit): Unit = {
     val dir = new java.io.File(tmpDir)
-    val part = dir.listFiles().find(f => f.getName.startsWith("part-"))
+    val part = dir.listFiles().find(_.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(s"no part file in $tmpDir"))
-    val target = new java.io.File(path)
-    if (target.exists()) target.delete()
-    java.nio.file.Files.move(part.toPath, target.toPath)
+    use(part.toPath)
     dir.listFiles().foreach(_.delete())
     dir.delete()
   }

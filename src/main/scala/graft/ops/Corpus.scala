@@ -43,7 +43,7 @@ object Corpus {
     //    + dedup-window DAG executes twice. r17: the boundary is a
     //    PARQUET write + re-read in a fresh per-call temp dir (deleted
     //    at the caller's [[CachedRelations.releaseAll]]) instead of a
-    //    MEMORY_AND_DISK persist — interleaved A/B (ChainDecomp,
+    //    MEMORY_AND_DISK persist — interleaved A/B (OPTIMIZATION_r17.md,
     //    kept-id sets proven identical): parquet 1.34 s vs persist
     //    1.71 s at sf0.1; the write+read truncates the lineage each
     //    persist consumer re-planned, and it IS the production shape —

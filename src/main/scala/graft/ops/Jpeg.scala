@@ -96,7 +96,7 @@ object Jpeg {
     def readBit(): Int = {
       if (bits == 0) {
         if (pos >= b.length) fail()
-        var v = b(pos) & 0xff
+        val v = b(pos) & 0xff
         pos += 1
         if (v == 0xff) {
           if (pos >= b.length) fail()

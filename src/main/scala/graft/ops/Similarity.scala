@@ -547,7 +547,7 @@ object Similarity {
     // instead of once from each side. Probe keys per row drop from
     // 1+planes to 1+(zero bits) (≈1+planes/2 on balanced buckets) and
     // the bucket join's OUTPUT — the dominant cost of the whole
-    // pipeline (r17 LshDecomp: candidates 2.6 s of the 2.7 s row) —
+    // pipeline (OPTIMIZATION_r17.md: candidates 2.6 s of the 2.7 s row) —
     // loses the duplicated orientation of every differing-bit meeting.
     // Raised flips land as nulls when the bit is set; array_compact
     // drops them before the explode. Orientation is now arbitrary

@@ -48,7 +48,6 @@ object Sketches {
   def countMinEstimates(df: DataFrame, keyCol: String, d: Int = 3, w: Int = 256,
                         portableHashing: Boolean = false): DataFrame = {
     val sketch = countMinTable(df, keyCol, d, w, portableHashing)
-    val key = col(keyCol).cast("string")
     val keys = df.filter(col(keyCol).isNotNull)
       .select(col(keyCol).as("key")).distinct()
       .select(col("key"),

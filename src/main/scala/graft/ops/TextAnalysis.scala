@@ -1322,12 +1322,6 @@ object TextAnalysis {
     def toked(d: org.apache.spark.sql.DataFrame) =
       d.filter(col(textCol).isNotNull)
         .select(col(idCol).as("id"), tokens(col(textCol)).as("_toks"))
-    def pairs(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("id"), explode(zip_with(
-        slice(col("_toks"), lit(1), size(col("_toks")) - 1),
-        slice(col("_toks"), lit(2), size(col("_toks")) - 1),
-        (a, b) => struct(a.as("v"), b.as("w")))).as("_p"))
-        .select(col("id"), col("_p.v").as("v"), col("_p.w").as("w"))
     def triples(d: org.apache.spark.sql.DataFrame) =
       d.select(col("id"),
           explode(call_function("mkn_units", col("_toks"), lit(0))).as("_t"))

@@ -2510,7 +2510,7 @@ object LlmQueries {
         // compacted state) is materialized to PARQUET in a fresh
         // per-execution temp dir — the production shape, where the
         // state is a table on disk between versions. r17 A/B
-        // (ChainDecomp, interleaved in one session, verdicts proven
+        // (OPTIMIZATION_r17.md, interleaved in one session, verdicts proven
         // identical): parquet 2.65 s vs MEMORY_AND_DISK persists
         // 4.69 s — the write+read truncates the lineage the persists
         // re-planned per consumer, and the columnar re-scan of the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.expr.Goval
-import graft.transforms.{EngineConfig, Transforms}
+import graft.transforms.Transforms
 import graft.ops.Dedup
 
 /** One graded query: Spark plan + (optionally) its DuckDB oracle SQL. */
@@ -39,7 +39,7 @@ object Queries {
     // without an explicit schema every `read.parquet` resolution
     // re-lists the directory and re-reads parquet footers on the
     // driver, a fixed ~20-40 ms per query BUILD paid by all ~300
-    // queries on every execution (FloorProbe r17: build is 60-240 ms
+    // queries on every execution (OPTIMIZATION_r17.md: build is 60-240 ms
     // of a ~250 ms tail row). This is metadata caching — exactly what
     // a catalog/metastore provides in production — never result or
     // file-listing caching: the scan still lists and reads the live

@@ -136,6 +136,28 @@ class ExamplePlaybooksSpec extends SparkTestBase {
     assert(graft.ops.Dedup.nearDupStateLatest(spark, s"$out/dedup_state").exists(_._1 == 1))
   }
 
+  test("analytics path params are env-expanded by the CLI: the state dir chains two batches") {
+    val tmp = Files.createTempDirectory("graft_cli_env").toString
+    val docs = spark.read.parquet(s"$data/documents.parquet")
+      .select("doc_id", "text").filter("text IS NOT NULL")
+    docs.filter("doc_id % 2 = 0").write.parquet(s"$tmp/batch0")
+    docs.filter("doc_id % 2 = 1").write.parquet(s"$tmp/batch1")
+    // both placeholder forms name an unset variable, so they expand to ""
+    val cfg = s"$tmp/pb.yaml"
+    Files.write(Paths.get(cfg),
+      s"""source: {type: parquet, file: "$tmp/batch0"}
+         |destination: {type: parquet, file: "$tmp/verdicts"}
+         |analytics:
+         |  - op: incr_neardup
+         |    idCol: doc_id
+         |    textCol: text
+         |    stateDir: "$${__GRAFT_UNSET__}%__GRAFT_UNSET__%$tmp/state"
+         |""".stripMargin.getBytes(UTF_8))
+    Main.run(spark, Main.Args(config = cfg))
+    Main.run(spark, Main.Args(config = cfg, input = Some(s"$tmp/batch1")))
+    assert(graft.ops.Dedup.nearDupStateLatest(spark, s"$tmp/state").exists(_._1 == 1))
+  }
+
   test("-explain prints the physical plan and executes nothing") {
     val (cfg, out) = prepareExample("classic_etl.yaml", Map.empty)
     val buf = new java.io.ByteArrayOutputStream()

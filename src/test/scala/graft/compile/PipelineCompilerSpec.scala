@@ -174,6 +174,30 @@ class PipelineCompilerSpec extends SparkTestBase {
     assert(e.head.getAs[String]("etl_error_message").startsWith("mustToInt"))
   }
 
+  test("must* mappings writing back to their own source column: errors read the original value") {
+    val pb = PlaybookLoader.fromString(
+      """source: {type: parquet, file: u}
+        |destination: {type: parquet, file: u}
+        |mappings:
+        |  - {source: qty, target: qty, transform: mustToInt}
+        |  - {source: price, target: price, transform: mustToFloat}
+        |  - source: day
+        |    target: day
+        |    transform: mustDateConvert
+        |    params: {inputFormat: "01/02/2006", outputFormat: "2006-01-02"}
+        |errorHandling: {mode: skip}
+        |""".stripMargin)
+    val src = records(
+      Map("qty" -> "7", "price" -> "2.5", "day" -> "03/04/2024"),
+      Map("qty" -> "x", "price" -> "1.0", "day" -> "03/05/2024"))
+    val out = PipelineCompiler.compileFrom(src, pb)
+    assertSameRecords(out.main, Seq(Map("qty" -> 7L, "price" -> 2.5, "day" -> "2024-03-04")))
+    val e = out.errors.collect()
+    assert(e.length == 1)
+    assert(e.head.getAs[String]("qty") == "x" && e.head.getAs[String]("day") == "03/05/2024")
+    assert(e.head.getAs[String]("etl_error_message").startsWith("mustToInt"))
+  }
+
   test("FIXTURES #3: validation records, skip keeps passers, errors carry messages") {
     val pb = PlaybookLoader.fromString(
       """source: {type: parquet, file: u}
