@@ -67,43 +67,14 @@ object ScaleProbe {
   /** The q_llm_incr_neardup_chain_x64 lifecycle over an arbitrary
     * documents relation (3 batches by doc_id mod 3). Shared with
     * [[ScaleProbeCc]]'s pair-volume-controlled second-decade probe. */
-  private[graft] def nearDupChain(docs: DataFrame): DataFrame = {
-    // r17: parquet-materialized intermediates, the shipped query shape
-    // (see q_llm_incr_neardup_chain_x64 — A/B'd 0.56x vs the persists)
-    val spark = docs.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chain_probe")
-    graft.ops.CachedRelations.trackCleanup { () =>
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(tmp.toFile)
-    }
-    var matN = 0
-    def mat(d: DataFrame): DataFrame = {
-      matN += 1
-      val p = s"$tmp/rel$matN"
-      d.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    def sigOf(m: Int) = mat(
-      Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-        "doc_id", "text", shingleSize = 5, numHashes = 16))
-    val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-    val v0 = mat(Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
-      numHashes = 16, bands = 4, threshold = 0.5))
-    var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-      b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-      b0, v0, 0)))
-    val v1 = mat(Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
-      numHashes = 16, bands = 4, threshold = 0.5))
-    state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-    val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
+  private[graft] def nearDupChain(docs: DataFrame): DataFrame =
+    Dedup.nearDupChain(nearDupSteps(docs))
+
+  private[graft] def nearDupSteps(docs: DataFrame): Iterator[Dedup.NearDupStep] =
+    Dedup.nearDupSteps(Seq(0, 1, 2).map(m => Dedup.minhashSignatures(
+        docs.filter(col("doc_id") % 3 === m), "doc_id", "text",
+        shingleSize = 5, numHashes = 16)),
       numHashes = 16, bands = 4, threshold = 0.5)
-    v0.withColumn("batch", lit(0))
-      .unionByName(v1.withColumn("batch", lit(1)))
-      .unionByName(v2.withColumn("batch", lit(2)))
-  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -353,62 +324,29 @@ object ScaleProbe {
 object ScaleProbeCc {
   import ScaleProbe.copies
 
-  /** [[ScaleProbe.nearDupChain]] with a stopwatch BETWEEN its stages
-    * (r15 verdict ask 3): the chain's second decade ran 1.67× under
-    * linear edges while cc_star sat at 1.19 on the same families, so
-    * the superlinear term lives in the chain's own stage structure —
-    * this names it. Each stage forces its persisted relation (the
-    * pipeline materializes the same caches), so stage times sum to
-    * ~the one-shot run and the per-stage decade ratios are the
-    * attribution instrument. */
+  /** [[ScaleProbe.nearDupChain]] with a stopwatch around each
+    * [[Dedup.nearDupStep]] call (r15 verdict ask 3): the chain's second
+    * decade ran 1.67× under linear edges while cc_star sat at 1.19 on
+    * the same families, so the superlinear term lives in the chain's
+    * own structure — this names it. `step_b<b>` times taking batch b's
+    * step from [[Dedup.nearDupSteps]]: staging the previous step's
+    * verdicts and next state (b > 0), staging batch b's signatures, and
+    * its screen, whose connected-components engine runs eagerly at
+    * definition time. `output` writes the tagged verdicts, which runs
+    * the last batch's lazy screen. The keys sum to ~the one-shot run. */
   private[graft] def chainStaged(docs: DataFrame): Seq[(String, Double)] = {
-    import graft.ops.{CachedRelations, Dedup}
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def timed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      out(name) = (System.nanoTime() - t0) / 1e9
-    }
-    // verdict CONSTRUCTION is timed separately from its force:
-    // incrementalNearDupVerdicts' new-new phase runs its connected-
-    // components engine EAGERLY at definition time (localCheckpoint of
-    // the symmetric pair relation, the take() engine probe, and the
-    // driver union-find / label-prop rounds all execute before the
-    // verdict DataFrame exists) — a force-only stopwatch misses it
-    // (the first r16 staged run summed to 1/3 of the one-shot total)
-    def timedRel(name: String)(f: => DataFrame): DataFrame = {
+    def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       out(name) = (System.nanoTime() - t0) / 1e9
       r
     }
-    def sigOf(m: Int) = CachedRelations.track(
-      Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-        "doc_id", "text", shingleSize = 5, numHashes = 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-    timed("sig")(Seq(b0, b1, b2).foreach(_.count()))
-    def mat(d: DataFrame) = CachedRelations.track(
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val v0 = timedRel("verdict_b0_def")(mat(Dedup.incrementalNearDupVerdicts(
-      b0, b0.limit(0), numHashes = 16, bands = 4, threshold = 0.5)))
-    timed("verdict_b0_force")(v0.count())
-    var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-      b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-      b0, v0, 0)))
-    timed("state_roll_0")(state.count())
-    val v1 = timedRel("verdict_b1_def")(mat(Dedup.incrementalNearDupVerdicts(
-      b1, state.select("id", "sig"), numHashes = 16, bands = 4, threshold = 0.5)))
-    timed("verdict_b1_force")(v1.count())
-    state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-    timed("state_roll_1")(state.count())
-    val v2 = timedRel("verdict_b2_def")(Dedup.incrementalNearDupVerdicts(
-      b2, state.select("id", "sig"), numHashes = 16, bands = 4, threshold = 0.5))
-    timed("verdict_b2_force") {
-      v0.withColumn("batch", lit(0))
-        .unionByName(v1.withColumn("batch", lit(1)))
-        .unionByName(v2.withColumn("batch", lit(2)))
-        .write.format("noop").mode("overwrite").save()
+    val it = ScaleProbe.nearDupSteps(docs)
+    val steps = Seq(0, 1, 2).map(b => timed(s"step_b$b")(it.next()))
+    timed("output") {
+      Dedup.nearDupChain(steps).write.format("noop").mode("overwrite").save()
     }
-    CachedRelations.releaseAll()
+    graft.ops.CachedRelations.releaseAll()
     out.toSeq
   }
 

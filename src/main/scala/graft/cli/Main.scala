@@ -35,12 +35,13 @@ object Main {
     } finally spark.stop()
   }
 
-  // Stage-persisted relations (incr_neardup's signatures/verdicts, the
-  // chain state) are tracked in CachedRelations; every outcome of a run
-  // — normal, dry-run early return, halt exception — must release
-  // them, or a library caller invoking run() repeatedly in one session
-  // accumulates persisted blocks. Everything user-visible is written
-  // before the body returns, so the release is always safe.
+  // Stage resources (the parquet stage dirs of incr_neardup and
+  // corpus_clean, persisted relations) are tracked in CachedRelations;
+  // every outcome of a run — normal, dry-run early return, halt
+  // exception — must release them, or a library caller invoking run()
+  // repeatedly in one session accumulates stage dirs and persisted
+  // blocks. Everything user-visible is written before the body
+  // returns, so the release is always safe.
   def run(spark: SparkSession, args: Args): Unit =
     try runBody(spark, args)
     finally graft.ops.CachedRelations.releaseAll()
@@ -57,7 +58,16 @@ object Main {
       destination = pb0.destination.copy(
         file = Util.expandEnv(args.output.getOrElse(pb0.destination.file)),
         conn = db.getOrElse(Util.expandEnv(pb0.destination.conn))),
-      analytics = pb0.analytics.map(st => st.copy(params = Util.expandPathParams(st.params))))
+      analytics = pb0.analytics.map { st =>
+        val params = Util.expandPathParams(st.params)
+        // -dry-run and -explain compile the stage but must not commit
+        // its next state version: a later real run would screen the
+        // batch against its own signatures
+        st.copy(params =
+          if (st.op == "incr_neardup" && (args.dryRun || args.explain))
+            params + ("updateState" -> false)
+          else params)
+      })
 
     val compiled = PipelineCompiler.compile(spark, pb, EngineConfig(fipsMode = args.fips))
 
@@ -160,7 +170,7 @@ object Main {
       |  -db <conn>        override database connection string
       |  -loglevel <lvl>   none|error|warn|info|debug (default info)
       |  -dry-run          run the pipeline, skip the load, print a sample
-      |  -explain          print the physical plan, execute nothing
+      |  -explain          print the physical plan, skip the load
       |  -fips             reject non-FIPS algorithms (md5)
       |  -help             this message""".stripMargin
 }

@@ -426,37 +426,30 @@ object AnalyticsCompiler {
           buckets = int(p, "buckets").getOrElse(8192),
           portableHashing = bool(p, "portableHashing"))
       case "incr_neardup" =>
-        // the corpus-version lifecycle from config: screen this batch
-        // against the persisted kept-signature state, then append +
-        // compact the new version — Dedup.nearDupState* is the same
-        // machinery the oracled chain query pins. The signature and
-        // verdict relations persist for the stage (each feeds both the
-        // output and the state write; in production the state IS a
-        // materialized table between versions), released by the
-        // caller's CachedRelations.releaseAll.
+        // one corpus version of the chain from config (Dedup.nearDupStep,
+        // the same step the oracled chain query folds): screen this batch
+        // against the latest committed state, and unless updateState is
+        // false, commit the next state as stateDir/v<N>. The signature
+        // and verdict stages are freed by the caller's
+        // CachedRelations.releaseAll.
         val (id, text) = (str(p, "idCol").get, str(p, "textCol").get)
         val stateDir = str(p, "stateDir").get
         val nh = int(p, "numHashes").getOrElse(16)
-        val bands = int(p, "bands").getOrElse(4)
         val portable = bool(p, "portableHashing")
-        def mat(d: DataFrame) = graft.ops.CachedRelations.track(
-          d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val sig = mat(
+        val sig =
           if (portable) Dedup.minhashPortableValues(df, id, text,
             shingleSize = int(p, "shingleSize").getOrElse(4), numHashes = nh)
           else Dedup.minhashSignatures(df, id, text,
-            shingleSize = int(p, "shingleSize").getOrElse(5), numHashes = nh))
+            shingleSize = int(p, "shingleSize").getOrElse(5), numHashes = nh)
         val prev = Dedup.nearDupStateLatest(spark, stateDir)
-        val prevState = prev.map(_._2).getOrElse(
-          sig.limit(0).select(col("id"), col("sig"), lit(0).as("version")))
         val version = p.get("version") match {
           case Some(v: java.lang.Number) =>
             val ver = v.intValue()
             // an explicit version <= the latest committed one either
-            // overwrites the v<N> dir prevState is lazily reading
-            // (runtime failure after the batch already did its work) or
-            // writes a dir latest-wins resolution ignores while the
-            // verdicts are still labeled with it (r11 advisory)
+            // overwrites the v<N> dir the previous state is lazily
+            // reading (runtime failure after the batch already did its
+            // work) or writes a dir latest-wins resolution ignores while
+            // the verdicts are still labeled with it (r11 advisory)
             prev.foreach { case (latest, _) =>
               if (ver <= latest) throw new IllegalArgumentException(
                 s"incr_neardup: explicit version $ver <= latest committed version " +
@@ -466,20 +459,17 @@ object AnalyticsCompiler {
             ver
           case _ => prev.map(_._1 + 1).getOrElse(0) // "auto"
         }
-        val verdicts = mat(Dedup.incrementalNearDupVerdicts(
-          sig, prevState.select("id", "sig"), numHashes = nh, bands = bands,
+        val step = Dedup.nearDupStep(prev.map(_._2), sig, version,
+          numHashes = nh, bands = int(p, "bands").getOrElse(4),
           threshold = dbl(p, "threshold").getOrElse(0.5),
           maxBucketSize = int(p, "maxBucketSize").getOrElse(1000),
-          portableBuckets = portable))
+          portableBuckets = portable)
         if (p.get("updateState").forall(_ == true))
-          Dedup.nearDupStateWrite(
-            Dedup.nearDupStateCompact(
-              Dedup.nearDupStateAppend(prevState, sig, verdicts, version)),
-            stateDir, version)
+          Dedup.nearDupStateWrite(step.next, stateDir, version)
         if (str(p, "mode").contains("filter"))
-          df.join(verdicts.filter(col("status") === "kept")
+          df.join(step.verdicts.filter(col("status") === "kept")
             .select(col("id").as(id)), Seq(id), "left_semi")
-        else verdicts
+        else step.verdicts
           .withColumnRenamed("id", id)
           .withColumn("version", lit(version))
       case "ann_topk" =>

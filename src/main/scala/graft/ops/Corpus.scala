@@ -37,32 +37,14 @@ object Corpus {
     if (cfg.langs.nonEmpty)
       kept = kept.filter(col("lang_pred").isin(cfg.langs.toSeq: _*))
 
-    // 2. exact dedup (hash shuffle on content). Materialized: the
-    //    result feeds BOTH the near-dup pair generation and the final
-    //    anti-join, and without a stage boundary the whole scan + gate
-    //    + dedup-window DAG executes twice. r17: the boundary is a
-    //    PARQUET write + re-read in a fresh per-call temp dir (deleted
-    //    at the caller's [[CachedRelations.releaseAll]]) instead of a
-    //    MEMORY_AND_DISK persist — interleaved A/B (OPTIMIZATION_r17.md,
-    //    kept-id sets proven identical): parquet 1.34 s vs persist
-    //    1.71 s at sf0.1; the write+read truncates the lineage each
-    //    persist consumer re-planned, and it IS the production shape —
-    //    a pipeline materializes the cleaned corpus at this boundary
-    //    anyway. Nothing outlives the call's release.
-    val exact = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_clean_stage")
-      CachedRelations.trackCleanup { () =>
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(); ()
-        }
-        rm(tmp.toFile)
-      }
-      val p = s"$tmp/exact"
-      Dedup.byIngestOrder(kept, Seq(textCol), keepFirst = true)
-        .write.mode("overwrite").parquet(p)
-      docs.sparkSession.read.parquet(p)
-    }
+    // 2. exact dedup (hash shuffle on content). Materialized at a
+    //    parquet stage boundary: the result feeds BOTH the near-dup
+    //    pair generation and the final anti-join, and without a
+    //    boundary the whole scan + gate + dedup-window DAG executes
+    //    twice. It is also the production shape — a pipeline
+    //    materializes the cleaned corpus here anyway.
+    val exact = CachedRelations.parquetStage(
+      Dedup.byIngestOrder(kept, Seq(textCol), keepFirst = true))
 
     // 3. near-dup clusters -> canonical representative
     val pairs =

@@ -1176,10 +1176,8 @@ object Dedup {
    * Versioned state chain for [[incrementalNearDupVerdicts]] across N
    * corpus versions. State schema: `(id, sig, version)` — each kept
    * doc's signature stamped with the batch version that admitted it.
-   * Chain usage (batch n, compacted state S):
-   *
-   *   val v = incrementalNearDupVerdicts(batchSig, S.select("id","sig"), …)
-   *   S = nearDupStateCompact(nearDupStateAppend(S, batchSig, v, n))
+   * One version's screen → verdicts → append → compact is
+   * [[nearDupStep]]; the N-version chain is [[nearDupSteps]].
    *
    * [[nearDupStateAppend]] unions batch `version`'s kept signatures
    * into the state (no shuffle — a union of already-computed
@@ -1214,6 +1212,73 @@ object Dedup {
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
+
+  /**
+   * One corpus version of the incremental near-dup lifecycle: screen
+   * `batchSig` (`(id, sig)`) against `state` (`(id, sig, version)`;
+   * `None` = the first version, an empty state), then append the kept
+   * signatures as `version` and compact ([[NearDupStep.next]]).
+   *
+   * A relation is materialized only where it has two or more
+   * consumers, at a [[CachedRelations.parquetStage]] boundary. The
+   * batch signatures always are: the screen reads them twice and the
+   * append once. The verdicts are staged when [[NearDupStep.next]] is
+   * forced, because the caller's read of them is then the second
+   * consumer. A last batch whose next state nothing reads keeps its
+   * verdicts lazy. The next state itself stays lazy: the caller
+   * materializes it as it needs — a stage boundary before the next
+   * step ([[nearDupSteps]]) or the committed `v<N>` write
+   * ([[nearDupStateWrite]]).
+   */
+  def nearDupStep(state: Option[DataFrame], batchSig: DataFrame, version: Int,
+                  numHashes: Int, bands: Int, threshold: Double,
+                  maxBucketSize: Int = 1000,
+                  portableBuckets: Boolean = false): NearDupStep = {
+    val sig = CachedRelations.parquetStage(batchSig)
+    val prev = state.getOrElse(
+      sig.limit(0).select(col("id"), col("sig"), lit(0).as("version")))
+    new NearDupStep(prev, sig, version, incrementalNearDupVerdicts(
+      sig, prev.select("id", "sig"), numHashes, bands, threshold,
+      maxBucketSize, portableBuckets))
+  }
+
+  /** The result of [[nearDupStep]]. Force [[next]] before reading
+    * [[verdicts]] when both are needed, so that both share one stage. */
+  final class NearDupStep private[Dedup] (state: DataFrame, sig: DataFrame,
+                                          version: Int, screened: DataFrame) {
+    private var staged: Option[DataFrame] = None
+
+    /** The state after this version: one row per id, latest wins. */
+    lazy val next: DataFrame = {
+      val v = CachedRelations.parquetStage(screened)
+      staged = Some(v)
+      nearDupStateCompact(nearDupStateAppend(state, sig, v, version))
+    }
+
+    /** This batch's `(id, status, match_id)`. */
+    def verdicts: DataFrame = staged.getOrElse(screened)
+  }
+
+  /** The N-version chain: a lazy fold of [[nearDupStep]] over
+    * `batchSigs` (version = position). Taking a step stages the
+    * previous step's next state, which the new step screens against;
+    * the last step's next state is never built. */
+  def nearDupSteps(batchSigs: Seq[DataFrame], numHashes: Int, bands: Int,
+                   threshold: Double,
+                   portableBuckets: Boolean = false): Iterator[NearDupStep] =
+    batchSigs.iterator.zipWithIndex
+      .scanLeft(Option.empty[NearDupStep]) { case (prev, (sig, version)) =>
+        Some(nearDupStep(prev.map(p => CachedRelations.parquetStage(p.next)),
+          sig, version, numHashes, bands, threshold, portableBuckets = portableBuckets))
+      }
+      .flatten
+
+  /** Every step's verdicts, tagged with its `batch` position. All steps
+    * are taken first, so each verdicts read sees its step's stage. */
+  def nearDupChain(steps: IterableOnce[NearDupStep]): DataFrame =
+    steps.iterator.toVector.zipWithIndex
+      .map { case (s, b) => s.verdicts.withColumn("batch", lit(b)) }
+      .reduce(_ unionByName _)
 
   /**
    * Versioned on-disk persistence for the incremental chain's state

@@ -14,11 +14,8 @@ import graft.queries.Queries.t
  */
 object IoQueries {
 
-  private def tmpDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ioq")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  // freed by the caller's CachedRelations.releaseAll after the action
+  private def tmpDir(): String = graft.ops.CachedRelations.tempDir("ioq").toString
 
   private def docs3(s: org.apache.spark.sql.SparkSession, dir: String) =
     t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))

@@ -2496,59 +2496,22 @@ object LlmQueries {
     // N-version state chain (r10): three corpus versions ingested in
     // sequence against a compacted versioned signature state — the
     // full incremental-dedup lifecycle (screen → verdicts → append →
-    // compact → next batch) as ONE query. Output = every batch's
-    // verdicts tagged with its version. Rows-only: the chain contract
-    // (incl. id re-registration supersession) is pinned by
-    // IncrementalNearDupSpec; the per-batch verdict algorithm by the
-    // oracled md5 twin above. Batch signatures persist across their
-    // three consumers (screen, state lineage, next screen) — without
-    // it the whole sig computation re-runs per version.
+    // compact → next batch, Dedup.nearDupSteps) as ONE query. Output =
+    // every batch's verdicts tagged with its version. Rows-only: the
+    // chain contract (incl. id re-registration supersession) is pinned
+    // by IncrementalNearDupSpec; the per-batch verdict algorithm by the
+    // oracled md5 twin above. Every multi-consumer intermediate (batch
+    // signatures, verdicts, state) sits at a parquet stage boundary —
+    // the production shape, where the state is a table on disk between
+    // versions.
     Q("q_llm_incr_neardup_chain_x64",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        // Each multi-consumer intermediate (batch signatures, verdicts,
-        // compacted state) is materialized to PARQUET in a fresh
-        // per-execution temp dir — the production shape, where the
-        // state is a table on disk between versions. r17 A/B
-        // (OPTIMIZATION_r17.md, interleaved in one session, verdicts proven
-        // identical): parquet 2.65 s vs MEMORY_AND_DISK persists
-        // 4.69 s — the write+read truncates the lineage the persists
-        // re-planned per consumer, and the columnar re-scan of the
-        // state-sized rows is cheaper than the cache. The dir is
-        // deleted at the caller's releaseAll; nothing outlives the
-        // execution (every run computes from the parquet inputs).
-        val tmp = java.nio.file.Files.createTempDirectory("graft_chain_state")
-        graft.ops.CachedRelations.trackCleanup { () =>
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          rm(tmp.toFile)
-        }
-        var matN = 0
-        def mat(d: org.apache.spark.sql.DataFrame) = {
-          matN += 1
-          val p = s"$tmp/rel$matN"
-          d.write.mode("overwrite").parquet(p)
-          s.read.parquet(p)
-        }
-        def sigOf(m: Int) = mat(
-          Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-            "doc_id", "text", shingleSize = 5, numHashes = 16))
-        val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-        val v0 = mat(Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
-          numHashes = 16, bands = 4, threshold = 0.5))
-        var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-          b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-          b0, v0, 0)))
-        val v1 = mat(Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
-          numHashes = 16, bands = 4, threshold = 0.5))
-        state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-        val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
-          numHashes = 16, bands = 4, threshold = 0.5)
-        v0.withColumn("batch", lit(0))
-          .unionByName(v1.withColumn("batch", lit(1)))
-          .unionByName(v2.withColumn("batch", lit(2)))
+        Dedup.nearDupChain(Dedup.nearDupSteps(
+            Seq(0, 1, 2).map(m => Dedup.minhashSignatures(
+              docs.filter(col("doc_id") % 3 === m), "doc_id", "text",
+              shingleSize = 5, numHashes = 16)),
+            numHashes = 16, bands = 4, threshold = 0.5))
           .withColumnRenamed("id", "doc_id")
       },
       None),
@@ -2564,23 +2527,11 @@ object LlmQueries {
     Q("q_llm_incr_neardup_chain",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        def sigOf(m: Int) = Dedup.minhashPortableValues(
-          docs.filter(col("doc_id") % 3 === m), "doc_id", "text",
-          shingleSize = 4, numHashes = 8)
-        val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-        val v0 = Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
-          numHashes = 8, bands = 4, threshold = 0.5, portableBuckets = true)
-        var state = Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-          b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-          b0, v0, 0))
-        val v1 = Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
-          numHashes = 8, bands = 4, threshold = 0.5, portableBuckets = true)
-        state = Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1))
-        val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
-          numHashes = 8, bands = 4, threshold = 0.5, portableBuckets = true)
-        v0.withColumn("batch", lit(0))
-          .unionByName(v1.withColumn("batch", lit(1)))
-          .unionByName(v2.withColumn("batch", lit(2)))
+        Dedup.nearDupChain(Dedup.nearDupSteps(
+            Seq(0, 1, 2).map(m => Dedup.minhashPortableValues(
+              docs.filter(col("doc_id") % 3 === m), "doc_id", "text",
+              shingleSize = 4, numHashes = 8)),
+            numHashes = 8, bands = 4, threshold = 0.5, portableBuckets = true))
           .withColumnRenamed("id", "doc_id")
       },
       Some(LlmOracles.incrNearDupChain)),

@@ -763,8 +763,7 @@ object PlaybookQueries {
     // bench-excluded like its twins.
     Q("q_playbook_incr_neardup",
       (s, dir) => {
-        val state = java.nio.file.Files
-          .createTempDirectory("graft_pb_incr").toString + "/state"
+        val state = s"${graft.ops.CachedRelations.tempDir("pb_incr")}/state"
         def runBatch(m: Int) = run(s, s"""
           |source:
           |  type: parquet

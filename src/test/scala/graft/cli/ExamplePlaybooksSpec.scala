@@ -136,6 +136,25 @@ class ExamplePlaybooksSpec extends SparkTestBase {
     assert(graft.ops.Dedup.nearDupStateLatest(spark, s"$out/dedup_state").exists(_._1 == 1))
   }
 
+  test("incremental_ingest: -dry-run and -explain commit no state; the real run is unchanged") {
+    val tmp = Files.createTempDirectory("graft_ex_incr_dry").toString
+    spark.read.parquet(s"$data/documents.parquet")
+      .select("doc_id", "text").filter("text IS NOT NULL")
+      .write.parquet(s"$tmp/batch0")
+    def verdicts(out: String) = spark.read.parquet(s"$out/verdicts")
+      .selectExpr("doc_id", "status", "match_id", "version").collect()
+      .map(_.toString).sorted.toSeq
+    val alone = runExample("incremental_ingest.yaml", Map("GRAFT_IN" -> s"$tmp/batch0"))
+    val (cfg, out) = prepareExample("incremental_ingest.yaml", Map("GRAFT_IN" -> s"$tmp/batch0"))
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Main.run(spark, Main.Args(config = cfg, dryRun = true))
+      Main.run(spark, Main.Args(config = cfg, explain = true))
+    }
+    Main.run(spark, Main.Args(config = cfg))
+    assert(verdicts(out) == verdicts(alone))
+    assert(new java.io.File(s"$out/dedup_state").list().toSet == Set("v0"))
+  }
+
   test("analytics path params are env-expanded by the CLI: the state dir chains two batches") {
     val tmp = Files.createTempDirectory("graft_cli_env").toString
     val docs = spark.read.parquet(s"$data/documents.parquet")

@@ -68,52 +68,64 @@ class IncrementalNearDupSpec extends SparkTestBase {
   }
 
   test("3-batch version chain: append/compact carry state; a re-registered id supersedes its old signature") {
+    import org.apache.spark.sql.DataFrame
     val uniqueC = "yet another wholly distinct passage concerning shuffle partition sizing"
-    def screen(state: org.apache.spark.sql.DataFrame) = state.select("id", "sig")
-    def verdictMap(v: org.apache.spark.sql.DataFrame) =
+    def verdictMap(v: DataFrame) =
       v.collect().map(r => r.getLong(0) ->
         ((r.getString(1), if (r.isNullAt(2)) null else r.getLong(2)))).toMap
 
-    // version 0: initial corpus = doc 1 (refText)
-    var state = sigs(Seq(1L -> refText))
-      .select(col("id"), col("sig"), lit(0).as("version"))
+    // two inputs advance one version, (state, batch, n) => (verdicts,
+    // next state): the screen/append/compact calls written out, and
+    // Dedup.nearDupStep, which the chain query and the CLI stage use
+    val byHand = (state: DataFrame, b: DataFrame, n: Int) => {
+      val v = Dedup.incrementalNearDupVerdicts(b, state.select("id", "sig"),
+        numHashes = 8, bands = 4, threshold = 0.5)
+      (v, Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b, v, n)))
+    }
+    val byStep = (state: DataFrame, b: DataFrame, n: Int) => {
+      val step = Dedup.nearDupStep(Some(state), b, n,
+        numHashes = 8, bands = 4, threshold = 0.5)
+      val next = step.next // first, so the verdicts read its stage
+      (step.verdicts, next)
+    }
+    for ((input, advance) <- Seq("by hand" -> byHand, "nearDupStep" -> byStep)) {
+      withClue(s"[$input] ") {
+        // version 0: initial corpus = doc 1 (refText)
+        val s0 = sigs(Seq(1L -> refText))
+          .select(col("id"), col("sig"), lit(0).as("version"))
 
-    // version 1: 10 kept (uniqueA), 11 dup of the v0 corpus
-    val b1 = sigs(Seq(10L -> uniqueA, 11L -> refText))
-    val v1 = Dedup.incrementalNearDupVerdicts(b1, screen(state),
-      numHashes = 8, bands = 4, threshold = 0.5)
-    assert(verdictMap(v1) == Map(
-      10L -> (("kept", null)), 11L -> (("dup_of_ref", 1L))))
-    state = Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1))
+        // version 1: 10 kept (uniqueA), 11 dup of the v0 corpus
+        val (v1, s1) = advance(s0, sigs(Seq(10L -> uniqueA, 11L -> refText)), 1)
+        assert(verdictMap(v1) == Map(
+          10L -> (("kept", null)), 11L -> (("dup_of_ref", 1L))))
 
-    // version 2: 20 dups the v1-kept doc; 21 is new; id 10 RE-REGISTERS
-    // with new accepted content (uniqueC) — supersedes its v1 signature
-    val b2 = sigs(Seq(20L -> uniqueA, 21L -> uniqueB, 10L -> uniqueC))
-    val v2 = Dedup.incrementalNearDupVerdicts(b2, screen(state),
-      numHashes = 8, bands = 4, threshold = 0.5)
-    assert(verdictMap(v2) == Map(
-      20L -> (("dup_of_ref", 10L)), // matched id 10's OLD (v1) signature
-      21L -> (("kept", null)),
-      10L -> (("kept", null))))     // new content, no near-dup
-    state = Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b2, v2, 2))
+        // version 2: 20 dups the v1-kept doc; 21 is new; id 10 RE-REGISTERS
+        // with new accepted content (uniqueC) — supersedes its v1 signature
+        val (v2, s2) = advance(s1,
+          sigs(Seq(20L -> uniqueA, 21L -> uniqueB, 10L -> uniqueC)), 2)
+        assert(verdictMap(v2) == Map(
+          20L -> (("dup_of_ref", 10L)), // matched id 10's OLD (v1) signature
+          21L -> (("kept", null)),
+          10L -> (("kept", null))))     // new content, no near-dup
 
-    // compaction: one row per id; id 10 carries version 2 (uniqueC)
-    val rows = state.collect()
-      .map(r => r.getLong(0) -> r.getInt(2)).toMap
-    assert(rows == Map(1L -> 0, 10L -> 2, 21L -> 2))
+        // compaction: one row per id; id 10 carries version 2 (uniqueC)
+        val rows = s2.collect()
+          .map(r => r.getLong(0) -> r.getInt(2)).toMap
+        assert(rows == Map(1L -> 0, 10L -> 2, 21L -> 2))
 
-    // version 3: uniqueA is GONE from the state (superseded) — a
-    // re-send is now kept; uniqueC and uniqueB match their carriers
-    val b3 = sigs(Seq(30L -> uniqueA, 31L -> uniqueC, 32L -> uniqueB))
-    val v3 = Dedup.incrementalNearDupVerdicts(b3, screen(state),
-      numHashes = 8, bands = 4, threshold = 0.5)
-    assert(verdictMap(v3) == Map(
-      30L -> (("kept", null)),
-      31L -> (("dup_of_ref", 10L)),
-      32L -> (("dup_of_ref", 21L))))
-    state = Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b3, v3, 3))
-    // state stays bounded by distinct kept ids, not versions
-    assert(state.count() == 4)
+        // version 3: uniqueA is GONE from the state (superseded) — a
+        // re-send is now kept; uniqueC and uniqueB match their carriers
+        val (v3, s3) = advance(s2,
+          sigs(Seq(30L -> uniqueA, 31L -> uniqueC, 32L -> uniqueB)), 3)
+        assert(verdictMap(v3) == Map(
+          30L -> (("kept", null)),
+          31L -> (("dup_of_ref", 10L)),
+          32L -> (("dup_of_ref", 21L))))
+        // state stays bounded by distinct kept ids, not versions
+        assert(s3.count() == 4)
+      }
+    }
+    CachedRelations.releaseAll()
   }
 
   test("empty reference degenerates to plain batch near-dup clustering") {

@@ -470,6 +470,37 @@ class ScaleSpec extends SparkTestBase {
       "cached relations leaked past CachedRelations.releaseAll")
   }
 
+  test("parquetStage: the stage dir is readable until releaseAll and gone after it") {
+    import spark.implicits._
+    CachedRelations.releaseAll() // clean slate
+    val staged = CachedRelations.parquetStage((1L to 20L).toDF("id"))
+    val dirs = staged.inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).getParentFile.getParentFile).distinct
+    assert(dirs.length == 1, dirs.mkString(", "))
+    val dir = dirs.head
+    assert(dir.getParentFile.getCanonicalPath ==
+      new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath)
+    assert(dir.getName.startsWith("graft"), dir.getName)
+    assert(staged.count() == 20)
+    assert(CachedRelations.releaseAll() >= 1)
+    assert(!dir.exists(), s"$dir survived releaseAll")
+  }
+
+  test("releaseAll: a failing cleanup warns on stderr and the rest still run") {
+    CachedRelations.releaseAll() // clean slate
+    var ran = false
+    CachedRelations.trackCleanup(() => throw new java.io.IOException("stuck dir"))
+    CachedRelations.trackCleanup(() => ran = true)
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val n = try CachedRelations.releaseAll() finally System.setErr(saved)
+    assert(n == 2)
+    assert(ran)
+    val lines = err.toString("UTF-8").linesIterator.filter(_.startsWith("[warn]")).toSeq
+    assert(lines.size == 1 && lines.head.contains("stuck dir"), lines)
+  }
+
   test("ngramVocabulary: rank window input is bounded by the top-K limit") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LWindow}
