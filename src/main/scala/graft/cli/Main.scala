@@ -69,6 +69,11 @@ object Main {
           else params)
       })
 
+    val errorFile = pb.errorHandling.errorFile.map(Util.expandEnv)
+    // before compiling: compiling may already commit stage state
+    if (pb.errorHandling.mode != "halt" && !args.dryRun && !args.explain)
+      errorFile.foreach(requireOwnPath(_, pb.destination.file))
+
     val compiled = PipelineCompiler.compile(spark, pb, EngineConfig(fipsMode = args.fips))
 
     if (args.explain) {
@@ -121,16 +126,57 @@ object Main {
           throw new RuntimeException(s"halt: ${firstErr.head.getString(0)}")
         graft.io.Writers.write(compiled.main, pb.destination)
       case _ => // skip: write clean records; route errors to errorFile
-        graft.io.Writers.write(compiled.main, pb.destination)
-        pb.errorHandling.errorFile.foreach { ef =>
-          val errs = compiled.errors
-          if (!errs.isEmpty) graft.io.Writers.appendCsv(errs, Util.expandEnv(ef))
+        // The error branch is one action (the reference routes both in
+        // one record loop, processor.go:95-119), run beside the main
+        // write: the staged error-file write, whose row count is
+        // observed as it is written, or with no error file a count.
+        // The error file is appended only once the main write is done.
+        val errorBranch =
+          if (errorFile.isEmpty && !pb.errorHandling.logErrors) None
+          else Some(new Beside(errorFile match {
+            case Some(ef) =>
+              val staged = graft.io.Writers.stageAppendCsv(compiled.errors, ef)
+              (staged.rows, Some(staged))
+            case None => (compiled.errors.count(), None)
+          }))
+        try graft.io.Writers.write(compiled.main, pb.destination)
+        catch {
+          case e: Throwable =>
+            errorBranch.foreach(_.await() match {
+              case scala.util.Success((_, staged)) => staged.foreach(_.discard())
+              case scala.util.Failure(side) => e.addSuppressed(side)
+            })
+            throw e
         }
-        if (pb.errorHandling.logErrors) {
-          val n = compiled.errors.count()
-          if (n > 0) System.err.println(s"[warn] $n record(s) skipped due to errors")
+        errorBranch.foreach { b =>
+          val (n, staged) = b.await().get
+          staged.foreach(s => if (n > 0) s.commit() else s.discard())
+          if (pb.errorHandling.logErrors && n > 0)
+            System.err.println(s"[warn] $n record(s) skipped due to errors")
         }
     }
+  }
+
+  /** `body` on a new thread, started now. The thread inherits the
+    * caller's Spark local properties (job group, scheduler pool), so
+    * its jobs belong to the same run; [[await]] joins it. */
+  private final class Beside[A](body: => A) {
+    @volatile private var result: scala.util.Try[A] = _
+    private val thread = new Thread(() =>
+      result = try scala.util.Success(body) catch { case e: Throwable => scala.util.Failure(e) },
+      "graft-error-sink")
+    thread.start()
+    def await(): scala.util.Try[A] = { thread.join(); result }
+  }
+
+  /** Two writers on one path would interleave its bytes and share one
+    * `.spark-tmp` staging dir. */
+  private def requireOwnPath(errorFile: String, destination: String): Unit = {
+    def canon(p: String) = new java.io.File(p).getCanonicalPath
+    if (destination.nonEmpty && canon(errorFile) == canon(destination))
+      throw new IllegalArgumentException(
+        s"errorFile is the destination: errorHandling.errorFile '$errorFile' " +
+          s"resolves to destination.file '$destination'; give the error file its own path")
   }
 
   @annotation.tailrec

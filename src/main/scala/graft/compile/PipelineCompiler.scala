@@ -18,7 +18,7 @@ import graft.transforms.{EngineConfig, Transforms}
  * errors are carried as a `_err` string column (first failing rule
  * wins, rule order — SURVEY §2.6) instead of exceptions, so Catalyst
  * still gets predicate pushdown/codegen across the stages, and the
- * main/error branches are two filters over the same cached lineage.
+ * main/error branches are two filters over the same (uncached) lineage.
  */
 object PipelineCompiler {
 

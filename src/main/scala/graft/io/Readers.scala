@@ -145,7 +145,9 @@ object Readers {
       .filter(_._1.nonEmpty)
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
       .toSeq.sortBy(_._2)
-    val schema = StructType(keep.map { case (name, _) => StructField(name, StringType, nullable = true) })
+    // the splitter never yields null: declaring it lets the optimizer
+    // fold `x IS NULL` (the filter-null error branch) to an empty relation
+    val schema = StructType(keep.map { case (name, _) => StructField(name, StringType, nullable = false) })
 
     val skipped = spark.sparkContext.longAccumulator("csv_skipped_rows")
     lastCsvSkipped = Some(skipped)

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.config.DestinationConfig
 import graft.transforms.Transforms
@@ -125,21 +125,41 @@ object Writers {
   /**
    * Error-record sink: APPEND mode with header-only-if-new — the
    * reference's CSVErrorWriter shape (csv.go:354-467: failed records +
-   * etl_error_message, appended across runs).
+   * etl_error_message, appended across runs). One-shot form of
+   * [[stageAppendCsv]] and its commit.
    */
-  def appendCsv(df: DataFrame, path: String): Unit = {
-    val target = new java.io.File(path)
-    val writeHeader = !target.exists() || target.length() == 0
-    val tmp = path + ".spark-tmp"
-    stringified(df).coalesce(1).write.mode("overwrite")
-      .option("header", writeHeader.toString)
-      .option("emptyValue", "")
-      .csv(tmp)
-    withSinglePart(tmp) { part =>
-      val out = new java.io.FileOutputStream(target, /*append=*/ true)
+  def appendCsv(df: DataFrame, path: String): Unit = stageAppendCsv(df, path).commit()
+
+  /** A one-part CSV staged in `<path>.spark-tmp` by [[stageAppendCsv]]:
+    * `commit` appends it to `path`, `discard` drops it. `rows` is the
+    * number of data rows in it, counted while it was written. */
+  final class StagedAppend private[Writers] (path: String, val rows: Long) {
+    private val tmp = path + ".spark-tmp"
+    def commit(): Unit = withSinglePart(tmp) { part =>
+      val out = new java.io.FileOutputStream(path, /*append=*/ true)
       try java.nio.file.Files.copy(part, out)
       finally out.close()
     }
+    def discard(): Unit = deleteTree(new java.io.File(tmp))
+  }
+
+  /** The write step of [[appendCsv]]: one action writes `df` to
+    * `<path>.spark-tmp` and counts its rows (an [[Observation]] on the
+    * write itself, no second pass). The header is written when `path`
+    * is absent or empty now, so nothing else may append to `path`
+    * before the commit. A failed write leaves no staging dir. */
+  def stageAppendCsv(df: DataFrame, path: String): StagedAppend = {
+    val target = new java.io.File(path)
+    val writeHeader = !target.exists() || target.length() == 0
+    val tmp = path + ".spark-tmp"
+    val observed = Observation()
+    try stringified(df.observe(observed, count(lit(1)).as("rows")))
+      .coalesce(1).write.mode("overwrite")
+      .option("header", writeHeader.toString)
+      .option("emptyValue", "")
+      .csv(tmp)
+    catch { case e: Throwable => deleteTree(new java.io.File(tmp)); throw e }
+    new StagedAppend(path, observed.get("rows").asInstanceOf[Long])
   }
 
   /** Newline-delimited JSON (JSONL) — the training-data interchange
@@ -201,14 +221,16 @@ object Writers {
     val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(path), "UTF-8"))
     try {
+      var wrote = false
       while (it.hasNext) {
         val row = it.next()
         val m = new java.util.LinkedHashMap[String, Any]()
         names.zipWithIndex.foreach { case (n, i) => m.put(n, toJava(row.get(i))) }
         val doc = new java.util.ArrayList[Any](); doc.add(m)
         w.write(yaml.dump(doc))
+        wrote = true
       }
-      if (!df.columns.isEmpty && df.isEmpty) w.write("[]\n")
+      if (!wrote && names.nonEmpty) w.write("[]\n")
     } finally w.close()
   }
 
@@ -240,7 +262,11 @@ object Writers {
     val part = dir.listFiles().find(_.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(s"no part file in $tmpDir"))
     use(part.toPath)
-    dir.listFiles().foreach(_.delete())
-    dir.delete()
+    deleteTree(dir)
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    java.nio.file.Files.deleteIfExists(f.toPath); ()
   }
 }

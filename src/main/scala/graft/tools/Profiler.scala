@@ -31,9 +31,9 @@ import graft.ops.CachedRelations
  *  - `plan`: writes the formatted explain of the unexecuted plan to
  *    `plans/<tag>/<query>_<suffix>.txt`, then runs the query and counts
  *    the exchanges and reused exchanges of the plan that ran.
- *  - `stages`: one noop-sink run; per Spark stage, its call site and
- *    operator scopes, tasks, executor run and CPU time, input bytes,
- *    shuffle read/write bytes and spill bytes.
+ *  - `stages`: one noop-sink run; its job count, and per Spark stage,
+ *    its call site and operator scopes, tasks, executor run and CPU
+ *    time, input bytes, shuffle read/write bytes and spill bytes.
  *
  * A/B comparisons across commits are `playbench/counter_diff.py`'s job.
  */
@@ -48,6 +48,9 @@ object Profiler {
                               tasks: Int, runMs: Long, cpuMs: Long, inputBytes: Long,
                               shuffleReadBytes: Long, shuffleWriteBytes: Long,
                               spillBytes: Long)
+
+  /** The jobs and completed stages (in stage-id order) of one run. */
+  final case class StagesRun(jobs: Int, stages: Seq[StageStats])
 
   private val WarmPasses = 2
   private val MeasuredPasses = 3
@@ -92,9 +95,9 @@ object Profiler {
       nodes.count(_.isInstanceOf[ReusedExchangeExec]))
   }
 
-  /** Stages of one noop-sink run of the query (its build-time jobs
-    * included), in stage-id order. */
-  def stages(spark: SparkSession, sfDir: String, name: String): Seq[StageStats] = {
+  /** Jobs and stages of one noop-sink run of the query (its build-time
+    * jobs included). */
+  def stages(spark: SparkSession, sfDir: String, name: String): StagesRun = {
     val sc = spark.sparkContext
     val group = s"graft-profiler-$name"
     val collector = new StageCollector(group)
@@ -110,19 +113,20 @@ object Profiler {
       finally sc.clearJobGroup()
       require(collector.fence.await(60, TimeUnit.SECONDS), "listener events did not drain")
     } finally sc.removeSparkListener(collector)
-    collector.stages.asScala.toSeq.sortBy(_.stageId)
+    StagesRun(collector.jobs.get, collector.stages.asScala.toSeq.sortBy(_.stageId))
   }
 
   private final class StageCollector(group: String) extends SparkListener {
     val fenceGroup = s"$group-fence"
     val fence = new CountDownLatch(1)
     val stages = new ConcurrentLinkedQueue[StageStats]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile private var jobStages = Set.empty[Int]
     @volatile private var fenceJob = -1
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-        case `group` => jobStages ++= e.stageIds
+        case `group` => jobs.incrementAndGet(); jobStages ++= e.stageIds
         case `fenceGroup` => fenceJob = e.jobId
         case _ =>
       }
@@ -176,8 +180,8 @@ object Profiler {
           val c = plan(spark, sfDir, name, out)
           println(s"PLAN $name -> $out exchanges=${c.exchanges} reused=${c.reused}")
         case "stages" =>
-          val ss = stages(spark, sfDir, name)
-          println(s"STAGES $name stages=${ss.size} tasks=${ss.map(_.tasks).sum} " +
+          val StagesRun(jobs, ss) = stages(spark, sfDir, name)
+          println(s"STAGES $name jobs=$jobs stages=${ss.size} tasks=${ss.map(_.tasks).sum} " +
             s"run=${ss.map(_.runMs).sum} ms cpu=${ss.map(_.cpuMs).sum} ms")
           ss.foreach { s =>
             println(f"  stage ${s.stageId}%4d tasks=${s.tasks}%5d run=${s.runMs}%7d ms cpu=${s.cpuMs}%7d ms " +

@@ -3,6 +3,7 @@ package graft.cli
 import graft.SparkTestBase
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /**
  * Every shipped example playbook (the examples dir) runs end-to-end
@@ -11,16 +12,16 @@ import java.nio.file.{Files, Paths}
  * one fails the build here, not in a user's terminal. `${GRAFT_*}`
  * placeholders are substituted the way the CLI's env expansion would.
  */
-class ExamplePlaybooksSpec extends SparkTestBase {
+class ExamplePlaybooksSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private val data = "/root/testdata/sf0.001"
 
   /** Substitute placeholders and write the config; returns (cfg, outDir). */
   private def prepareExample(name: String, extra: Map[String, String]): (String, String) = {
-    val out = Files.createTempDirectory(s"graft_ex_${name.stripSuffix(".yaml")}").toString
+    val out = tempDir(s"graft_ex_${name.stripSuffix(".yaml")}").toString
     var yaml = new String(Files.readAllBytes(Paths.get(s"examples/$name")), UTF_8)
-    (extra ++ Map("GRAFT_DATA" -> data, "GRAFT_OUT" -> out)).foreach { case (k, v) =>
+    (Map("GRAFT_DATA" -> data, "GRAFT_OUT" -> out) ++ extra).foreach { case (k, v) =>
       yaml = yaml.replace("${" + k + "}", v)
     }
     val cfg = s"$out/pb.yaml"
@@ -97,7 +98,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   }
 
   test("streaming_ingest: two invocations drain two drop files exactly once") {
-    val in = Files.createTempDirectory("graft_ex_stream_in").toString
+    val in = tempDir("graft_ex_stream_in").toString
     val good = "The quick brown fox jumps over the lazy dog and that dog naps happily near the river."
     Files.write(Paths.get(s"$in/b1.jsonl"),
       s"""{"doc_id": 1, "text": "$good"}\n{"doc_id": 2, "text": "$good"}""".getBytes(UTF_8))
@@ -114,7 +115,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   }
 
   test("incremental_ingest: two -input batches chain through the versioned state") {
-    val tmp = Files.createTempDirectory("graft_ex_incr").toString
+    val tmp = tempDir("graft_ex_incr").toString
     val docs = spark.read.parquet(s"$data/documents.parquet")
       .select("doc_id", "text").filter("text IS NOT NULL")
     docs.filter("doc_id % 2 = 0").write.parquet(s"$tmp/batch0")
@@ -137,7 +138,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   }
 
   test("incremental_ingest: -dry-run and -explain commit no state; the real run is unchanged") {
-    val tmp = Files.createTempDirectory("graft_ex_incr_dry").toString
+    val tmp = tempDir("graft_ex_incr_dry").toString
     spark.read.parquet(s"$data/documents.parquet")
       .select("doc_id", "text").filter("text IS NOT NULL")
       .write.parquet(s"$tmp/batch0")
@@ -156,7 +157,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   }
 
   test("analytics path params are env-expanded by the CLI: the state dir chains two batches") {
-    val tmp = Files.createTempDirectory("graft_cli_env").toString
+    val tmp = tempDir("graft_cli_env").toString
     val docs = spark.read.parquet(s"$data/documents.parquet")
       .select("doc_id", "text").filter("text IS NOT NULL")
     docs.filter("doc_id % 2 = 0").write.parquet(s"$tmp/batch0")
@@ -195,7 +196,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   }
 
   test("-explain on a streaming playbook shows the plan without starting a sink") {
-    val in = Files.createTempDirectory("graft_ex_explain_in").toString
+    val in = tempDir("graft_ex_explain_in").toString
     Files.write(Paths.get(s"$in/b1.jsonl"),
       """{"doc_id": 1, "text": "hello world"}""".getBytes(UTF_8))
     val (cfg, out) = prepareExample("streaming_ingest.yaml", Map("GRAFT_IN" -> in))
@@ -217,6 +218,50 @@ class ExamplePlaybooksSpec extends SparkTestBase {
     // one row per user, event_type uppercased
     assert(res.select("user_id").distinct().count() == res.count())
     assert(res.filter($"event_type" =!= org.apache.spark.sql.functions.upper($"event_type")).count() == 0)
+  }
+
+  test("classic_etl: error sidecar holds the filter-null rows and mustToFloat failures, appended") {
+    import org.apache.spark.sql.functions.{lit, when}
+    // the shipped events carry no nulls; this copy nulls some `value`
+    // and `event_type` cells, so the filter meets null operands
+    val in = tempDir("graft_ex_classic_in").toString
+    spark.read.parquet(s"$data/events.parquet")
+      .withColumn("value", when($"event_id" % 7 === 0, lit(null)).otherwise($"value"))
+      .withColumn("event_type", when($"event_id" % 11 === 5, lit(null)).otherwise($"event_type"))
+      .write.parquet(s"$in/events.parquet")
+    val input = spark.read.parquet(s"$in/events.parquet")
+    val rows = input.select("event_id", "value", "event_type").collect().toSeq
+      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Double]), Option(r.getString(2))))
+    // `value >= 0 && event_type != 'purchase'` in three-valued logic:
+    // None is null, and AND is false as soon as one side is false
+    def filter(v: Option[Double], t: Option[String]): Option[Boolean] =
+      (v.map(_ >= 0), t.map(_ != "purchase")) match {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(a), Some(b)) => Some(a && b)
+        case _ => None
+      }
+    val filterNull = rows.collect { case (id, v, t) if filter(v, t).isEmpty =>
+      id.toString -> "filter: expression evaluated to null" }
+    val floatFailures = rows.collect { case (id, None, t) if filter(None, t).contains(true) =>
+      id.toString -> "mustToFloat: cannot convert value to float for field 'value'" }
+    assert(filterNull.nonEmpty)
+
+    val (cfg, out) = prepareExample("classic_etl.yaml", Map("GRAFT_DATA" -> in))
+    val errFile = Paths.get(s"$out/events_errors.csv")
+    def lines = Files.readAllLines(errFile, UTF_8).asScala.toSeq
+    def errorRows = spark.read.option("header", "true").csv(errFile.toString)
+      .select("event_id", "etl_error_message").collect().toSeq.map(r => r.getString(0) -> r.getString(1))
+    val header = (input.columns :+ "etl_error_message").sorted.mkString(",")
+
+    Main.run(spark, Main.Args(config = cfg))
+    assert(lines.head == header)
+    assert(errorRows.sorted == (filterNull ++ floatFailures).sorted)
+    val once = lines.size
+
+    Main.run(spark, Main.Args(config = cfg))
+    assert(lines.count(_ == header) == 1)
+    assert(lines.size == 2 * once - 1)
+    assert(errorRows.sorted == (filterNull ++ floatFailures ++ filterNull ++ floatFailures).sorted)
   }
 
   test("ccnet_curate: language-filtered, tail perplexity band dropped per source") {
@@ -259,7 +304,7 @@ class ExamplePlaybooksSpec extends SparkTestBase {
   test("ccnet_reference_lm: bands under a pre-fitted stamped LM, loud when stale") {
     // fit the reference LM ONCE on the even-doc_id half, persisted +
     // stamped — the playbook then scores with zero training work
-    val refDir = Files.createTempDirectory("graft_ex_lmref").toString
+    val refDir = tempDir("graft_ex_lmref").toString
     val trainTbl = s"$refDir/reference"
     spark.read.parquet(s"$data/documents.parquet")
       .filter($"doc_id" % 2 === 0).write.parquet(trainTbl)

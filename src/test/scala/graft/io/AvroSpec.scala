@@ -4,20 +4,15 @@ import graft.SparkTestBase
 import graft.config.{DestinationConfig, PlaybookLoader, SourceConfig}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Avro source/sink round-trips (io.Avro, built on avro-mapred):
   * typed fidelity across the full supported mapping incl. nulls,
   * arrays, nested structs, date/timestamp logical types and binary;
   * codec option; loud rejection of unsupported types; load-time
   * config constraints (no partitionBy, no streaming). */
-class AvroSpec extends SparkTestBase {
+class AvroSpec extends SparkTestBase with graft.TempDirs {
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-avro")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmpDir(): String = tempDir("graft-avro").toString
 
   private def roundtrip(df: org.apache.spark.sql.DataFrame,
                         compression: String = "") = {

@@ -5,13 +5,9 @@ import graft.config.{DestinationConfig, SourceConfig}
 import java.nio.file.Files
 
 /** Read/write round-trips against temp files (reference internal/io test shape). */
-class IoSpec extends SparkTestBase {
+class IoSpec extends SparkTestBase with graft.TempDirs {
 
-  private def tmp(suffix: String): String = {
-    val f = Files.createTempFile("graft-io", suffix)
-    Files.delete(f)
-    f.toString
-  }
+  private def tmp(suffix: String): String = s"${tempDir("graft-io")}/out$suffix"
 
   test("csv: header keys, all-string values, malformed rows skipped, comment char") {
     val p = tmp(".csv")
@@ -45,7 +41,7 @@ class IoSpec extends SparkTestBase {
   }
 
   test("csv: directory read drops EVERY file's header row; skip counter observable") {
-    val dir = Files.createTempDirectory("graft-csvdir")
+    val dir = tempDir("graft-csvdir")
     Files.writeString(dir.resolve("a.csv"), "id,name\n1,x\nbad_row\n")
     Files.writeString(dir.resolve("b.csv"), "id,name\n2,y\n")
     val df = Readers.read(spark, graft.config.SourceConfig("csv", file = dir.toString))
@@ -100,7 +96,7 @@ class IoSpec extends SparkTestBase {
   }
 
   test("csv splittable: directory read drops EVERY file's header; tab delimiter") {
-    val dir = Files.createTempDirectory("graft-csvdir-split")
+    val dir = tempDir("graft-csvdir-split")
     Files.writeString(dir.resolve("a.csv"), "id\tname\n1\tx\nbad\trow\textra\n")
     Files.writeString(dir.resolve("b.csv"), "id\tname\n2\ty\n")
     val df = Readers.read(spark, SourceConfig("csv", file = dir.toString,
@@ -158,6 +154,17 @@ class IoSpec extends SparkTestBase {
     val back = Readers.read(spark, SourceConfig("yaml", file = out))
     assert(back.count() == 2)
     assert(back.columns.sorted.toSeq == Seq("id", "name"))
+  }
+
+  test("yaml writer: rows as a block list; an empty frame with columns writes []") {
+    import spark.implicits._
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
+    val out = tmp(".yaml")
+    Writers.writeYaml(df, out)
+    assert(Files.readString(java.nio.file.Paths.get(out)) == "- id: 1\n  name: a\n- id: 2\n  name: b\n")
+    val empty = tmp(".yaml")
+    Writers.writeYaml(df.limit(0), empty)
+    assert(Files.readString(java.nio.file.Paths.get(empty)) == "[]\n")
   }
 
   test("xlsx round trip: sheet selection, header keys, string values, bools as strings") {
@@ -249,7 +256,7 @@ class IoSpec extends SparkTestBase {
 
   test("jsonl gzip round trip: .json.gz part files, transparent read-back") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-gz").toString + "/out"
+    val dir = tempDir("graft-gz").toString + "/out"
     val df = (1 to 500).map(i => (i.toLong, s"doc $i", if (i % 7 == 0) null else s"v$i"))
       .toDF("id", "text", "opt")
     Writers.write(df, DestinationConfig("jsonl", file = dir, compression = "gzip"))
@@ -263,7 +270,7 @@ class IoSpec extends SparkTestBase {
 
   test("parquet destination honors the compression codec option") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-zstd").toString + "/out"
+    val dir = tempDir("graft-zstd").toString + "/out"
     val df = (1 to 100).map(i => (i.toLong, s"payload $i")).toDF("id", "text")
     Writers.write(df, DestinationConfig("parquet", file = dir, compression = "zstd"))
     val fs = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
@@ -274,7 +281,7 @@ class IoSpec extends SparkTestBase {
 
   test("orc round trip: types survive; gzip maps to the zlib codec name") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-orc").toString + "/out"
+    val dir = tempDir("graft-orc").toString + "/out"
     val df = (1 to 200).map(i => (i.toLong, s"doc $i", i * 0.5,
       if (i % 9 == 0) null else s"v$i")).toDF("id", "text", "score", "opt")
     Writers.write(df, DestinationConfig("orc", file = dir, compression = "gzip"))
@@ -294,7 +301,7 @@ class IoSpec extends SparkTestBase {
 
   test("orc: partitionBy layout and filter pushdown reach the scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-orcp").toString + "/out"
+    val dir = tempDir("graft-orcp").toString + "/out"
     val df = (1 to 300).map(i => (i.toLong, s"p${i % 3}", s"doc $i"))
       .toDF("id", "part", "text")
     Writers.write(df, DestinationConfig("orc", file = dir,
@@ -315,7 +322,7 @@ class IoSpec extends SparkTestBase {
 
   test("orc streaming: file-source catch-up run lands orc parts exactly once") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-orcs").toString
+    val base = tempDir("graft-orcs").toString
     val in = base + "/in"; val out = base + "/out"; val ck = base + "/ck"
     (1 to 50).map(i => (i.toLong, s"doc $i")).toDF("id", "text")
       .write.orc(in)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  * rows of a full rebuild (q_llm_ann_append_check pins the same thing
  * against the DuckDB-oracled count at corpus scale).
  */
-class AnnIndexAppendSpec extends SparkTestBase {
+class AnnIndexAppendSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private val dims = 4
@@ -30,7 +30,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
   }
 
   private def mkTable(rows: Seq[(Long, Seq[Double])]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annapp_tbl").toString
+    val dir = tempDir("graft_annapp_tbl").toString
     rows.toDF("vec_id", "embedding").repartition(2)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -51,7 +51,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
   test("append refuses an unstamped path (no silent v0 restart) and a repeat delta") {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_v0").toString
+    val idx = tempDir("graft_annapp_v0").toString
     val e0 = intercept[IllegalStateException] {
       AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idx, base)
     }
@@ -69,8 +69,8 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
     val full = mkTable(baseRows ++ deltaRows)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_annapp_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_annapp_r").toString
+    val idxA = tempDir("graft_annapp_a").toString
+    val idxR = tempDir("graft_annapp_r").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idxA,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idxA, base)
@@ -89,7 +89,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
   test("a mutated delta (or base) after append fails STALE at probe time") {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_st").toString
+    val idx = tempDir("graft_annapp_st").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idx, base)
@@ -106,7 +106,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
   test("drift guard: a delta far from the fitted cells refuses with a rebuild hint") {
     val base = mkTable(baseRows)
     val far = mkTable((201L to 210L).map(i => (i, Seq(5000.0 + i, -5000.0, 777.0, 1.0))))
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_dr").toString
+    val idx = tempDir("graft_annapp_dr").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist)
     val e = intercept[IllegalStateException] {
@@ -126,7 +126,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val d1 = mkTable(deltaRows)
     val d2 = mkTable((301L to 310L).map(i => vec(i, (i % 2).toInt)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_cp").toString
+    val idx = tempDir("graft_annapp_cp").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(d1), d1, idx, base)
@@ -160,8 +160,8 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val dupDelta = deltaRows ++ Seq(vec(105L, 1), vec(105L, 1)) // 105 three times
     val delta = mkTable(dupDelta)
     val full = mkTable(baseRows ++ dupDelta)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_annapp_dup_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_annapp_dup_r").toString
+    val idxA = tempDir("graft_annapp_dup_a").toString
+    val idxR = tempDir("graft_annapp_dup_r").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idxA,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idxA, base)
@@ -178,10 +178,10 @@ class AnnIndexAppendSpec extends SparkTestBase {
 
   test("a delta path containing ']' survives the stamp part list (parse robustness)") {
     val base = mkTable(baseRows)
-    val delta = java.nio.file.Files.createTempDirectory("graft_annapp_br]k").toString
+    val delta = tempDir("graft_annapp_br]k").toString
     deltaRows.toDF("vec_id", "embedding").repartition(1)
       .write.mode("overwrite").parquet(delta)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_brk_idx").toString
+    val idx = tempDir("graft_annapp_brk_idx").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idx, base)
@@ -224,8 +224,8 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
     val full = mkTable(baseRows ++ deltaRows)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_annapp_bin_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_annapp_bin_r").toString
+    val idxA = tempDir("graft_annapp_bin_a").toString
+    val idxR = tempDir("graft_annapp_bin_r").toString
     // no silent v0 restart applies here too (shared guard)
     intercept[IllegalStateException] {
       AnnIndex.appendBinaryIndex(spark, spark.read.parquet(delta), delta, idxA, base)
@@ -254,8 +254,8 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
     val full = mkTable(baseRows ++ deltaRows)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_annapp_pq_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_annapp_pq_r").toString
+    val idxA = tempDir("graft_annapp_pq_a").toString
+    val idxR = tempDir("graft_annapp_pq_r").toString
     AnnIndex.writePqIndex(spark, spark.read.parquet(base), base, idxA,
       "vec_id", "embedding", dims, nlist, m, ksub)
     AnnIndex.appendPqIndex(spark, spark.read.parquet(delta), delta, idxA, base)
@@ -289,7 +289,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val d1 = mkTable(deltaRows)
     val d2 = mkTable((301L to 310L).map(i => vec(i, (i % 2).toInt)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_pqcp").toString
+    val idx = tempDir("graft_annapp_pqcp").toString
     AnnIndex.writePqIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist, m, ksub)
     AnnIndex.appendPqIndex(spark, spark.read.parquet(d1), d1, idx, base)
@@ -323,7 +323,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val d1 = mkTable(deltaRows)
     val d2 = mkTable((301L to 310L).map(i => vec(i, (i % 2).toInt)))
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_bincp").toString
+    val idx = tempDir("graft_annapp_bincp").toString
     AnnIndex.writeBinaryIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims)
     AnnIndex.appendBinaryIndex(spark, spark.read.parquet(d1), d1, idx, base)
@@ -357,8 +357,8 @@ class AnnIndexAppendSpec extends SparkTestBase {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
     val full = mkTable(baseRows ++ deltaRows)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_annapp_lsh_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_annapp_lsh_r").toString
+    val idxA = tempDir("graft_annapp_lsh_a").toString
+    val idxR = tempDir("graft_annapp_lsh_r").toString
     // shared guard: no silent v0 restart
     intercept[IllegalStateException] {
       AnnIndex.appendLshIndex(spark, spark.read.parquet(delta), delta, idxA, base)
@@ -409,7 +409,7 @@ class AnnIndexAppendSpec extends SparkTestBase {
   test("a death window mid-append leaves a loudly unverifiable index") {
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annapp_dd").toString
+    val idx = tempDir("graft_annapp_dd").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(base), base, idx,
       "vec_id", "embedding", dims, nlist)
     AnnIndex.appendIvfIndex(spark, spark.read.parquet(delta), delta, idx, base)

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
  * Rails: no silent v0 restart, one append per delta, parts verified
  * at score time, pre-uni artifacts refuse with a rebuild hint.
  */
-class LmIndexAppendSpec extends SparkTestBase {
+class LmIndexAppendSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def mkCorpus(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmapp_tbl").toString
+    val dir = tempDir("graft_lmapp_tbl").toString
     rows.toDF("doc_id", "text").repartition(2)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -45,8 +45,8 @@ class LmIndexAppendSpec extends SparkTestBase {
     val base = mkCorpus(baseDocs)
     val delta = mkCorpus(deltaDocs)
     val full = mkCorpus(baseDocs ++ deltaDocs)
-    val idxA = java.nio.file.Files.createTempDirectory("graft_lmapp_a").toString
-    val idxR = java.nio.file.Files.createTempDirectory("graft_lmapp_r").toString
+    val idxA = tempDir("graft_lmapp_a").toString
+    val idxR = tempDir("graft_lmapp_r").toString
     LmIndex.writeMknIndex(spark, base, idxA, "doc_id", "text")
     LmIndex.appendMknIndex(spark, delta, idxA, base, "doc_id", "text")
     LmIndex.writeMknIndex(spark, full, idxR, "doc_id", "text")
@@ -82,7 +82,7 @@ class LmIndexAppendSpec extends SparkTestBase {
   test("rails: no silent v0 restart, one append per delta, stale delta at score time") {
     val base = mkCorpus(baseDocs)
     val delta = mkCorpus(deltaDocs)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmapp_rails").toString
+    val idx = tempDir("graft_lmapp_rails").toString
     val e0 = intercept[IllegalStateException] {
       LmIndex.appendMknIndex(spark, delta, idx, base, "doc_id", "text")
     }
@@ -116,7 +116,7 @@ class LmIndexAppendSpec extends SparkTestBase {
   test("an artifact without uni/ (pre-append vintage) refuses with a rebuild hint") {
     val base = mkCorpus(baseDocs)
     val delta = mkCorpus(deltaDocs)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmapp_pre").toString
+    val idx = tempDir("graft_lmapp_pre").toString
     LmIndex.writeMknIndex(spark, base, idx, "doc_id", "text")
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -133,7 +133,7 @@ class LmIndexAppendSpec extends SparkTestBase {
   test("a death window mid-swap leaves a loudly unverifiable artifact") {
     val base = mkCorpus(baseDocs)
     val delta = mkCorpus(deltaDocs)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmapp_dw").toString
+    val idx = tempDir("graft_lmapp_dw").toString
     LmIndex.writeMknIndex(spark, base, idx, "doc_id", "text")
     LmIndex.appendMknIndex(spark, delta, idx, base, "doc_id", "text")
     // simulate the mid-lifecycle death: stamp dropped (as append does

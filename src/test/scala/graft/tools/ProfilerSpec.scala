@@ -23,7 +23,8 @@ class ProfilerSpec extends SparkTestBase {
   }
 
   test("stages: per-stage tasks and shuffle bytes of one run") {
-    val ss = Profiler.stages(spark, sfDir, query)
+    val Profiler.StagesRun(jobs, ss) = Profiler.stages(spark, sfDir, query)
+    assert(jobs == 2, ss) // the shuffle map stage, then the result stage
     assert(ss.size >= 2, ss)
     assert(ss.forall(_.tasks > 0), ss)
     assert(ss.map(_.shuffleWriteBytes).sum > 0, ss)
