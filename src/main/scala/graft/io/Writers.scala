@@ -265,7 +265,7 @@ object Writers {
     deleteTree(dir)
   }
 
-  private def deleteTree(f: java.io.File): Unit = {
+  private[graft] def deleteTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteTree))
     java.nio.file.Files.deleteIfExists(f.toPath); ()
   }

@@ -8,15 +8,12 @@ import org.apache.spark.sql.functions._
  * Jaccard/cosine blocking) -> connected components -> one canonical
  * representative per cluster.
  *
- * Three component engines, chosen by scale/shape:
+ * Two component engines, chosen by scale:
  *  - driver union-find under `driverEdgeLimit` (one job);
- *  - min-label propagation — O(diameter) shuffle-join rounds, ideal
- *    for the near-clique graphs dup clusters actually are;
  *  - alternating large-star/small-star ([[connectedComponentsStar]],
- *    Kiveris et al. 2014) — O(log² n) rounds REGARDLESS of diameter,
- *    the right engine when the graph can be chain-shaped (URL redirect
- *    chains, citation paths) and label propagation's round count
- *    would equal the longest path.
+ *    Kiveris et al. 2014) above it — O(log² n) rounds REGARDLESS of
+ *    diameter, so a chain-shaped graph (URL redirect chains, citation
+ *    paths) needs no more rounds than a near-clique dup cluster.
  * Lineage is cut with localCheckpoint each round so iterations don't
  * stack plans.
  */
@@ -24,12 +21,10 @@ object Clusters {
 
   /** (id, component) for every node appearing in `edges`; component =
     * min node id reachable. Adaptive: small edge sets resolve with
-    * driver union-find (one job instead of one per propagation round);
-    * big graphs take the distributed label-propagation loop. */
+    * driver union-find (one job instead of one per contraction round);
+    * big graphs take the distributed star contraction. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20,
-                          driverEdgeLimit: Long = 2000000L,
-                          requireConvergence: Boolean = true): DataFrame = {
+                          driverEdgeLimit: Long = 2000000L): DataFrame = {
     val symRaw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .union(edges.select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
       .localCheckpoint(eager = false)
@@ -40,48 +35,19 @@ object Clusters {
     // set (the r12 count() here was a second full-volume pass). When
     // the graph IS small, the taken rows are complete and feed the
     // union-find directly — the old separate collect() job is gone too.
-    // r16: the probe runs BEFORE any distinct — union-find is
-    // insensitive to duplicate edges, so the small path now pays ZERO
-    // shuffles (the r15 shape paid the full distinct exchange first);
-    // the limit counts raw pair instances, which only errs toward the
-    // distributed engine. The big path distincts once, as before — the
-    // label-propagation loop joins the edge set every round, so
-    // deduplicating it up front is the cheaper side of that trade.
+    // The probe runs BEFORE any distinct — union-find is insensitive
+    // to duplicate edges, so the small path pays ZERO shuffles; the
+    // limit counts raw pair instances, which only errs toward the
+    // distributed engine. That engine reads `symRaw`, the checkpoint
+    // the probe has partly filled, so the upstream pair lineage is
+    // never computed twice; it normalizes and distincts the edges
+    // itself.
     val lim = math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt
     val head = symRaw.take(lim + 1)
-    if (head.length <= lim)
-      return driverUnionFind(symRaw.sparkSession, head)
-    val sym = symRaw.distinct().localCheckpoint(eager = false)
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels.withColumnRenamed("id", "b2"), col("b") === col("b2"))
-        .groupBy(col("a")).agg(min(col("label")).as("nbr_label"))
-      val updated = labels.join(nbrMin, labels("id") === nbrMin("a"), "left")
-        .select(labels("id"),
-          labels("label").as("old_label"),
-          least(labels("label"), coalesce(col("nbr_label"), labels("label"))).as("label"))
-        .localCheckpoint(eager = false)
-      converged = updated.filter(col("label") < col("old_label")).isEmpty
-      labels = updated.select(col("id"), col("label"))
-      iter += 1
-    }
-    // Silently-unconverged labels are poison downstream: a duplicate
-    // cluster splits in two and dedup under-removes with no signal.
-    // Fail loudly by default; callers that can tolerate partial labels
-    // (e.g. a diagnostics pass) opt out explicitly.
-    if (!converged && requireConvergence)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-        "the graph's diameter exceeds maxIter; raise maxIter or pass " +
-        "requireConvergence=false to accept partial labels")
-    labels.withColumnRenamed("label", "component")
+    if (head.length <= lim) driverUnionFind(symRaw.sparkSession, head)
+    else connectedComponentsStar(symRaw, "a", "b")
   }
 
-  /** In-memory union-find over a collected (already-checkpointed)
-    * edge list; result distributed back as a DataFrame. */
   /**
    * Connected components by alternating LARGE-STAR / SMALL-STAR
    * contractions (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
@@ -91,22 +57,20 @@ object Clusters {
    * large-star attaches STRICTLY LARGER neighbors to the min,
    * small-star the rest. The edge set provably converges to stars
    * rooted at each component's minimum id in O(log² n) rounds
-   * regardless of graph diameter — the property label propagation
-   * lacks on chain-shaped graphs, where its round count equals the
-   * longest path.
+   * regardless of graph diameter.
    *
    * Each half-round is one groupBy (the per-node neighborhood min,
    * map-side combined) and one join, both keyed on node id; the
    * convergence probe is ONE (count, bit_xor-of-hash) aggregate per
    * round — probabilistic set equality, rationale at the probe.
    * Output: (id, component) for every node appearing in `edges`,
-   * component = min reachable id — identical to
-   * [[connectedComponents]] by construction (property-pinned in the
-   * spec).
+   * component = min reachable id — identical to the driver union-find
+   * (property-pinned in the spec). Not converging in `maxIter` rounds
+   * throws: partial labels would split a duplicate cluster in two and
+   * dedup would under-remove with no signal.
    */
   def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int = 30,
-                              requireConvergence: Boolean = true): DataFrame = {
+                              maxIter: Int = 30): DataFrame = {
     val cast = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
@@ -150,7 +114,7 @@ object Clusters {
     // two different same-size edge sets whose xxhash64 xors collide
     // in the same run (xor, not sum: ANSI mode faults a long-sum
     // overflow). The final state must also be a contraction fixpoint,
-    // which maxIter + requireConvergence guard regardless.
+    // which the maxIter throw guards regardless.
     def probe(d: DataFrame): (Long, Long) = {
       val r = d.agg(count(lit(1)),
         expr("bit_xor(xxhash64(a, b))")).head()
@@ -168,22 +132,19 @@ object Clusters {
       sig = nextSig
       iter += 1
     }
-    if (!converged && requireConvergence)
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds " +
-        "(theoretical bound is O(log^2 n)); raise maxIter or pass " +
-        "requireConvergence=false to accept partial labels")
+        "(theoretical bound is O(log^2 n)); raise maxIter")
     // converged edges are stars (root, v): root = component min — one
-    // row per node. A NON-converged residual can attach a node to
-    // several roots, so the partial-labels escape hatch must still
-    // honor the one-label-per-id shape: take the min.
-    val labeled = nodes
+    // row per node
+    nodes
       .join(e.select(col("b").as("id"), col("a").as("_root")), Seq("id"), "left")
       .select(col("id"), coalesce(col("_root"), col("id")).as("component"))
-    if (converged) labeled
-    else labeled.groupBy(col("id")).agg(min(col("component")).as("component"))
   }
 
+  /** In-memory union-find over a collected (already-checkpointed)
+    * edge list; result distributed back as a DataFrame. */
   private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
                               rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._

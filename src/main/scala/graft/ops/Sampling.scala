@@ -46,7 +46,7 @@ object Sampling {
    *
    * Scale shape: component resolution is the bounded
    * [[Clusters.connectedComponents]] machinery (driver union-find
-   * under the edge limit, lineage-cut label propagation above); the
+   * under the edge limit, lineage-cut star contraction above); the
    * group map joins back on the doc id — near-dup pair volume is
    * band-bounded and typically ≪ corpus volume, so AQE broadcasts it
    * — and the bucket/split assignment is a row-local pure map.

@@ -882,7 +882,7 @@ object LlmQueries {
 
     // Large-star/small-star connected components (Kiveris 2014) — the
     // O(log² n) scale engine whose round count is independent of graph
-    // diameter (label propagation's weakness on chain graphs). The md5
+    // diameter (connectedComponents' distributed branch). The md5
     // face hash-matches the DuckDB recursive-CTE min-label walk; the
     // x64 twin below benches the engine on the production pair graph.
     Q("q_llm_cc_star",

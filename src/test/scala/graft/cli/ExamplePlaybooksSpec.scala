@@ -74,7 +74,7 @@ class ExamplePlaybooksSpec extends SparkTestBase with graft.TempDirs {
   }
 
   test("bucketed_orders: metastore bucketed table registered and complete") {
-    val out = runExample("bucketed_orders.yaml")
+    runExample("bucketed_orders.yaml")
     val back = spark.table("examples_orders_bucketed")
     assert(back.count() == spark.read.parquet(s"$data/orders.parquet").count())
     val bucketSpec = spark.sessionState.catalog

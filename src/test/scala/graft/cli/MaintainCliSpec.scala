@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
   * build, coherent verify, compaction with automatic index rebuild,
   * stale-index detection (exit 1 with the precise reason), and a
   * Z-order rewrite — the OPTIMIZE lifecycle a platform schedules. */
-class MaintainCliSpec extends SparkTestBase {
+class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   test("bloom-index -> verify -> compact(auto-rebuild) -> verify; stale detected after out-of-band rewrite") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain").toString
+    val tmp = tempDir("graft_maintain").toString
     val tbl = s"$tmp/tbl"
     val df = (0 until 6000).map(i => (i.toLong % 100, i.toLong)).toDF("k", "v")
     df.repartition(12, col("k")).write.parquet(tbl)
@@ -51,7 +51,7 @@ class MaintainCliSpec extends SparkTestBase {
   }
 
   test("zorder rewrite preserves rows; usage errors exit 2") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain_z").toString
+    val tmp = tempDir("graft_maintain_z").toString
     (0 until 4096).map(i => ((i * 37) % 64L, (i * 91) % 64L, i.toLong))
       .toDF("x", "y", "id").write.parquet(s"$tmp/in")
     assert(Maintain.run(spark, "zorder",
@@ -78,7 +78,7 @@ class MaintainCliSpec extends SparkTestBase {
       Array.tabulate(8)(d => math.sin(i * 0.37 + d) + (i % 5) * 0.1)))
 
   test("ann lifecycle from the shell: build -> verify -> append -> compact; refusals exit 1 verbatim") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain_ann").toString
+    val tmp = tempDir("graft_maintain_ann").toString
     val (tbl, delta, idx) = (s"$tmp/tbl", s"$tmp/delta", s"$tmp/idx")
     vecRows(0 until 200).toDF("vec_id", "embedding").repartition(2).write.parquet(tbl)
     vecRows(200 until 260).toDF("vec_id", "embedding").repartition(1).write.parquet(delta)
@@ -129,7 +129,7 @@ class MaintainCliSpec extends SparkTestBase {
   }
 
   test("lm lifecycle from the shell: build -> verify -> append; refusals exit 1") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain_lm").toString
+    val tmp = tempDir("graft_maintain_lm").toString
     val (train, delta, idx) = (s"$tmp/train", s"$tmp/delta", s"$tmp/idx")
     Seq((1L, "m n o m n o p"), (2L, "n o m"), (3L, "o p q o p q n"))
       .toDF("doc_id", "text").repartition(1).write.parquet(train)
@@ -159,7 +159,7 @@ class MaintainCliSpec extends SparkTestBase {
   }
 
   test("tok lifecycle from the shell: build stamps fit fertility; drift telemetry warns past the band") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_maintain_tok").toString
+    val tmp = tempDir("graft_maintain_tok").toString
     val (train, idx) = (s"$tmp/train", s"$tmp/idx")
     // short words -> low fertility under a small merge table
     Seq((1L, "aa bb aa bb cc"), (2L, "aa cc bb aa"), (3L, "bb bb aa cc aa"))

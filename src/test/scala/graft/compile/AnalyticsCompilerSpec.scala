@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** The `analytics:` playbook section (SURVEY §7E): load-time
   * validation, stage semantics, and the full YAML-file → cli.Main →
   * parquet-out round trip. */
-class AnalyticsCompilerSpec extends SparkTestBase {
+class AnalyticsCompilerSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def stage(op: String, params: (String, Any)*) =
@@ -104,7 +104,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
 
   test("binary source -> derive id -> image_features: media ingestion from config") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-media").toString
+    val dir = tempDir("graft-media").toString
     Files.write(Paths.get(dir, "a.png"), graft.ops.Multimodal.synthPng(1, 6, 4, 2))
     Files.write(Paths.get(dir, "b.gif"), graft.ops.Multimodal.synthGif(2, 6, 4))
     Files.write(Paths.get(dir, "c.tif"), graft.ops.Tiff.synth(3, 6, 4))
@@ -156,7 +156,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
 
   test("join stage: same-name keys, how and broadcast honored") {
     val dims = Seq((1, "x"), (2, "y")).toDF("k", "name")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val tmp = tempDir("graft_dim").toString
     dims.write.mode("overwrite").parquet(s"$tmp/dim.parquet")
     val facts = Seq((1, 10.0), (1, 5.0), (2, 1.0), (3, 7.0)).toDF("k", "v")
     val out = AnalyticsCompiler(spark, facts, Seq(
@@ -285,7 +285,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
   }
 
   test("YAML fixture through cli.Main end to end: quality gate -> dedup -> parquet out") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pb_e2e").toString
+    val tmp = tempDir("graft_pb_e2e").toString
     Seq(
       (1L, "en", "The quick brown fox jumps over the lazy dog near the river bank."),
       (2L, "en", "The quick brown fox jumps over the lazy dog near the river bank."),
@@ -371,7 +371,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
   }
 
   test("r11 LLM-family stages: gopher filter, pii redact, decontaminate filter, packing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_llm_stages").toString
+    val tmp = tempDir("graft_llm_stages").toString
     val good = "The quick brown fox jumps over the lazy dog and that dog will have a nap with the fox."
     val docs = Seq(
       (1L, good),
@@ -412,7 +412,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
   }
 
   test("destination bucketBy/zorderBy: load-time validation and the physical write") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dest_layout").toString
+    val tmp = tempDir("graft_dest_layout").toString
     // validation: every layout constraint is an accumulated load error
     def destErrs(destYaml: String): String =
       intercept[IllegalArgumentException](PlaybookLoader.fromString(s"""
@@ -467,7 +467,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
   }
 
   test("incr_neardup stage: versioned state lifecycle, verdicts and filter modes, validation") {
-    val state = java.nio.file.Files.createTempDirectory("graft_incr_stage").toString + "/st"
+    val state = tempDir("graft_incr_stage").toString + "/st"
     def ingest(df: org.apache.spark.sql.DataFrame, extra: (String, Any)*) =
       AnalyticsCompiler(spark, df, Seq(stage("incr_neardup",
         (Seq[(String, Any)]("idCol" -> "doc_id", "textCol" -> "text",
@@ -504,6 +504,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
     assert(eVer.getMessage.contains("auto"), eVer.getMessage)
     assert(graft.ops.Dedup.nearDupStateLatest(spark, state).exists(_._1 == 2),
       "rejected ingest must not have touched the state chain")
+    graft.ops.CachedRelations.releaseAll() // the steps' stage dirs
     // validation: bad mode / version / banding
     val errs = AnalyticsCompiler.validate(Seq(
       stage("incr_neardup", "idCol" -> "id", "textCol" -> "t",
@@ -515,7 +516,7 @@ class AnalyticsCompilerSpec extends SparkTestBase {
   }
 
   test("destination bloomIndexBy: validation, side-index write, point-lookup pruning") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dest_bloom").toString
+    val tmp = tempDir("graft_dest_bloom").toString
     // validation: wrong type / bad fpp / bucketBy conflict
     val e = intercept[IllegalArgumentException](PlaybookLoader.fromString(s"""
       |source: {type: parquet, file: /tmp/in.parquet}

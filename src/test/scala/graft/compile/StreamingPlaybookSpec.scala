@@ -7,7 +7,7 @@ import graft.config.PlaybookLoader
   * writeStream (AvailableNow). Load-time validation must reject every
   * section without a streaming-executable form; the e2e run must
   * process a jsonl drop folder into parquet exactly once per file. */
-class StreamingPlaybookSpec extends SparkTestBase {
+class StreamingPlaybookSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   test("validation rejects non-streamable sections with reasons") {
@@ -57,7 +57,7 @@ class StreamingPlaybookSpec extends SparkTestBase {
   }
 
   test("row-local r11 ops run on a stream: gopher filter -> pii redact -> chunk") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_rowlocal").toString
+    val tmp = tempDir("graft_stream_rowlocal").toString
     val in = s"$tmp/in"
     new java.io.File(in).mkdirs()
     val good = "The quick brown fox jumps over the lazy dog and that dog " +
@@ -92,7 +92,7 @@ class StreamingPlaybookSpec extends SparkTestBase {
   }
 
   test("streaming min dedup chains drop files: state carries, watermark-quiet keys emit the extreme") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_minmax").toString
+    val tmp = tempDir("graft_stream_minmax").toString
     val in = s"$tmp/in"
     new java.io.File(in).mkdirs()
     def writeBatch(name: String, rows: Seq[String]): Unit =
@@ -157,7 +157,7 @@ class StreamingPlaybookSpec extends SparkTestBase {
   }
 
   test("jsonl drop folder -> quality gate + dedup + derive -> parquet, exactly once per file") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = tempDir("graft_stream").toString
     val in = s"$tmp/in"
     new java.io.File(in).mkdirs()
     def writeBatch(name: String, rows: Seq[String]): Unit =

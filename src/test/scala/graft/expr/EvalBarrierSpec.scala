@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** [[EvalBarrier]]: value-transparent, but the optimizer may not
   * duplicate the wrapped tree into consumers or pushed filters — the
   * fix for the O(L²)-per-doc md5-winnowing pathology (r16). */
-class EvalBarrierSpec extends SparkTestBase {
+class EvalBarrierSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def barrier(c: org.apache.spark.sql.Column) =
@@ -30,7 +30,7 @@ class EvalBarrierSpec extends SparkTestBase {
   // plan-shape tests need a real source: ConvertToLocalRelation folds
   // a Seq-backed frame into a LocalRelation with no Filter/Project left
   private lazy val srcPath = {
-    val p = java.nio.file.Files.createTempDirectory("graft_evalbarrier").toString
+    val p = tempDir("graft_evalbarrier").toString
     Seq((1L, "aa bb cc"), (2L, "dd")).toDF("id", "t")
       .repartition(1).write.mode("overwrite").parquet(p)
     p

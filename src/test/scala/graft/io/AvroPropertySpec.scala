@@ -6,7 +6,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import java.nio.file.Files
 
 /** Property roundtrips for the Avro source/sink: ARBITRARY values of
   * every supported type — including pre-1970 timestamps (the floorDiv
@@ -14,7 +13,7 @@ import java.nio.file.Files
   * null-holed arrays, empty strings and empty byte arrays — must come
   * back value-identical under every codec. Deterministic seeds so a
   * failure reproduces. */
-class AvroPropertySpec extends SparkTestBase {
+class AvroPropertySpec extends SparkTestBase with graft.TempDirs {
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -72,7 +71,7 @@ class AvroPropertySpec extends SparkTestBase {
       val rows = mk.zipWithIndex.map { case (f, i) => f(i) }
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 3), schema)
-      val dir = Files.createTempDirectory("graft-avro-prop").toString + "/p.avro"
+      val dir = tempDir("graft-avro-prop").toString + "/p.avro"
       Writers.write(df, DestinationConfig("avro", file = dir, compression = codec))
       val back = Readers.read(spark, SourceConfig("avro", file = dir))
       assert(back.schema == schema)
@@ -91,7 +90,7 @@ class AvroPropertySpec extends SparkTestBase {
       spark.sparkContext.parallelize(Seq(Row(1L, t)), 1),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("ts", TimestampType))))
-    val dir = Files.createTempDirectory("graft-avro-neg").toString + "/n.avro"
+    val dir = tempDir("graft-avro-neg").toString + "/n.avro"
     Writers.write(df, DestinationConfig("avro", file = dir))
     val back = Readers.read(spark, SourceConfig("avro", file = dir)).collect()
     assert(back.head.getTimestamp(1) == t)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 /** [[Bucketed]]: co-bucketed tables must join and aggregate with ZERO
   * shuffle exchange — the layout's entire reason to exist — and the
   * results must equal the plain (shuffled) plans. */
-class BucketedJoinSpec extends SparkTestBase {
+class BucketedJoinSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def countShuffles(df: org.apache.spark.sql.DataFrame): Int = {
@@ -29,7 +29,7 @@ class BucketedJoinSpec extends SparkTestBase {
   }
 
   test("co-bucketed tables: join and groupBy run with zero exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed").toString
     val fact = (0 until 10000).map(i => (i.toLong % 500, i.toLong)).toDF("k", "v")
     val dim = (0 until 500).map(i => (i.toLong, s"name_$i")).toDF("k", "name")
     try {

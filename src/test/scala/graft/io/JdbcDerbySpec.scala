@@ -1,8 +1,7 @@
 package graft.io
 
 import graft.SparkTestBase
-import graft.config.{DestinationConfig, SourceConfig}
-import org.apache.spark.sql.functions._
+import graft.config.SourceConfig
 
 /**
  * The JDBC loader surface ([[Jdbc]], reference internal/io/postgres.go)
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
  * writer, and the arbitrary-SQL scan. Only the Postgres wire dialect
  * itself remains environment-dormant.
  */
-class JdbcDerbySpec extends SparkTestBase {
+class JdbcDerbySpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def url(db: String) = s"jdbc:derby:memory:$db;create=true"
@@ -71,7 +70,7 @@ class JdbcDerbySpec extends SparkTestBase {
   test("playbook e2e: csv source -> postgres-type destination with custom-SQL loader") {
     val u = url("e2e")
     Jdbc.runCommands(u, Seq("CREATE TABLE sink (id INT, uname VARCHAR(30))"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jdbc").toString
+    val tmp = tempDir("graft_jdbc").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/in.csv"),
       "id,uname\n1,ada\n2,bob\n".getBytes("UTF-8"))
     val yaml = s"""

@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -14,13 +13,9 @@ import graft.queries.Queries
   * crashed 39 queries. These specs feed every known `ts` arrival shape
   * through the real read path (Queries.t over parquet on disk) and pin the
   * named-failure behavior for unknown shapes. */
-class SchemasSpec extends SparkTestBase {
+class SchemasSpec extends SparkTestBase with graft.TempDirs {
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-schemas").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(): String = tempDir("graft-schemas").toString
 
   // 2021-03-04T05:06:07.123456Z as epoch micros.
   private val usec = 1614834367123456L

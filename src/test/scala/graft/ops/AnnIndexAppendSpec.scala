@@ -249,7 +249,6 @@ class AnnIndexAppendSpec extends SparkTestBase with graft.TempDirs {
   }
 
   test("pq append: frozen codebooks, appended == rebuild at exhaustive probe settings") {
-    import org.apache.spark.sql.functions.col
     val m = 2; val ksub = 4
     val base = mkTable(baseRows)
     val delta = mkTable(deltaRows)
@@ -284,7 +283,6 @@ class AnnIndexAppendSpec extends SparkTestBase with graft.TempDirs {
   }
 
   test("pq compaction: probe rows identical, fewer code files, parts preserved") {
-    import org.apache.spark.sql.functions.col
     val m = 2; val ksub = 4
     val base = mkTable(baseRows)
     val d1 = mkTable(deltaRows)

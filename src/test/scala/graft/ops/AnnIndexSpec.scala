@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
  * and heal on rebuild — the bloom side-index contract applied to the
  * ANN family.
  */
-class AnnIndexSpec extends SparkTestBase {
+class AnnIndexSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private val dims = 8
 
   /** Deterministic synthetic embeddings written to a fresh table dir. */
   private def mkTable(n: Int): (String, DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_annidx_tbl").toString
+    val dir = tempDir("graft_annidx_tbl").toString
     val rows = (0 until n).map { id =>
       (id.toLong, (0 until dims).map(i => math.sin(id * 31.0 + i * 7.0)))
     }
@@ -34,7 +34,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("ivf: loaded-index lookup is row-exact vs the in-session fit (both shapes)") {
     val (tbl, table) = mkTable(120)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_ivf").toString
+    val idx = tempDir("graft_annidx_ivf").toString
     AnnIndex.writeIvfIndex(spark, table, tbl, idx, "vec_id", "embedding",
       dims, nlist = 4)
     val queries = table.filter(col("vec_id") < 15)
@@ -53,7 +53,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("pq: loaded centroids+codebooks+codes are row-exact vs ivfPqTopK") {
     val (tbl, table) = mkTable(120)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_pq").toString
+    val idx = tempDir("graft_annidx_pq").toString
     AnnIndex.writePqIndex(spark, table, tbl, idx, "vec_id", "embedding",
       dims, nlist = 2, m = 2, ksub = 4)
     val loaded = pairs(AnnIndex.pqTopKIndexed(spark, table, tbl, idx,
@@ -65,7 +65,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("binary: loaded bits are row-exact vs binaryTopK incl. rerankFrac scaling") {
     val (tbl, table) = mkTable(150)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_bin").toString
+    val idx = tempDir("graft_annidx_bin").toString
     AnnIndex.writeBinaryIndex(spark, table, tbl, idx, "vec_id", "embedding", dims)
     val queries = table.filter(col("vec_id") < 12)
     val loaded = pairs(AnnIndex.binaryLookupIndexed(spark, queries, table, tbl, idx,
@@ -83,7 +83,7 @@ class AnnIndexSpec extends SparkTestBase {
     Seq((999L, null: Seq[Double])).toDF("vec_id", "embedding")
       .write.mode("append").parquet(tbl)
     val table = spark.read.parquet(tbl)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_binnull").toString
+    val idx = tempDir("graft_annidx_binnull").toString
     AnnIndex.writeBinaryIndex(spark, table, tbl, idx, "vec_id", "embedding", dims)
     val queries = table.filter(col("vec_id") < 8 || col("vec_id") === 999L)
     val loaded = pairs(AnnIndex.binaryLookupIndexed(spark, queries, table, tbl, idx,
@@ -101,7 +101,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("lifecycle: new data file -> loud STALE; rebuild heals and sees the new row") {
     val (tbl, table) = mkTable(60)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_stale").toString
+    val idx = tempDir("graft_annidx_stale").toString
     AnnIndex.writeIvfIndex(spark, table, tbl, idx, "vec_id", "embedding",
       dims, nlist = 2)
     // a probe against the coherent index works
@@ -129,12 +129,12 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("lifecycle: missing stamp and wrong kind fail with pointed errors") {
     val (tbl, table) = mkTable(40)
-    val empty = java.nio.file.Files.createTempDirectory("graft_annidx_nostamp").toString
+    val empty = tempDir("graft_annidx_nostamp").toString
     val exNone = intercept[IllegalStateException] {
       AnnIndex.ivfLookupIndexed(spark, table, tbl, empty, k = 3)
     }
     assert(exNone.getMessage.contains("coherence stamp"))
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_kind").toString
+    val idx = tempDir("graft_annidx_kind").toString
     AnnIndex.writeBinaryIndex(spark, table, tbl, idx, "vec_id", "embedding", dims)
     val exKind = intercept[IllegalStateException] {
       AnnIndex.ivfLookupIndexed(spark, table, tbl, idx, k = 3)
@@ -144,7 +144,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("malformed numeric stamp field -> 'does not parse', not NumberFormatException") {
     val (tbl, table) = mkTable(40)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_badnum").toString
+    val idx = tempDir("graft_annidx_badnum").toString
     AnnIndex.writeIvfIndex(spark, table, tbl, idx, "vec_id", "embedding",
       dims, nlist = 2)
     // a foreign/corrupt stamp can carry a non-integer where the schema
@@ -169,7 +169,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("rebuild drops the old stamp first: a dead half-rebuild cannot pass verify") {
     val (tbl, table) = mkTable(40)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annidx_half").toString
+    val idx = tempDir("graft_annidx_half").toString
     AnnIndex.writeIvfIndex(spark, table, tbl, idx, "vec_id", "embedding",
       dims, nlist = 2)
     // simulate the first step of a rebuild that then dies: the stamp

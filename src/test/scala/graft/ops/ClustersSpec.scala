@@ -17,10 +17,20 @@ class ClustersSpec extends SparkTestBase {
   test("connected components: long chain converges past one round (distributed path)") {
     import spark.implicits._
     val edges = (1L until 10L).map(i => (i, i + 1)).toDF("a", "b")
-    // driverEdgeLimit = 0 forces the iterative label-propagation loop
+    // driverEdgeLimit = 0 forces the distributed star contraction
     val comp = Clusters.connectedComponents(edges, "a", "b", driverEdgeLimit = 0L)
       .collect().map(r => r.getAs[Long]("component")).toSet
     assert(comp == Set(1L)) // all ten nodes in component 1
+  }
+
+  test("connected components: 30-node path on the distributed branch has no diameter limit") {
+    import spark.implicits._
+    // a path longer than any fixed per-hop round budget: every node must
+    // still get the path's minimum id
+    val edges = (101L until 130L).map(i => (i, i + 1)).toDF("a", "b")
+    val comp = Clusters.connectedComponents(edges, "a", "b", driverEdgeLimit = 0L)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("component")).toMap
+    assert(comp == (101L to 130L).map(_ -> 101L).toMap)
   }
 
   test("connected components: driver union-find path agrees with distributed") {
@@ -88,23 +98,16 @@ class ClustersSpec extends SparkTestBase {
         s"reduce sweep means the probe no longer stops early; jobs: $tasks")
   }
 
-  test("connected components: non-convergence throws by default, partial labels on opt-out") {
+  test("star contraction: non-convergence throws") {
     import spark.implicits._
-    // a 6-node chain needs ~4 propagation rounds; maxIter=2 can't finish
+    // one contraction round cannot turn a 6-node path into a fixpoint
     val edges = (1L until 6L).map(i => (i, i + 1)).toDF("a", "b")
     val ex = intercept[IllegalStateException] {
-      Clusters.connectedComponents(edges, "a", "b",
-        maxIter = 2, driverEdgeLimit = 0L).collect()
+      Clusters.connectedComponentsStar(edges, "a", "b", maxIter = 1).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
-    // explicit opt-out returns (partial) labels instead of throwing
-    val partial = Clusters.connectedComponents(edges, "a", "b",
-        maxIter = 2, driverEdgeLimit = 0L, requireConvergence = false)
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("component")).toMap
-    assert(partial.size == 6)
-    // and with enough rounds the same graph converges to one component
-    val full = Clusters.connectedComponents(edges, "a", "b",
-        maxIter = 10, driverEdgeLimit = 0L)
+    // with the default round budget the same graph converges to one component
+    val full = Clusters.connectedComponentsStar(edges, "a", "b")
       .collect().map(r => r.getAs[Long]("component")).toSet
     assert(full == Set(1L))
   }

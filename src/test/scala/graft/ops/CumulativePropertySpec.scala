@@ -3,7 +3,7 @@ package graft.ops
 import graft.SparkTestBase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property tests: [[Cumulative.runningSums]] must be value-identical

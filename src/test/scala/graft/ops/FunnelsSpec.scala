@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Funnel / retention / centroid-classify / quality-rule / n-gram-vocab
   * operator invariants (closed-form fixtures). */

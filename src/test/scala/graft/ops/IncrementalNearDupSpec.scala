@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * state delta — union them into the state and a re-sent duplicate of
   * a kept doc resolves as dup_of_ref on the next batch with no access
   * to any earlier text. */
-class IncrementalNearDupSpec extends SparkTestBase {
+class IncrementalNearDupSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def sigs(rows: Seq[(Long, String)]) =
@@ -139,7 +139,7 @@ class IncrementalNearDupSpec extends SparkTestBase {
 
   test("nearDupStateLatest: resolves highest COMMITTED version, ignores crashed writes") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_state_commit").toString + "/st"
+    val dir = tempDir("graft_state_commit").toString + "/st"
     assert(Dedup.nearDupStateLatest(spark, dir).isEmpty) // absent dir
     val s0 = sigs(Seq(1L -> uniqueA)).withColumn("version", lit(0))
     Dedup.nearDupStateWrite(s0, dir, 0)
@@ -161,7 +161,7 @@ class IncrementalNearDupSpec extends SparkTestBase {
 
   test("nearDupStateLatest: version dirs with NO commit marker anywhere fail loudly") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_state_nomark").toString + "/st"
+    val dir = tempDir("graft_state_nomark").toString + "/st"
     Dedup.nearDupStateWrite(
       sigs(Seq(1L -> uniqueA)).withColumn("version", lit(0)), dir, 0)
     Dedup.nearDupStateWrite(

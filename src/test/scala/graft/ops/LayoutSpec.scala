@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * per-partition zval segments, and on a uniform grid the Z-layout
   * must prune strictly more files than the lexicographic layout for a
   * square box — the property the operator exists to deliver. */
-class LayoutSpec extends SparkTestBase {
+class LayoutSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def refInterleave(vals: Seq[Long], bits: Int): Long = {
@@ -105,7 +105,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("compaction: adjacent small files merge to target-size bins, rows intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val df = (0 until 4000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
     df.repartitionByRange(40, col("id")).write.mode("overwrite").parquet(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -138,7 +138,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("compaction recovery: a crash between rename and deletes never duplicates rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-crash").toString
+    val dir = tempDir("graft-compact-crash").toString
     val df = (0 until 1000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
     df.repartitionByRange(10, col("id")).write.mode("overwrite").parquet(dir)
     val hDir = new org.apache.hadoop.fs.Path(dir)
@@ -179,7 +179,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("parquetStats reads real footers; range-partitioned ids are file-disjoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-footers").toString + "/t"
+    val dir = tempDir("graft-footers").toString + "/t"
     val df = (0 until 5000).map(i => (i.toLong, s"p_$i")).toDF("id", "payload")
     df.repartitionByRange(5, col("id")).sortWithinPartitions(col("id"))
       .write.parquet(dir)
@@ -203,7 +203,7 @@ class LayoutSpec extends SparkTestBase {
 
   test("writeClustered produces files with near-disjoint zval segments") {
     val rows = (0 until 4096).map(i => ((i * 37) % 1024L, (i * 91) % 1024L, i.toLong))
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = tempDir("graft-layout").toString
     Layout.writeClustered(rows.toDF("x", "y", "id"), dir, Seq("x", "y"),
       bits = 8, files = 8)
     val back = spark.read.parquet(dir)
@@ -227,7 +227,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bloom index: point lookups scan only might-contain files, results exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomidx").toString
+    val tmp = tempDir("graft_bloomidx").toString
     // hash-partition by k: every file's (min,max) k-range overlaps all
     // others (footer stats prune NOTHING), but each k lives in exactly
     // one file — the bloom index's home turf
@@ -268,7 +268,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bloom index coherence: compaction under a live index rebuilds it, reads stay exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomcoh").toString
+    val tmp = tempDir("graft_bloomcoh").toString
     val tbl = s"$tmp/tbl"
     val idx = s"$tmp/tbl_bloomidx_k" // the Writers sibling convention
     val df = (0 until 8000).map(i => (i.toLong % 200, i.toLong)).toDF("k", "v")
@@ -296,7 +296,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bloom index coherence: out-of-band rewrite fails loudly BEFORE scanning") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomstale").toString
+    val tmp = tempDir("graft_bloomstale").toString
     val tbl = s"$tmp/tbl"
     val idx = s"$tmp/standalone_idx" // NOT the sibling convention: no auto-rebuild
     val df = (0 until 2000).map(i => (i.toLong % 50, i.toLong)).toDF("k", "v")
@@ -314,7 +314,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bloom index coherence: stampless or wrong-column index rejected with a reason") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloommeta").toString
+    val tmp = tempDir("graft_bloommeta").toString
     val (tbl, idx) = (s"$tmp/tbl", s"$tmp/idx")
     (0 until 500).map(i => (i.toLong % 20, i.toLong)).toDF("k", "v")
       .repartition(2, col("k")).write.parquet(tbl)
@@ -333,7 +333,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bloom index: Int probes against a LONG column hash like the build (typed cast)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloomtype").toString
+    val tmp = tempDir("graft_bloomtype").toString
     val (tbl, idx) = (s"$tmp/tbl", s"$tmp/idx")
     (0 until 2000).map(i => (i.toLong % 50, i.toLong)).toDF("k", "v")
       .repartition(4, col("k")).write.parquet(tbl)

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * [[LmIndex.appendMknIndex]]: n-gram count tables are additive, so a

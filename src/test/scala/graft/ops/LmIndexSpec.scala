@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
  * fail loudly on a stale/unstamped/wrong-model artifact and heal on
  * rebuild — the bloom/ANN stamp contract applied to the n-gram LM.
  */
-class LmIndexSpec extends SparkTestBase {
+class LmIndexSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def mkCorpus(rows: Seq[(Long, String)]): (String, DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmidx_tbl").toString
+    val dir = tempDir("graft_lmidx_tbl").toString
     rows.toDF("doc_id", "text").repartition(2)
       .write.mode("overwrite").parquet(dir)
     (dir, spark.read.parquet(dir))
@@ -36,7 +36,7 @@ class LmIndexSpec extends SparkTestBase {
 
   test("loaded-model scoring is row-exact vs the in-session reference fit") {
     val (tbl, trainDf) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx").toString
+    val idx = tempDir("graft_lmidx").toString
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     val loaded = rows(LmIndex.scoreMknIndexed(spark,
       scored.toDF("doc_id", "text"), "doc_id", "text", tbl, idx))
@@ -47,7 +47,7 @@ class LmIndexSpec extends SparkTestBase {
 
   test("lifecycle: missing stamp, wrong model, stale train table, rebuild heals") {
     val (tbl, _) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_lc").toString
+    val idx = tempDir("graft_lmidx_lc").toString
     val df = scored.toDF("doc_id", "text")
     // (a) no stamp at all → loud
     val e1 = intercept[IllegalStateException] {
@@ -81,7 +81,7 @@ class LmIndexSpec extends SparkTestBase {
 
   test("perplexityPartition modelDir: bands under the persisted reference LM") {
     val (tbl, trainDf) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_ppl").toString
+    val idx = tempDir("graft_lmidx_ppl").toString
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     val df = scored.toDF("doc_id", "text").withColumn("source", lit("s"))
     val fromIdx = TextAnalysis.perplexityPartition(df, "doc_id", "text", "source",
@@ -115,7 +115,7 @@ class LmIndexSpec extends SparkTestBase {
   test("pplScoreStream: unpruned streaming scores == batch loaded-model scores") {
     implicit val sqlCtx = spark.sqlContext
     val (tbl, _) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_stream").toString
+    val idx = tempDir("graft_lmidx_stream").toString
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val out = graft.streaming.StreamOps.pplScoreStream(
@@ -181,10 +181,10 @@ class LmIndexSpec extends SparkTestBase {
 
   test("stamp escapes quotes/backslashes and verify distinguishes unparseable from missing") {
     // a textCol with JSON-hostile characters round-trips the stamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmidx_esc_tbl").toString
+    val dir = tempDir("graft_lmidx_esc_tbl").toString
     val weird = "te\"xt\\col"
     train.toDF("doc_id", weird).repartition(1).write.mode("overwrite").parquet(dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_esc").toString
+    val idx = tempDir("graft_lmidx_esc").toString
     LmIndex.writeMknIndex(spark, dir, idx, "doc_id", weird)
     val meta = LmIndex.readMeta(spark, idx)
     assert(meta.exists(_.textCol == weird),
@@ -212,7 +212,7 @@ class LmIndexSpec extends SparkTestBase {
     // START listing, so any file that changes during the fit makes the
     // end re-check (and every later verify) fail
     val (tbl, _) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_race").toString
+    val idx = tempDir("graft_lmidx_race").toString
     val fpBefore = Layout.tableFingerprint(spark, tbl)
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     assert(LmIndex.readMeta(spark, idx).exists(_.tableFp == fpBefore),
@@ -222,7 +222,7 @@ class LmIndexSpec extends SparkTestBase {
   test("pplBandStream: static per-source cutoffs band the stream like the batch rule") {
     implicit val sqlCtx = spark.sqlContext
     val (tbl, _) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_band").toString
+    val idx = tempDir("graft_lmidx_band").toString
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     // batch scores of the same docs → value-based cutoffs for source s
     val batch = rows(LmIndex.scoreMknIndexed(spark,
@@ -257,7 +257,7 @@ class LmIndexSpec extends SparkTestBase {
 
   test("a write that dies before the stamp leaves an artifact that fails verification") {
     val (tbl, _) = mkCorpus(train)
-    val idx = java.nio.file.Files.createTempDirectory("graft_lmidx_dead").toString
+    val idx = tempDir("graft_lmidx_dead").toString
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     // simulate the mid-rebuild death: stamp dropped (as a rebuild does
     // FIRST), tables half-written — verification must refuse

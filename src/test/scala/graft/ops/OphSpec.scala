@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** One-permutation-hashing MinHash: densification arithmetic, pair
   * semantics, portable/x64 twin identity. */

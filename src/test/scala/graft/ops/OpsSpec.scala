@@ -4,7 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Dedup strategies + near-dup/similarity operator invariants. */
-class OpsSpec extends SparkTestBase {
+class OpsSpec extends SparkTestBase with graft.TempDirs {
 
   private def events = {
     import spark.implicits._
@@ -484,7 +484,7 @@ class OpsSpec extends SparkTestBase {
 
   test("ingest order is stable across multi-file reads (file path, block, row)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-seq").toString
+    val dir = tempDir("graft-seq").toString
     // two files written separately -> two splits; order must follow
     // (file_path, block, row-in-partition), not split packing
     Seq((1L, "k", "f1-first"), (2L, "k", "f1-second")).toDF("id", "k", "tag")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** [[Resample]]: grid completeness, per-bucket means, forward fill,
   * linear interpolation (hand-computed), edge behavior, and the gap

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 class SemanticIncrementalDedupSpec extends SparkTestBase {
   import spark.implicits._

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** [[Clusters.connectedComponentsStar]]: must produce EXACTLY the
   * labels of the driver union-find on every graph shape — including

@@ -2,17 +2,16 @@ package graft.ops
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** [[TokenizerIndex]]: every family's loaded artifact must encode
   * exactly like its in-session refit twin, and the coherence
   * lifecycle must fail loudly on unstamped / wrong-family / stale
   * artifacts and heal on rebuild. */
-class TokenizerIndexSpec extends SparkTestBase {
+class TokenizerIndexSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def mkCorpus(rows: Seq[(String, String)]): (String, DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokidx_tbl").toString
+    val dir = tempDir("graft_tokidx_tbl").toString
     rows.toDF("source", "text").repartition(2)
       .write.mode("overwrite").parquet(dir)
     (dir, spark.read.parquet(dir))
@@ -33,7 +32,7 @@ class TokenizerIndexSpec extends SparkTestBase {
     val (tbl, train) = mkCorpus(corpus)
     val scored = corpus.toDF("source", "text")
     for (fam <- Seq("bpe", "bbpe", "wordpiece", "unigram")) {
-      val idx = java.nio.file.Files.createTempDirectory(s"graft_tokidx_$fam").toString
+      val idx = tempDir(s"graft_tokidx_$fam").toString
       TokenizerIndex.write(spark, tbl, idx, fam, "text", param = 20)
       val loaded = report(TokenizerIndex.fertilityIndexed(spark, scored, fam,
         "text", "source", tbl, idx))
@@ -56,7 +55,7 @@ class TokenizerIndexSpec extends SparkTestBase {
 
   test("lifecycle: unstamped, wrong family, stale, rebuild heals") {
     val (tbl, _) = mkCorpus(corpus)
-    val idx = java.nio.file.Files.createTempDirectory("graft_tokidx_lc").toString
+    val idx = tempDir("graft_tokidx_lc").toString
     val scored = corpus.toDF("source", "text")
     val e1 = intercept[IllegalStateException] {
       TokenizerIndex.loadMerges(spark, tbl, idx, "bpe", "text")
@@ -84,10 +83,10 @@ class TokenizerIndexSpec extends SparkTestBase {
   test("stamp escaping, unparseable-vs-missing, and fp-before-fit (r13 advisory)") {
     import spark.implicits._
     // a textCol with JSON-hostile characters round-trips the stamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokidx_esc_tbl").toString
+    val dir = tempDir("graft_tokidx_esc_tbl").toString
     val weird = "te\"xt\\col"
     corpus.toDF("source", weird).repartition(1).write.mode("overwrite").parquet(dir)
-    val idx = java.nio.file.Files.createTempDirectory("graft_tokidx_esc").toString
+    val idx = tempDir("graft_tokidx_esc").toString
     val fpBefore = Layout.tableFingerprint(spark, dir)
     TokenizerIndex.write(spark, dir, idx, "bpe", weird, param = 10)
     val meta = TokenizerIndex.readMeta(spark, idx)

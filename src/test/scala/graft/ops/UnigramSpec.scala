@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Unigram-LM trainer (Kudo 2018) property pins: planted-piece
   * recovery, EM likelihood monotonicity, coverage (every word

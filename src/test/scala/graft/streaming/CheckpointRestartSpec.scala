@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Checkpoint-RESTART end-to-end: real file source → real file sink
@@ -14,7 +13,7 @@ import java.sql.Timestamp
   * store (the URL dedup must still drop a canonical key it admitted
   * before the stop), and (3) end value-identical to an uninterrupted
   * run over the same total input with a fresh checkpoint. */
-class CheckpointRestartSpec extends SparkTestBase {
+class CheckpointRestartSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
@@ -28,7 +27,7 @@ class CheckpointRestartSpec extends SparkTestBase {
   }
 
   test("incrementalDedupStream: stop between batches, restart, exactly-once vs uninterrupted") {
-    val base = Files.createTempDirectory("graft-ck-inc").toString
+    val base = tempDir("graft-ck-inc").toString
     val in = s"$base/in"
     val ref = (1 to 20).map(i => (i.toLong, s"ref_$i")).toDF("rid", "k")
     val sch = new org.apache.spark.sql.types.StructType()
@@ -63,7 +62,7 @@ class CheckpointRestartSpec extends SparkTestBase {
   }
 
   test("nearDupVerdictStream: restart recovers the stateful verdict query mid-corpus") {
-    val base = Files.createTempDirectory("graft-ck-ndv").toString
+    val base = tempDir("graft-ck-ndv").toString
     val in = s"$base/in"
     val refText = "the quick brown fox jumps over the lazy dog again and again"
     val refSig = graft.ops.Dedup.minhashSignatures(
@@ -100,7 +99,7 @@ class CheckpointRestartSpec extends SparkTestBase {
   }
 
   test("urlDedupStream: dedup STATE survives the restart (post-restart repeat is dropped)") {
-    val base = Files.createTempDirectory("graft-ck-url").toString
+    val base = tempDir("graft-ck-url").toString
     val in = s"$base/in"
     val sch = new org.apache.spark.sql.types.StructType()
       .add("id", "long").add("url", "string").add("ts", "timestamp")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
 /** Streaming operators driven through MemoryStream micro-batches. */
-class StreamOpsSpec extends SparkTestBase {
+class StreamOpsSpec extends SparkTestBase with graft.TempDirs {
 
   import StreamOps.{UserEvent, UserStats}
 
@@ -524,13 +524,13 @@ class StreamOpsSpec extends SparkTestBase {
     // cell ranking must agree with the batch window ranking (pinned
     // rank-identical by the cellRank==probeCells spec) for the rows
     // to match
-    val tbl = java.nio.file.Files.createTempDirectory("graft_annstream_tbl").toString
+    val tbl = tempDir("graft_annstream_tbl").toString
     (1L to 40L).map { i =>
       val c = if (i % 2 == 0) 0.0 else 10.0
       (i, Seq(c + 0.01 * (i % 7), c - 0.02 * (i % 5), c + 0.5, 1.0))
     }.toDF("vec_id", "embedding").repartition(2)
       .write.mode("overwrite").parquet(tbl)
-    val idx = java.nio.file.Files.createTempDirectory("graft_annstream_idx").toString
+    val idx = tempDir("graft_annstream_idx").toString
     AnnIndex.writeIvfIndex(spark, spark.read.parquet(tbl), tbl, idx,
       "vec_id", "embedding", dims = 4, nlist = 2)
     val queryRows = Seq(

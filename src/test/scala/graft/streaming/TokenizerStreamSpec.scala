@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
  * (WordPiece's [UNK] leg), repeated words (the memo path), an empty
  * string, and a null (annotate, don't drop).
  */
-class TokenizerStreamSpec extends SparkTestBase {
+class TokenizerStreamSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -36,7 +36,7 @@ class TokenizerStreamSpec extends SparkTestBase {
     (6L, "", "s1"))
 
   private def mkTbl(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tokstream_tbl").toString
+    val dir = tempDir("graft_tokstream_tbl").toString
     corpus.toDF("source", "text").repartition(2)
       .write.mode("overwrite").parquet(dir)
     dir
@@ -55,8 +55,7 @@ class TokenizerStreamSpec extends SparkTestBase {
     test(s"$family: stream per-doc counts aggregate to the batch per-source report") {
       implicit val sqlCtx = spark.sqlContext
       val tbl = mkTbl()
-      val idx = java.nio.file.Files
-        .createTempDirectory(s"graft_tokstream_$family").toString
+      val idx = tempDir(s"graft_tokstream_$family").toString
       TokenizerIndex.write(spark, tbl, idx, family, "text",
         param = if (family == "unigram") 40 else 30)
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
@@ -103,7 +102,7 @@ class TokenizerStreamSpec extends SparkTestBase {
 
   test("verify gate: a stale artifact refuses at query DEFINITION, before any batch") {
     val tbl = mkTbl()
-    val idx = java.nio.file.Files.createTempDirectory("graft_tokstream_stale").toString
+    val idx = tempDir("graft_tokstream_stale").toString
     TokenizerIndex.write(spark, tbl, idx, "bpe", "text", param = 30)
     Seq(("s9", "appended after the fit")).toDF("source", "text")
       .write.mode("append").parquet(tbl)

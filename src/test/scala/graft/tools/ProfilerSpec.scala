@@ -4,7 +4,7 @@ import java.nio.file.Files
 import graft.SparkTestBase
 
 /** Each Profiler mode on one shuffle-bearing registered query. */
-class ProfilerSpec extends SparkTestBase {
+class ProfilerSpec extends SparkTestBase with graft.TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val query = "q_dedup_first"
@@ -16,7 +16,7 @@ class ProfilerSpec extends SparkTestBase {
   }
 
   test("plan: writes the formatted explain and counts the executed exchanges") {
-    val out = Files.createTempDirectory("graft_profiler_plan").resolve("t/q_dedup_first_x.txt")
+    val out = tempDir("graft_profiler_plan").resolve("t/q_dedup_first_x.txt")
     val counts = Profiler.plan(spark, sfDir, query, out)
     assert(new String(Files.readAllBytes(out), "UTF-8").contains("Physical Plan"))
     assert(counts.exchanges >= 1, counts)

@@ -2,7 +2,6 @@ package graft.transforms
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame}
 import graft.SparkTestBase
 
 /**
