@@ -2,9 +2,6 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -31,9 +28,10 @@ import graft.ops.CachedRelations
  *  - `plan`: writes the formatted explain of the unexecuted plan to
  *    `plans/<tag>/<query>_<suffix>.txt`, then runs the query and counts
  *    the exchanges and reused exchanges of the plan that ran.
- *  - `stages`: one noop-sink run; its job count, and per Spark stage,
- *    its call site and operator scopes, tasks, executor run and CPU
- *    time, input bytes, shuffle read/write bytes and spill bytes.
+ *  - `stages`: one noop-sink run under [[Recorded.recorded]]; its job
+ *    count, and per Spark stage, its call site and operator scopes,
+ *    tasks, executor run and CPU time, input bytes, shuffle read/write
+ *    bytes and spill bytes.
  *
  * A/B comparisons across commits are `playbench/counter_diff.py`'s job.
  */
@@ -44,13 +42,8 @@ object Profiler {
 
   final case class PlanCounts(exchanges: Int, reused: Int)
 
-  final case class StageStats(stageId: Int, callSite: String, scopes: Seq[String],
-                              tasks: Int, runMs: Long, cpuMs: Long, inputBytes: Long,
-                              shuffleReadBytes: Long, shuffleWriteBytes: Long,
-                              spillBytes: Long)
-
   /** The jobs and completed stages (in stage-id order) of one run. */
-  final case class StagesRun(jobs: Int, stages: Seq[StageStats])
+  final case class StagesRun(jobs: Int, stages: Seq[Recorded.StageStats])
 
   private val WarmPasses = 2
   private val MeasuredPasses = 3
@@ -98,52 +91,8 @@ object Profiler {
   /** Jobs and stages of one noop-sink run of the query (its build-time
     * jobs included). */
   def stages(spark: SparkSession, sfDir: String, name: String): StagesRun = {
-    val sc = spark.sparkContext
-    val group = s"graft-profiler-$name"
-    val collector = new StageCollector(group)
-    sc.addSparkListener(collector)
-    try {
-      sc.setJobGroup(group, s"profiler stages $name")
-      try noopRun(query(spark, sfDir, name))
-      finally sc.clearJobGroup()
-      // listener delivery is asynchronous but ordered: once the fence
-      // job's end arrives, every event of the profiled run has too
-      sc.setJobGroup(collector.fenceGroup, "profiler fence")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      require(collector.fence.await(60, TimeUnit.SECONDS), "listener events did not drain")
-    } finally sc.removeSparkListener(collector)
-    StagesRun(collector.jobs.get, collector.stages.asScala.toSeq.sortBy(_.stageId))
-  }
-
-  private final class StageCollector(group: String) extends SparkListener {
-    val fenceGroup = s"$group-fence"
-    val fence = new CountDownLatch(1)
-    val stages = new ConcurrentLinkedQueue[StageStats]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile private var jobStages = Set.empty[Int]
-    @volatile private var fenceJob = -1
-
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-        case `group` => jobs.incrementAndGet(); jobStages ++= e.stageIds
-        case `fenceGroup` => fenceJob = e.jobId
-        case _ =>
-      }
-
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (e.jobId == fenceJob) fence.countDown()
-
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      if (jobStages.contains(e.stageInfo.stageId)) stages.add(stats(e.stageInfo))
-  }
-
-  private def stats(s: StageInfo): StageStats = {
-    val m = s.taskMetrics
-    StageStats(s.stageId, s.name, s.rddInfos.flatMap(_.scope.map(_.name)).distinct.toSeq,
-      s.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L,
-      m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
-      m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled)
+    val (_, rec) = Recorded.recorded(spark)(noopRun(query(spark, sfDir, name)))
+    StagesRun(rec.jobs.size, rec.stages)
   }
 
   private val usage =

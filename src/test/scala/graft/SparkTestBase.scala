@@ -21,6 +21,30 @@ abstract class SparkTestBase extends AnyFunSuite {
     s
   }
 
+  /** `body`'s result and what it printed to `System.err`. */
+  def stderrOf[A](body: => A): (A, String) = {
+    val old = System.err
+    captured { out => System.setErr(out); try body finally System.setErr(old) }
+  }
+
+  /** `body`'s result and what it printed to `Console.out`. */
+  def stdoutOf[A](body: => A): (A, String) = captured(Console.withOut(_)(body))
+
+  private def captured[A](run: java.io.PrintStream => A): (A, String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val r = run(new java.io.PrintStream(buf, true, "UTF-8"))
+    (r, buf.toString("UTF-8"))
+  }
+
+  /** `body` with the session confs set to `kv`; the old values (or
+    * their absence) come back afterwards. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Order-insensitive record-multiset comparison — the reference's
     * recordsEqualIgnoringOrder (processor_test.go:24). */
   def assertSameRecords(got: DataFrame, want: Seq[Map[String, Any]]): Unit = {

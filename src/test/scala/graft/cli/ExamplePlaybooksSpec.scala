@@ -147,7 +147,7 @@ class ExamplePlaybooksSpec extends SparkTestBase with graft.TempDirs {
       .map(_.toString).sorted.toSeq
     val alone = runExample("incremental_ingest.yaml", Map("GRAFT_IN" -> s"$tmp/batch0"))
     val (cfg, out) = prepareExample("incremental_ingest.yaml", Map("GRAFT_IN" -> s"$tmp/batch0"))
-    Console.withOut(new java.io.ByteArrayOutputStream()) {
+    stdoutOf {
       Main.run(spark, Main.Args(config = cfg, dryRun = true))
       Main.run(spark, Main.Args(config = cfg, explain = true))
     }
@@ -180,11 +180,7 @@ class ExamplePlaybooksSpec extends SparkTestBase with graft.TempDirs {
 
   test("-explain prints the physical plan and executes nothing") {
     val (cfg, out) = prepareExample("classic_etl.yaml", Map.empty)
-    val buf = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-      Main.run(spark, Main.Args(config = cfg, explain = true))
-    }
-    val text = buf.toString("UTF-8")
+    val (_, text) = stdoutOf(Main.run(spark, Main.Args(config = cfg, explain = true)))
     assert(text.contains("[explain] pipeline plan"), text.take(400))
     assert(text.contains("Physical Plan"), text.take(400))
     // the playbook filters on a column, so the parquet scan must show
@@ -200,11 +196,7 @@ class ExamplePlaybooksSpec extends SparkTestBase with graft.TempDirs {
     Files.write(Paths.get(s"$in/b1.jsonl"),
       """{"doc_id": 1, "text": "hello world"}""".getBytes(UTF_8))
     val (cfg, out) = prepareExample("streaming_ingest.yaml", Map("GRAFT_IN" -> in))
-    val buf = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-      Main.run(spark, Main.Args(config = cfg, explain = true))
-    }
-    val text = buf.toString("UTF-8")
+    val (_, text) = stdoutOf(Main.run(spark, Main.Args(config = cfg, explain = true)))
     assert(text.contains("Physical Plan"), text.take(400))
     assert(text.contains("StreamingRelation"), text.take(2000))
     assert(!new java.io.File(s"$out/stream_out").exists())

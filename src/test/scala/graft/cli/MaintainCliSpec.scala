@@ -64,15 +64,6 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     assert(Maintain.run(spark, "nonsense", Map.empty) == 2)
   }
 
-  /** Capture stderr around a CLI call (the refusal/warn channel). */
-  private def withErrCaptured[A](body: => A): (A, String) = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val old = System.err
-    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-    val r = try body finally System.setErr(old)
-    (r, buf.toString("UTF-8"))
-  }
-
   private def vecRows(ids: Range): Seq[(Long, Array[Double])] =
     ids.map(i => (i.toLong,
       Array.tabulate(8)(d => math.sin(i * 0.37 + d) + (i % 5) * 0.1)))
@@ -84,7 +75,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     vecRows(200 until 260).toDF("vec_id", "embedding").repartition(1).write.parquet(delta)
 
     // append before any build: refusal names the build command
-    val (rcNoIdx, errNoIdx) = withErrCaptured(Maintain.run(spark, "ann-append",
+    val (rcNoIdx, errNoIdx) = stderrOf(Maintain.run(spark, "ann-append",
       Map("table" -> tbl, "index" -> idx, "delta" -> delta)))
     assert(rcNoIdx == 1 && errNoIdx.contains("ann-build"), errNoIdx)
 
@@ -95,7 +86,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     assert(Maintain.run(spark, "ann-verify",
       Map("table" -> tbl, "index" -> idx)) == 0)
     // wrong -kind: the operator's own precise refusal, exit 1
-    val (rcKind, errKind) = withErrCaptured(Maintain.run(spark, "ann-verify",
+    val (rcKind, errKind) = stderrOf(Maintain.run(spark, "ann-verify",
       Map("table" -> tbl, "index" -> idx, "kind" -> "pq")))
     assert(rcKind == 1 && errKind.contains("is kind 'ivf'"), errKind)
 
@@ -103,7 +94,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
       Map("table" -> tbl, "index" -> idx, "delta" -> delta)) == 0)
     assert(graft.ops.AnnIndex.readMeta(spark, idx).get.version == 1)
     // re-appending the same delta refuses (would duplicate codes)
-    val (rcDup, errDup) = withErrCaptured(Maintain.run(spark, "ann-append",
+    val (rcDup, errDup) = stderrOf(Maintain.run(spark, "ann-append",
       Map("table" -> tbl, "index" -> idx, "delta" -> delta)))
     assert(rcDup == 1 && errDup.contains("already part"), errDup)
 
@@ -120,7 +111,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     // out-of-band rewrite of the base table: STALE with the rebuild hint
     vecRows(0 until 200).toDF("vec_id", "embedding").repartition(3)
       .write.mode("overwrite").parquet(tbl)
-    val (rcStale, errStale) = withErrCaptured(Maintain.run(spark, "ann-verify",
+    val (rcStale, errStale) = stderrOf(Maintain.run(spark, "ann-verify",
       Map("table" -> tbl, "index" -> idx)))
     assert(rcStale == 1 && errStale.contains("STALE") &&
       errStale.contains("writeIvfIndex"), errStale)
@@ -145,13 +136,13 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
       Map("train" -> train, "index" -> idx, "delta" -> delta,
         "id" -> "doc_id", "text" -> "text")) == 0)
     assert(graft.ops.LmIndex.readMeta(spark, idx).get.version == 1)
-    val (rcDup, errDup) = withErrCaptured(Maintain.run(spark, "lm-append",
+    val (rcDup, errDup) = stderrOf(Maintain.run(spark, "lm-append",
       Map("train" -> train, "index" -> idx, "delta" -> delta,
         "id" -> "doc_id", "text" -> "text")))
     assert(rcDup == 1 && errDup.contains("already part"), errDup)
     // delta mutated after append: verify reports STALE naming the delta
     Seq((99L, "mutation")).toDF("doc_id", "text").write.mode("append").parquet(delta)
-    val (rcStale, errStale) = withErrCaptured(Maintain.run(spark, "lm-verify",
+    val (rcStale, errStale) = stderrOf(Maintain.run(spark, "lm-verify",
       Map("train" -> train, "index" -> idx)))
     assert(rcStale == 1 && errStale.contains("STALE") && errStale.contains(delta),
       errStale)
@@ -172,7 +163,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     assert(meta.fitFertMicro > 0, s"fit fertility must be stamped: $meta")
 
     // probing the train corpus itself: within band, no warning
-    val (rcSelf, errSelf) = withErrCaptured(Maintain.run(spark, "tok-verify",
+    val (rcSelf, errSelf) = stderrOf(Maintain.run(spark, "tok-verify",
       Map("train" -> train, "index" -> idx, "probe" -> train)))
     assert(rcSelf == 0 && !errSelf.contains("DRIFT WARNING"), errSelf)
 
@@ -182,7 +173,7 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     val drifted = s"$tmp/drifted"
     Seq((1L, "zqxvwpkjh mnbvcxlkj qwertyzxcv"), (2L, "pkjhzqxvw lkjmnbvcx"))
       .toDF("doc_id", "text").repartition(1).write.parquet(drifted)
-    val (rcDrift, errDrift) = withErrCaptured(Maintain.run(spark, "tok-verify",
+    val (rcDrift, errDrift) = stderrOf(Maintain.run(spark, "tok-verify",
       Map("train" -> train, "index" -> idx, "probe" -> drifted)))
     assert(rcDrift == 0, "drift is a warning, not a refusal")
     assert(errDrift.contains("DRIFT WARNING") && errDrift.contains("tok-build"),
@@ -198,14 +189,14 @@ class MaintainCliSpec extends SparkTestBase with graft.TempDirs {
     val preR16 = stamp.replaceAll(""""fit_fert_micro":-?\d+,""", "")
     val out = fs.create(mp, true)
     try out.write(preR16.getBytes("UTF-8")) finally out.close()
-    val (rcPre, _) = withErrCaptured(Maintain.run(spark, "tok-verify",
+    val (rcPre, _) = stderrOf(Maintain.run(spark, "tok-verify",
       Map("train" -> train, "index" -> idx, "probe" -> train)))
     assert(rcPre == 0)
     assert(graft.ops.TokenizerIndex.readMeta(spark, idx).get.fitFertMicro == -1L)
 
     // train table mutated: verify refuses STALE before any telemetry
     Seq((9L, "dd ee")).toDF("doc_id", "text").write.mode("append").parquet(train)
-    val (rcStale, errStale) = withErrCaptured(Maintain.run(spark, "tok-verify",
+    val (rcStale, errStale) = stderrOf(Maintain.run(spark, "tok-verify",
       Map("train" -> train, "index" -> idx)))
     assert(rcStale == 1 && errStale.contains("STALE"), errStale)
     assert(Maintain.run(spark, "tok-build", Map("train" -> train)) == 2)

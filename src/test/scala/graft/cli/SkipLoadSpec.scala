@@ -2,12 +2,9 @@ package graft.cli
 
 import graft.{SparkTestBase, TempDirs}
 import java.nio.charset.StandardCharsets.UTF_8
+import graft.tools.Recorded.recorded
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /**
  * The skip-mode CLI load over a CSV source: the main sink and the error
@@ -50,63 +47,18 @@ class SkipLoadSpec extends SparkTestBase with TempDirs {
 
   private def text(p: String) = new String(Files.readAllBytes(Paths.get(p)), UTF_8)
 
-  /** SQL execution descriptions and task input bytes of `body`'s jobs. */
-  private final class Recorder extends SparkListener {
-    val fenceGroup = s"skip-load-fence-${System.nanoTime()}"
-    val fence = new CountDownLatch(1)
-    val executions = new ConcurrentLinkedQueue[String]()
-    val inputBytes = new AtomicLong(0)
-    @volatile private var fenceJob = -1
-
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => executions.add(s.description)
-      case _ =>
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach(m => inputBytes.addAndGet(m.inputMetrics.bytesRead))
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(fenceGroup))
-        fenceJob = e.jobId
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (e.jobId == fenceJob) fence.countDown()
-  }
-
-  private def recorded(body: => Unit): Recorder = {
-    val sc = spark.sparkContext
-    val r = new Recorder
-    sc.addSparkListener(r)
-    try {
-      body
-      // listener events arrive in order: once the fence job's end is
-      // seen, every event of `body` has been seen too
-      sc.setJobGroup(r.fenceGroup, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(r.fence.await(60, TimeUnit.SECONDS), "listener events did not drain")
-    } finally sc.removeSparkListener(r)
-    r
-  }
-
-  /** What `body` prints to `System.err`. */
-  private def stderrOf(body: => Unit): String = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val old = System.err
-    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-    try body finally System.setErr(old)
-    buf.toString("UTF-8")
-  }
-
   test("one bad row, one filtered row: two SQL executions, source read at most twice, exact files") {
     val dir = tempDir("graft_skipload")
     val (dest, errs) = (s"$dir/clean.csv", s"$dir/errors.csv")
     val cfg = playbook(dir, input, dest, errs)
-    var err = ""
-    val r = recorded { err = stderrOf(Main.run(spark, Main.Args(config = cfg))) }
+    val ((_, err), r) = recorded(spark)(stderrOf(Main.run(spark, Main.Args(config = cfg))))
 
-    val execs = r.executions.asScala.toSeq
+    val execs = r.executions.map(_.description)
     assert(execs.size == 2, execs)
     assert(!execs.exists(d => d.startsWith("isEmpty") || d.startsWith("count")), execs)
     val size = Files.size(dir.resolve("in.csv"))
-    assert(r.inputBytes.get <= 2 * size, s"read ${r.inputBytes.get} bytes of a $size-byte file")
+    val read = r.stages.map(_.inputBytes).sum
+    assert(read <= 2 * size, s"read $read bytes of a $size-byte file")
 
     assert(text(dest) ==
       """id,name,qty
@@ -124,7 +76,7 @@ class SkipLoadSpec extends SparkTestBase with TempDirs {
     val dir = tempDir("graft_skipload_clean")
     val (dest, errs) = (s"$dir/clean.csv", s"$dir/errors.csv")
     val cfg = playbook(dir, "id,name,qty,flag\n1,alpha,3,a\n3,gamma,5,x\n", dest, errs)
-    val err = stderrOf(Main.run(spark, Main.Args(config = cfg)))
+    val (_, err) = stderrOf(Main.run(spark, Main.Args(config = cfg)))
     assert(text(dest) == "id,name,qty\n1,ALPHA,3\n")
     assert(!Files.exists(Paths.get(errs)))
     assert(!Files.exists(Paths.get(errs + ".spark-tmp")))
@@ -137,7 +89,7 @@ class SkipLoadSpec extends SparkTestBase with TempDirs {
     // no filter and no rule that can fail: the error plan is empty
     val cfg = playbook(dir, input, dest, errs,
       rules = "mappings:\n  - {source: name, target: name, transform: toUpperCase}")
-    val err = stderrOf(Main.run(spark, Main.Args(config = cfg)))
+    val (_, err) = stderrOf(Main.run(spark, Main.Args(config = cfg)))
     assert(text(dest) == "name\nALPHA\nBETA\nGAMMA\nDELTA\n")
     assert(!Files.exists(Paths.get(errs)))
     assert(!err.contains("[warn]"), err)
@@ -161,8 +113,7 @@ class SkipLoadSpec extends SparkTestBase with TempDirs {
     val dir = tempDir("graft_skipload_same")
     val dest = s"$dir/out.csv"
     val cfg = playbook(dir, input, dest, s"$dir/./out.csv")
-    var e: Exception = null
-    val r = recorded { e = intercept[IllegalArgumentException](Main.run(spark, Main.Args(config = cfg))) }
+    val (e, r) = recorded(spark)(intercept[IllegalArgumentException](Main.run(spark, Main.Args(config = cfg))))
     assert(e.getMessage.startsWith("errorFile is the destination"), e.getMessage)
     assert(r.executions.isEmpty, r.executions)
     assert(!Files.exists(Paths.get(dest)))

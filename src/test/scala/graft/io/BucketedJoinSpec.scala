@@ -37,7 +37,7 @@ class BucketedJoinSpec extends SparkTestBase with graft.TempDirs {
       Bucketed.writeTable(dim, "graft_dim_b", s"$dir/dim", Seq("k"), 8, Seq("k"))
       val f = Bucketed.table(spark, "graft_fact_b")
       val d = Bucketed.table(spark, "graft_dim_b")
-      withNoBroadcast {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = f.join(d, Seq("k")).groupBy(col("k"))
           .agg(count(lit(1)).as("n"), max(col("name")).as("name"))
         assert(countShuffles(joined) == 0,
@@ -55,11 +55,5 @@ class BucketedJoinSpec extends SparkTestBase with graft.TempDirs {
       spark.sql("DROP TABLE IF EXISTS graft_fact_b")
       spark.sql("DROP TABLE IF EXISTS graft_dim_b")
     }
-  }
-
-  private def withNoBroadcast[T](body: => T): T = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

@@ -80,9 +80,7 @@ class IoSpec extends SparkTestBase with graft.TempDirs {
     val sb = new StringBuilder("id,v\n")
     (1 to 60000).foreach(i => sb.append(i).append(",v").append(i % 97).append('\n'))
     Files.writeString(java.nio.file.Paths.get(p), sb.toString)
-    val old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536") {
       val fast = Readers.read(spark, SourceConfig("csv", file = p, splittable = true))
       assert(fast.rdd.getNumPartitions > 1,
         s"fast path must split one file across tasks, got ${fast.rdd.getNumPartitions}")
@@ -92,7 +90,7 @@ class IoSpec extends SparkTestBase with graft.TempDirs {
       val eRows = exact.collect().map(r => (r.getAs[String]("id"), r.getAs[String]("v")))
         .sortBy(_._1).toSeq
       assert(fRows.size == 60000 && fRows == eRows)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    }
   }
 
   test("csv splittable: directory read drops EVERY file's header; tab delimiter") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import graft.tools.Recorded.recorded
 import org.apache.spark.sql.functions._
 
 class ClustersSpec extends SparkTestBase {
@@ -46,52 +47,28 @@ class ClustersSpec extends SparkTestBase {
 
   test("engine choice runs no full edge-volume job: the take probe stops after one partition") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    // AQE both splits the materialization into several jobs (unstable
-    // job indexes) and can coalesce the 16 partitions away — pin the
-    // classic planner so "one partition of sixteen" is observable
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // star graph (hub 0): diameter 2, so the forced distributed path
     // converges in a couple of rounds; 4000 edges >> driverEdgeLimit=8
     val edges = spark.range(1, 4001, 1, 2).select(lit(0L).as("a"), $"id".as("b"))
-    val tag = "graft-cc-engine-choice-probe"
-    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && tag == js.properties.getProperty("spark.jobGroup.id"))
-          jobTasks.add(js.stageInfos.map(_.numTasks).sum)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "cc engine choice probe")
-      val comp = Clusters.connectedComponents(edges, "a", "b", driverEdgeLimit = 8L)
-      assert(comp.filter($"component" === 0L).count() == 4001L)
-    } finally {
-      sc.clearJobGroup()
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      // listener delivery is async: wait for the queue to settle before
-      // removing the listener and asserting
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val n = jobTasks.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
+    // AQE both splits the materialization into several jobs (unstable
+    // job indexes) and can coalesce the 16 partitions away — pin the
+    // classic planner so "one partition of sixteen" is observable
+    val (_, rec) = withConf("spark.sql.shuffle.partitions" -> "16",
+        "spark.sql.adaptive.enabled" -> "false") {
+      recorded(spark) {
+        val comp = Clusters.connectedComponents(edges, "a", "b", driverEdgeLimit = 8L)
+        assert(comp.filter($"component" === 0L).count() == 4001L)
       }
-      sc.removeSparkListener(listener)
     }
-    val tasks = jobTasks.toArray(Array.empty[Integer]).map(_.intValue).toVector
-    // With the LAZY localCheckpoint (r16) the take() probe IS the
-    // materialization: job 0 runs the distinct's map side (4 pinned
-    // range partitions) plus exactly ONE reduce partition of the
-    // sixteen — cached as it scans, so the distributed loop reuses it.
-    // A first job that sweeps all 16 reduce partitions would mean the
-    // old count() pre-pass (or an eager checkpoint's full
-    // materialization job) is back.
+    val tasks = rec.jobs.map(_.tasks)
+    // Job 0 is the take(lim + 1) engine-choice probe over the lazily
+    // checkpointed edges: both directions of two range partitions, four
+    // partitions in all. The first one already holds more than
+    // lim + 1 = 9 rows, so the probe runs one task and stops. The jobs
+    // after it are the star contraction's and the final count's.
+    // `tasks(0) < 16` fails when the first job sweeps the 16 shuffle
+    // partitions, i.e. when engine work runs before the probe; it does
+    // not tell the one-task probe from a full pass over the checkpoint.
     assert(tasks.length >= 2, s"expected probe + engine jobs, saw $tasks")
     assert(tasks(0) < 16,
       s"engine-choice probe ran ${tasks(0)} tasks — a full 16-partition " +

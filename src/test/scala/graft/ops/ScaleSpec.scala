@@ -14,9 +14,7 @@ class ScaleSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_customer")
     // disable auto-broadcast so the join would otherwise shuffle
-    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       (1L to 100L).map(i => (i, i % 10, i * 1.5)).toDF("o_id", "cust", "amt")
         .write.bucketBy(4, "cust").sortBy("cust").saveAsTable("b_orders")
       (0L to 9L).map(i => (i, s"c$i")).toDF("cust", "name")
@@ -26,7 +24,6 @@ class ScaleSpec extends SparkTestBase {
       assert(!plan.contains("Exchange"), s"expected exchange-free bucketed join, got:\n$plan")
       assert(joined.count() == 100)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_customer")
     }
@@ -280,9 +277,7 @@ class ScaleSpec extends SparkTestBase {
 
   test("dupNgramCoverage: the id repartition is the ONLY shuffle (subset-key reuse)") {
     import spark.implicits._
-    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = (1L to 50L).map(i => (i, s"a b c a b d e f tok$i x y"))
         .toDF("doc_id", "text")
       val plan = TextAnalysis.dupNgramCoverage(docs, "doc_id", "text", n = 2,
@@ -293,7 +288,7 @@ class ScaleSpec extends SparkTestBase {
       // partitioning already satisfies — sorts, no further exchanges
       assert(plan.split("Exchange").length - 1 == 1,
         s"expected exactly one exchange (the id repartition):\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
+    }
   }
 
   test("triangleCounts: no cartesian wedge enumeration, joins keyed on nodes") {
@@ -491,13 +486,10 @@ class ScaleSpec extends SparkTestBase {
     var ran = false
     CachedRelations.trackCleanup(() => throw new java.io.IOException("stuck dir"))
     CachedRelations.trackCleanup(() => ran = true)
-    val err = new java.io.ByteArrayOutputStream()
-    val saved = System.err
-    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
-    val n = try CachedRelations.releaseAll() finally System.setErr(saved)
+    val (n, err) = stderrOf(CachedRelations.releaseAll())
     assert(n == 2)
     assert(ran)
-    val lines = err.toString("UTF-8").linesIterator.filter(_.startsWith("[warn]")).toSeq
+    val lines = err.linesIterator.filter(_.startsWith("[warn]")).toSeq
     assert(lines.size == 1 && lines.head.contains("stuck dir"), lines)
   }
 
