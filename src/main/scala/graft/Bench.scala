@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 /**
- * Per-round benchmark: every registered query against
+ * Per-round benchmark: every benched query (`Q.benched`) against
  * SPARK_GRAFT_SF_DIR, full evaluation forced through the noop sink
  * (count() alone lets Catalyst prune projections and under-measures
  * expression-heavy queries). One JSON line on stdout.
@@ -32,119 +32,6 @@ object Bench {
     // warm the JVM/session so the first measured query isn't charged for init
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    // md5-portable ORACLE twins are correctness fixtures for the DuckDB
-    // gate, not perf claims: md5-per-shingle is 5-10x an xxhash64, and
-    // each twin's production path IS benched (q_llm_minhash_sig_x64,
-    // q_llm_minhash_pairs, q_llm_simhash_pairs, q_llm_dedup_clusters,
-    // q_llm_corpus_clean, q_llm_rolling_fp_x64, q_llm_winnowing_x64, q_llm_containment_x64).
-    // Benching both double-counts the same operator and buries the
-    // headline in hash-function overhead.
-    val oracleOnlyFixtures = Set(
-      "q_llm_minhash_sig", "q_llm_minhash_pairs_md5", "q_llm_simhash_pairs_md5",
-      "q_llm_dedup_clusters_md5", "q_llm_corpus_clean_md5",
-      "q_llm_rolling_fp", "q_llm_winnowing", "q_llm_containment",
-      "q_llm_cross_source_dups", "q_llm_group_split", "q_llm_oph_pairs",
-      "q_llm_cms", "q_llm_cluster_terms", "q_llm_dedup_best",
-      "q_llm_oph_verified", "q_llm_incr_neardup", "q_llm_dsir_md5",
-      // md5 oracle face of the 3-version chain; the x64 chain is benched
-      "q_llm_incr_neardup_chain",
-      // playbook result-twins of already-benched plans (the YAML adds a
-      // parse, not a plan): corpus_clean md5 / url_dedup / datasheet.
-      // q_playbook_join_agg and q_playbook_window are NEW plans — benched.
-      "q_playbook_corpus_clean", "q_playbook_url_dedup", "q_playbook_datasheet",
-      "q_playbook_split",
-      // r11 playbook faces of the remaining LLM op families: all exact
-      // result-twins of already-benched plans (gopher_rules, redact_pii,
-      // decontaminate, dsir_md5, pack_windows, chunk, length_batches,
-      // ann_ivf, bpe_fertility) — the YAML adds a parse, not a plan
-      "q_playbook_gopher", "q_playbook_pii", "q_playbook_decontam",
-      "q_playbook_dsir", "q_playbook_pack", "q_playbook_chunk",
-      "q_playbook_length_batches", "q_playbook_ann", "q_playbook_bpe",
-      // r12 equivalence oracles: each runs its op TWICE (config path +
-      // API twin) purely to compare them — correctness fixtures; both
-      // underlying plans are already benched via their twins
-      "q_playbook_ann_check", "q_playbook_bpe_check",
-      // r13 persisted-ANN-index equivalence oracles: each builds the
-      // index AND runs the in-session fit purely to compare them; the
-      // production persisted path is benched via q_llm_ann_persist and
-      // the in-session plans via q_llm_ann_{ivf,pq,binary}
-      "q_llm_ann_persist_check", "q_llm_ann_pq_persist_check",
-      "q_llm_ann_bin_persist_check",
-      // r14 append-lifecycle equivalence oracles: each builds TWO
-      // indexes (base+append and full rebuild) purely to compare them
-      // at exhaustive probe settings — correctness fixtures by
-      // construction; the production probe paths are benched via
-      // q_llm_ann_persist / q_llm_ann_pq / q_llm_ann_binary twins
-      "q_llm_ann_append_check", "q_llm_ann_bin_append_check",
-      "q_llm_ann_pq_append_check",
-      // r15 lifecycle equivalence oracles, same shape: lsh persist /
-      // append build two indexes (or an index AND the in-session fit)
-      // purely to compare, and the LM append check fits THREE models;
-      // the production probe paths are benched via q_llm_ann_lsh and
-      // q_llm_mkn_ppl_idx
-      "q_llm_ann_lsh_persist_check", "q_llm_ann_lsh_append_check",
-      "q_llm_mkn_append_check",
-      // r13 persisted-LM equivalence oracle: runs the mkn3 scorer
-      // TWICE (loaded artifact + in-session fit) purely to compare;
-      // the persisted path is benched via q_llm_mkn_ppl_idx and the
-      // in-session plan via q_llm_mkn_ppl
-      "q_llm_mkn_index_check",
-      // r13 persisted-tokenizer equivalence oracle: trains AND loads
-      // purely to compare; the persisted path is benched via
-      // q_llm_bpe_fertility_idx and the refit via q_llm_bpe_encode_1k
-      "q_llm_tok_index_check",
-      // r12 property-verdict checks: re-run already-benched engine-local
-      // ops (pca / deflate / classifier) purely to pin their
-      // definitional properties in the DuckDB gate
-      "q_llm_pca_check", "q_llm_compress_check", "q_llm_quality_check",
-      // r12 native-vs-iterative BPE equivalence (runs both encoders over
-      // the vocabulary purely to compare; the native path is benched
-      // via q_llm_bpe_encode_1k)
-      "q_llm_bpe_native_check",
-      // same equivalence shape one alphabet down (r13): both byte-
-      // level encoders over the vocabulary purely to compare; the
-      // native path is benched via the persisted-tokenizer face
-      "q_llm_bbpe_native_check",
-      // unigram coverage/normalization verdict (correctness fixture —
-      // the trained pipeline itself is benched via
-      // q_llm_unigram_fertility); the playbook face is a result-twin
-      // and its _check runs the op twice by construction
-      "q_llm_unigram_check", "q_playbook_unigram", "q_playbook_unigram_check",
-      // wordpiece family: same layout as unigram — the trained pipeline
-      // is benched via q_llm_wordpiece_fertility; the coverage verdict,
-      // the playbook result-twin, and its run-twice _check are
-      // correctness fixtures
-      "q_llm_wordpiece_check", "q_playbook_wordpiece",
-      "q_playbook_wordpiece_check",
-      // byte-level BPE family: same layout again — the trained pipeline
-      // is benched via q_llm_bbpe_fertility; the round-trip coverage
-      // verdict is a correctness fixture
-      "q_llm_bbpe_check",
-      // ppl_partition equivalence oracle (runs the op twice by
-      // construction; q_playbook_ppl itself IS benched — the annotate
-      // join back onto the frame is a genuinely new plan)
-      "q_playbook_ppl_check",
-      // result-twin of the benched q_llm_c4_rules plan (the YAML adds
-      // a parse and a column join, not a new corpus-volume plan)
-      "q_playbook_c4",
-      // md5 result-twin of the oracle-only md5 chain (x64 chain is benched)
-      "q_playbook_incr_neardup",
-      // result-twins of benched plans (q_sessionize / q_gap_report /
-      // q_kmv_overlap_x64's production path)
-      "q_playbook_sessionize", "q_playbook_gap_report", "q_playbook_audience",
-      // result-twin of the benched q_resample_daily plan (YAML parse
-      // only). q_playbook_zorder IS benched: its range exchange is the
-      // clustering cost, a genuinely new plan.
-      "q_playbook_resample",
-      // md5 oracle face of the KMV estimator; q_kmv_overlap_x64 is the
-      // benched production path
-      "q_kmv_overlap",
-      // md5 oracle face of the star-CC engine; q_llm_cc_star_x64 is the
-      // benched production path
-      "q_llm_cc_star",
-      // result-twin of the benched q_expectations plan (YAML parse only)
-      "q_playbook_expect")
-
     // Optional local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs
     // just those queries. The driver never sets it — full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -164,7 +51,7 @@ object Bench {
     // under-warm the JIT/caches by ~1.3-1.7x on sub-second queries
     // (r11 10-pass probe, BASELINE.md), and the warm rerun is the
     // engine-truth number. First-sweep total kept for transparency.
-    val maxPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
+    val maxPasses = 3
     // r7 postmortem: timeOnce used to swallow the exception and return the
     // elapsed time OF THE CRASH — 39 dead queries were timed at ~0.1 s each
     // and counted in value/n_queries with exit 0. A failed query is now a
@@ -189,8 +76,10 @@ object Bench {
         finally graft.ops.CachedRelations.releaseAll()
       if (ok) Some((System.nanoTime() - t0) / 1e9) else None
     }
-    val surface = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => oracleOnlyFixtures(name) }
+    // The surface is every registered query but the correctness
+    // fixtures (`Q.benched = false`, each says why at its definition).
+    val (benched, fixtures) = graft.queries.Queries.all.partition(_.benched)
+    val surface = benched.map(q => q.name -> q.fn).sortBy(_._1)
       .filter { case (name, _) => only.forall(_(name)) }
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val firstPass = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -238,7 +127,7 @@ object Bench {
     // driver's tail-capture budget).
     val detail = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val excluded = oracleOnlyFixtures.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val excluded = fixtures.map(_.name).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val firstPassDetail = timed.map { case (k, _, p1) => "\"" + k + "\":" + r3(p1) }
       .mkString("{", ",", "}")
     val failDetail = failedQueries

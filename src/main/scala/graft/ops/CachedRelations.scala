@@ -36,11 +36,7 @@ object CachedRelations {
     * `java.io.tmpdir`, deleted with its contents at [[releaseAll]]. */
   def tempDir(prefix: String): java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft_$prefix")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      java.nio.file.Files.deleteIfExists(f.toPath); ()
-    }
-    trackCleanup(() => rm(dir.toFile))
+    trackCleanup(() => graft.io.Writers.deleteTree(dir.toFile))
     dir
   }
 

@@ -25,8 +25,9 @@ object Clusters {
     * big graphs take the distributed star contraction. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           driverEdgeLimit: Long = 2000000L): DataFrame = {
-    val symRaw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .union(edges.select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
+    // One direction per pair: the union-find reads both endpoints of
+    // every row, and the star normalizes with least/greatest itself.
+    val raw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .localCheckpoint(eager = false)
     // Engine choice WITHOUT a full edge-volume job: take(limit+1) scans
     // the checkpointed partitions INCREMENTALLY (1, then scaleUpFactor×
@@ -37,15 +38,15 @@ object Clusters {
     // union-find directly — the old separate collect() job is gone too.
     // The probe runs BEFORE any distinct — union-find is insensitive
     // to duplicate edges, so the small path pays ZERO shuffles; the
-    // limit counts raw pair instances, which only errs toward the
-    // distributed engine. That engine reads `symRaw`, the checkpoint
-    // the probe has partly filled, so the upstream pair lineage is
-    // never computed twice; it normalizes and distincts the edges
-    // itself.
+    // limit counts input pair rows (duplicates included), which only
+    // errs toward the distributed engine. That engine reads `raw`, the
+    // checkpoint the probe has partly filled, so the upstream pair
+    // lineage is never computed twice; it normalizes and distincts the
+    // edges itself.
     val lim = math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt
-    val head = symRaw.take(lim + 1)
-    if (head.length <= lim) driverUnionFind(symRaw.sparkSession, head)
-    else connectedComponentsStar(symRaw, "a", "b")
+    val head = raw.take(lim + 1)
+    if (head.length <= lim) driverUnionFind(raw.sparkSession, head)
+    else connectedComponentsStar(raw, "a", "b")
   }
 
   /**

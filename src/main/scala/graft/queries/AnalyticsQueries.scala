@@ -496,6 +496,7 @@ object AnalyticsQueries {
     // md5-portable face is integer-exact end to end (52-bit hash
     // prefix, floor()-not-cast everywhere), so the WHOLE estimator —
     // not just a tolerance claim — hash-matches DuckDB.
+    // Not benched: md5 oracle twin of the benched q_kmv_overlap_x64.
     Q("q_kmv_overlap",
       (s, dir) => {
         val sk = graft.ops.Sketches.kmvSketch(
@@ -536,7 +537,7 @@ object AnalyticsQueries {
         SELECT g1, g2, n_union_sketch, common_k, est_union, jaccard_micro,
           CAST(floor(jaccard_micro * est_union / 1000000.0) AS BIGINT)
             AS est_intersection
-        FROM j""")),
+        FROM j"""), benched = false),
 
     // The xxhash64 scale twin of the same estimator (rows-only: DuckDB
     // has no xxhash64; the algorithm is hash-verified via the md5 face).
@@ -1979,7 +1980,7 @@ object AnalyticsQueries {
     // LayoutSpec.
     Q("q_bloom_skipping",
       (s, dir) => {
-        val tmp = s"/tmp/graft_bloom_skip_${math.abs(dir.hashCode)}"
+        val tmp = graft.ops.CachedRelations.tempDir("bloom_skip_")
         t(s, dir, "events").select(col("event_id"), col("user_id"), col("value"))
           .repartition(8, col("user_id"))
           .write.mode("overwrite").parquet(s"$tmp/tbl")

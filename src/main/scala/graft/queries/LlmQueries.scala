@@ -250,9 +250,10 @@ object LlmQueries {
         FROM documents""")),
 
     // Portable MinHash signature (md5-min over 4-char shingles, 8 seeds).
+    // Not benched: md5 oracle twin of the benched q_llm_minhash_sig_x64.
     Q("q_llm_minhash_sig",
       (s, dir) => TextAnalysis.minhashPortableDf(t(s, dir, "documents"), "doc_id", "text"),
-      Some(LlmOracles.minhashSig)),
+      Some(LlmOracles.minhashSig), benched = false),
 
     // Portable SimHash (30-bit, md5-derived token hashes).
     Q("q_llm_simhash",
@@ -290,12 +291,12 @@ object LlmQueries {
     Q("q_llm_minhash_pairs_md5",
       (s, dir) => Dedup.minhashPortablePairs(t(s, dir, "documents"), "doc_id", "text",
         shingleSize = 4, numHashes = 8, bands = 4, threshold = 0.5),
-      Some(LlmOracles.minhashPairsMd5)),
+      Some(LlmOracles.minhashPairsMd5), benched = false),
 
     Q("q_llm_simhash_pairs_md5",
       (s, dir) => Dedup.simhashPortablePairs(t(s, dir, "documents"), "doc_id", "text",
         maxHamming = 3, bands = 5),
-      Some(LlmOracles.simhashPairsMd5)),
+      Some(LlmOracles.simhashPairsMd5), benched = false),
 
     // xxhash64 minhash signature headline for the bench (same explode +
     // partial-min algorithm as the oracled md5 twin q_llm_minhash_sig;
@@ -516,6 +517,7 @@ object LlmQueries {
     // min-rank expression — must agree token-sequence for
     // token-sequence on every word. The oracle pins full vocabulary
     // coverage (DuckDB restates the tokenization) and zero mismatches.
+    // Not benched: both encoders only to compare (q_llm_bpe_encode_1k benches native).
     Q("q_llm_bpe_native_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -535,7 +537,7 @@ object LlmQueries {
       Some("""SELECT (SELECT COUNT(DISTINCT w) FROM (
           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents WHERE text IS NOT NULL)) AS n_words,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Unigram-LM tokenizer (Kudo 2018 — the SentencePiece-default
     // family, next to BPE). Training is exact forward-backward EM over
@@ -559,6 +561,7 @@ object LlmQueries {
     // normalizes (sum of probs = 1), (3) the prune bound held. DuckDB
     // restates the distinct-word count; the contract counters pin to
     // constants.
+    // Not benched: a coverage verdict; q_llm_unigram_fertility benches the pipeline.
     Q("q_llm_unigram_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -581,7 +584,7 @@ object LlmQueries {
           FROM documents WHERE text IS NOT NULL)) AS n_words,
         CAST(0 AS BIGINT) AS n_unreconstructed,
         CAST(TRUE AS BOOLEAN) AS norm_ok,
-        CAST(TRUE AS BOOLEAN) AS size_ok""")),
+        CAST(TRUE AS BOOLEAN) AS size_ok"""), benched = false),
 
     // WordPiece trainer iteration zero (Schuster & Nakajima 2012, the
     // BERT family): for every adjacent ##-marked seed-symbol pair, the
@@ -643,6 +646,7 @@ object LlmQueries {
     // prefixes are stripped — the losslessness property. DuckDB
     // restates the distinct-word count; the contract counters pin to
     // constants.
+    // Not benched: a coverage verdict; q_llm_wordpiece_fertility benches the pipeline.
     Q("q_llm_wordpiece_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -659,7 +663,7 @@ object LlmQueries {
       Some("""SELECT (SELECT COUNT(DISTINCT w) FROM (
           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents WHERE text IS NOT NULL)) AS n_words,
-        CAST(0 AS BIGINT) AS n_unreconstructed""")),
+        CAST(0 AS BIGINT) AS n_unreconstructed"""), benched = false),
 
     // Byte-level BPE (GPT-2 family) trainer iteration zero: corpus-
     // weighted adjacent UTF-8 BYTE pair counts, each pair spelled as
@@ -706,6 +710,7 @@ object LlmQueries {
     // losslessness that defines the family (merges only concatenate
     // byte symbols, so the byte stream survives any merge table).
     // DuckDB restates the distinct-word count; the counter pins to 0.
+    // Not benched: a coverage verdict; q_llm_bbpe_fertility benches the pipeline.
     Q("q_llm_bbpe_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -724,13 +729,14 @@ object LlmQueries {
       Some("""SELECT (SELECT COUNT(DISTINCT w) FROM (
           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents WHERE text IS NOT NULL)) AS n_words,
-        CAST(0 AS BIGINT) AS n_unreconstructed""")),
+        CAST(0 AS BIGINT) AS n_unreconstructed"""), benched = false),
 
     // Gate-visible equivalence for the BYTE-LEVEL native encoder —
     // the q_llm_bpe_native_check twin for the GPT-2 family: a
     // 200-merge table learned on the REAL corpus, applied to the REAL
     // distinct vocabulary through BOTH encoders (iterative per-rank
     // rescan vs native min-rank), token sequence for token sequence.
+    // Not benched: both encoders only to compare (the persisted-tokenizer face benches native).
     Q("q_llm_bbpe_native_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -750,7 +756,7 @@ object LlmQueries {
       Some("""SELECT (SELECT COUNT(DISTINCT w) FROM (
           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
           FROM documents WHERE text IS NOT NULL)) AS n_words,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Persisted-tokenizer production face (the fit-once lifecycle for
     // the tokenizer families, like q_llm_ann_persist / q_llm_mkn_ppl_idx):
@@ -781,6 +787,7 @@ object LlmQueries {
     // the in-session refit (merges are strings and longs — parquet
     // round-trips them identically) — full-outer join on source, zero
     // tolerance on every column.
+    // Not benched: trains and loads only to compare (q_llm_bpe_fertility_idx is).
     Q("q_llm_tok_index_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -806,7 +813,7 @@ object LlmQueries {
       },
       Some("""SELECT (SELECT COUNT(DISTINCT source) FROM documents
           WHERE text IS NOT NULL) AS n_sources,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // BPE-ish pre-tokenization count (word runs + punctuation).
     Q("q_llm_bpe_tokens",
@@ -817,6 +824,7 @@ object LlmQueries {
         FROM documents""")),
 
     // Mod-sampling rolling-hash fingerprint (content-defined dedup shape).
+    // Not benched: md5 oracle twin of the benched q_llm_rolling_fp_x64.
     Q("q_llm_rolling_fp",
       (s, dir) => TextAnalysis.rollingFingerprint(t(s, dir, "documents"), "doc_id", "text"),
       Some("""WITH sh AS (SELECT doc_id,
@@ -826,7 +834,7 @@ object LlmQueries {
           FROM documents),
         h AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh)
         SELECT doc_id, array_to_string(list_sort(list(DISTINCT h)), ',') AS fp
-        FROM h WHERE h % 16 = 0 GROUP BY doc_id""")),
+        FROM h WHERE h % 16 = 0 GROUP BY doc_id"""), benched = false),
 
     // Winnowing fingerprint (window-min over positional shingle hashes).
     // xxhash64 production twins of the two md5-portable fingerprint
@@ -840,6 +848,7 @@ object LlmQueries {
         portableHash = false),
       None),
 
+    // Not benched: md5 oracle twin of the benched q_llm_winnowing_x64.
     Q("q_llm_winnowing",
       (s, dir) => TextAnalysis.winnowingFingerprint(t(s, dir, "documents"), "doc_id", "text"),
       Some("""WITH base AS (SELECT doc_id, lower(text) AS lt FROM documents),
@@ -854,7 +863,7 @@ object LlmQueries {
             row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
           FROM h)
         SELECT doc_id, array_to_string(list_sort(list(DISTINCT wmin)), ',') AS fp
-        FROM wm WHERE rn >= 4 GROUP BY doc_id""")),
+        FROM wm WHERE rn >= 4 GROUP BY doc_id"""), benched = false),
 
     // Near-dup dedup end-to-end: pairs -> connected components ->
     // canonical representative per cluster (rows-only: xxhash64 pairs).
@@ -870,6 +879,7 @@ object LlmQueries {
 
     // Oracle twin of the cluster dedup: md5-portable pairs, connected
     // components checked against a DuckDB recursive-CTE min-label walk.
+    // Not benched: md5 oracle twin of the benched q_llm_dedup_clusters.
     Q("q_llm_dedup_clusters_md5",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -878,7 +888,7 @@ object LlmQueries {
         graft.ops.Clusters.dedupByPairs(docs.select(col("doc_id"), col("lang"), col("n_chars")),
           "doc_id", pairs, "id_a", "id_b")
       },
-      Some(LlmOracles.dedupClustersMd5)),
+      Some(LlmOracles.dedupClustersMd5), benched = false),
 
     // Large-star/small-star connected components (Kiveris 2014) — the
     // O(log² n) scale engine whose round count is independent of graph
@@ -892,7 +902,7 @@ object LlmQueries {
           threshold = 0.5)
         graft.ops.Clusters.connectedComponentsStar(pairs, "id_a", "id_b")
       },
-      Some(LlmOracles.ccStarMd5)),
+      Some(LlmOracles.ccStarMd5), benched = false),
 
     Q("q_llm_cc_star_x64",
       (s, dir) => {
@@ -982,6 +992,7 @@ object LlmQueries {
     // doubles bit-exactly; assignments are stored, not recomputed) —
     // one full-outer join on (qid, rank), zero tolerance on neighbor
     // ids, 1e-9 on the score.
+    // Not benched: index and in-session fit only to compare (q_llm_ann_persist, q_llm_ann_ivf are).
     Q("q_llm_ann_persist_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -1005,7 +1016,7 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE vec_id % 50 = 0) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Append-lifecycle equivalence oracle (r13 verdict ask 4): an index
     // built on two thirds of the corpus and APPENDED with the rest
@@ -1015,17 +1026,18 @@ object LlmQueries {
     // affect the result set, so any divergence is a lifecycle bug
     // (lost rows, duplicated codes, wrong norms). Full-outer join on
     // (qid, rank), zero tolerance on neighbor ids, 1e-9 on the score.
+    // Not benched: two indexes only to compare (q_llm_ann_persist benches the probe).
     Q("q_llm_ann_append_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val h = math.abs(dir.hashCode)
-        val baseTbl = s"/tmp/graft_ann_append_base_$h"
-        val deltaTbl = s"/tmp/graft_ann_append_delta_$h"
+        val tmp = graft.ops.CachedRelations.tempDir("ann_append_")
+        val baseTbl = s"$tmp/base"
+        val deltaTbl = s"$tmp/delta"
         val fullTbl = s"$dir/embeddings.parquet"
         e.filter(col("vec_id") % 3 =!= 0).write.mode("overwrite").parquet(baseTbl)
         e.filter(col("vec_id") % 3 === 0).write.mode("overwrite").parquet(deltaTbl)
-        val idxA = s"/tmp/graft_ann_idx_appended_$h"
-        val idxR = s"/tmp/graft_ann_idx_rebuilt_$h"
+        val idxA = s"$tmp/idx_appended"
+        val idxR = s"$tmp/idx_rebuilt"
         graft.ops.AnnIndex.writeIvfIndex(s, s.read.parquet(baseTbl), baseTbl, idxA,
           "vec_id", "embedding", dims = 64, nlist = 16)
         graft.ops.AnnIndex.appendIvfIndex(s, s.read.parquet(deltaTbl), deltaTbl,
@@ -1048,23 +1060,24 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE vec_id % 50 = 0) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Append equivalence for the BINARY index: sign quantization has
     // no fitted state, so an appended index must equal a full rebuild
     // EXACTLY at every operating point (incl. the corpus-scaled
     // rerankFrac — both sides see the same corpus size).
+    // Not benched: two indexes only to compare (q_llm_ann_binary benches the probe).
     Q("q_llm_ann_bin_append_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val h = math.abs(dir.hashCode)
-        val baseTbl = s"/tmp/graft_annb_append_base_$h"
-        val deltaTbl = s"/tmp/graft_annb_append_delta_$h"
+        val tmp = graft.ops.CachedRelations.tempDir("annb_append_")
+        val baseTbl = s"$tmp/base"
+        val deltaTbl = s"$tmp/delta"
         val fullTbl = s"$dir/embeddings.parquet"
         e.filter(col("vec_id") % 3 =!= 0).write.mode("overwrite").parquet(baseTbl)
         e.filter(col("vec_id") % 3 === 0).write.mode("overwrite").parquet(deltaTbl)
-        val idxA = s"/tmp/graft_ann_idx_bin_appended_$h"
-        val idxR = s"/tmp/graft_ann_idx_bin_rebuilt_$h"
+        val idxA = s"$tmp/idx_appended"
+        val idxR = s"$tmp/idx_rebuilt"
         graft.ops.AnnIndex.writeBinaryIndex(s, s.read.parquet(baseTbl), baseTbl,
           idxA, "vec_id", "embedding", dims = 64)
         graft.ops.AnnIndex.appendBinaryIndex(s, s.read.parquet(deltaTbl), deltaTbl,
@@ -1087,25 +1100,26 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE vec_id % 50 = 0) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Append equivalence for the IVF-PQ index, on a bounded sub-corpus:
     // with every cell probed AND a rerank set covering every candidate,
     // the (frozen vs refit) quantizers cannot drop or reorder anything —
     // the exact re-rank decides alone, so appended ≡ rebuild row-exactly.
+    // Not benched: two indexes only to compare (q_llm_ann_pq benches the probe).
     Q("q_llm_ann_pq_append_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val h = math.abs(dir.hashCode)
+        val tmp = graft.ops.CachedRelations.tempDir("annpq_append_")
         val sub = e.filter(col("vec_id") % 5 === 0)
-        val baseTbl = s"/tmp/graft_annpq_append_base_$h"
-        val deltaTbl = s"/tmp/graft_annpq_append_delta_$h"
-        val fullTbl = s"/tmp/graft_annpq_append_full_$h"
+        val baseTbl = s"$tmp/base"
+        val deltaTbl = s"$tmp/delta"
+        val fullTbl = s"$tmp/full"
         sub.filter(col("vec_id") % 3 =!= 0).write.mode("overwrite").parquet(baseTbl)
         sub.filter(col("vec_id") % 3 === 0).write.mode("overwrite").parquet(deltaTbl)
         sub.write.mode("overwrite").parquet(fullTbl)
-        val idxA = s"/tmp/graft_ann_idx_pq_appended_$h"
-        val idxR = s"/tmp/graft_ann_idx_pq_rebuilt_$h"
+        val idxA = s"$tmp/idx_appended"
+        val idxR = s"$tmp/idx_rebuilt"
         graft.ops.AnnIndex.writePqIndex(s, s.read.parquet(baseTbl), baseTbl, idxA,
           "vec_id", "embedding", dims = 64, nlist = 16, m = 16, ksub = 32)
         graft.ops.AnnIndex.appendPqIndex(s, s.read.parquet(deltaTbl), deltaTbl,
@@ -1133,11 +1147,12 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE vec_id % 5 = 0) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Same contract for the persisted IVF-PQ index: loaded centroids +
     // codebooks + codes must reproduce ivfPqTopK row-exactly at the
     // production operating point.
+    // Not benched: index and in-session fit only to compare (q_llm_ann_pq is).
     Q("q_llm_ann_pq_persist_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -1161,7 +1176,7 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Persisted-LSH production face (the lifecycle row of the CHEAPEST
     // index kind): ENSURE-not-rebuild like q_llm_mkn_ppl_idx — verify
@@ -1191,6 +1206,7 @@ object LlmQueries {
     // the loaded self-join must equal the in-session lshTopK at the
     // production operating point row-exactly, with not one hyperplane
     // sum computed on the probe side (both bucket legs read the codes).
+    // Not benched: index and in-session fit only to compare (q_llm_ann_lsh is).
     Q("q_llm_ann_lsh_persist_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -1215,23 +1231,24 @@ object LlmQueries {
       // operating point on this corpus (recall-gated), so the query
       // count is the full table like the pq persist check
       Some("""SELECT (SELECT COUNT(*) FROM embeddings) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Append equivalence for the LSH index: buckets are a pure
     // function of the vector (no fitted state at all), so an appended
     // index must equal a full rebuild EXACTLY at every operating
     // point — the strongest equivalence in the append family.
+    // Not benched: two indexes only to compare (q_llm_ann_lsh benches the probe).
     Q("q_llm_ann_lsh_append_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val h = math.abs(dir.hashCode)
-        val baseTbl = s"/tmp/graft_annlsh_append_base_$h"
-        val deltaTbl = s"/tmp/graft_annlsh_append_delta_$h"
+        val tmp = graft.ops.CachedRelations.tempDir("annlsh_append_")
+        val baseTbl = s"$tmp/base"
+        val deltaTbl = s"$tmp/delta"
         val fullTbl = s"$dir/embeddings.parquet"
         e.filter(col("vec_id") % 3 =!= 0).write.mode("overwrite").parquet(baseTbl)
         e.filter(col("vec_id") % 3 === 0).write.mode("overwrite").parquet(deltaTbl)
-        val idxA = s"/tmp/graft_ann_idx_lsh_appended_$h"
-        val idxR = s"/tmp/graft_ann_idx_lsh_rebuilt_$h"
+        val idxA = s"$tmp/idx_appended"
+        val idxR = s"$tmp/idx_rebuilt"
         graft.ops.AnnIndex.writeLshIndex(s, s.read.parquet(baseTbl), baseTbl, idxA,
           "vec_id", "embedding", dims = 64, planes = 5, tables = 6)
         graft.ops.AnnIndex.appendLshIndex(s, s.read.parquet(deltaTbl), deltaTbl,
@@ -1251,11 +1268,12 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Same contract for the persisted binary index: stored sign bits
     // must reproduce binaryTopK (incl. the corpus-fraction-scaled
     // rerank) row-exactly.
+    // Not benched: index and in-session fit only to compare (q_llm_ann_binary is).
     Q("q_llm_ann_bin_persist_check",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -1279,7 +1297,7 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE vec_id < 20) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // End-to-end corpus cleaning: quality gate -> exact dedup ->
     // near-dup cluster resolution (rows-only: xxhash64 pairs).
@@ -1291,11 +1309,12 @@ object LlmQueries {
     // Oracle twin of the full cleaning composite: portable hashing end
     // to end, so quality gate + exact dedup + recursive-CTE clusters
     // all verify in DuckDB.
+    // Not benched: md5 oracle twin of the benched q_llm_corpus_clean.
     Q("q_llm_corpus_clean_md5",
       (s, dir) => graft.ops.Corpus.clean(t(s, dir, "documents"), "doc_id", "text",
         graft.ops.Corpus.CleanConfig(minQuality = 0.2, nearDupThreshold = 0.5,
           portableHashing = true)),
-      Some(LlmOracles.corpusCleanMd5)),
+      Some(LlmOracles.corpusCleanMd5), benched = false),
 
     // Benchmark decontamination: flag corpus docs sharing word 3-grams
     // with a deterministic "eval set" slice (doc_id % 97 == 0). The
@@ -2342,6 +2361,7 @@ object LlmQueries {
     // such stop-hashes carry no containment signal and their posting
     // lists pair quadratically (95M pairs unbounded vs ~1M at 64; the 26-pair sf0.01 answer is 25 at 64 — the signal lives in RARE shared minima).
     // md5-portable hashes so DuckDB derives identical minima.
+    // Not benched: md5 oracle twin of the benched q_llm_containment_x64.
     Q("q_llm_containment",
       (s, dir) => TextAnalysis.fingerprintContainmentPairs(
         t(s, dir, "documents"), "doc_id", "text", maxPostings = 64),
@@ -2366,7 +2386,7 @@ object LlmQueries {
           FROM pr JOIN sz sa ON sa.doc_id = pr.id_a
           JOIN sz sb ON sb.doc_id = pr.id_b)
         SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared, containment
-        FROM c WHERE containment >= 0.5""")),
+        FROM c WHERE containment >= 0.5"""), benched = false),
 
     // Production containment twin: identical algorithm over native
     // xxhash64 winnow minima (no md5-per-shingle) — the benched scale
@@ -2460,6 +2480,7 @@ object LlmQueries {
     // dup_of_new / kept verdicts; kept rows' signatures are the next
     // version's state delta. md5-portable face, fully oracled
     // including the recursive-CTE new-new components.
+    // Not benched: md5 oracle twin of the benched q_llm_incr_neardup_x64.
     Q("q_llm_incr_neardup",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -2473,7 +2494,7 @@ object LlmQueries {
           threshold = 0.5, portableBuckets = true)
           .withColumnRenamed("id", "doc_id")
       },
-      Some(LlmOracles.incrNearDup)),
+      Some(LlmOracles.incrNearDup), benched = false),
 
     // Production twin: xxhash64 signatures and band buckets, the same
     // two-phase verdict pipeline (rows-only; the algorithm is pinned
@@ -2534,7 +2555,7 @@ object LlmQueries {
             numHashes = 8, bands = 4, threshold = 0.5, portableBuckets = true))
           .withColumnRenamed("id", "doc_id")
       },
-      Some(LlmOracles.incrNearDupChain)),
+      Some(LlmOracles.incrNearDupChain), benched = false),
 
     // Temperature-resampled source mixing weights (α=0.5 via sqrt —
     // correctly-rounded, hence oracled exactly).
@@ -2802,6 +2823,7 @@ object LlmQueries {
     // in-session fit (type counts are longs; the disc row's doubles
     // round-trip parquet bit-exactly) — full-outer join on doc_id,
     // zero tolerance on all three integer columns.
+    // Not benched: scores twice only to compare (q_llm_mkn_ppl_idx, q_llm_mkn_ppl are).
     Q("q_llm_mkn_index_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -2822,7 +2844,7 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM documents WHERE text IS NOT NULL) AS n_docs,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Append-lifecycle equivalence oracle for the persisted LM (r14
     // verdict ask 4): a model fitted on two thirds of the corpus and
@@ -2832,18 +2854,19 @@ object LlmQueries {
     // integers, the disc doubles derive from identical integers
     // through the identical expression tree, so equality is exact —
     // zero tolerance on all three integer columns.
+    // Not benched: three models only to compare (q_llm_mkn_ppl_idx benches the probe).
     Q("q_llm_mkn_append_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val h = math.abs(dir.hashCode)
-        val baseTbl = s"/tmp/graft_lm_append_base_$h"
-        val deltaTbl = s"/tmp/graft_lm_append_delta_$h"
-        val fullTbl = s"/tmp/graft_lm_append_full_$h"
+        val tmp = graft.ops.CachedRelations.tempDir("lm_append_")
+        val baseTbl = s"$tmp/base"
+        val deltaTbl = s"$tmp/delta"
+        val fullTbl = s"$tmp/full"
         docs.filter(col("doc_id") % 3 =!= 0).write.mode("overwrite").parquet(baseTbl)
         docs.filter(col("doc_id") % 3 === 0).write.mode("overwrite").parquet(deltaTbl)
         docs.write.mode("overwrite").parquet(fullTbl)
-        val idxA = s"/tmp/graft_lm_idx_mkn_appended_$h"
-        val idxR = s"/tmp/graft_lm_idx_mkn_refit_$h"
+        val idxA = s"$tmp/idx_appended"
+        val idxR = s"$tmp/idx_refit"
         graft.ops.LmIndex.writeMknIndex(s, baseTbl, idxA, "doc_id", "text")
         graft.ops.LmIndex.appendMknIndex(s, deltaTbl, idxA, baseTbl, "doc_id", "text")
         graft.ops.LmIndex.writeMknIndex(s, fullTbl, idxR, "doc_id", "text")
@@ -2863,7 +2886,7 @@ object LlmQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM documents WHERE text IS NOT NULL) AS n_docs,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Reference-trained bigram LM perplexity (the CCNet production
     // shape q_llm_bigram_nll's self-fit model can't express): model
@@ -2974,7 +2997,7 @@ object LlmQueries {
           Dedup.minhashPortablePairs(docs, "doc_id", "text"),
           docs, "doc_id", "source")
       },
-      Some(LlmOracles.crossSourceDups)),
+      Some(LlmOracles.crossSourceDups), benched = false),
 
     Q("q_llm_cross_source_dups_x64",
       (s, dir) => {
@@ -2997,7 +3020,7 @@ object LlmQueries {
             Dedup.minhashPortablePairs(docs, "doc_id", "text"))
           .select(col("doc_id"), col("group_id"), col("split"))
       },
-      Some(LlmOracles.groupSplit)),
+      Some(LlmOracles.groupSplit), benched = false),
 
     Q("q_llm_group_split_x64",
       (s, dir) => {
@@ -3050,6 +3073,7 @@ object LlmQueries {
     // class (src0, the training target) must score strictly higher on
     // average than the rest, with every probability a valid sigmoid
     // output. Exact doc count anchors the row.
+    // Not benched: re-runs the benched q_llm_quality_classifier only to pin its properties.
     Q("q_llm_quality_check",
       (s, dir) => {
         val d = t(s, dir, "documents")
@@ -3068,7 +3092,7 @@ object LlmQueries {
         d.agg(count(lit(1)).as("n_docs")).crossJoin(verdict)
       },
       Some("""SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-        TRUE AS target_scores_higher, TRUE AS probs_bounded""")),
+        TRUE AS target_scores_higher, TRUE AS probs_bounded"""), benched = false),
 
     // Heaps'-law exponent (vocabulary growth V = K·N^beta): per-doc
     // (ln tokens, ln types) points in integral micros fed through the
@@ -3111,6 +3135,7 @@ object LlmQueries {
         t(s, dir, "documents").filter(col("text").isNotNull), "text", "source"),
       Some(LlmOracles.zipf)),
 
+    // Not benched: md5 oracle twin of the benched q_llm_dsir.
     Q("q_llm_dsir_md5",
       (s, dir) => {
         val d = t(s, dir, "documents")
@@ -3119,7 +3144,7 @@ object LlmQueries {
           d.filter(col("source") === "src0"), "doc_id", "text",
           portableHashing = true)
       },
-      Some(LlmOracles.dsir)),
+      Some(LlmOracles.dsir), benched = false),
 
     // Per-doc TF-IDF keyword extraction: top-3 distinctive terms, the
     // same integer-micro tf·ln(1+N/df) weight as the near-dup operator,
@@ -3149,7 +3174,7 @@ object LlmQueries {
     Q("q_llm_oph_pairs",
       (s, dir) => Dedup.ophPairs(t(s, dir, "documents"), "doc_id", "text",
         portableHashing = true),
-      Some(LlmOracles.ophPairs)),
+      Some(LlmOracles.ophPairs), benched = false),
 
     // Production OPH geometry: 24 bins, 4 bands of 6 (bucket key as
     // selective as the classic 16-hash banding), est >= 0.7 — same
@@ -3181,7 +3206,7 @@ object LlmQueries {
             ('0x' || substr(md5(j || '|' || tok), 1, 15))::BIGINT % 256 AS bucket
           FROM k CROSS JOIN js)
         SELECT key, min(cnt) AS est
-        FROM kb JOIN b USING (rw, bucket) GROUP BY key""")),
+        FROM kb JOIN b USING (rw, bucket) GROUP BY key"""), benched = false),
 
     Q("q_llm_cms_x64",
       (s, dir) => graft.ops.Sketches.countMinEstimates(
@@ -3217,6 +3242,7 @@ object LlmQueries {
     // cluster"): each md5-minhash component is one mega-document,
     // top-3 distinctive terms per cluster by the keywords micro
     // weight at cluster granularity; singletons are their own cluster.
+    // Not benched: md5 oracle twin of the benched q_llm_cluster_terms_x64.
     Q("q_llm_cluster_terms",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -3225,7 +3251,7 @@ object LlmQueries {
         graft.ops.Clusters.clusterTerms(docs, "doc_id", "text",
           pairs, "id_a", "id_b", k = 3)
       },
-      Some(LlmOracles.clusterTermsMd5)),
+      Some(LlmOracles.clusterTermsMd5), benched = false),
 
     // Sketch-then-verify: OPH candidates re-scored with the EXACT
     // shingle Jaccard (integral micros) — banding noise never reaches
@@ -3233,7 +3259,7 @@ object LlmQueries {
     Q("q_llm_oph_verified",
       (s, dir) => Dedup.ophVerifiedPairs(t(s, dir, "documents"), "doc_id", "text",
         portableHashing = true),
-      Some(LlmOracles.ophVerified)),
+      Some(LlmOracles.ophVerified), benched = false),
 
     Q("q_llm_oph_verified_x64",
       (s, dir) => Dedup.ophVerifiedPairs(t(s, dir, "documents"), "doc_id", "text",
@@ -3242,6 +3268,7 @@ object LlmQueries {
 
     // Quality-aware dedup: keep the LONGEST member of each md5-minhash
     // near-dup cluster (curation default) instead of the min-id.
+    // Not benched: md5-portable oracle fixture, like every md5 twin.
     Q("q_llm_dedup_best",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -3251,7 +3278,7 @@ object LlmQueries {
           docs.select(col("doc_id"), col("lang"), col("n_chars")),
           "doc_id", "n_chars", pairs, "id_a", "id_b")
       },
-      Some(LlmOracles.dedupBestMd5)),
+      Some(LlmOracles.dedupBestMd5), benched = false),
 
     // Production twin: same c-TF-IDF labeling over the xxhash64
     // MinHash pair generator (benched; the md5 twin above is the
@@ -3283,6 +3310,7 @@ object LlmQueries {
     // ordering), and the two projections are (near-)uncorrelated —
     // the definitional properties of principal components, computed
     // over the REAL embeddings and pinned by the oracle.
+    // Not benched: re-runs the benched q_llm_pca only to pin its properties.
     Q("q_llm_pca_check",
       (s, dir) => graft.ops.Similarity.pcaProject(
           t(s, dir, "embeddings"), "vec_id", "embedding", k = 2)
@@ -3290,7 +3318,7 @@ object LlmQueries {
           (var_pop(col("pc1")) >= var_pop(col("pc2"))).as("pc1_dominates"),
           (abs(corr(col("pc1"), col("pc2"))) < 0.05).as("pcs_uncorrelated")),
       Some("""SELECT (SELECT COUNT(*) FROM embeddings WHERE embedding IS NOT NULL)
-          AS n_vecs, TRUE AS pc1_dominates, TRUE AS pcs_uncorrelated""")),
+          AS n_vecs, TRUE AS pc1_dominates, TRUE AS pcs_uncorrelated"""), benched = false),
 
     // Deflate compression-ratio quality signal (rows-only: zlib is
     // engine-local; ordering/bounds spec-pinned, and the _check row
@@ -3310,6 +3338,7 @@ object LlmQueries {
     // never hurts the mean per-byte ratio (self-similar input
     // compresses better — the property that makes the signal a
     // boilerplate detector).
+    // Not benched: re-runs the benched q_llm_compress_ratio only to pin its properties.
     Q("q_llm_compress_check",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -3328,7 +3357,7 @@ object LlmQueries {
             (avg(col("r2")) < avg(col("r1"))).as("doubling_compresses"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM documents WHERE text IS NOT NULL)
-          AS n_docs, TRUE AS ratios_bounded, TRUE AS doubling_compresses""")),
+          AS n_docs, TRUE AS ratios_bounded, TRUE AS doubling_compresses"""), benched = false),
 
     // Exact-count stratified sample: largest-remainder apportionment
     // across sources at p=0.25, md5-hash-rank row selection — exactly

@@ -17,11 +17,11 @@ import graft.config.PlaybookLoader
  * (/root/reference/internal/config/types.go:39-64); these queries
  * prove the north-star analytics surface is too.
  *
- * Four of the six are result-twins of already-benched plans
- * (corpus_clean md5, url_dedup, datasheet, split) and are excluded
- * from the bench like every other twin — the playbook adds a YAML
- * parse, not a new plan. join_agg and window are NEW plans (the
- * generic relational stages) and are benched.
+ * A face that is a result-twin of a registered plan, and every
+ * `_check` that runs the config path beside its API twin, passes
+ * `benched = false`: the playbook adds a YAML parse, not a new plan.
+ * Faces that are NEW plans (join_agg, window, zorder, ppl, …) are
+ * benched.
  */
 object PlaybookQueries {
 
@@ -140,6 +140,7 @@ object PlaybookQueries {
 
     // The corpus-cleaning chain driven entirely from config — same
     // params as q_llm_corpus_clean_md5, same oracle.
+    // Not benched: result-twin of q_llm_corpus_clean_md5; the YAML adds a parse, not a plan.
     Q("q_playbook_corpus_clean",
       (s, dir) => run(s, s"""
         |source:
@@ -156,9 +157,10 @@ object PlaybookQueries {
         |    threshold: 0.5
         |    portableHashing: true
         |""".stripMargin),
-      Some(LlmOracles.corpusCleanMd5)),
+      Some(LlmOracles.corpusCleanMd5), benched = false),
 
     // Per-(source, lang) data card from config — q_llm_datasheet's oracle.
+    // Not benched: result-twin of q_llm_datasheet; the YAML adds a parse, not a plan.
     Q("q_playbook_datasheet",
       (s, dir) => run(s, s"""
         |source:
@@ -173,10 +175,11 @@ object PlaybookQueries {
         |    langCol: lang
         |    textCol: text
         |""".stripMargin),
-      Some(LlmOracles.datasheet)),
+      Some(LlmOracles.datasheet), benched = false),
 
     // derive (SQL expression) -> canonical-URL dedup verdicts, all from
     // config — q_llm_url_dedup's oracle.
+    // Not benched: result-twin of q_llm_url_dedup; the YAML adds a parse, not a plan.
     Q("q_playbook_url_dedup",
       (s, dir) => run(s, s"""
         |source:
@@ -194,7 +197,7 @@ object PlaybookQueries {
         |    urlCol: url
         |    mode: verdicts
         |""".stripMargin),
-      Some(LlmOracles.urlDedup)),
+      Some(LlmOracles.urlDedup), benched = false),
 
     // The generic relational stages: where -> derive -> broadcast join
     // -> grouped aggregate, a classic dim-join rollup from config.
@@ -231,6 +234,7 @@ object PlaybookQueries {
 
     // Deterministic train/val/test split + rollup from config — the
     // same md5 hash-bucket contract as q_llm_split, same oracle shape.
+    // Not benched: result-twin of q_llm_split; the YAML adds a parse, not a plan.
     Q("q_playbook_split",
       (s, dir) => run(s, s"""
         |source:
@@ -255,7 +259,7 @@ object PlaybookQueries {
         SELECT CASE WHEN bucket < 90 THEN 'train'
                     WHEN bucket < 95 THEN 'val'
                     ELSE 'test' END AS split, lang, COUNT(*) AS n
-        FROM b GROUP BY 1, 2""")),
+        FROM b GROUP BY 1, 2"""), benched = false),
 
     // Window functions from config: top line per order by quantity —
     // the "windows exposed in the playbook schema" promise, verified.
@@ -302,7 +306,7 @@ object PlaybookQueries {
         |    valueCol: value
         |    stepSeconds: 86400
         |""".stripMargin),
-      Some(AnalyticsQueries.resampleDailyOracle)),
+      Some(AnalyticsQueries.resampleDailyOracle), benched = false),
 
     // Data contracts from config: the same 7-rule report as
     // q_expectations, declared in YAML (incl. a cross-source
@@ -341,7 +345,7 @@ object PlaybookQueries {
         |        refFile: $dir/orders.parquet
         |        refCol: o_orderkey
         |""".stripMargin),
-      Some(AnalyticsQueries.expectationsOracle)),
+      Some(AnalyticsQueries.expectationsOracle), benched = false),
 
     // Gopher quality rules from config — q_llm_gopher_rules' oracle,
     // default thresholds. Result-twin — bench-excluded.
@@ -358,11 +362,12 @@ object PlaybookQueries {
         |    idCol: doc_id
         |    textCol: text
         |""".stripMargin),
-      oracleOf("q_llm_gopher_rules")),
+      oracleOf("q_llm_gopher_rules"), benched = false),
 
     // PII redaction from config: the deterministic PII injection is a
     // `derive` SQL stage (same string the Scala twin builds), then
     // pii_redact into `clean` — q_llm_redact_pii's oracle.
+    // Not benched: result-twin of q_llm_redact_pii; the YAML adds a parse, not a plan.
     Q("q_playbook_pii",
       (s, dir) => run(s, s"""
         |source:
@@ -381,11 +386,12 @@ object PlaybookQueries {
         |  - op: select
         |    cols: [doc_id, clean]
         |""".stripMargin),
-      oracleOf("q_llm_redact_pii")),
+      oracleOf("q_llm_redact_pii"), benched = false),
 
     // Benchmark decontamination from config: the corpus/benchmark
     // split is a `where` stage + `refWhere` on the SAME file —
     // q_llm_decontaminate's oracle (flags, 3-grams, minOverlap 2).
+    // Not benched: result-twin of q_llm_decontaminate; the YAML adds a parse, not a plan.
     Q("q_playbook_decontam",
       (s, dir) => run(s, s"""
         |source:
@@ -406,10 +412,11 @@ object PlaybookQueries {
         |    n: 3
         |    minOverlap: 2
         |""".stripMargin),
-      oracleOf("q_llm_decontaminate")),
+      oracleOf("q_llm_decontaminate"), benched = false),
 
     // DSIR importance weights from config (md5-portable face) —
     // q_llm_dsir_md5's oracle: src0 is the target distribution.
+    // Not benched: result-twin of q_llm_dsir_md5; the YAML adds a parse, not a plan.
     Q("q_playbook_dsir",
       (s, dir) => run(s, s"""
         |source:
@@ -429,10 +436,11 @@ object PlaybookQueries {
         |    refWhere: "source = 'src0'"
         |    portableHashing: true
         |""".stripMargin),
-      oracleOf("q_llm_dsir_md5")),
+      oracleOf("q_llm_dsir_md5"), benched = false),
 
     // Sequence packing from config — q_llm_pack_windows' oracle
     // (2048-token windows, 16 shards).
+    // Not benched: result-twin of q_llm_pack_windows; the YAML adds a parse, not a plan.
     Q("q_playbook_pack",
       (s, dir) => run(s, s"""
         |source:
@@ -448,10 +456,11 @@ object PlaybookQueries {
         |    capacity: 2048
         |    shards: 16
         |""".stripMargin),
-      oracleOf("q_llm_pack_windows")),
+      oracleOf("q_llm_pack_windows"), benched = false),
 
     // Long-document chunking from config — q_llm_chunk's oracle
     // (20-token chunks, 4-token overlap).
+    // Not benched: result-twin of q_llm_chunk; the YAML adds a parse, not a plan.
     Q("q_playbook_chunk",
       (s, dir) => run(s, s"""
         |source:
@@ -467,10 +476,11 @@ object PlaybookQueries {
         |    chunkTokens: 20
         |    overlap: 4
         |""".stripMargin),
-      oracleOf("q_llm_chunk")),
+      oracleOf("q_llm_chunk"), benched = false),
 
     // Length-bucketed batches from config — q_llm_length_batches'
     // oracle (batchSize 8, 16 shards).
+    // Not benched: result-twin of q_llm_length_batches; the YAML adds a parse, not a plan.
     Q("q_playbook_length_batches",
       (s, dir) => run(s, s"""
         |source:
@@ -486,13 +496,14 @@ object PlaybookQueries {
         |    batchSize: 8
         |    shards: 16
         |""".stripMargin),
-      oracleOf("q_llm_length_batches")),
+      oracleOf("q_llm_length_batches"), benched = false),
 
     // IVF ANN from config over the embeddings table — result-twin of
     // q_llm_ann_ivf (rows-only: the k-means cells are engine-local;
     // the operating point's recall is RecallCheck-pinned on the twin,
     // and q_playbook_ann_check pins config-path ≡ API-path exactly).
-    Q("q_playbook_ann", (s, dir) => run(s, annYaml(dir)), None),
+    // Not benched: result-twin of q_llm_ann_ivf; the YAML adds a parse, not a plan.
+    Q("q_playbook_ann", (s, dir) => run(s, annYaml(dir)), None, benched = false),
 
     // Engine-internal equivalence oracle for the config path: the
     // playbook-compiled ann_topk stage must produce EXACTLY the rows of
@@ -501,6 +512,7 @@ object PlaybookQueries {
     // (qid, rank), zero tolerance on neighbor ids, 1e-9 on the score.
     // The oracle pins the verdict: every embedding row appears as a
     // query and not one (qid, rank) slot disagrees.
+    // Not benched: runs the op twice (config path, API twin) only to compare.
     Q("q_playbook_ann_check",
       (s, dir) => {
         val pb = run(s, annYaml(dir))
@@ -518,18 +530,20 @@ object PlaybookQueries {
               .otherwise(0L)).as("n_mismatch"))
       },
       Some("""SELECT (SELECT COUNT(*) FROM embeddings) AS n_queries,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // BPE fertility from config — result-twin of q_llm_bpe_fertility
     // (rows-only: iterative merge application; the trainer and encoder
     // are spec-pinned on closed forms in TokenizerSpec/BpeEncodeSpec,
     // and q_playbook_bpe_check pins config-path ≡ API-path exactly).
-    Q("q_playbook_bpe", (s, dir) => run(s, bpeYaml(dir)), None),
+    // Not benched: result-twin of q_llm_bpe_fertility; the YAML adds a parse, not a plan.
+    Q("q_playbook_bpe", (s, dir) => run(s, bpeYaml(dir)), None, benched = false),
 
     // Engine-internal equivalence oracle for the config path: the
     // playbook-compiled bpe_fertility stage (train + encode + report)
     // must match its direct-API twin row for row — all five per-source
     // counters are integer-exact, so the compare is zero-tolerance.
+    // Not benched: runs the op twice (config path, API twin) only to compare.
     Q("q_playbook_bpe_check",
       (s, dir) => {
         val metrics = Seq("n_words", "n_tokens", "n_chars",
@@ -549,17 +563,19 @@ object PlaybookQueries {
       },
       Some("""SELECT (SELECT COUNT(DISTINCT source) FROM documents
           WHERE text IS NOT NULL) AS n_sources,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Unigram-LM fertility from config (r12 family twin of
     // q_llm_unigram_fertility — EM training is iterative, so rows-only;
     // the _check below pins config-path ≡ API-path exactly).
-    Q("q_playbook_unigram", (s, dir) => run(s, unigramYaml(dir)), None),
+    // Not benched: result-twin of q_llm_unigram_fertility; the YAML adds a parse, not a plan.
+    Q("q_playbook_unigram", (s, dir) => run(s, unigramYaml(dir)), None, benched = false),
 
     // Engine-internal equivalence oracle for the config path: the
     // playbook-compiled unigram_fertility stage (EM train + Viterbi +
     // report) must match its direct-API twin row for row — all five
     // per-source counters are integer-exact, zero-tolerance compare.
+    // Not benched: runs the op twice (config path, API twin) only to compare.
     Q("q_playbook_unigram_check",
       (s, dir) => {
         val metrics = Seq("n_words", "n_tokens", "n_chars",
@@ -579,18 +595,20 @@ object PlaybookQueries {
       },
       Some("""SELECT (SELECT COUNT(DISTINCT source) FROM documents
           WHERE text IS NOT NULL) AS n_sources,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // WordPiece fertility from config (family twin of
     // q_llm_wordpiece_fertility — score-driven merge training is
     // iterative, so rows-only; the _check below pins config-path ≡
     // API-path exactly).
-    Q("q_playbook_wordpiece", (s, dir) => run(s, wordpieceYaml(dir)), None),
+    // Not benched: result-twin of q_llm_wordpiece_fertility; the YAML adds a parse, not a plan.
+    Q("q_playbook_wordpiece", (s, dir) => run(s, wordpieceYaml(dir)), None, benched = false),
 
     // Engine-internal equivalence oracle for the config path: the
     // playbook-compiled wordpiece_fertility stage (train + greedy
     // encode + report) must match its direct-API twin row for row —
     // all six per-source counters are integer-exact, zero-tolerance.
+    // Not benched: runs the op twice (config path, API twin) only to compare.
     Q("q_playbook_wordpiece_check",
       (s, dir) => {
         val metrics = Seq("n_words", "n_tokens", "n_chars", "unk_words",
@@ -610,12 +628,13 @@ object PlaybookQueries {
       },
       Some("""SELECT (SELECT COUNT(DISTINCT source) FROM documents
           WHERE text IS NOT NULL) AS n_sources,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // The C4 cleaner from config (replace-textCol form of the oracled
     // q_llm_c4_rules; same salted page via a `derive` so the rules
     // demonstrably fire) — fully oracled: the oracle joins the cleaned
     // text back under the original column, exactly what the stage does.
+    // Not benched: result-twin of q_llm_c4_rules; the YAML adds a parse and a join.
     Q("q_playbook_c4",
       (s, dir) => run(s, s"""
         |source:
@@ -659,7 +678,7 @@ object PlaybookQueries {
           FROM c)
         SELECT d.doc_id, s.clean_text AS text, d.lang, d.source
         FROM d JOIN s USING (doc_id)
-        WHERE s.kept_lines > 0 AND s.n_sentences >= 3""")),
+        WHERE s.kept_lines > 0 AND s.n_sentences >= 3"""), benched = false),
 
     // CCNet perplexity bands from config (annotate form of the oracled
     // q_llm_ppl_partition; rows-only result, the _check below pins
@@ -672,6 +691,7 @@ object PlaybookQueries {
     // tokens are NULL-banded in the annotate form and absent from the
     // twin, so the compare runs over the twin's domain; both counters
     // integer/string-exact, zero tolerance.
+    // Not benched: runs the op twice (config path, API twin) only to compare.
     Q("q_playbook_ppl_check",
       (s, dir) => {
         val pb = run(s, pplYaml(dir))
@@ -688,11 +708,12 @@ object PlaybookQueries {
       },
       Some("""SELECT (SELECT COUNT(*) FROM documents WHERE text IS NOT NULL
           AND len(string_split_regex(lower(trim(text)), '\s+')) >= 2) AS n_docs,
-        CAST(0 AS BIGINT) AS n_mismatch""")),
+        CAST(0 AS BIGINT) AS n_mismatch"""), benched = false),
 
     // Gap-based sessionization + the exact per-session aggregate from
     // config (sessionize stage + aggregate stage restating
     // sessionStats' arithmetic) — q_sessionize's oracle. Result-twin.
+    // Not benched: result-twin of q_sessionize; the YAML adds a parse, not a plan.
     Q("q_playbook_sessionize",
       (s, dir) => run(s, s"""
         |source:
@@ -714,9 +735,10 @@ object PlaybookQueries {
         |      span_secs: "unix_timestamp(max(ts)) - unix_timestamp(min(ts))"
         |      total_value: "cast(sum(cast(value as decimal(18,4))) as double)"
         |""".stripMargin),
-      oracleOf("q_sessionize")),
+      oracleOf("q_sessionize"), benched = false),
 
     // Gap report from config — q_gap_report's oracle. Result-twin.
+    // Not benched: result-twin of q_gap_report; the YAML adds a parse, not a plan.
     Q("q_playbook_gap_report",
       (s, dir) => run(s, s"""
         |source:
@@ -731,10 +753,11 @@ object PlaybookQueries {
         |    tsCol: ts
         |    stepSeconds: 86400
         |""".stripMargin),
-      oracleOf("q_gap_report")),
+      oracleOf("q_gap_report"), benched = false),
 
     // KMV audience overlap from config (portable face) —
     // q_kmv_overlap's oracle. Result-twin.
+    // Not benched: result-twin of q_kmv_overlap; the YAML adds a parse, not a plan.
     Q("q_playbook_audience",
       (s, dir) => run(s, s"""
         |source:
@@ -750,7 +773,7 @@ object PlaybookQueries {
         |    k: 256
         |    portableHashing: true
         |""".stripMargin),
-      oracleOf("q_kmv_overlap")),
+      oracleOf("q_kmv_overlap"), benched = false),
 
     // The FULL incremental corpus-version lifecycle from config: three
     // playbook invocations ingest the doc_id % 3 batches in sequence
@@ -790,7 +813,7 @@ object PlaybookQueries {
         v0.unionByName(v1).unionByName(v2)
           .withColumnRenamed("version", "batch")
       },
-      oracleOf("q_llm_incr_neardup_chain")),
+      oracleOf("q_llm_incr_neardup_chain"), benched = false),
 
     // Z-order clustering from config: zorder_cluster adds `zval` and
     // range-clusters; the select projects the key columns so the

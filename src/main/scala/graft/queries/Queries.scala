@@ -7,10 +7,17 @@ import graft.expr.Goval
 import graft.transforms.Transforms
 import graft.ops.Dedup
 
-/** One graded query: Spark plan + (optionally) its DuckDB oracle SQL. */
+/** One graded query: Spark plan + (optionally) its DuckDB oracle SQL.
+  * `benched = false` marks a correctness fixture that [[graft.Bench]]
+  * leaves out: an md5-portable oracle twin, a playbook result-twin, or
+  * a check that runs an already-benched op twice (or re-runs it) only
+  * to compare. Its production path is benched under another name;
+  * benching both double-counts the operator and buries the headline in
+  * hash-function overhead. Each fixture says why beside its definition. */
 case class Q(name: String,
              fn: (SparkSession, String) => DataFrame,
-             oracle: Option[String])
+             oracle: Option[String],
+             benched: Boolean = true)
 
 /**
  * The driver-graded query inventory (SparkEntry.queries /

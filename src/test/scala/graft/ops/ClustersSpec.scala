@@ -48,8 +48,11 @@ class ClustersSpec extends SparkTestBase {
   test("engine choice runs no full edge-volume job: the take probe stops after one partition") {
     import spark.implicits._
     // star graph (hub 0): diameter 2, so the forced distributed path
-    // converges in a couple of rounds; 4000 edges >> driverEdgeLimit=8
-    val edges = spark.range(1, 4001, 1, 2).select(lit(0L).as("a"), $"id".as("b"))
+    // converges in a couple of rounds; 4000 edges >> driverEdgeLimit=8.
+    // 16 range partitions, so the checkpointed edges have 16 partitions
+    // and a full pass over them is 16 tasks against the probe's one.
+    val parts = 16
+    val edges = spark.range(1, 4001, 1, parts).select(lit(0L).as("a"), $"id".as("b"))
     // AQE both splits the materialization into several jobs (unstable
     // job indexes) and can coalesce the 16 partitions away — pin the
     // classic planner so "one partition of sixteen" is observable
@@ -62,17 +65,15 @@ class ClustersSpec extends SparkTestBase {
     }
     val tasks = rec.jobs.map(_.tasks)
     // Job 0 is the take(lim + 1) engine-choice probe over the lazily
-    // checkpointed edges: both directions of two range partitions, four
-    // partitions in all. The first one already holds more than
-    // lim + 1 = 9 rows, so the probe runs one task and stops. The jobs
-    // after it are the star contraction's and the final count's.
-    // `tasks(0) < 16` fails when the first job sweeps the 16 shuffle
-    // partitions, i.e. when engine work runs before the probe; it does
-    // not tell the one-task probe from a full pass over the checkpoint.
+    // checkpointed edges. Their first partition already holds more
+    // than lim + 1 = 9 rows, so the probe runs one task and stops. The
+    // jobs after it are the star contraction's and the final count's.
+    // A full pass over the checkpoint, or engine work placed before
+    // the probe, runs at least `parts` tasks in job 0.
     assert(tasks.length >= 2, s"expected probe + engine jobs, saw $tasks")
-    assert(tasks(0) < 16,
-      s"engine-choice probe ran ${tasks(0)} tasks — a full 16-partition " +
-        s"reduce sweep means the probe no longer stops early; jobs: $tasks")
+    assert(tasks(0) < parts,
+      s"engine-choice probe ran ${tasks(0)} tasks of $parts partitions — " +
+        s"the probe no longer stops early; jobs: $tasks")
   }
 
   test("star contraction: non-convergence throws") {
