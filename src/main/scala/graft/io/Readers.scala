@@ -1,6 +1,9 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.{RowsBridge, WholeFileStreams}
 import org.apache.spark.sql.types._
 import graft.config.SourceConfig
 import scala.jdk.CollectionConverters._
@@ -122,9 +125,12 @@ object Readers {
    * WITH a per-row warning (csv.go:117-129), duplicate header -> last
    * column wins, empty header -> column dropped.
    *
-   * Parsed per file (wholeTextFiles): quoted-newline CSV is inherently
-   * non-splittable — no line boundary identifies a record boundary —
-   * and the reference itself is a single-file reader. Directory reads
+   * Each file is read whole by one task, which streams its bytes
+   * through [[CsvRecords]] straight into Catalyst rows: only the current
+   * record is held, so a task's memory is O(longest record), not
+   * O(file). No file is split: quoted-newline CSV is inherently
+   * non-splittable (no line boundary identifies a record boundary), and
+   * the reference itself is a single-file reader. Directory reads
    * parallelize across files (each file carries its own header row);
    * the columnar path (parquet) is the 100 TB ingest format. When the
    * playbook DECLARES no quoted newlines (`splittable: true`),
@@ -145,29 +151,43 @@ object Readers {
       .filter(_._1.nonEmpty)
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
       .toSeq.sortBy(_._2)
-    // the splitter never yields null: declaring it lets the optimizer
+    val keepIdx = keep.map(_._2).toArray
+    // the parser never yields null: declaring it lets the optimizer
     // fold `x IS NULL` (the filter-null error branch) to an empty relation
     val schema = StructType(keep.map { case (name, _) => StructField(name, StringType, nullable = false) })
 
     val skipped = spark.sparkContext.longAccumulator("csv_skipped_rows")
     lastCsvSkipped = Some(skipped)
-    val rows = spark.sparkContext
-      .wholeTextFiles(src.file, spark.sparkContext.defaultParallelism)
-      .flatMap { case (path, content) =>
-        // every file's record 0 is its header row
-        splitCsvRecords(content, delim, comment).iterator.zipWithIndex.drop(1)
-          .flatMap { case (fields, idx) =>
-            if (fields.length == n)
-              Some(Row.fromSeq(keep.map { case (_, i) => fields(i) }))
-            else {
-              skipped.add(1)
-              log.warn(s"csv: skipping record ${idx + 1} of $path: " +
-                s"${fields.length} fields, expected $n")
-              None
+    val rows = WholeFileStreams(spark.sparkContext, src.file, spark.sparkContext.defaultParallelism)
+      .flatMap { case (path, stream) =>
+        val in = stream.open()
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        val recs = new CsvRecords(in, delim, comment)
+        recs.next() // every file's record 1 is its header row
+        new Iterator[InternalRow] {
+          private var idx = 1
+          private var row: InternalRow = null
+          def hasNext: Boolean = {
+            while (row == null && recs.next()) {
+              idx += 1
+              if (recs.size == n) row = new GenericInternalRow(recs.fields(keepIdx))
+              else {
+                skipped.add(1)
+                log.warn(s"csv: skipping record $idx of $path: ${recs.size} fields, expected $n")
+              }
             }
+            if (row == null) in.close()
+            row != null
           }
+          def next(): InternalRow = {
+            if (!hasNext) throw new NoSuchElementException("csv: no more records")
+            val r = row
+            row = null
+            r
+          }
+        }
       }
-    spark.createDataFrame(rows, schema)
+    RowsBridge.dataFrame(spark, rows, schema)
   }
 
   /**
@@ -175,7 +195,7 @@ object Readers {
    * declares the file has no quoted newlines: Spark's native CSV
    * source assigns LINE RANGES to tasks, so one 100 GB file scans in
    * parallel instead of parsing on a single task ([[readCsvExact]]'s
-   * `wholeTextFiles` cost — required there because a quoted newline
+   * one task per file — required there because a quoted newline
    * means no line boundary is a record boundary). Every reference
    * semantic is preserved and spec-pinned equal to the exact path on
    * quoted-newline-free data:
@@ -252,73 +272,15 @@ object Readers {
     }: _*)
   }
 
-  /**
-   * Quote-aware record split (RFC4180 / Go encoding/csv shape): `""`
-   * escapes a quote inside a quoted field; a quoted field may span
-   * lines; records end at newline (or CRLF) OUTSIDE quotes; blank lines
-   * and lines starting with the comment char are skipped.
-   */
-  private[io] def splitCsvRecords(text: String, delim: Char,
-                                  comment: Option[Char]): Vector[Vector[String]] = {
-    val out = Vector.newBuilder[Vector[String]]
-    var fields = Vector.newBuilder[String]
-    val sb = new StringBuilder
-    var inQ = false
-    var inComment = false
-    var sawAny = false // consumed any char of the current record
-    var nFields = 0
-    var i = 0
-    val len = text.length
-    def endRecord(): Unit = {
-      fields += sb.toString; sb.clear()
-      out += fields.result(); fields = Vector.newBuilder
-      nFields = 0; sawAny = false
-    }
-    while (i < len) {
-      val c = text.charAt(i)
-      if (inComment) {
-        if (c == '\n') inComment = false
-        i += 1
-      } else if (inQ) {
-        if (c == '"' && i + 1 < len && text.charAt(i + 1) == '"') { sb.append('"'); i += 2 }
-        else if (c == '"') { inQ = false; i += 1 }
-        else { sb.append(c); i += 1 }
-      } else if (!sawAny && comment.contains(c)) {
-        inComment = true; i += 1
-      } else if (c == '"') {
-        inQ = true; sawAny = true; i += 1
-      } else if (c == delim) {
-        fields += sb.toString; sb.clear(); nFields += 1; sawAny = true; i += 1
-      } else if (c == '\n' || (c == '\r' && i + 1 < len && text.charAt(i + 1) == '\n')) {
-        val adv = if (c == '\r') 2 else 1
-        if (sawAny || nFields > 0) endRecord() // blank line otherwise — skip
-        i += adv
-      } else {
-        sb.append(c); sawAny = true; i += 1
-      }
-    }
-    if (sawAny || nFields > 0 || sb.nonEmpty) endRecord()
-    out.result()
-  }
-
-  /** Driver-side header sniff: the first RECORD (quote-aware, so a
-    * header containing quoted newlines parses) of the first file. */
+  /** Driver-side header sniff: the first record of the first file, read
+    * by the same [[CsvRecords]] as the data (so a header with quoted
+    * newlines parses, and comment and blank lines before it skip). An
+    * empty file has no header. */
   private def sniffHeader(path: String, delim: Char, comment: Option[Char]): Seq[String] = {
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      new java.io.FileInputStream(firstFile(path)), "UTF-8"))
+    val in = new java.io.FileInputStream(firstFile(path))
     try {
-      val sb = new StringBuilder
-      var line = in.readLine()
-      while (line != null && (line.isEmpty || comment.exists(c => line.startsWith(c.toString))))
-        line = in.readLine()
-      var open = false
-      while (line != null) {
-        sb.append(line)
-        open = (open != (line.count(_ == '"') % 2 == 1)) // quote parity across lines
-        if (!open) line = null
-        else { sb.append('\n'); line = in.readLine() }
-      }
-      splitCsvRecords(sb.toString, delim, None).headOption.getOrElse(Vector.empty)
+      val recs = new CsvRecords(in, delim, comment)
+      if (recs.next()) recs.strings() else Seq.empty
     } finally in.close()
   }
 

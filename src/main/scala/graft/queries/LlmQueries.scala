@@ -1157,7 +1157,7 @@ object LlmQueries {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_ann_idx_pq_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("annpq_persist_")}/idx"
         graft.ops.AnnIndex.writePqIndex(s, e, tbl, idx, "vec_id", "embedding",
           dims = 64, nlist = 16, m = 16, ksub = 32)
         val loaded = graft.ops.AnnIndex.pqTopKIndexed(s, e, tbl, idx,
@@ -1211,7 +1211,7 @@ object LlmQueries {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_ann_idx_lsh_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("annlsh_persist_")}/idx"
         graft.ops.AnnIndex.writeLshIndex(s, e, tbl, idx, "vec_id", "embedding",
           dims = 64, planes = 5, tables = 6)
         val loaded = graft.ops.AnnIndex.lshTopKIndexed(s, e, tbl, idx, k = 3)
@@ -1278,7 +1278,7 @@ object LlmQueries {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_ann_idx_bin_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("annb_persist_")}/idx"
         graft.ops.AnnIndex.writeBinaryIndex(s, e, tbl, idx, "vec_id", "embedding",
           dims = 64)
         val queries = e.filter(col("vec_id") < 20)

@@ -50,6 +50,76 @@ class IoSpec extends SparkTestBase with graft.TempDirs {
     assert(Readers.lastCsvSkipped.exists(_.value == 1L)) // bad_row logged+counted
   }
 
+  test("csv exact: malformed UTF-8 decodes to the same U+FFFD strings as Hadoop Text") {
+    def b(xs: Int*) = xs.map(_.toByte).toArray
+    val bytes = Array.concat("id,n".getBytes("UTF-8"), b(0xE9), "me\n1,".getBytes("UTF-8"),
+      b(0xC3), "\n".getBytes("UTF-8"), b(0xE0, 0xA0), ",".getBytes("UTF-8"), b(0xF0, 0x9F, 0x98),
+      "\n".getBytes("UTF-8"), b(0xFF, 0xFE), ",ok\r\n".getBytes("UTF-8"), b(0xED, 0xA0, 0x80),
+      ",".getBytes("UTF-8"), b(0xC0, 0xAF), "x\n".getBytes("UTF-8"))
+    val p = tmp(".csv")
+    Files.write(java.nio.file.Paths.get(p), bytes)
+    // the whole file as wholeTextFiles decoded it; no quotes, so lines and commas split it
+    val lines = new org.apache.hadoop.io.Text(bytes).toString.split("\r?\n").toSeq
+    val df = Readers.read(spark, SourceConfig("csv", file = p))
+    assert(df.columns.toSeq == lines.head.split(",").toSeq)
+    val rows = df.collect().map(r => Seq(r.getString(0), r.getString(1))).toSeq
+    assert(rows == lines.tail.map(_.split(",", -1).toSeq), rows)
+    assert(rows.flatten.count(_.contains('\uFFFD')) == 6, rows)
+    // the replacement is in the row's bytes, not only in their decoding:
+    // byte-level functions see the UTF-8 of the decoded strings
+    import org.apache.spark.sql.functions.{col, hex}
+    val hexes = df.select(df.columns.map(c => hex(col(c))).toSeq: _*).collect()
+      .map(r => Seq(r.getString(0), r.getString(1))).toSeq
+    assert(hexes == rows.map(_.map(_.getBytes("UTF-8").map(x => f"$x%02X").mkString)), hexes)
+  }
+
+  test("csv exact: a BOM stays in the first header name") {
+    val p = tmp(".csv")
+    Files.write(java.nio.file.Paths.get(p),
+      Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++ "id,name\n1,x\n".getBytes("UTF-8"))
+    val df = Readers.read(spark, SourceConfig("csv", file = p))
+    assert(df.columns.toSeq == Seq("\uFEFFid", "name"))
+    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("1", "x")))
+  }
+
+  test("csv exact: each skip warns with its record number within its own file") {
+    val dir = tempDir("graft-csvwarn")
+    Files.writeString(dir.resolve("a.csv"),
+      "id,name\n# note\n\n1,\"two\nlines\"\nbad\n2,y,extra\n")
+    Files.writeString(dir.resolve("b.csv"), "id,name\r\nonly\r\n3,z")
+    val (rows, warned) = warningsOf("graft.io.Readers$") {
+      Readers.read(spark, SourceConfig("csv", file = dir.toString, commentChar = Some("#")))
+        .collect().map(_.getString(0)).sorted.toSeq
+    }
+    def uri(name: String) = new org.apache.hadoop.fs.Path(dir.resolve(name).toUri).toString
+    assert(rows == Seq("1", "3"))
+    assert(warned.sorted == Seq(
+      s"csv: skipping record 2 of ${uri("b.csv")}: 1 fields, expected 2",
+      s"csv: skipping record 3 of ${uri("a.csv")}: 1 fields, expected 2",
+      s"csv: skipping record 4 of ${uri("a.csv")}: 3 fields, expected 2").sorted, warned)
+    assert(Readers.lastCsvSkipped.exists(_.value == 3L))
+  }
+
+  /** `body`'s result and the WARN messages `logger` logged meanwhile. */
+  private def warningsOf[A](logger: String)(body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-warnings", null, null, true,
+      org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    val level = log.getLevel
+    log.addAppender(app)
+    log.setLevel(Level.WARN)
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally { log.removeAppender(app); log.setLevel(level); app.stop() }
+  }
+
   test("csv splittable fast path: semantics identical to the exact parser") {
     // everything the exact path pins EXCEPT quoted newlines (the
     // declared precondition): dup/empty headers, comment lines,
