@@ -28,9 +28,9 @@ case class Playbook(
  * [[graft.compile.AnalyticsCompiler]] (corpus_clean, near_dup_dedup,
  * url_dedup, datasheet, aggregate, join, derive, where, …); `params`
  * carries the op-specific keys (everything in the YAML map except
- * `op`). Unknown ops and missing/parse-failing params are rejected at
- * load time by the accumulated-error validator, like every other
- * playbook section.
+ * `op`). Unknown ops and missing, undeclared, mis-typed or
+ * parse-failing params are rejected at load time by the
+ * accumulated-error validator, like every other playbook section.
  */
 case class AnalyticsStage(op: String, params: Map[String, Any] = Map.empty)
 

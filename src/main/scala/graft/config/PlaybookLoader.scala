@@ -293,21 +293,13 @@ object Validator {
         errs += "streaming errorHandling.mode must be 'skip' (a stream cannot halt on a future record)"
       if (pb.errorHandling.errorFile.isDefined)
         errs += "streaming errorFile is not supported (error records are dropped; route them with a second playbook filtering _err patterns)"
-      val streamSafe = Set("quality_gate", "lang_filter", "text_metrics",
-        "exact_dedup", "url_normalize", "host_blocklist", "where", "derive",
-        "select", "split", "sample", "join",
-        // row-local r11 ops: PII redaction, token chunking, and the
-        // Gopher gate (filter mode is one predicate; report mode one
-        // projection — no join, no cross-row state)
-        "pii_redact", "chunk_docs", "gopher_rules",
-        // stateless per-partition decodes — no cross-row state, so the
-        // micro-batch and batch semantics coincide
-        "image_features", "audio_features")
+      val ops = graft.compile.AnalyticsCompiler.ops
+      val streamable = ops.values.filter(_.streamable).map(_.name).toSeq.sorted
       val streamJoins = Set("inner", "left", "left_outer", "leftouter",
         "left_semi", "leftsemi", "left_anti", "leftanti")
       pb.analytics.zipWithIndex.foreach { case (st, i) =>
-        if (!streamSafe(st.op))
-          errs += s"analytics[$i]: op '${st.op}' is not streaming-executable (needs a full-corpus pass); streaming-safe ops: ${streamSafe.toSeq.sorted.mkString(", ")}"
+        if (!ops.get(st.op).exists(_.streamable))
+          errs += s"analytics[$i]: op '${st.op}' is not streaming-executable (needs a full-corpus pass); streaming-safe ops: ${streamable.mkString(", ")}"
         // a derive carrying a window function and a right/full
         // stream-static join both pass the generic checks but fail at
         // runtime with AnalysisException — reject them here with the

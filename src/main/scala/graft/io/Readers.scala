@@ -32,25 +32,6 @@ object Readers {
     def declared: Option[org.apache.spark.sql.types.StructType] =
       Option(src.schema).filter(_.nonEmpty)
         .map(org.apache.spark.sql.types.StructType.fromDDL)
-    // listing goes through Hadoop's FileSystem (as Layout's maintenance
-    // does), so hdfs:// / s3a:// drop folders resolve exactly like the
-    // batch path — java.io.File returned null for any non-local URI and
-    // the stream aborted with a misleading "has no files yet"
-    def firstFile(suffix: String): String = {
-      val hPath = new org.apache.hadoop.fs.Path(src.file)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(hPath) && fs.getFileStatus(hPath).isFile) return src.file
-      val all = (if (fs.exists(hPath)) fs.listStatus(hPath).toSeq else Seq.empty)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith(".")
-          && !s.getPath.getName.startsWith("_"))
-        .map(_.getPath.toString).sorted
-      val preferred = all.filter(_.endsWith(suffix))
-      (if (preferred.nonEmpty) preferred.headOption else all.headOption).getOrElse(
-        throw new IllegalArgumentException(
-          s"streaming source '${src.file}' has no files yet and no declared " +
-            "source.schema — declare one (DDL, e.g. \"doc_id LONG, text STRING\") " +
-            "to start a stream against an empty drop folder"))
-    }
     src.`type` match {
       case "parquet" =>
         val schema = declared.getOrElse(spark.read.parquet(src.file).schema)
@@ -61,7 +42,11 @@ object Readers {
         spark.readStream.schema(schema).orc(src.file)
       case "jsonl" =>
         val schema = declared.getOrElse(
-          spark.read.json(firstFile(".jsonl")).schema)
+          spark.read.json(firstFile(spark, src.file, ".jsonl").getOrElse(
+            throw new IllegalArgumentException(
+              s"streaming source '${src.file}' has no files yet and no declared " +
+                "source.schema — declare one (DDL, e.g. \"doc_id LONG, text STRING\") " +
+                "to start a stream against an empty drop folder"))).schema)
         spark.readStream.schema(schema).json(src.file)
       case other =>
         throw new IllegalArgumentException(
@@ -141,16 +126,7 @@ object Readers {
     else readCsvExact(spark, src)
 
   private def readCsvExact(spark: SparkSession, src: SourceConfig): DataFrame = {
-    val delim = src.delimiter.getOrElse(",").charAt(0)
-    val comment = src.commentChar.filter(_.nonEmpty).map(_.charAt(0))
-    val header = sniffHeader(src.file, delim, comment)
-    val n = header.size
-
-    // headers trimmed; dup -> last wins, empty -> dropped (csv.go:96-113)
-    val keep: Seq[(String, Int)] = header.map(_.trim).zipWithIndex
-      .filter(_._1.nonEmpty)
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
-      .toSeq.sortBy(_._2)
+    val CsvHeader(delim, comment, n, keep) = csvHeader(spark, src)
     val keepIdx = keep.map(_._2).toArray
     // the parser never yields null: declaring it lets the optimizer
     // fold `x IS NULL` (the filter-null error branch) to an empty relation
@@ -220,14 +196,7 @@ object Readers {
    * exact path.
    */
   private def readCsvSplittable(spark: SparkSession, src: SourceConfig): DataFrame = {
-    val delim = src.delimiter.getOrElse(",").charAt(0)
-    val comment = src.commentChar.filter(_.nonEmpty).map(_.charAt(0))
-    val header = sniffHeader(src.file, delim, comment)
-    val n = header.size
-    val keep: Seq[(String, Int)] = header.map(_.trim).zipWithIndex
-      .filter(_._1.nonEmpty)
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
-      .toSeq.sortBy(_._2)
+    val CsvHeader(delim, comment, n, keep) = csvHeader(spark, src)
     val corrupt = "_graft_corrupt"
     val full = StructType(
       (0 until n).map(i => StructField(s"_c$i", StringType, nullable = true)) :+
@@ -272,22 +241,45 @@ object Readers {
     }: _*)
   }
 
-  /** Driver-side header sniff: the first record of the first file, read
-    * by the same [[CsvRecords]] as the data (so a header with quoted
-    * newlines parses, and comment and blank lines before it skip). An
-    * empty file has no header. */
-  private def sniffHeader(path: String, delim: Char, comment: Option[Char]): Seq[String] = {
-    val in = new java.io.FileInputStream(firstFile(path))
-    try {
+  /** A CSV source's delimiter, comment char, header width and kept
+    * (name, column index) pairs: headers trimmed, duplicate -> last
+    * wins, empty -> dropped (csv.go:96-113). */
+  private case class CsvHeader(delim: Char, comment: Option[Char], width: Int, keep: Seq[(String, Int)])
+
+  /** Driver-side header sniff: the first record of the source's first
+    * file, read by the same [[CsvRecords]] as the data (so a header
+    * with quoted newlines parses, and comment and blank lines before it
+    * skip). An empty file has no header. */
+  private def csvHeader(spark: SparkSession, src: SourceConfig): CsvHeader = {
+    val delim = src.delimiter.getOrElse(",").charAt(0)
+    val comment = src.commentChar.filter(_.nonEmpty).map(_.charAt(0))
+    val first = new org.apache.hadoop.fs.Path(firstFile(spark, src.file).getOrElse(
+      throw new IllegalArgumentException(s"csv source '${src.file}' has no files")))
+    val in = first.getFileSystem(spark.sparkContext.hadoopConfiguration).open(first)
+    val header = try {
       val recs = new CsvRecords(in, delim, comment)
       if (recs.next()) recs.strings() else Seq.empty
     } finally in.close()
+    CsvHeader(delim, comment, header.size, header.map(_.trim).zipWithIndex
+      .filter(_._1.nonEmpty)
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
+      .toSeq.sortBy(_._2))
   }
 
-  private def firstFile(path: String): String = {
-    val f = new java.io.File(path)
-    if (f.isDirectory) f.listFiles().filter(_.getName.endsWith(".csv")).map(_.getPath).sorted.head
-    else path
+  /** The first file, sorted by path, of the listing a file scan reads:
+    * Hadoop's FileSystem (so hdfs:// and s3a:// resolve as in the scan)
+    * over the path or glob, a directory's files one level down with
+    * names starting with `.` or `_` skipped, as FileInputFormat skips
+    * them. A file ending in `prefer` wins over the rest. */
+  private def firstFile(spark: SparkSession, path: String, prefer: String = ""): Option[String] = {
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(hPath)).toSeq.flatten.flatMap { s =>
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filter(c => c.isFile &&
+        !c.getPath.getName.startsWith(".") && !c.getPath.getName.startsWith("_"))
+    }.map(_.getPath.toString).sorted
+    files.find(_.endsWith(prefer)).orElse(files.headOption)
   }
 
   // ------------------------------------------------------------------

@@ -17,11 +17,13 @@ object Corpus {
       minQuality: Double = 0.3,
       langs: Set[String] = Set.empty,      // empty = keep all
       nearDupThreshold: Double = 0.7,
-      shingleSize: Int = 5,
-      numHashes: Int = 16,
+      // None = the hash path's own default: 5-char shingles and 16
+      // seeds for xxhash64, 4 and 8 for md5-portable
+      shingleSize: Option[Int] = None,
+      numHashes: Option[Int] = None,
       bands: Int = 4,
-      // md5-portable minhash pairs (4-char shingles, 8 seeds) instead of
-      // xxhash64 — slower, but every stage verifies against DuckDB
+      // md5-portable minhash pairs instead of xxhash64 — slower, but
+      // every stage verifies against DuckDB
       portableHashing: Boolean = false)
 
   /** Returns the cleaned corpus (original columns; canonical doc kept
@@ -47,13 +49,14 @@ object Corpus {
       Dedup.byIngestOrder(kept, Seq(textCol), keepFirst = true))
 
     // 3. near-dup clusters -> canonical representative
+    val sh = cfg.shingleSize.getOrElse(if (cfg.portableHashing) 4 else 5)
+    val nh = cfg.numHashes.getOrElse(if (cfg.portableHashing) 8 else 16)
     val pairs =
       if (cfg.portableHashing)
         Dedup.minhashPortablePairs(exact, idCol, textCol,
-          shingleSize = 4, numHashes = 8, bands = cfg.bands, threshold = cfg.nearDupThreshold)
+          shingleSize = sh, numHashes = nh, bands = cfg.bands, threshold = cfg.nearDupThreshold)
       else
-        Dedup.minhashNearDupPairs(exact, idCol, textCol,
-          cfg.shingleSize, cfg.numHashes, cfg.bands, cfg.nearDupThreshold)
+        Dedup.minhashNearDupPairs(exact, idCol, textCol, sh, nh, cfg.bands, cfg.nearDupThreshold)
     Clusters.dedupByPairs(exact, idCol, pairs, "id_a", "id_b")
   }
 }

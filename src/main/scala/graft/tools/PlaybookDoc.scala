@@ -9,10 +9,14 @@ import java.nio.charset.StandardCharsets
  * (/root/reference/docs/etl-tool.1.man.txt,
  * /root/reference/docs/playbook_development_guide.md). The prose of
  * `docs/playbook.md` is hand-written; the `analytics:` ops reference
- * is RENDERED from [[graft.compile.AnalyticsCompiler.ops]] (the same
- * map the load-time validator enforces) between BEGIN/END markers, so
- * the doc cannot silently drift from the op surface: PlaybookDocSpec
- * re-renders and fails the build on any difference. Regenerate with
+ * is RENDERED from the op declarations in
+ * [[graft.compile.AnalyticsCompiler.ops]] (the same declarations the
+ * load-time validator enforces and the stages read) between BEGIN/END
+ * markers: each row names the op, its required params and its usage
+ * (required params, then the optional ones with their defaults or enum
+ * values, then the op's summary). So the doc cannot silently drift
+ * from the op surface: PlaybookDocSpec re-renders and fails the build
+ * on any difference. Regenerate with
  *
  *   sbt "runMain graft.tools.PlaybookDoc"
  */
@@ -24,10 +28,10 @@ object PlaybookDoc {
   /** The generated ops-reference section (between the markers). */
   def opsReference: String = {
     val rows = graft.compile.AnalyticsCompiler.ops.toSeq.sortBy(_._1)
-      .map { case (name, (required, usage)) =>
+      .map { case (name, op) =>
         // usage strings carry literal pipes (mode=report|filter) that
         // would break the markdown table
-        s"| `$name` | ${required.map(p => s"`$p`").mkString(", ")} | ${usage.replace("|", "\\|")} |"
+        s"| `$name` | ${op.required.map(p => s"`${p.name}`").mkString(", ")} | ${op.usage.replace("|", "\\|")} |"
       }
     ("| op | required params | usage |\n| --- | --- | --- |\n" +
       rows.mkString("\n"))

@@ -43,6 +43,87 @@ class AnalyticsCompilerSpec extends SparkTestBase with graft.TempDirs {
     assert(errs(4).contains("missing aggs"))
   }
 
+  test("a present optional param of the wrong type fails at load, not as its default") {
+    val errs = AnalyticsCompiler.validate(Seq(
+      stage("near_dup_dedup", "idCol" -> "id", "textCol" -> "t", "threshold" -> "0.9"),
+      stage("near_dup_dedup", "idCol" -> "id", "textCol" -> "t", "portableHashing" -> "true"),
+      stage("incr_neardup", "idCol" -> "id", "textCol" -> "t", "stateDir" -> "/s",
+        "updateState" -> "true"),
+      stage("corpus_clean", "idCol" -> "id", "textCol" -> "t", "bands" -> "four"),
+      stage("split", "keyCol" -> "k", "trainPct" -> 80.5),
+      stage("sessionize", "keyCol" -> "k", "tsCol" -> "ts", "tiebreak" -> Seq("a", null))))
+    assert(errs == Seq(
+      """analytics[0] (near_dup_dedup): param 'threshold' must be a number (got "0.9")""",
+      """analytics[1] (near_dup_dedup): param 'portableHashing' must be true or false (got "true")""",
+      """analytics[2] (incr_neardup): param 'updateState' must be true or false (got "true")""",
+      """analytics[3] (corpus_clean): param 'bands' must be an integer or 'auto' (got "four")""",
+      """analytics[4] (split): param 'trainPct' must be an integer (got 80.5)""",
+      "analytics[5] (sessionize): param 'tiebreak' must be a list of strings (got List(a, null))"),
+      errs.mkString("\n"))
+    // near_dup_dedup and corpus_clean share one `bands` declaration: auto is valid on both
+    assert(AnalyticsCompiler.validate(Seq(
+      stage("near_dup_dedup", "idCol" -> "id", "textCol" -> "t", "bands" -> "auto"),
+      stage("corpus_clean", "idCol" -> "id", "textCol" -> "t", "bands" -> "auto"))).isEmpty)
+    // the same through YAML: a quoted number is a string
+    val e = intercept[IllegalArgumentException](PlaybookLoader.fromString("""
+      |source: {type: parquet, file: /tmp/in.parquet}
+      |destination: {type: parquet, file: /tmp/o}
+      |analytics:
+      |  - {op: quality_gate, textCol: t, minQuality: "0.5"}
+      |""".stripMargin)).getMessage
+    assert(e.contains("param 'minQuality' must be a number"), e)
+  }
+
+  test("numHashes % bands is checked at load for every MinHash op") {
+    val mh = Seq("idCol" -> "id", "textCol" -> "t", "numHashes" -> 10)
+    val errs = AnalyticsCompiler.validate(Seq(
+      stage("near_dup_dedup", mh :+ ("bands" -> 4): _*),
+      stage("corpus_clean", mh: _*), // the default bands=4
+      stage("incr_neardup", mh :+ ("stateDir" -> "/s"): _*),
+      stage("near_dup_dedup", mh :+ ("bands" -> 0): _*)))
+    assert(errs == Seq(
+      "analytics[0] (near_dup_dedup): numHashes (10) must be divisible by bands (4)",
+      "analytics[1] (corpus_clean): numHashes (10) must be divisible by bands (4)",
+      "analytics[2] (incr_neardup): numHashes (10) must be divisible by bands (4)",
+      "analytics[3] (near_dup_dedup): numHashes (10) must be divisible by bands (0)"),
+      errs.mkString("\n"))
+    // bands: auto always picks a divisor
+    assert(AnalyticsCompiler.validate(Seq(stage("corpus_clean", mh :+ ("bands" -> "auto"): _*))).isEmpty)
+  }
+
+  test("corpus_clean on the portable path honours shingleSize and numHashes") {
+    val text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val docs = Seq(
+      (1L, text), (2L, text + "!"), (3L, text),
+      (4L, "a completely different sentence about cooking pasta with fresh tomatoes"),
+      (5L, "a completely different sentence about cooking pasta with fresh tomato"),
+      (6L, "unrelated words entirely: astronomy telescopes galaxies and nebulae"))
+      .toDF("doc_id", "text")
+    // 6 hashes in 3 bands: the hard-coded 8 portable hashes do not divide into 3 bands
+    val mh = Seq("idCol" -> "doc_id", "textCol" -> "text", "portableHashing" -> true,
+      "shingleSize" -> 3, "numHashes" -> 6, "bands" -> 3, "threshold" -> 0.5)
+    val clean = Seq(stage("corpus_clean", mh :+ ("minQuality" -> 0.0): _*))
+    assert(AnalyticsCompiler.validate(clean).isEmpty)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("doc_id").as[Long].collect().toSet
+    val viaClean = ids(AnalyticsCompiler(spark, docs, clean))
+    val viaSteps = ids(AnalyticsCompiler(spark, docs, Seq(
+      stage("quality_gate", "textCol" -> "text", "minQuality" -> 0.0),
+      stage("exact_dedup", "keys" -> Seq("text")),
+      stage("near_dup_dedup", mh: _*))))
+    graft.ops.CachedRelations.releaseAll()
+    assert(viaClean == viaSteps)
+    assert(!viaClean.contains(3L), "exact duplicate kept")
+  }
+
+  test("a stage reads only the params its op declares, with the declared kind") {
+    val args = AnalyticsCompiler.ops("split").args(Map("keyCol" -> "k"))
+    assert(args.int("trainPct") == 90 && args.str("keyCol") == "k")
+    assert(intercept[IllegalArgumentException](args.int("trainPercent"))
+      .getMessage.contains("does not declare"))
+    assert(intercept[IllegalArgumentException](args.str("trainPct"))
+      .getMessage.contains("declares an integer"))
+  }
+
   test("resample/gap_report/zorder_cluster stages: validation and semantics") {
     val errs = AnalyticsCompiler.validate(Seq(
       stage("resample", "keys" -> Seq("k")),          // missing tsCol, valueCol

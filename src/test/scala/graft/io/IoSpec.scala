@@ -50,6 +50,27 @@ class IoSpec extends SparkTestBase with graft.TempDirs {
     assert(Readers.lastCsvSkipped.exists(_.value == 1L)) // bad_row logged+counted
   }
 
+  test("csv: the header comes from the first file of the set the scan reads, on both paths") {
+    val dir = tempDir("graft-csvdir-mixed")
+    Files.writeString(dir.resolve("a.txt"), "x,y,z\n1,2,3\n")
+    Files.writeString(dir.resolve("b.csv"), "id,name\n9,q\n")
+    Seq(false, true).foreach { splittable =>
+      val df = Readers.read(spark, SourceConfig("csv", file = dir.toString, splittable = splittable))
+      assert(df.columns.toSeq == Seq("x", "y", "z"), s"splittable=$splittable")
+      assert(df.collect().map(_.toSeq).toSeq == Seq(Seq("1", "2", "3")), s"splittable=$splittable")
+      assert(Readers.lastCsvSkipped.exists(_.value == 1L)) // b.csv's 2-field row
+    }
+  }
+
+  test("csv: an empty directory is a named error") {
+    val dir = tempDir("graft-csvdir-empty")
+    Seq(false, true).foreach { splittable =>
+      val e = intercept[IllegalArgumentException](Readers.read(spark,
+        SourceConfig("csv", file = dir.toString, splittable = splittable)))
+      assert(e.getMessage == s"csv source '$dir' has no files")
+    }
+  }
+
   test("csv exact: malformed UTF-8 decodes to the same U+FFFD strings as Hadoop Text") {
     def b(xs: Int*) = xs.map(_.toByte).toArray
     val bytes = Array.concat("id,n".getBytes("UTF-8"), b(0xE9), "me\n1,".getBytes("UTF-8"),
