@@ -237,18 +237,15 @@ object Util {
       java.util.regex.Matcher.quoteReplacement(sys.env.getOrElse(m.group(1), "")))
   }
 
-  /** Analytics params that name files or directories (incr_neardup
-    * stateDir, join file, decontaminate refFile, ...). Only these are
+  /** [[expandEnv]] on the path params of one analytics stage, nested
+    * ones (expect's ref_integrity rules) included. Path params are the
+    * ones an op or rule declares with the `path` kind; only these are
     * env-expanded: SQL and regex params keep their text, where
     * `'%x%'` is a LIKE pattern, not a variable. */
-  private val pathParams = Set("file", "refFile", "stateDir", "modelDir", "trainPath")
-
-  /** [[expandEnv]] on the path params of one analytics stage, nested
-    * ones (expect's ref_integrity rules) included. */
   def expandPathParams(params: Map[String, Any]): Map[String, Any] = {
     import scala.jdk.CollectionConverters._
     def go(key: String, v: Any): Any = v match {
-      case s: String if pathParams(key) => expandEnv(s)
+      case s: String if graft.compile.AnalyticsCompiler.pathParams(key) => expandEnv(s)
       case m: java.util.Map[_, _] =>
         m.asScala.map { case (k, x) => k -> go(k.toString, x) }.asJava
       case l: java.util.List[_] => l.asScala.map(go(key, _)).asJava

@@ -54,7 +54,7 @@ object AnalyticsCompiler {
   private def bool(n: String, v: Boolean = false) = Param(n, Kind.bool, Fixed(v))
   private def strs(n: String) = Param(n, Kind.strs, Fixed(Seq.empty[String]))
   private def oneOf(n: String, values: String*) = Param(n, Kind.str, Fixed(values.head), values)
-  private def unset(n: String) = Param(n, Kind.str, Unset)
+  private def unset(n: String, k: Kind = Kind.str) = Param(n, k, Unset)
   /** A string param that defaults to the stage's text column. */
   private def textColOr(n: String) = Param(n, Kind.str, Derived("<textCol>", _.str("textCol")))
   /** An int whose default differs on the md5-portable hash path. */
@@ -99,12 +99,12 @@ object AnalyticsCompiler {
     * filtered by `refWhere`, with `refTextCol` renamed to the stage's
     * own text column so the two-sided operator sees one name. */
   private val refParams = Seq(req("idCol"), req("textCol"), req("refType").in(fileTypes),
-    req("refFile"), unset("refWhere"), textColOr("refTextCol"))
+    req("refFile", Kind.path), unset("refWhere"), textColOr("refTextCol"))
 
   private def refCheck(a: Args): Seq[String] = a.opt("refWhere").flatMap(sqlErr("refWhere", _)).toSeq
 
   private def refFrame(spark: SparkSession, a: Args): DataFrame = {
-    val (text, r0) = (a.str("textCol"), readFile(spark, a.str("refType"), a.str("refFile")))
+    val (text, r0) = (a.str("textCol"), readFile(spark, a.str("refType"), a.path("refFile")))
     val r1 = a.opt("refWhere").map(w => r0.filter(expr(w))).getOrElse(r0)
     if (a.str("refTextCol") == text) r1 else r1.withColumnRenamed(a.str("refTextCol"), text)
   }
@@ -132,9 +132,9 @@ object AnalyticsCompiler {
       a => sqlErr("predicate", a.str("predicate")).toSeq)((_, a) =>
       Expectations.Satisfies(a.str("predicate"), a.str("name"))),
     rule("unique", Seq(req("cols", Kind.strs)))((_, a) => Expectations.Unique(a.strs("cols"))),
-    rule("ref_integrity", Seq(req("col"), req("refType").in(fileTypes), req("refFile"), req("refCol")))(
+    rule("ref_integrity", Seq(req("col"), req("refType").in(fileTypes), req("refFile", Kind.path), req("refCol")))(
       (spark, a) => Expectations.RefIntegrity(a.str("col"),
-        readFile(spark, a.str("refType"), a.str("refFile")), a.str("refCol")))
+        readFile(spark, a.str("refType"), a.path("refFile")), a.str("refCol")))
   ).map(r => r.name -> r).toMap
 
   private def expectCheck(a: Args): Seq[String] = {
@@ -373,12 +373,12 @@ object AnalyticsCompiler {
     op("ppl_partition", "CCNet head/middle/tail perplexity bands (Wenzek 2020): per-source ntile over the self-trained LM NLL, annotated onto the frame as avg_nll_micro + ppl_band; model picks the smoother: bigram (JM; docs under two tokens band NULL, the default) | kn2 (Kneser-Ney bigram) | mkn3 (modified-KN trigram, the CCNet/SRILM production smoother) | sb3 (Stupid Backoff trigram) — the latter three score every non-null doc; modelDir+trainPath band under a PERSISTED stamped mkn3 artifact (LmIndex — the fit-once reference-LM lifecycle, model defaults to mkn3) instead of a per-run refit; keepBands filters to the listed bands and DROPS NULL-banded docs unless the literal entry \"null\" is listed",
       Seq(req("idCol"), req("textCol"), req("sourceCol"), int("lambdaBp", 8000), int("buckets", 3),
         strs("keepBands"), Param("model", Kind.str, Derived("bigram", a =>
-          if (a.opt("modelDir").isDefined) "mkn3" else "bigram"), Seq("bigram", "kn2", "mkn3", "sb3")),
-        unset("modelDir"), unset("trainPath"))) { (_, df, a) =>
+          if (a.optPath("modelDir").isDefined) "mkn3" else "bigram"), Seq("bigram", "kn2", "mkn3", "sb3")),
+        unset("modelDir", Kind.path), unset("trainPath", Kind.path))) { (_, df, a) =>
       val id = a.str("idCol")
       val pp = TextAnalysis.perplexityPartition(df, id, a.str("textCol"), a.str("sourceCol"),
         lambdaBp = a.int("lambdaBp"), buckets = a.int("buckets"), model = a.str("model"),
-        modelDir = a.opt("modelDir").orNull, trainPath = a.opt("trainPath").orNull)
+        modelDir = a.optPath("modelDir").orNull, trainPath = a.optPath("trainPath").orNull)
       // annotate, don't project: the pipeline keeps its columns; docs
       // with fewer than two tokens have no bigram NLL and band NULL
       val joined = df.join(pp.select(col(id), col("avg_nll_micro"), col("ppl_band")), Seq(id), "left")
@@ -416,7 +416,7 @@ object AnalyticsCompiler {
         chunkTokens = a.int("chunkTokens"), overlap = a.int("overlap"))
     },
     op("incr_neardup", "classify this batch against the persisted signature state of prior corpus versions (dup_of_ref/dup_of_new/kept), then append+compact the kept signatures as the next version" + autoBands,
-      Seq(req("idCol"), req("textCol"), req("stateDir"), Param("version", Kind.intOrAuto, Fixed(None)),
+      Seq(req("idCol"), req("textCol"), req("stateDir", Kind.path), Param("version", Kind.intOrAuto, Fixed(None)),
         oneOf("mode", "verdicts", "filter"), bool("updateState", v = true)) ++
         minhash(0.5, int("numHashes", 16)) :+ int("maxBucketSize", 1000),
       check = a => minhashCheck(a) ++ a.intOrAuto("version").filter(_ < 0)
@@ -427,7 +427,7 @@ object AnalyticsCompiler {
       // false, commit the next state as stateDir/v<N>. The signature
       // and verdict stages are freed by the caller's
       // CachedRelations.releaseAll.
-      val (id, text, stateDir) = (a.str("idCol"), a.str("textCol"), a.str("stateDir"))
+      val (id, text, stateDir) = (a.str("idCol"), a.str("textCol"), a.path("stateDir"))
       val (sh, nh, portable) = (a.int("shingleSize"), a.int("numHashes"), a.bool("portableHashing"))
       val sig =
         if (portable) Dedup.minhashPortableValues(df, id, text, shingleSize = sh, numHashes = nh)
@@ -483,14 +483,20 @@ object AnalyticsCompiler {
       grouped.agg(aggs.head, aggs.tail: _*)
     },
     op("join", "join another source on same-named keys (named keys, not `on`: snakeyaml parses a bare `on` as YAML 1.1 boolean true)",
-      Seq(req("type"), req("file"), req("keys", Kind.strs), str("how", "inner"), bool("broadcast")),
+      Seq(req("type"), req("file", Kind.path), req("keys", Kind.strs), str("how", "inner"), bool("broadcast")),
       streamable = true) { (spark, df, a) =>
-      val right = readFile(spark, a.str("type"), a.str("file"))
+      val right = readFile(spark, a.str("type"), a.path("file"))
       // explicit broadcast hint for provably-small dims; otherwise the
       // planner/AQE picks the strategy from stats
       df.join(if (a.bool("broadcast")) broadcast(right) else right, a.strs("keys"), a.str("how"))
     }
   ).map(o => o.name -> o).toMap
+
+  /** Names of the params declared as paths, in any op or `expect`
+    * rule: the ones the CLI env-expands. */
+  private[graft] lazy val pathParams: Set[String] =
+    (ops.values.flatMap(_.params) ++ rules.values.flatMap(_.params))
+      .collect { case p if p.kind eq Kind.path => p.name }.toSet
 
   /** Accumulated-error validation (load-time; no Spark session needed). */
   def validate(stages: Seq[AnalyticsStage]): Seq[String] = stages.zipWithIndex.flatMap { case (st, i) =>

@@ -17,6 +17,9 @@ private[graft] object Kind {
   }
 
   val str = new Kind("a non-empty string")({ case s: String if s.nonEmpty => s })
+  /** A file or directory: a string the CLI expands `$VAR`, `${VAR}`
+    * and `%VAR%` in (see [[graft.cli.Util.expandPathParams]]). */
+  val path = new Kind("a non-empty string")({ case s: String if s.nonEmpty => s })
   val int = new Kind("an integer")({ case n: Number if whole(n) => n.intValue })
   val dbl = new Kind("a number")({ case n: Number => n.doubleValue })
   val bool = new Kind("true or false")({ case b: java.lang.Boolean => b.booleanValue })
@@ -144,8 +147,11 @@ private[graft] final class Args(owner: String, params: Seq[Param], given: Map[St
   def strs(n: String): Seq[String] = get(n, Kind.strs).asInstanceOf[Seq[String]]
   def maps(n: String): Seq[Map[String, Any]] = get(n, Kind.maps).asInstanceOf[Seq[Map[String, Any]]]
   def strMap(n: String): Map[String, String] = get(n, Kind.strMap).asInstanceOf[Map[String, String]]
+  def path(n: String): String = get(n, Kind.path).asInstanceOf[String]
   /** A string param with no default, if given. */
   def opt(n: String): Option[String] = value(n, Kind.str).map(_.asInstanceOf[String])
+  /** A path param with no default, if given. */
+  def optPath(n: String): Option[String] = value(n, Kind.path).map(_.asInstanceOf[String])
   /** The undecoded value, for checks on what the decoder drops. */
   def raw(n: String): Option[Any] = { param(n); given.get(n) }
 

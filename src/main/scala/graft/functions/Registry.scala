@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expr.{BloomBytesMightContain, KnUnitsExpr, LineStatsExpr, MknUnitsExpr, TaggedGramsExpr, SigAgreeCount, HammingX64, GoFormatFloat, GoParseFloat, LshBuckets, MinhashSigX64, NfcNormalize, OphSigX64, PqAdc, PqCn2, PqEncode, RollingFpX64, TokenWindowFpX64, VecDot, VecDotInt8, WinnowFpX64, WordGramHashes, WordGrams}
+import graft.expr.{BloomBytesMightContain, KnUnitsExpr, LineStatsExpr, TextStatsExpr, MknUnitsExpr, TaggedGramsExpr, SigAgreeCount, HammingX64, GoFormatFloat, GoParseFloat, LshBuckets, MinhashSigX64, NfcNormalize, OphSigX64, PqAdc, PqCn2, PqEncode, RollingFpX64, TokenWindowFpX64, VecDot, VecDotInt8, WinnowFpX64, WordGramHashes, WordGrams}
 
 /** Registers graft's native Catalyst expressions as SQL functions on a
   * session (callable via `call_function`/`expr`). Idempotent. The same
@@ -111,7 +111,10 @@ object Registry {
       (children: Seq[Expression]) => HammingX64(children(0), children(1))),
     (FunctionIdentifier("line_stats"),
       new ExpressionInfo(classOf[LineStatsExpr].getName, "line_stats"),
-      (children: Seq[Expression]) => LineStatsExpr(children(0))))
+      (children: Seq[Expression]) => LineStatsExpr(children(0))),
+    (FunctionIdentifier("text_stats"),
+      new ExpressionInfo(classOf[TextStatsExpr].getName, "text_stats"),
+      (children: Seq[Expression]) => TextStatsExpr(children(0))))
 
   private val registered = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())

@@ -26,18 +26,28 @@ object Corpus {
       // every stage verifies against DuckDB
       portableHashing: Boolean = false)
 
+  /** The quality and language gates: adds `quality` and `lang_pred`,
+    * keeps rows at or above `minQuality` in a listed language (any
+    * language when `langs` is empty). Row-local, so it runs in the
+    * scan stage. Both gates read one `text_stats` pass per row: the
+    * barrier keeps filter pushdown from copying the kernel into each
+    * predicate. */
+  def gate(docs: DataFrame, textCol: String, cfg: CleanConfig): DataFrame = {
+    val scored = docs
+      .withColumn("_ts", graft.functions.Registry.barrier(TextAnalysis.textStats(col(textCol))))
+      .withColumn("quality", col("_ts.quality"))
+      .withColumn("lang_pred", col("_ts.lang"))
+      .drop("_ts")
+      .filter(col("quality") >= cfg.minQuality)
+    if (cfg.langs.isEmpty) scored else scored.filter(col("lang_pred").isin(cfg.langs.toSeq: _*))
+  }
+
   /** Returns the cleaned corpus (original columns; canonical doc kept
     * per near-dup cluster) plus bookkeeping columns quality + lang_pred. */
   def clean(docs: DataFrame, idCol: String, textCol: String,
             cfg: CleanConfig = CleanConfig()): DataFrame = {
-    // 1. cheap row-local quality/language gates first (predicate pushdown
-    //    keeps this in the scan stage)
-    var kept = docs
-      .withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
-      .withColumn("lang_pred", TextAnalysis.langId(col(textCol)))
-      .filter(col("quality") >= cfg.minQuality)
-    if (cfg.langs.nonEmpty)
-      kept = kept.filter(col("lang_pred").isin(cfg.langs.toSeq: _*))
+    // 1. cheap row-local quality/language gates first
+    val kept = gate(docs, textCol, cfg)
 
     // 2. exact dedup (hash shuffle on content). Materialized at a
     //    parquet stage boundary: the result feeds BOTH the near-dup

@@ -1,19 +1,33 @@
 package graft.ops
 
+import graft.expr.TextStatsExpr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /**
  * Text-analysis columns for training-data pipelines: token counting,
  * quality scoring, language ID (stopword heuristic), fingerprinting.
- * All pure Column expressions (whole-stage codegen, no UDFs).
+ * No UDFs: Column expressions, some of them higher-order lambdas that
+ * Catalyst evaluates interpreted, and native Catalyst kernels in
+ * [[graft.expr]]. Token count, punctuation and stopword ratios,
+ * quality and language are fields of one kernel pass,
+ * [[graft.expr.TextStats]] (`text_stats`).
  */
 object TextAnalysis {
 
   /** Lowercased whitespace tokens (same normalization as Dedup.tokens). */
   def tokens(text: Column): Column = Dedup.tokens(text)
 
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** The one-pass `text_stats` struct over `text`: n_tokens,
+    * punct_ratio, stop_ratio, quality, lang — see
+    * [[graft.expr.TextStats]]. The five scores below read its fields,
+    * so a projection that takes several evaluates it once. */
+  def textStats(text: Column): Column =
+    ColumnBridge.column(TextStatsExpr(ColumnBridge.expression(text)))
+
+  /** Size of [[tokens]]. */
+  def tokenCount(text: Column): Column = textStats(text).getField("n_tokens")
 
   def charCount(text: Column): Column = length(text)
 
@@ -22,9 +36,7 @@ object TextAnalysis {
     length(regexp_replace(text, "\\s+", "")).cast("double") / tokenCount(text)
 
   /** Fraction of characters that are sentence punctuation. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.!?,;:]", ""))).cast("double") /
-      greatest(length(text), lit(1))
+  def punctRatio(text: Column): Column = textStats(text).getField("punct_ratio")
 
   /** Per-language stopword marker lists for the language-ID heuristic. */
   val stopwords: Seq[(String, Seq[String])] = Seq(
@@ -33,22 +45,12 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "auf", "zu"),
     "fr" -> Seq("le", "les", "et", "est", "une", "dans", "pour", "qui", "pas", "sur"))
 
-  private def markerCount(toks: Column, words: Seq[String]): Column =
-    size(array_intersect(array_distinct(toks), array(words.map(lit): _*)))
-
   /**
    * Stopword-overlap language ID: distinct-token overlap with each
    * marker list; argmax wins with ties broken in declaration order;
    * zero overlap everywhere -> "und".
    */
-  def langId(text: Column): Column = {
-    val toks = tokens(text)
-    val counts = stopwords.map { case (lang, words) => lang -> markerCount(toks, words) }
-    val maxc = greatest(counts.map(_._2): _*)
-    counts.foldLeft(when(maxc === 0, lit("und"))) { case (acc, (lang, c)) =>
-      acc.when(c === maxc, lit(lang))
-    }.otherwise(lit("und"))
-  }
+  def langId(text: Column): Column = textStats(text).getField("lang")
 
   /** Writing-system classes for [[scriptProfile]]: name -> Java/RE2
     * character class (both engines' regex dialects accept the
@@ -92,12 +94,7 @@ object TextAnalysis {
   }
 
   /** Stopword ratio against the combined marker vocabulary. */
-  def stopwordRatio(text: Column): Column = {
-    val toks = tokens(text)
-    val all = stopwords.flatMap(_._2).distinct
-    size(filter(toks, t => t.isin(all: _*))).cast("double") /
-      greatest(size(toks), lit(1))
-  }
+  def stopwordRatio(text: Column): Column = textStats(text).getField("stop_ratio")
 
   /** The Gopher-style required-word subset (Rae et al. 2021 §A1.1:
     * a doc must contain >= 2 of a small English stop set). */
@@ -259,10 +256,7 @@ object TextAnalysis {
    * Composite quality score in [0,1]: length credit (saturates at 100
    * tokens), low punctuation noise, natural stopword density.
    */
-  def qualityScore(text: Column): Column =
-    least(tokenCount(text).cast("double") / 100.0, lit(1.0)) * 0.4 +
-      (lit(1.0) - punctRatio(text)) * 0.3 +
-      least(stopwordRatio(text) * 5.0, lit(1.0)) * 0.3
+  def qualityScore(text: Column): Column = textStats(text).getField("quality")
 
   /** Content fingerprint of whitespace-normalized lowercase text. */
   def fingerprint(text: Column): Column =

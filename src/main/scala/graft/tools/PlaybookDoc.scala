@@ -33,8 +33,10 @@ object PlaybookDoc {
         // would break the markdown table
         s"| `$name` | ${op.required.map(p => s"`${p.name}`").mkString(", ")} | ${op.usage.replace("|", "\\|")} |"
       }
+    val paths = graft.compile.AnalyticsCompiler.pathParams.toSeq.sorted.map(p => s"`$p`")
     ("| op | required params | usage |\n| --- | --- | --- |\n" +
-      rows.mkString("\n"))
+      rows.mkString("\n") +
+      s"\n\nPath params, the only ones whose `$$VAR`, `$${VAR}` and `%VAR%` expand from the environment: ${paths.mkString(", ")}.")
   }
 
   /** Replace the delimited section of `docs/playbook.md` in place. */
