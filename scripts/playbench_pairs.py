@@ -3,7 +3,7 @@
 
 Usage:
     python3 scripts/playbench_pairs.py PARENT_TREE CHANGE_TREE \\
-        --workload etl_csv --seeds 10-19 [--trace-seed 1] [--seconds S] [--fixed-dir D]
+        --workload etl_csv --seeds 10-19 [--trace-seed 1] [--seconds S]
 
 For each seed it runs one untraced `playbench/run.py` in each tree, each
 built from its own sources, alternating which side runs first (even
@@ -19,10 +19,10 @@ the metric's bound is flagged BEYOND BOUND.
 With --trace-seed N (default 1; 0 skips it) it also runs both trees
 traced on seed N and prints `playbench/counter_diff.py` of the two
 layers.json files; its exit code is reported, and a non-zero one fails
-the script. Both traced runs happen in one fixed directory (--fixed-dir,
-default `playbench_pairs_tree` under the system temp dir): each tree is
-copied there in turn, build cache included, and its layers.json is
-copied back to the tree's own `.bench_run/`. Run inputs live under the
+the script. Both traced runs happen in one directory, `tree` in a fresh
+temporary directory made for this invocation and deleted after it: each
+tree is copied there in turn, build cache included, and its layers.json
+is copied back to the tree's own `.bench_run/`. Run inputs live under the
 tree, and a workload whose output depends on the input path (such as
 `_metadata.file_path` riding a shuffle) would otherwise differ in its
 counters between two identical programs in differently named trees.
@@ -43,7 +43,7 @@ import sys
 import tempfile
 from pathlib import Path
 
-# not copied into the fixed directory: VCS data, sbt output, old runs
+# not copied into the traced-run directory: VCS data, sbt output, old runs
 SKIP = shutil.ignore_patterns(".git", "target", ".bench_run", "spark-warehouse", "metastore_db",
                               "__pycache__")
 
@@ -84,8 +84,6 @@ def main() -> None:
     ap.add_argument("--seeds", required=True, help="A-B, inclusive")
     ap.add_argument("--trace-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float)
-    ap.add_argument("--fixed-dir", type=Path,
-                    default=Path(tempfile.gettempdir()) / "playbench_pairs_tree")
     a = ap.parse_args()
     trees = {"parent": a.parent.resolve(), "change": a.change.resolve()}
     bench = json.loads((trees["change"] / "BENCHMARK.json").read_text())
@@ -128,16 +126,16 @@ def main() -> None:
 
     if a.trace_seed:
         layer_files = []
-        fixed = a.fixed_dir.resolve()
         run_dir = Path(".bench_run") / f"{a.workload}-s{a.trace_seed}-t1"
-        for side in ("parent", "change"):
-            shutil.rmtree(fixed, ignore_errors=True)
-            shutil.copytree(trees[side], fixed, ignore=SKIP, symlinks=True)
-            res = run(fixed, a.workload, a.trace_seed, seconds, trace=1)
-            bad += not (res["correct"] and res["failed"] == 0)
-            (trees[side] / run_dir).mkdir(parents=True, exist_ok=True)
-            layer_files.append(Path(shutil.copy(fixed / run_dir / "layers.json", trees[side] / run_dir)))
-        shutil.rmtree(fixed, ignore_errors=True)
+        with tempfile.TemporaryDirectory(prefix="playbench_pairs_") as tmp:
+            fixed = Path(tmp) / "tree"
+            for side in ("parent", "change"):
+                shutil.rmtree(fixed, ignore_errors=True)
+                shutil.copytree(trees[side], fixed, ignore=SKIP, symlinks=True)
+                res = run(fixed, a.workload, a.trace_seed, seconds, trace=1)
+                bad += not (res["correct"] and res["failed"] == 0)
+                (trees[side] / run_dir).mkdir(parents=True, exist_ok=True)
+                layer_files.append(Path(shutil.copy(fixed / run_dir / "layers.json", trees[side] / run_dir)))
         r = subprocess.run([sys.executable, str(trees["change"] / "playbench" / "counter_diff.py"),
                             *map(str, layer_files)], stdout=subprocess.PIPE, text=True)
         log(f"\ncounter_diff.py, traced seed {a.trace_seed}:\n{r.stdout}exit {r.returncode}")

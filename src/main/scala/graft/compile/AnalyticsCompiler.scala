@@ -169,20 +169,18 @@ object AnalyticsCompiler {
   private[graft] val ops: Map[String, Op] = Seq(
     op("quality_gate", "adds `quality`, keeps rows with quality >= minQuality",
       Seq(req("textCol"), dbl("minQuality", 0.3)), streamable = true) { (_, df, a) =>
-      df.withColumn("quality", TextAnalysis.qualityScore(col(a.str("textCol"))))
+      TextAnalysis.withTextStats(df, col(a.str("textCol")), "quality" -> "quality")
         .filter(col("quality") >= lit(a.dbl("minQuality")))
     },
     op("lang_filter", "adds `lang_pred`, keeps listed languages",
       Seq(req("textCol"), req("langs", Kind.strs)), streamable = true) { (_, df, a) =>
-      df.withColumn("lang_pred", TextAnalysis.langId(col(a.str("textCol"))))
+      TextAnalysis.withTextStats(df, col(a.str("textCol")), "lang_pred" -> "lang")
         .filter(col("lang_pred").isin(a.strs("langs"): _*))
     },
     op("text_metrics", "adds quality, lang_pred, n_tokens columns",
       Seq(req("textCol")), streamable = true) { (_, df, a) =>
-      val t = col(a.str("textCol"))
-      df.withColumn("quality", TextAnalysis.qualityScore(t))
-        .withColumn("lang_pred", TextAnalysis.langId(t))
-        .withColumn("n_tokens", TextAnalysis.tokenCount(t))
+      TextAnalysis.withTextStats(df, col(a.str("textCol")),
+        "quality" -> "quality", "lang_pred" -> "lang", "n_tokens" -> "n_tokens")
     },
     op("exact_dedup", "exact dedup in ingest order",
       Seq(req("keys", Kind.strs), oneOf("keep", "first", "last")), streamable = true) { (_, df, a) =>

@@ -1,11 +1,12 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.CollationSupport
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.internal.types.StringTypeWithCollation
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -163,12 +164,12 @@ object TextStats {
 }
 
 /** `text_stats(text)` over string — see [[TextStats]]. Never null: a
-  * null text has null scores and lang "und". */
-case class TextStatsExpr(child: Expression) extends UnaryExpression {
-  private lazy val collationId: Int = child.dataType match {
-    case s: StringType => s.collationId
-    case _ => StringType.collationId
-  }
+  * null text has null scores and lang "und". Takes the input types
+  * Spark's `Lower` takes, so a non-string argument is cast to string
+  * as the Column forms' `trim` and `length` cast it. */
+case class TextStatsExpr(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[StringTypeWithCollation] = Seq(StringTypeWithCollation(supportsTrimCollation = true))
+  private lazy val collationId: Int = child.dataType.asInstanceOf[StringType].collationId
   // read once, as Spark's Lower reads it
   private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 

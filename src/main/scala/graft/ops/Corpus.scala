@@ -29,15 +29,10 @@ object Corpus {
   /** The quality and language gates: adds `quality` and `lang_pred`,
     * keeps rows at or above `minQuality` in a listed language (any
     * language when `langs` is empty). Row-local, so it runs in the
-    * scan stage. Both gates read one `text_stats` pass per row: the
-    * barrier keeps filter pushdown from copying the kernel into each
-    * predicate. */
+    * scan stage. Both gates read one `text_stats` pass per row
+    * ([[TextAnalysis.withTextStats]]). */
   def gate(docs: DataFrame, textCol: String, cfg: CleanConfig): DataFrame = {
-    val scored = docs
-      .withColumn("_ts", graft.functions.Registry.barrier(TextAnalysis.textStats(col(textCol))))
-      .withColumn("quality", col("_ts.quality"))
-      .withColumn("lang_pred", col("_ts.lang"))
-      .drop("_ts")
+    val scored = TextAnalysis.withTextStats(docs, col(textCol), "quality" -> "quality", "lang_pred" -> "lang")
       .filter(col("quality") >= cfg.minQuality)
     if (cfg.langs.isEmpty) scored else scored.filter(col("lang_pred").isin(cfg.langs.toSeq: _*))
   }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.expr.TextStatsExpr
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -25,6 +25,17 @@ object TextAnalysis {
     * so a projection that takes several evaluates it once. */
   def textStats(text: Column): Column =
     ColumnBridge.column(TextStatsExpr(ColumnBridge.expression(text)))
+
+  /** `df` with the named [[textStats]] fields of `text` added as
+    * columns (`column -> field`), from one kernel pass per row. The
+    * pass sits behind [[graft.functions.Registry.barrier]], so a filter
+    * on one of the new columns cannot be pushed below it with a second
+    * copy of the kernel; the cost is that no later filter is pushed
+    * below this projection either. */
+  def withTextStats(df: DataFrame, text: Column, fields: (String, String)*): DataFrame = {
+    val scored = df.withColumn("_ts", graft.functions.Registry.barrier(textStats(text)))
+    fields.foldLeft(scored) { case (d, (name, f)) => d.withColumn(name, col(s"_ts.$f")) }.drop("_ts")
+  }
 
   /** Size of [[tokens]]. */
   def tokenCount(text: Column): Column = textStats(text).getField("n_tokens")

@@ -187,6 +187,20 @@ class TextStatsSpec extends SparkTestBase with graft.TempDirs {
     assert(r.getStruct(1).isNullAt(0) && r.getStruct(1).getString(4) == "und")
   }
 
+  test("a non-string argument is cast to string, as the Column forms cast it") {
+    graft.functions.Registry.ensure(spark)
+    val df = spark.sparkContext.parallelize(Seq((1L, 42, "a,b"), (2L, -7, "the cat.")), 2)
+      .toDF("doc_id", "n", "s").select(col("doc_id"), col("n"), col("s").cast("binary").as("b"))
+    // an int scores as its decimal text, the reference forms included
+    val asInt = scored(df.withColumn("text", col("n")), kernelColumns)
+    assert(asInt == scored(df.withColumn("text", col("n")), Reference.columns(_, TextAnalysis.stopwords)))
+    assert(asInt == scored(df.withColumn("text", col("n").cast("string")), kernelColumns))
+    val sql = df.selectExpr("doc_id", "text_stats(n) AS i", "text_stats(b) AS b", "text_stats(CAST(b AS STRING)) AS c")
+      .collect().sortBy(_.getLong(0))
+    assert(sql.map(_.getStruct(1).getInt(0)).toSeq == Seq(1, 1))
+    assert(sql.forall(r => r.getStruct(2) == r.getStruct(3)))
+  }
+
   private def kernels(plan: LogicalPlan): Int =
     plan.collect { case n => n.expressions.map(_.collect { case e: TextStatsExpr => e }.size).sum }.sum
 
@@ -195,33 +209,41 @@ class TextStatsSpec extends SparkTestBase with graft.TempDirs {
       case e @ (_: ArrayFilter | _: ArrayIntersect | _: StringSplit) => e.prettyName
     }) }.flatten
 
-  test("playbook text ops compile to the kernel, not the interpreted forms") {
+  test("playbook text ops compile to one kernel each, not the interpreted forms") {
     val dir = tempDir("graft-text-stats").toString
     Seq((1L, "The cat and the hat."), (2L, "der Hund ist nicht da")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/docs")
-    val pb = graft.config.PlaybookLoader.fromString(
-      s"""source:
-         |  type: parquet
-         |  file: $dir/docs
-         |destination:
-         |  type: parquet
-         |  file: $dir/out
-         |analytics:
-         |  - op: quality_gate
-         |    textCol: text
-         |    minQuality: 0.1
-         |  - op: lang_filter
-         |    textCol: text
-         |    langs: [en, de]
-         |  - op: text_metrics
-         |    textCol: text
-         |""".stripMargin)
-    val out = graft.compile.PipelineCompiler.compile(spark, pb).main
-    val plan = out.queryExecution.optimizedPlan
-    assert(interpreted(plan).isEmpty, s"interpreted text forms in the plan:\n$plan")
-    assert(kernels(plan) > 0, plan.toString)
-    assert(out.select("doc_id", "lang_pred", "n_tokens").collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getInt(2))).sorted.toSeq == Seq((1L, "en", 5), (2L, "de", 5)))
+    val ops = Seq(
+      """  - op: quality_gate
+        |    textCol: text
+        |    minQuality: 0.1""",
+      """  - op: lang_filter
+        |    textCol: text
+        |    langs: [en, de]""",
+      """  - op: text_metrics
+        |    textCol: text""").map(_.stripMargin)
+    def compiled(stages: Seq[String]): DataFrame = graft.compile.PipelineCompiler.compile(spark,
+      graft.config.PlaybookLoader.fromString(
+        s"""source:
+           |  type: parquet
+           |  file: $dir/docs
+           |destination:
+           |  type: parquet
+           |  file: $dir/out
+           |analytics:
+           |""".stripMargin + stages.mkString("\n") + "\n")).main
+    // the filter ops' predicate must not pull a second copy of the
+    // kernel below their projection
+    for (op <- ops) {
+      val plan = compiled(Seq(op)).queryExecution.optimizedPlan
+      assert(interpreted(plan).isEmpty, s"interpreted text forms in the plan:\n$plan")
+      assert(kernels(plan) == 1, s"expected one text_stats in the plan of\n$op\n$plan")
+    }
+    val out = compiled(ops)
+    assert(kernels(out.queryExecution.optimizedPlan) == ops.size, out.queryExecution.optimizedPlan.toString)
+    assert(out.select("doc_id", "quality", "lang_pred", "n_tokens").collect().map(r =>
+      (r.getLong(0), r.getDouble(1) > 0.1, r.getString(2), r.getInt(3))).sorted.toSeq ==
+      Seq((1L, true, "en", 5), (2L, true, "de", 5)))
   }
 
   test("the corpus gate evaluates the kernel once per row for both gates") {
