@@ -184,7 +184,8 @@ object AnalyticsCompiler {
     },
     op("exact_dedup", "exact dedup in ingest order",
       Seq(req("keys", Kind.strs), oneOf("keep", "first", "last")), streamable = true) { (_, df, a) =>
-      if (df.isStreaming) df.dropDuplicates(a.strs("keys")) // first arrival
+      // a stream keeps the first arrival; keep: last is rejected at load
+      if (df.isStreaming) df.dropDuplicates(a.strs("keys"))
       else Dedup.byIngestOrder(df, a.strs("keys"), keepFirst = a.str("keep") == "first")
     },
     op("near_dup_dedup", "MinHash/LSH near-dup, canonical doc kept" + autoBands,

@@ -146,15 +146,15 @@ object PipelineCompiler {
     // ---- DEDUPLICATION (§2.5) ----
     pb.dedup.foreach { d =>
       if (streaming) {
-        // first = dropDuplicates (first arrival per key; unbounded
-        // state — the batch operators remain the bounded-state tool
-        // for full-corpus dedup); min/max = keyed-state extreme with
-        // quiet-period emission. The internal SEQ/ERR/ORIG columns ride
-        // through the state row and come off after, as in batch.
+        // first = dropDuplicates (first arrival per key; one state
+        // row per key, never expired); min/max = Dedup's keyed-state
+        // extreme with quiet-period emission, the streaming form of
+        // the byExtreme order below. The internal SEQ/ERR/ORIG columns
+        // ride through the state row and come off after, as in batch.
         // Validator rejects 'last' with its reason.
         d.strategy match {
           case "min" | "max" =>
-            main = graft.streaming.StreamOps.dedupExtremeStream(
+            main = Dedup.dedupExtremeStream(
               main, d.keys, d.strategyField.get,
               max = d.strategy == "max", tsCol = d.tsCol.get,
               quiet = d.quietPeriod, watermarkDelay = d.watermarkDelay)

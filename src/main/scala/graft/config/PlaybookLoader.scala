@@ -268,14 +268,15 @@ object Validator {
       if (pb.destination.bucketBy.nonEmpty || pb.destination.zorderBy.nonEmpty ||
           pb.destination.bloomIndexBy.nonEmpty)
         errs += "streaming destination: bucketBy/zorderBy/bloomIndexBy are batch-write layouts (run a periodic batch compact/cluster/index pass over the sink directory instead)"
+      val lastNeverFinal = "no arrival is ever final on an unbounded stream (use min/max on a version field, or batch)"
       pb.dedup.foreach { d =>
         // first = dropDuplicates (first arrival is FINAL — append-safe);
         // min/max = keyed-state extreme with quiet-period emission
-        // (StreamOps.dedupExtremeStream). 'last' stays rejected: on an
+        // (Dedup.dedupExtremeStream). 'last' stays rejected: on an
         // unbounded stream every arrival supersedes, so nothing is ever
         // final under an append-only file sink.
         if (d.strategy == "last")
-          errs += "streaming deduplication.strategy 'last' unsupported — no arrival is ever final on an unbounded stream (use min/max on a version field, or batch)"
+          errs += s"streaming deduplication.strategy 'last' unsupported — $lastNeverFinal"
         if (Set("min", "max")(d.strategy)) {
           if (d.tsCol.isEmpty)
             errs += "streaming min/max deduplication needs tsCol (the event-time column whose watermark drives quiet-period emission)"
@@ -315,6 +316,10 @@ object Validator {
               errs += s"analytics[$i]: derive '$sql' uses a window function — non-time windows are not streaming-executable"
           } catch { case _: Exception => () } // parse errors already reported
         }
+        // exact_dedup compiles to dropDuplicates on a stream, which
+        // keeps the first arrival whatever `keep` says
+        if (st.op == "exact_dedup" && st.params.get("keep").contains("last"))
+          errs += s"analytics[$i]: exact_dedup keep 'last' unsupported on a stream — $lastNeverFinal"
         if (st.op == "join")
           st.params.get("how").collect { case s: String => s.toLowerCase }
             .filterNot(streamJoins).foreach(h =>

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 import graft.functions.GoValues
 
@@ -109,6 +110,138 @@ object Dedup {
       .drop("_rn" +: "_seq" +: tmpCols: _*)
   }
 
+  /**
+   * Streaming min/max dedup — the online face of [[byExtreme]]:
+   * keep, per key, the single record whose `strategyField` is the
+   * extreme under the reference's CompareValues order
+   * (transform.go:1052-1117 as driven by the processor's
+   * strict-improvement fold, processor.go:295-307):
+   * nil smallest; numbers AND numeric strings compare as float64
+   * (the shared [[graft.functions.GoFloatParse]] parser — the exact
+   * JVM code the batch path's `go_parse_float` expression calls, so
+   * the two faces cannot drift); non-numeric strings compare
+   * lexicographically among themselves and rank above all numerics;
+   * ties and incomparables keep the EARLIEST arrival (streaming's
+   * statement of "earliest ingested", same caveat as the `first`
+   * strategy's dropDuplicates).
+   *
+   * Emission contract (Append mode, file-sink compatible): a key's
+   * current extreme row is held in keyed state and emitted once the
+   * key has been QUIET for `quiet` of EVENT time — the watermark on
+   * `tsCol` (delayed by `watermarkDelay`) passing the key's last-seen
+   * event time + `quiet` fires an EventTimeTimeout, the row is
+   * appended, the state dropped: the session-close pattern. A key
+   * that keeps receiving rows keeps improving silently; a
+   * re-appearing key after emission starts a fresh round (may emit
+   * again — downstream min/max compaction is associative, so the
+   * extreme of extremes is still THE extreme). Event-time (not
+   * processing-time) timers are load-bearing here: they make the
+   * operator deterministic under replay AND terminate under
+   * Trigger.AvailableNow — a processing-time timer keeps scheduling
+   * wall-clock batches, so a bounded catch-up run would either hang
+   * or race its own clock.
+   *
+   * Scale shape: one shuffle on the key; state is exactly one row per
+   * live key (the current extreme — not the arrivals), bounded by the
+   * quiet-period turnover, per-partition in the state store.
+   */
+  def dedupExtremeStream(df: DataFrame, keys: Seq[String], strategyField: String,
+                         max: Boolean, tsCol: String, quiet: String,
+                         watermarkDelay: String): DataFrame = {
+    val wm = df.withWatermark(tsCol, watermarkDelay)
+    val schema = wm.schema
+    val keyIdx = keys.map(schema.fieldIndex)
+    val fIdx = schema.fieldIndex(strategyField)
+    val tsIdx = schema.fieldIndex(tsCol)
+    val isString = schema(fIdx).dataType.isInstanceOf[StringType]
+    val keySchema = StructType(keyIdx.map(schema(_)).toArray)
+    val quietMs = intervalMs(quiet)
+    // state = the extreme row's fields + the key's max seen event time
+    val stateSchema = StructType(schema.fields :+ StructField("_graft_seen_ts", LongType))
+    val rowEnc = Encoders.row(schema)
+    wm.groupByKey((r: Row) => Row.fromSeq(keyIdx.map(r.get)))(Encoders.row(keySchema))
+      .flatMapGroupsWithState[Row, Row](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            Iterator.single(Row.fromSeq(s.toSeq.dropRight(1)))
+          } else {
+            var (cur, seenTs) = state.getOption match {
+              case Some(s) => (Row.fromSeq(s.toSeq.dropRight(1)), s.getLong(schema.length))
+              case None => (null: Row, Long.MinValue)
+            }
+            rows.foreach { r =>
+              val ts = r.get(tsIdx) match {
+                case t: java.sql.Timestamp => t.getTime
+                case t: java.time.Instant => t.toEpochMilli
+                case _ => Long.MinValue // null ts rows still compete on value
+              }
+              if (ts > seenTs) seenTs = ts
+              if (cur == null ||
+                  strictlyBetter(r.get(fIdx), cur.get(fIdx), isString, max))
+                cur = r
+            }
+            if (cur != null) {
+              state.update(Row.fromSeq(cur.toSeq :+ seenTs))
+              // a late batch can put seenTs+quiet at or behind the
+              // watermark (setTimeoutTimestamp rejects that) — clamp a
+              // hair past it so the key emits on the next advance
+              state.setTimeoutTimestamp(
+                math.max(seenTs + quietMs, state.getCurrentWatermarkMs() + 1))
+            }
+            Iterator.empty
+          }
+      }(Encoders.row(stateSchema), rowEnc)
+      .toDF()
+  }
+
+  /** CalendarInterval string ("30 seconds", "5 minutes") to millis. */
+  private def intervalMs(s: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.safeStringToInterval(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s))
+    require(iv != null && iv.months == 0, s"unparseable interval '$s'")
+    iv.days * 86400000L + iv.microseconds / 1000L
+  }
+
+  /** CompareValues strict improvement: true iff `cand` strictly beats
+    * `inc` for the requested extreme (ties keep the incumbent = the
+    * earlier arrival). String columns use the 3-class order the batch
+    * [[byExtreme]] states (nil < numeric < non-numeric lex); native
+    * types use natural order with nil smallest. */
+  private[ops] def strictlyBetter(cand: Any, inc: Any,
+                                  isString: Boolean, max: Boolean): Boolean = {
+    val c = compareGo(cand, inc, isString)
+    if (max) c > 0 else c < 0
+  }
+
+  private def compareGo(a: Any, b: Any, isString: Boolean): Int =
+    if (isString) {
+      def numOf(v: Any): java.lang.Double =
+        if (v == null) null
+        else graft.functions.GoFloatParse.parse(
+          org.apache.spark.unsafe.types.UTF8String.fromString(v.toString))
+      val (na, nb) = (numOf(a), numOf(b))
+      def cls(v: Any, n: java.lang.Double) = if (v == null) 0 else if (n != null) 1 else 2
+      val (ca, cb) = (cls(a, na), cls(b, nb))
+      if (ca != cb) ca - cb
+      else if (ca == 1) java.lang.Double.compare(na, nb)
+      else if (ca == 2) a.toString.compareTo(b.toString)
+      else 0
+    } else (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: java.lang.Double, y: java.lang.Double) => java.lang.Double.compare(x, y)
+      case (x: java.lang.Float, y: java.lang.Float) => java.lang.Float.compare(x, y)
+      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
+      case (x: Number, y: Number) => java.lang.Long.compare(x.longValue(), y.longValue())
+      case (x: Comparable[_], y) if x.getClass == y.getClass =>
+        x.asInstanceOf[Comparable[Any]].compareTo(y)
+      case _ => 0 // incomparable -> tie -> earliest arrival wins
+    }
+
   /** Exact duplicate removal on a set of columns (hash-shuffle distinct). */
   def exact(df: DataFrame, keys: Seq[String]): DataFrame =
     if (keys.isEmpty) df.distinct() else df.dropDuplicates(keys)
@@ -189,6 +322,24 @@ object Dedup {
         size(chunks).as("total_spans"))
   }
 
+  /** The per-domain boilerplate set (domain, h=xxhash64(line)) that
+    * [[boilerplateLineRemoval]] subtracts. */
+  private def boilerplateSet(docs: DataFrame, idCol: String, textCol: String,
+                             domainCol: String, lineDelim: String,
+                             minDocs: Int, maxDocFracBp: Int): DataFrame = {
+    val linesOf: Column = split(col(textCol), java.util.regex.Pattern.quote(lineDelim))
+    // distinct docs per (domain, line): a line repeated WITHIN one doc
+    // counts once — the signal is cross-document repetition
+    val docFreq = docs.select(col(idCol).as("id"), col(domainCol).as("domain"),
+        explode(array_distinct(transform(linesOf, l => xxhash64(l)))).as("h"))
+      .groupBy(col("domain"), col("h")).agg(count(lit(1)).as("dfd"))
+    val nDocs = docs.groupBy(col(domainCol).as("domain")).agg(count(lit(1)).as("n_docs"))
+    docFreq.join(nDocs, "domain")
+      .filter(col("dfd") >= minDocs &&
+        col("dfd") * lit(10000L) > lit(maxDocFracBp.toLong) * col("n_docs"))
+      .select(col("domain"), col("h"))
+  }
+
   /**
    * Boilerplate-line removal (the C4/RefinedWeb curation step): a line
    * that appears in MANY documents of the same domain (nav menus,
@@ -209,27 +360,6 @@ object Dedup {
    * collision (~n²/2⁶⁴) folds two lines' counts together — noise at
    * any real corpus size.
    */
-  /** The per-domain boilerplate set (domain, h=xxhash64(line)) that
-    * [[boilerplateLineRemoval]] subtracts — exposed separately so a
-    * STREAMING deployment can compute it batch-side and scrub the
-    * live stream row-locally against it
-    * ([[graft.streaming.StreamOps.boilerplateFilterStream]]). */
-  def boilerplateSet(docs: DataFrame, idCol: String, textCol: String,
-                     domainCol: String, lineDelim: String = "\n",
-                     minDocs: Int = 2, maxDocFracBp: Int = 500): DataFrame = {
-    val linesOf: Column = split(col(textCol), java.util.regex.Pattern.quote(lineDelim))
-    // distinct docs per (domain, line): a line repeated WITHIN one doc
-    // counts once — the signal is cross-document repetition
-    val docFreq = docs.select(col(idCol).as("id"), col(domainCol).as("domain"),
-        explode(array_distinct(transform(linesOf, l => xxhash64(l)))).as("h"))
-      .groupBy(col("domain"), col("h")).agg(count(lit(1)).as("dfd"))
-    val nDocs = docs.groupBy(col(domainCol).as("domain")).agg(count(lit(1)).as("n_docs"))
-    docFreq.join(nDocs, "domain")
-      .filter(col("dfd") >= minDocs &&
-        col("dfd") * lit(10000L) > lit(maxDocFracBp.toLong) * col("n_docs"))
-      .select(col("domain"), col("h"))
-  }
-
   def boilerplateLineRemoval(docs: DataFrame, idCol: String, textCol: String,
                              domainCol: String, lineDelim: String = "\n",
                              minDocs: Int = 2,
@@ -1107,14 +1237,12 @@ object Dedup {
    *     for the exact-key screen).
    *
    * The two-phase contract (reference screen FIRST, then new-new
-   * clustering among survivors) is the same one the streaming face
-   * ([[graft.streaming.StreamOps.incrementalDedupStream]]) states:
-   * duplication is resolved against the frozen reference before the
-   * batch is compared to itself, so a batch doc near a ref doc can
-   * never become the canonical of a new cluster. This is NOT always
-   * identical to one full-corpus CC pass (a chain a–b–c where only b
-   * touches ref resolves differently) — it is the incremental
-   * contract, stated, not an approximation error.
+   * clustering among survivors): duplication is resolved against the
+   * frozen reference before the batch is compared to itself, so a
+   * batch doc near a ref doc can never become the canonical of a new
+   * cluster. This is NOT always identical to one full-corpus CC pass
+   * (a chain a–b–c where only b touches ref resolves differently) — it
+   * is the incremental contract, stated, not an approximation error.
    *
    * Scale shape: banding is row-local on both sides; the ref screen
    * is one (band, bucket) equi-join bounded by `maxBucketSize` on the

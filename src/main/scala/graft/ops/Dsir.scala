@@ -51,10 +51,9 @@ object Dsir {
   }
 
   /** (b, lr_micro) Laplace log-ratio table over the bucketed gram
-    * distributions of `raw` vs `target` — at most `buckets` rows.
-    * Shared by the batch scorer and the streaming literal-inline face. */
-  private[graft] def logRatioCore(rawG: DataFrame, tgtG: DataFrame,
-                                  buckets: Int): DataFrame = {
+    * distributions of `raw` vs `target` — at most `buckets` rows. */
+  private def logRatioCore(rawG: DataFrame, tgtG: DataFrame,
+                           buckets: Int): DataFrame = {
     val rawB = rawG.groupBy(col("b")).agg(count(lit(1)).as("cr"))
     val tgtB = tgtG.groupBy(col("b")).agg(count(lit(1)).as("ct"))
     // totals ride one-row broadcasts; B is a literal
@@ -67,26 +66,6 @@ object Dsir {
         floor((log(col("ct") + lit(1.0)) - log(col("tott") + lit(buckets.toDouble))
              - log(col("cr") + lit(1.0)) + log(col("totr") + lit(buckets.toDouble)))
           * lit(1e6) + lit(0.5)).cast("long").as("lr_micro"))
-  }
-
-  private[graft] def logRatioTable(raw: DataFrame, target: DataFrame,
-                                   idCol: String, textCol: String,
-                                   buckets: Int,
-                                   portableHashing: Boolean = false): DataFrame =
-    logRatioCore(
-      gramBuckets(raw, idCol, textCol, buckets, portableHashing),
-      gramBuckets(target, idCol, textCol, buckets, portableHashing), buckets)
-
-  /** Closed-form lr_micro of a bucket NEITHER corpus touched (ct = cr
-    * = 0): the streaming face scores unseen grams with it. Runs two
-    * one-row count jobs over the static corpora at plan time. */
-  private[graft] def unseenBucketMicro(raw: DataFrame, target: DataFrame,
-                                       idCol: String, textCol: String,
-                                       buckets: Int): Long = {
-    val totr = gramBuckets(raw, idCol, textCol, buckets, portable = false).count()
-    val tott = gramBuckets(target, idCol, textCol, buckets, portable = false).count()
-    math.floor((math.log(totr + buckets.toDouble)
-      - math.log(tott + buckets.toDouble)) * 1e6 + 0.5).toLong
   }
 
   /** Per-raw-doc DSIR log importance weight. Output: (id, n_grams,

@@ -319,155 +319,6 @@ object LmIndex {
   }
 
   /**
-   * Driver-local face of a persisted mkn3 model, for the STREAMING
-   * scorer: the type tables pruned to the top `maxTypes` rows per
-   * order (deterministic (count desc, keys asc) cut — the KenLM
-   * pruning shape: discounts stay as estimated on the FULL counts,
-   * the context stats AND the bigram-type total B re-derive from the
-   * pruned tables so the local model is self-consistent; only the
-   * vocabulary V keeps its full-corpus value, because pruning drops
-   * n-grams, never words), held as plain maps that ride to
-   * executors by broadcast-through-closure. With `maxTypes` at or
-   * above the artifact's type count the local model scores EXACTLY
-   * like [[scoreMknIndexed]] (spec-pinned); pruned, it trades the
-   * tail of the trigram mass for bounded executor memory — the same
-   * trade the batch path never needs to make because its model stays
-   * distributed.
-   */
-  case class MknLocalModel(tri: Map[(String, String, String), Long],
-                           ctx3: Map[(String, String), (Long, Long, Long, Long)],
-                           cont2: Map[(String, String), Long],
-                           den2: Map[String, (Long, Long, Long, Long)],
-                           cont1: Map[String, Long],
-                           b: Long, v: Long,
-                           d31: Double, d32: Double, d33: Double,
-                           e1: Double, e2: Double, e3: Double) extends Serializable {
-    private def pCont(w: String): Double =
-      (cont1.getOrElse(w, 0L) + 1).toDouble / (b + v).toDouble
-    private def pMid(vv: String, w: String): Double = den2.get(vv) match {
-      case None => pCont(w)
-      case Some((dn, m1, m2, m3)) =>
-        val c = cont2.getOrElse((vv, w), 0L)
-        val e = if (c == 1) e1 else if (c == 2) e2 else if (c >= 3) e3 else 0.0
-        math.max(c.toDouble - e, 0.0) / dn.toDouble +
-          ((e1 * m1 + e2 * m2 + e3 * m3) / dn.toDouble) * pCont(w)
-    }
-    private def pTri(u: String, vv: String, w: String): Double = ctx3.get((u, vv)) match {
-      case None => pMid(vv, w)
-      case Some((ca3, a1, a2, a3)) =>
-        val c = tri.getOrElse((u, vv, w), 0L)
-        val d = if (c == 1) d31 else if (c == 2) d32 else if (c >= 3) d33 else 0.0
-        math.max(c.toDouble - d, 0.0) / ca3.toDouble +
-          ((d31 * a1 + d32 * a2 + d33 * a3) / ca3.toDouble) * pMid(vv, w)
-    }
-    private def nllMicro(p: Double): Long =
-      math.floor(-math.log(p) * 1e6 + 0.5).toLong
-    /** (n_tokens, sum_nll_micro, avg_nll_micro) of one document —
-      * the identical IEEE tree and per-unit micro quantization as the
-      * relational scorer (java.lang.Math.log both places). */
-    def scoreDoc(toks: Array[String]): (Long, Long, Long) = {
-      if (toks.isEmpty) return (0L, 0L, 0L)
-      var sum = nllMicro(pCont(toks(0)))
-      var n = 1L
-      if (toks.length >= 2) { sum += nllMicro(pMid(toks(0), toks(1))); n += 1 }
-      var i = 2
-      while (i < toks.length) {
-        sum += nllMicro(pTri(toks(i - 2), toks(i - 1), toks(i)))
-        n += 1; i += 1
-      }
-      (n, sum, sum / n)
-    }
-  }
-
-  /** Driver-side replica of the batch tokenization
-    * `split(lower(trim(text)), "\\s+")` — the SAME edge semantics as
-    * the Spark functions, which plain Java `trim`/`split` do NOT
-    * give: Spark `trim` strips ONLY ASCII spaces (a trailing \n or
-    * \t survives into the split), and Spark `split` keeps trailing
-    * empty strings (Java's 0-limit split drops them). A doc like
-    * "hello world\n" must tokenize to ["hello","world",""] on BOTH
-    * paths or the stream scores diverge from the batch scores its
-    * banding cutoffs were derived from (spec-pinned). */
-  private[graft] def sparkTokens(text: String): Array[String] =
-    sparkLower(sparkTrim(text)).split("\\s+", -1)
-
-  private def sparkTrim(text: String): String = {
-    var from = 0
-    var to = text.length
-    while (from < to && text.charAt(from) == ' ') from += 1
-    while (to > from && text.charAt(to - 1) == ' ') to -= 1
-    text.substring(from, to)
-  }
-
-  /** Replica of Spark `lower()` (UTF8String.toLowerCase, the default
-    * UTF8_BINARY collation): an all-ASCII string lowercases
-    * byte-by-byte; ANY non-ASCII character routes the WHOLE string
-    * through java String.toLowerCase() under the JVM DEFAULT locale —
-    * not Locale.ROOT, which an earlier version of this replica used
-    * and which diverges from the batch twin on 'I' under a
-    * Turkish-default JVM (r13 advisory). The branch structure matters
-    * as much as the locale: under tr_TR a pure-ASCII "I" must stay
-    * ASCII-lowercased to "i" (Spark's fast path) even though the
-    * default-locale slow path would give "ı". */
-  private[graft] def sparkLower(s: String): String = {
-    var i = 0
-    var ascii = true
-    while (i < s.length && ascii) {
-      if (s.charAt(i) >= 0x80) ascii = false
-      i += 1
-    }
-    if (!ascii) s.toLowerCase()
-    else {
-      val arr = s.toCharArray
-      var j = 0
-      while (j < arr.length) {
-        val c = arr(j)
-        if (c >= 'A' && c <= 'Z') arr(j) = (c + 32).toChar
-        j += 1
-      }
-      new String(arr)
-    }
-  }
-
-  /** Verified load of a persisted mkn3 model into a bounded
-    * [[MknLocalModel]] (see there for the pruning contract). */
-  def loadMknLocal(spark: SparkSession, trainPath: String, indexPath: String,
-                   textCol: String, maxTypes: Int = 200000): MknLocalModel = {
-    verify(spark, trainPath, indexPath, "mkn3", textCol)
-    val tri = spark.read.parquet(s"$indexPath/tri")
-      .orderBy(col("_cuvw").desc, col("u"), col("v"), col("w")).limit(maxTypes)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-        r.getLong(3)).toMap
-    val big = spark.read.parquet(s"$indexPath/big")
-      .orderBy(col("_cab").desc, col("prev"), col("cur")).limit(maxTypes)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val d = spark.read.parquet(s"$indexPath/disc").collect().head
-    def dd(n: String) = d.getAs[Double](n)
-    val ctx3 = tri.groupBy(k => (k._1._1, k._1._2)).map { case (k, g) =>
-      k -> ((g.values.sum, g.values.count(_ == 1).toLong,
-        g.values.count(_ == 2).toLong, g.values.count(_ >= 3).toLong))
-    }
-    val cont2 = tri.keys.groupBy(k => (k._2, k._3)).map { case (k, g) => k -> g.size.toLong }
-    val den2 = cont2.groupBy(_._1._1).map { case (vv, g) =>
-      vv -> ((g.values.sum, g.values.count(_ == 1).toLong,
-        g.values.count(_ == 2).toLong, g.values.count(_ >= 3).toLong))
-    }
-    val cont1 = big.keys.groupBy(_._2).map { case (w, g) => w -> g.size.toLong }
-    // B re-derives from the PRUNED bigram map (it equals the disc row's
-    // full-corpus _b whenever maxTypes covers the artifact — the
-    // unpruned==indexed contract): cont1 above counts continuations in
-    // the pruned table, so the continuation floor (N1+(.w)+1)/(B+V)
-    // must draw B from the same pruned counts or the floor loses mass
-    // inconsistently (r13 advisory). V stays the full-corpus vocabulary
-    // from the disc row — the unigram type set is not persisted and the
-    // vocabulary is the model's alphabet, not a prunable count table
-    // (the KenLM convention: pruning drops n-grams, never words).
-    MknLocalModel(tri, ctx3, cont2, den2, cont1,
-      big.size.toLong, d.getAs[Long]("_v"),
-      dd("_d31"), dd("_d32"), dd("_d33"), dd("_e1"), dd("_e2"), dd("_e3"))
-  }
-
-  /**
    * Score `df` under the PERSISTED mkn3 model — verify the stamp,
    * read the three artifacts, derive the per-context stats at type
    * volume, run the identical scoring plan. No corpus-volume work

@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Gap-based sessionization over an event table (batch form; the
- * streaming face is StreamOps): a new session starts when the gap to
- * the previous event of the same key exceeds `gapSeconds`. One shuffle
- * on the key; session ids are running sums of new-session flags.
+ * Gap-based sessionization over an event table: a new session starts
+ * when the gap to the previous event of the same key exceeds
+ * `gapSeconds`. One shuffle on the key; session ids are running sums
+ * of new-session flags.
  * `tiebreak` columns make the within-key order total (equal
  * timestamps would otherwise make lag() nondeterministic).
  */

@@ -253,8 +253,7 @@ object Similarity {
    * the result is exact brute-force top-k (spec-pinned).
    *
    * Scale shape: corpus shuffles ONCE on the cell id; the query side
-   * shuffles at candidate volume only. The streaming face is
-   * [[graft.streaming.StreamOps.ivfLookupStream]].
+   * shuffles at candidate volume only.
    */
   def ivfLookup(queries: DataFrame, corpus: DataFrame, idCol: String,
                 vecCol: String, dims: Int, k: Int,

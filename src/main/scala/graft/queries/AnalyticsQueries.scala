@@ -1515,7 +1515,7 @@ object AnalyticsQueries {
     // Hopping (sliding) window aggregation: 1-day windows every 6
     // hours — each event lands in exactly size/slide = 4 windows
     // (epoch-aligned, same as Structured Streaming's sliding window()
-    // operator; StreamOps.windowedCounts is the streaming face). The
+    // operator). The
     // 4x row expansion happens row-locally BEFORE the one
     // map-side-combined agg shuffle; the oracle builds the same four
     // aligned starts per event with a generate_series cross join.

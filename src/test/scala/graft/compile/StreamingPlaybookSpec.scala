@@ -2,6 +2,8 @@ package graft.compile
 
 import graft.SparkTestBase
 import graft.config.PlaybookLoader
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import java.sql.Timestamp
 
 /** `source.streaming: true`: the playbook compiles over readStream →
   * writeStream (AvailableNow). Load-time validation must reject every
@@ -9,6 +11,8 @@ import graft.config.PlaybookLoader
   * process a jsonl drop folder into parquet exactly once per file. */
 class StreamingPlaybookSpec extends SparkTestBase with graft.TempDirs {
   import spark.implicits._
+
+  private def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
   test("validation rejects non-streamable sections with reasons") {
     val yaml = """
@@ -204,5 +208,200 @@ class StreamingPlaybookSpec extends SparkTestBase with graft.TempDirs {
     graft.cli.Main.run(spark, graft.cli.Main.Args(config = cfg))
     val out2 = spark.read.parquet(s"$tmp/out")
     assert(out2.select("doc_id").as[Long].collect().toSet == Set(1L, 5L))
+  }
+
+  test("streaming exact_dedup keep: last is rejected at load, with the strategy-last reason") {
+    def pb(keep: String) = s"""
+      |source: {type: parquet, file: /tmp/in.parquet, streaming: true}
+      |destination: {type: parquet, file: /tmp/out, checkpoint: /tmp/ck}
+      |errorHandling: {mode: skip}
+      |analytics:
+      |  - {op: exact_dedup, keys: [k], keep: $keep}
+      |""".stripMargin
+    // a stream compiles exact_dedup to dropDuplicates, which keeps the
+    // first arrival: 'last' would load and give the batch-opposite rows
+    val e = intercept[IllegalArgumentException](PlaybookLoader.fromString(pb("last")))
+    assert(e.getMessage.contains("analytics[0]: exact_dedup keep 'last' unsupported"))
+    assert(e.getMessage.contains("no arrival is ever final on an unbounded stream"))
+    PlaybookLoader.fromString(pb("first"))
+  }
+
+  test("streaming max dedup through Main.run emits the batch playbook's max rows") {
+    val tmp = tempDir("graft_stream_max").toString
+    val in = s"$tmp/in"
+    new java.io.File(in).mkdirs()
+    def writeBatch(name: String, rows: Seq[String]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/$name"),
+        rows.mkString("\n").getBytes("UTF-8"))
+    def row(k: String, v: String, tag: String, hhmm: String) = {
+      val vJson = if (v == null) "null" else "\"" + v + "\""
+      s"""{"k": "$k", "v": $vJson, "tag": "$tag", "ts": "2024-01-01T$hhmm:00Z"}"""
+    }
+    // numeric strings, non-numeric strings and nulls; tied values only
+    // across runs (a: "10" vs "10.0", f: null vs null), where both forms
+    // keep the earlier file's row
+    val run1 = Seq(
+      row("a", "10", "a-ten", "10:00"), row("a", "9.5", "a-nine-half", "10:01"),
+      row("b", "apple", "b-apple", "10:02"), row("b", "42", "b-42", "10:03"),
+      row("c", null, "c-null", "10:04"), row("c", "-3", "c-minus-3", "10:05"),
+      row("d", null, "d-null", "10:00"), row("e", "7", "e-seven", "10:01"),
+      row("f", null, "f-first", "10:02"))
+    val run2 = Seq(
+      row("a", "10.0", "a-ten-again", "10:10"), row("b", "banana", "b-banana", "10:11"),
+      row("c", "x1", "c-x1", "10:12"), row("d", "0", "d-zero", "10:13"),
+      row("e", null, "e-null", "10:14"), row("f", null, "f-second", "10:15"))
+    // the sentinel moves the watermark past every key's quiet period
+    val run3 = Seq(row("z", "1", "z-sentinel", "12:00"))
+    val dedup = "deduplication: {keys: [k], strategy: max, strategyField: v, tsCol: ts, quietPeriod: 1 hour}"
+    val streamCfg = s"$tmp/stream.yaml"
+    java.nio.file.Files.write(java.nio.file.Paths.get(streamCfg), s"""
+      |source:
+      |  type: jsonl
+      |  file: $in
+      |  streaming: true
+      |  schema: "k STRING, v STRING, tag STRING, ts TIMESTAMP"
+      |destination: {type: parquet, file: $tmp/stream_out, checkpoint: $tmp/ckpt}
+      |$dedup
+      |errorHandling: {mode: skip}
+      |""".stripMargin.getBytes("UTF-8"))
+    for ((rows, i) <- Seq(run1, run2, run3).zipWithIndex) {
+      writeBatch(s"b${i + 1}.jsonl", rows)
+      graft.cli.Main.run(spark, graft.cli.Main.Args(config = streamCfg))
+    }
+    val batchCfg = s"$tmp/batch.yaml"
+    java.nio.file.Files.write(java.nio.file.Paths.get(batchCfg), s"""
+      |source: {type: jsonl, file: $in}
+      |destination: {type: parquet, file: $tmp/batch_out}
+      |$dedup
+      |errorHandling: {mode: skip}
+      |""".stripMargin.getBytes("UTF-8"))
+    graft.cli.Main.run(spark, graft.cli.Main.Args(config = batchCfg))
+    def rows(dir: String) = spark.read.parquet(dir).select("k", "v", "tag")
+      .as[(String, String, String)].collect().toSet
+    val batch = rows(s"$tmp/batch_out").filter(_._1 != "z") // z is still quiet
+    assert(batch == Set(("a", "10", "a-ten"), ("b", "banana", "b-banana"),
+      ("c", "x1", "c-x1"), ("d", "0", "d-zero"), ("e", "7", "e-seven"),
+      ("f", null, "f-first")), s"batch $batch")
+    val stream = rows(s"$tmp/stream_out")
+    assert(stream == batch, s"stream $stream")
+  }
+
+  // batch operators attach to a stream unchanged: row-local columns
+  // and update-mode aggregates need no streaming twin
+
+  test("row-local corpus ops compose on a stream: redact -> quality gate -> exact dedup") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.functions._
+    import graft.ops.TextAnalysis
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val df = mem.toDF().toDF("doc_id", "text", "ts")
+    // the same Column expressions the batch pipeline uses are row-local,
+    // so they attach to an unbounded source unchanged
+    val out = df
+      .withColumn("clean", TextAnalysis.redactPii(col("text")))
+      .withColumn("quality", TextAnalysis.qualityScore(col("clean")))
+      .filter(col("quality") >= 0.4)
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark(Seq("clean"))
+    val q = out.writeStream.format("memory").queryName("stream_corpus")
+      .outputMode("append").start()
+    try {
+      val good = "a perfectly reasonable document about spark with enough words to pass the gate"
+      mem.addData(
+        (1L, good + " mail me at bob@example.com", ts(1)),
+        (2L, good + " mail me at alice@example.com", ts(2)), // same after redaction -> dup
+        (3L, "x", ts(3)))                                    // fails the quality gate
+      q.processAllAvailable()
+      val rows = spark.table("stream_corpus").collect()
+      assert(rows.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L))
+      assert(rows.head.getAs[String]("clean").endsWith("mail me at <EMAIL>"))
+    } finally q.stop()
+  }
+
+  test("gopherRules quality gate composes onto a stream (row-local columns, append mode)") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val docs = mem.toDF().toDF("doc_id", "text")
+    // row-local rule columns need no watermark/state: the same op used
+    // in batch gates a stream unchanged
+    val gated = graft.ops.TextAnalysis.gopherRules(docs, "doc_id", "text")
+      .filter(org.apache.spark.sql.functions.col("pass"))
+    val q = gated.writeStream.format("memory").queryName("quality_gate")
+      .outputMode("append").start()
+    try {
+      mem.addData(
+        (1L, "the cat sat and the dog ran to be fair with all of it"),
+        (2L, "too short"))
+      q.processAllAvailable()
+      val ids = spark.table("quality_gate").collect().map(_.getAs[Long]("doc_id")).toSet
+      assert(ids == Set(1L))
+    } finally q.stop()
+  }
+
+  test("countMinTable composes onto a stream: sketch accumulates across batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    // the batch operator IS the streaming operator: a groupBy aggregate
+    // in update mode; the d*w-row sketch is the only state
+    val sketch = graft.ops.Sketches.countMinTable(
+      mem.toDF().toDF("tok"), "tok", d = 2, w = 16, portableHashing = true)
+    val q = sketch.writeStream.format("memory").queryName("cms_stream")
+      .outputMode("update").start()
+    try {
+      mem.addData("x", "x", "y")
+      q.processAllAvailable()
+      mem.addData("x")
+      q.processAllAvailable()
+      // last update for x's buckets must read 3 (2 + 1 across batches)
+      val batchTotals = spark.table("cms_stream").collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
+      val est = graft.ops.Sketches.countMinEstimates(
+          Seq("x", "y").toDF("tok"), "tok", d = 2, w = 16, portableHashing = true)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // x's buckets accumulated all 3 x's across batches (a colliding
+      // y may add 1 — the CM overcount — never subtract)
+      val xBuckets = graft.ops.Sketches.countMinTable(
+          Seq("x").toDF("tok"), "tok", d = 2, w = 16, portableHashing = true)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      xBuckets.foreach(b => assert(batchTotals(b) >= 3L && batchTotals(b) <= 4L))
+      assert(est.keySet == Set("x", "y")) // probe machinery intact
+    } finally q.stop()
+  }
+
+  test("compressionRatio gates a stream (stateless mapPartitions, append mode)") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val gated = graft.ops.TextAnalysis.compressionRatio(
+        mem.toDF().toDF("doc_id", "text"), "doc_id", "text")
+      .filter(org.apache.spark.sql.functions.col("ratio_micro") > 100000L)
+    val q = gated.writeStream.format("memory").queryName("compress_gate")
+      .outputMode("append").start()
+    try {
+      mem.addData((1L, "all work and no play " * 300), // boilerplate: gated out
+        (2L, "a genuinely varied sentence with many different words inside"))
+      q.processAllAvailable()
+      val kept = spark.table("compress_gate").collect().map(_.getLong(0)).toSet
+      assert(kept == Set(2L))
+    } finally q.stop()
+  }
+
+  test("imageFeatures runs stateless on a stream (decode per micro-batch)") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Array[Byte])]
+    val out = graft.ops.Multimodal.imageFeatures(
+      mem.toDF().toDF("doc_id", "content"), "doc_id", "content")
+    val q = out.writeStream.format("memory").queryName("img_stream")
+      .outputMode("append").start()
+    try {
+      mem.addData((1L, graft.ops.Multimodal.synthPng(1, 6, 4, 2)),
+        (2L, Array[Byte](9, 9, 9)))
+      q.processAllAvailable()
+      mem.addData((3L, graft.ops.Tiff.synth(3, 6, 4)))
+      q.processAllAvailable()
+      val rows = spark.table("img_stream").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("decoded")).toMap
+      assert(rows == Map(1L -> true, 2L -> false, 3L -> true))
+    } finally q.stop()
   }
 }

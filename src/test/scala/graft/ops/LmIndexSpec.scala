@@ -112,73 +112,6 @@ class LmIndexSpec extends SparkTestBase with graft.TempDirs {
     }
   }
 
-  test("pplScoreStream: unpruned streaming scores == batch loaded-model scores") {
-    implicit val sqlCtx = spark.sqlContext
-    val (tbl, _) = mkCorpus(train)
-    val idx = tempDir("graft_lmidx_stream").toString
-    LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamOps.pplScoreStream(
-      mem.toDF().toDF("doc_id", "text"), "text", tbl, idx)
-    val q = out.writeStream.format("memory").queryName("ppl_scores")
-      .outputMode("append").start()
-    try {
-      // the edge docs pin Spark-vs-Java tokenization parity: Spark
-      // trim strips ONLY spaces (trailing \n / leading \t survive into
-      // the split) and Spark split keeps trailing empty tokens — a
-      // Java trim/limit-0 split scores these docs differently
-      val edges = Seq(18L -> "   ", 19L -> "m n o\n", 20L -> "\tm n o",
-        21L -> "m  n o",
-        // 22/23 pin LOCALE parity too (r13 advisory): Spark lower()
-        // ASCII-fast-paths all-ASCII strings but routes any string
-        // with a non-ASCII char through default-locale toLowerCase —
-        // the driver replica must take the same branch on the same
-        // input (İ lowercases to i + combining dot; final Σ is
-        // context-sensitive), or the stream diverges from the batch
-        22L -> "İSTANBUL Iı MİX", 23L -> "ΟΔΟΣ ΑΣ m")
-      mem.addData(scored: _*)
-      mem.addData(17L -> null)
-      mem.addData(edges: _*)
-      q.processAllAvailable()
-      val got = spark.table("ppl_scores").collect().map(r =>
-        r.getLong(0) -> (if (r.isNullAt(2)) null
-          else ((r.getLong(2), r.getLong(3), r.getLong(4))))).toMap
-      // null text annotates NULL (pass through, don't drop)
-      assert(got(17L) == null)
-      val batch = rows(LmIndex.scoreMknIndexed(spark,
-        (scored ++ edges).toDF("doc_id", "text"),
-        "doc_id", "text", tbl, idx))
-      assert((scored ++ edges).map(_._1).forall(id => got(id) == batch(id)),
-        s"stream != batch: $got vs $batch")
-    } finally q.stop()
-    CachedRelations.releaseAll()
-    // pruned to almost nothing: every doc still scores finitely (the
-    // discount fallback keeps all probabilities positive), and the
-    // continuation-floor B re-derives from the PRUNED bigram table
-    // (r13 advisory) — one surviving bigram type means b == 1
-    val pruned = LmIndex.loadMknLocal(spark, tbl, idx, "text", maxTypes = 1)
-    assert(pruned.b == 1L, s"pruned B must come from the pruned table, got ${pruned.b}")
-    for ((_, t) <- scored) {
-      val (n, s, a) = pruned.scoreDoc(LmIndex.sparkTokens(t))
-      assert(n > 0 && s >= 0 && a >= 0)
-    }
-  }
-
-  test("sparkTokens replicates split(lower(trim(text)), \\s+) incl. non-ASCII locale path") {
-    val fixtures = Seq(
-      "Hello WORLD", "  A  B ", "m n o\n", "\tX Y", "", "   ",
-      "İSTANBUL STREET", "Iı İi", "ΟΔΟΣ ΑΣ", "ẞ STRASSE ß",
-      "CAFÉ NOIR", "ǄUR Ǆ", "MIXED ascii ONLY I")
-    val viaSpark = fixtures.toDF("t")
-      .select(split(lower(trim(col("t"))), "\\s+").as("toks"))
-      .collect().map(_.getSeq[String](0).toArray.toSeq)
-    val viaDriver = fixtures.map(LmIndex.sparkTokens(_).toSeq)
-    fixtures.indices.foreach { i =>
-      assert(viaDriver(i) == viaSpark(i),
-        s"'${fixtures(i)}': driver ${viaDriver(i)} != spark ${viaSpark(i)}")
-    }
-  }
-
   test("stamp escapes quotes/backslashes and verify distinguishes unparseable from missing") {
     // a textCol with JSON-hostile characters round-trips the stamp
     val dir = tempDir("graft_lmidx_esc_tbl").toString
@@ -217,42 +150,6 @@ class LmIndexSpec extends SparkTestBase with graft.TempDirs {
     LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
     assert(LmIndex.readMeta(spark, idx).exists(_.tableFp == fpBefore),
       "stamp must carry the fingerprint captured BEFORE the fit read data")
-  }
-
-  test("pplBandStream: static per-source cutoffs band the stream like the batch rule") {
-    implicit val sqlCtx = spark.sqlContext
-    val (tbl, _) = mkCorpus(train)
-    val idx = tempDir("graft_lmidx_band").toString
-    LmIndex.writeMknIndex(spark, tbl, idx, "doc_id", "text")
-    // batch scores of the same docs → value-based cutoffs for source s
-    val batch = rows(LmIndex.scoreMknIndexed(spark,
-      scored.toDF("doc_id", "text"), "doc_id", "text", tbl, idx))
-    val nlls = scored.map { case (id, _) => batch(id)._3 }.sorted
-    val (headMax, midMax) = (nlls(1), nlls(3)) // 2/2/2 split of six docs
-    val cutoffs = Seq(("s", headMax, midMax))
-      .toDF("source", "head_max_micro", "middle_max_micro")
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
-    val out = graft.streaming.StreamOps.pplBandStream(
-      mem.toDF().toDF("doc_id", "text", "source"), "text", "source",
-      cutoffs, tbl, idx)
-    val q = out.writeStream.format("memory").queryName("ppl_bands")
-      .outputMode("append").start()
-    try {
-      mem.addData(scored.map { case (id, t) => (id, t, "s") }: _*)
-      mem.addData((90L, "m n o", "unknown_src"), (91L, null, "s"))
-      q.processAllAvailable()
-      val got = spark.table("ppl_bands").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("ppl_band")).toMap
-      for ((id, _) <- scored) {
-        val nll = batch(id)._3
-        val expect = if (nll <= headMax) "head"
-          else if (nll <= midMax) "middle" else "tail"
-        assert(got(id) == expect, s"doc $id: ${got(id)} != $expect")
-      }
-      assert(got(90L) == null, "unknown source must band NULL")
-      assert(got(91L) == null, "null text must band NULL")
-    } finally q.stop()
-    CachedRelations.releaseAll()
   }
 
   test("a write that dies before the stamp leaves an artifact that fails verification") {

@@ -482,6 +482,69 @@ class OpsSpec extends SparkTestBase with graft.TempDirs {
     assert(mx == Map("a" -> 1L, "b" -> 3L))
   }
 
+  test("dedupExtremeStream ordering: CompareValues classes, ties keep the incumbent") {
+    import Dedup.strictlyBetter
+    // numeric strings compare as float64, never lexicographically
+    assert(strictlyBetter("10", "9", isString = true, max = true))
+    assert(!strictlyBetter("9", "10", isString = true, max = true))
+    assert(strictlyBetter("9", "10", isString = true, max = false))
+    // nil smallest: wins min, loses max
+    assert(strictlyBetter(null, "0", isString = true, max = false))
+    assert(!strictlyBetter(null, "zebra", isString = true, max = true))
+    // non-numeric strings rank above all numerics, lex among themselves
+    assert(strictlyBetter("apple", "999", isString = true, max = true))
+    assert(strictlyBetter("banana", "apple", isString = true, max = true))
+    assert(strictlyBetter("999", "apple", isString = true, max = false))
+    // float-equal numeric strings ("1.0" vs "1") are a TIE in both
+    // directions -> the earlier arrival stays
+    assert(!strictlyBetter("1.0", "1", isString = true, max = true))
+    assert(!strictlyBetter("1.0", "1", isString = true, max = false))
+    // native types: natural order, nil smallest
+    assert(strictlyBetter(java.lang.Long.valueOf(5), java.lang.Long.valueOf(3),
+      isString = false, max = true))
+    assert(strictlyBetter(null, java.lang.Long.valueOf(3), isString = false, max = false))
+    assert(!strictlyBetter(null, java.lang.Long.valueOf(3), isString = false, max = true))
+    assert(strictlyBetter(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), isString = false, max = true))
+  }
+
+  test("streaming comparator parity: random mixed-class strings pick the SAME row as batch byExtreme") {
+    // CompareValues now lives in two implementations — the batch
+    // Window ordering (Dedup.byExtreme) and the streaming JVM fold
+    // (strictlyBetter). A randomized corpus of every value class
+    // (nil / int strings / float strings / non-numeric / digit-prefixed
+    // non-numeric) pins them to each other: for every key and both
+    // extremes, the streaming strict-improvement fold in arrival order
+    // must select exactly the row the batch operator keeps.
+    import spark.implicits._
+    val rnd = new scala.util.Random(4211)
+    val classes: Seq[Int => String] = Seq(
+      _ => null,
+      i => (rnd.nextInt(200) - 100).toString,
+      i => f"${rnd.nextDouble() * 20 - 10}%.3f",
+      i => Seq("apple", "pear", "zebra", "Kiwi")(rnd.nextInt(4)),
+      i => s"${rnd.nextInt(9)}x${rnd.nextInt(9)}") // digit-prefixed non-numeric
+    val rows = (0 until 400).map { i =>
+      (i.toLong, s"k${rnd.nextInt(25)}", classes(rnd.nextInt(classes.size))(i))
+    }
+    val df = rows.toDF("arrival", "g", "s")
+    for (max <- Seq(true, false)) {
+      val batch = Dedup.byExtreme(
+        Dedup.withIngestSeq(df.orderBy("arrival").coalesce(1)),
+        Seq("g"), "s", max = max)
+        .collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+      val stream = rows.groupBy(_._2).map { case (g, rs) =>
+        var cur: (Long, String, String) = null
+        rs.sortBy(_._1).foreach { r =>
+          if (cur == null || Dedup.strictlyBetter(r._3, cur._3, isString = true, max = max))
+            cur = r
+        }
+        g -> cur._1
+      }
+      assert(stream == batch, s"max=$max")
+    }
+  }
+
   test("ingest order is stable across multi-file reads (file path, block, row)") {
     import spark.implicits._
     val dir = tempDir("graft-seq").toString
