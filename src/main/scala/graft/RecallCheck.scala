@@ -25,8 +25,16 @@ object RecallCheck {
     * least this fraction of the brute-force top-k pairs. */
   val floor = 0.8
 
-  /** recall@k per production ANN path + |truth|. */
+  /** recall@k per production ANN path + |truth|. The persisted-index
+    * paths build into a work dir that is deleted before this returns. */
   def headline(spark: SparkSession, dir: String, k: Int = 3): (Map[String, Double], Int) = {
+    val work = java.nio.file.Files.createTempDirectory("graft_recall_")
+    try headlineIn(spark, dir, k, work.toString)
+    finally graft.io.Writers.deleteTree(work.toFile)
+  }
+
+  private def headlineIn(spark: SparkSession, dir: String, k: Int,
+                         work: String): (Map[String, Double], Int) = {
     val e = graft.queries.Queries.t(spark, dir, "embeddings")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select(col("qid"), col("nid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -49,7 +57,7 @@ object RecallCheck {
         // stamped artifact, probe through the verified load — gated at
         // the same floor as the fit it must row-match
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_recall_idx_${math.abs(dir.hashCode)}"
+        val idx = s"$work/ivf_idx"
         graft.ops.AnnIndex.writeIvfIndex(spark, e, tbl, idx, "vec_id", "embedding",
           dims = 64, nlist = 16)
         rec(pairs(graft.ops.AnnIndex.ivfLookupIndexed(spark, e, tbl, idx,
@@ -59,7 +67,7 @@ object RecallCheck {
         // the persisted-LSH path (q_llm_ann_lsh_persist_check pins it
         // row-exact vs lshTopK; this row gates its recall like the rest)
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_recall_idx_lsh_${math.abs(dir.hashCode)}"
+        val idx = s"$work/lsh_idx"
         graft.ops.AnnIndex.writeLshIndex(spark, e, tbl, idx, "vec_id", "embedding",
           dims = 64, planes = 5, tables = 6)
         rec(pairs(graft.ops.AnnIndex.lshTopKIndexed(spark, e, tbl, idx, k)))

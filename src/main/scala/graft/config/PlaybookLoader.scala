@@ -287,6 +287,10 @@ object Validator {
                 org.apache.spark.unsafe.types.UTF8String.fromString(v))
               if (iv == null)
                 errs += s"streaming deduplication.$k '$v' unparseable (use e.g. '30 seconds', '5 minutes')"
+              // the quiet period is a fixed span of milliseconds
+              // (Dedup.intervalMs); a month has no fixed length
+              else if (k == "quietPeriod" && iv.months != 0)
+                errs += s"streaming deduplication.quietPeriod '$v' has a month or year part, which has no fixed length (use days, e.g. '30 days')"
             }
         }
       }

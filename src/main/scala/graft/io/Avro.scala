@@ -194,30 +194,13 @@ object Avro {
     // Swap via a backup rename, not a delete: if the final rename fails
     // the old destination is RESTORED and the committed output survives
     // in staging — both copies outlive any single failed filesystem op,
-    // and the error names where the data is.
+    // and the error names where the data is. The write is COMMITTED
+    // once the swap lands, so a failed cleanup of the old copy is
+    // logged, not thrown (a caller retrying on exception would re-run
+    // the whole export over data that already landed).
     val backup = new org.apache.hadoop.fs.Path(
       dest.file + ".spark-old-" + java.util.UUID.randomUUID().toString.take(8))
-    val hadOld = fs.exists(hPath)
-    if (hadOld && !fs.rename(hPath, backup)) throw new java.io.IOException(
-      s"avro sink: could not move existing $hPath aside for the swap; " +
-        s"the committed output is preserved at $staging")
-    if (!fs.rename(staging, hPath)) {
-      val restored = hadOld && fs.rename(backup, hPath)
-      throw new java.io.IOException(
-        s"avro sink: rename $staging -> $hPath failed; the committed output " +
-          s"is preserved at $staging" +
-          (if (hadOld && restored) s" and the previous destination was restored"
-           else if (hadOld) s" and the previous destination is preserved at $backup"
-           else ""))
-    }
-    // the write is COMMITTED once the swap lands — a failed cleanup of
-    // the stale backup must not convert success into failure (a caller
-    // retrying on exception would re-run the whole export over data
-    // that already landed); warn loudly and leave the path in the log
-    if (hadOld && !fs.delete(backup, true))
-      System.err.println(
-        s"[graft.io.Avro] WARN swap succeeded but the previous copy at " +
-          s"$backup could not be removed — delete it manually")
+    graft.ops.StampedArtifact.swap(fs, Seq(graft.ops.StampedArtifact.Swap(staging, hPath, backup)))
   }
 
   private def rowToRecord(row: Row, st: StructType, schema: Schema): GenericRecord = {

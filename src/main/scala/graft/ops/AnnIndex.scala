@@ -12,15 +12,15 @@ import org.apache.spark.sql.functions._
  * hours while a probe batch costs seconds, so the index must be a
  * durable artifact: built once, stamped against the exact data files
  * it indexed, verified coherent before every probe, rebuilt loudly
- * when the table changes. This is [[Layout]]'s bloom side-index
- * lifecycle (fingerprint stamp → verified read → loud STALE → rebuild
- * heals) applied to the ANN family.
+ * when the table changes. This is the [[StampedArtifact]] protocol
+ * (fingerprint stamp → verified read → loud STALE → rebuild heals)
+ * applied to the ANN family.
  *
  * Index layout under `indexPath`:
- *  - `_graft_ann_meta.json` — kind + fit params + the table's
- *    file-listing fingerprint ([[Layout.tableFingerprint]]). Written
- *    LAST (and deleted FIRST on rebuild), so a half-written index
- *    never carries a valid stamp.
+ *  - the `ann` stamp ([[StampedArtifact]]) — kind + fit params + the
+ *    table's file-listing fingerprint ([[Layout.tableFingerprint]]).
+ *    Written LAST (and deleted FIRST on rebuild), so a half-written
+ *    index never carries a valid stamp.
  *  - `centroids/` (ivf, pq) — (ci, cv): the coarse-quantizer cells,
  *    nlist rows. Probes collect these (bounded) and inline them as
  *    plan literals, exactly like the in-session fit.
@@ -75,42 +75,17 @@ object AnnIndex {
     * rebuild once. binary/lsh fits are untouched (fit = 1). */
   private[ops] val quantizerFitVersion = 2
 
-  private val metaName = "_graft_ann_meta.json"
-
-  private def fsFor(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  private val stamp = StampedArtifact.ann
 
   private def writeMeta(spark: SparkSession, indexPath: String,
-                        meta: AnnIndexMeta): Unit = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val partsJson = meta.parts.map { case (pth, f) =>
-      s"""{"path":"${StampJson.esc(pth)}","fp":"${StampJson.esc(f)}"}"""
-    }.mkString("[", ",", "]")
-    val json =
-      s"""{"kind":"${StampJson.esc(meta.kind)}","id_col":"${StampJson.esc(meta.idCol)}",""" +
-        s""""vec_col":"${StampJson.esc(meta.vecCol)}",""" +
-        s""""dims":${meta.dims},"nlist":${meta.nlist},"m":${meta.m},"ksub":${meta.ksub},""" +
-        s""""planes":${meta.planes},"tables":${meta.tables},""" +
-        s""""table_fp":"${StampJson.esc(meta.tableFp)}",""" +
-        s""""fit":${meta.fit},""" +
-        s""""version":${meta.version},"parts":$partsJson}"""
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, metaName), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                        meta: AnnIndexMeta): Unit =
+    stamp.write(spark, indexPath, metaJson(meta))
 
-  /** Raw stamp text; None if the stamp FILE is absent (distinct from
-    * present-but-unparseable, which [[verify]] reports separately). */
-  private def stampText(spark: SparkSession, indexPath: String): Option[String] = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val mp = new org.apache.hadoop.fs.Path(p, metaName)
-    if (!fs.exists(mp)) return None
-    val in = fs.open(mp)
-    Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close())
-  }
+  private def metaJson(meta: AnnIndexMeta): String = StampJson.obj(
+    "kind" -> meta.kind, "id_col" -> meta.idCol, "vec_col" -> meta.vecCol,
+    "dims" -> meta.dims, "nlist" -> meta.nlist, "m" -> meta.m, "ksub" -> meta.ksub,
+    "planes" -> meta.planes, "tables" -> meta.tables, "table_fp" -> meta.tableFp,
+    "fit" -> meta.fit, "version" -> meta.version, "parts" -> meta.parts)
 
   private def parseMeta(text: String): Option[AnnIndexMeta] = for {
     kind <- StampJson.strField(text, "kind")
@@ -130,30 +105,26 @@ object AnnIndex {
 
   /** Read an index's coherence stamp; None if absent (not produced by
     * a writer here, or a write that died before the stamp) or
-    * unparseable. Fixed schema — the same deliberate micro-matcher as
-    * the bloom sidecar (no JSON library for an 8-field file). */
+    * unparseable. */
   def readMeta(spark: SparkSession, indexPath: String): Option[AnnIndexMeta] =
-    stampText(spark, indexPath).flatMap(parseMeta)
+    stamp.read(spark, indexPath).flatMap(parseMeta)
+
+  private def builder(kind: String) = s"AnnIndex.write${kind.capitalize}Index"
 
   /**
    * Verify the index at `indexPath` is coherent with the live table
    * BEFORE any probe is planned through it. Throws
    * IllegalStateException with a precise reason when the index (a)
-   * has no stamp, (b) is a different kind / indexes different
-   * columns or dims than the probe asks for, or (c) is STALE — the
-   * table's data files changed since the build, so persisted cell
-   * assignments and codes describe rows that moved, vanished, or
-   * never got indexed. One metadata-scale listing; no data read.
+   * has no stamp, (b) is a different kind or coarse-quantizer fit
+   * revision than the probe asks for, or (c) is STALE — the table's
+   * (or an appended part's) data files changed since the build, so
+   * persisted cell assignments and codes describe rows that moved,
+   * vanished, or never got indexed. One metadata-scale listing per
+   * table; no data read.
    */
   def verify(spark: SparkSession, tablePath: String, indexPath: String,
              kind: String): AnnIndexMeta = {
-    val text = stampText(spark, indexPath).getOrElse(throw new IllegalStateException(
-      s"ANN index at $indexPath has no $metaName coherence stamp — rebuild it " +
-        s"with AnnIndex.write${kind.capitalize}Index($tablePath, $indexPath, ...)"))
-    val meta = parseMeta(text).getOrElse(throw new IllegalStateException(
-      s"ANN index at $indexPath has a $metaName stamp that does not parse " +
-        s"(truncated write or a foreign writer) — rebuild it with " +
-        s"AnnIndex.write${kind.capitalize}Index($tablePath, $indexPath, ...)"))
+    val meta = stamp.load(spark, indexPath, tablePath, builder(kind))(parseMeta)
     if (meta.kind != kind) throw new IllegalStateException(
       s"ANN index at $indexPath is kind '${meta.kind}', not '$kind' — wrong index " +
         "for this probe")
@@ -166,52 +137,9 @@ object AnnIndex {
       s"ANN index at $indexPath was built by coarse-quantizer fit " +
         s"v${meta.fit}; this engine probes fit v$expectFit — cell assignments " +
         s"no longer match the in-session quantizer. Rebuild with " +
-        s"AnnIndex.write${kind.capitalize}Index($tablePath, $indexPath, ...).")
-    val live = Layout.tableFingerprint(spark, tablePath)
-    if (live != meta.tableFp) throw new IllegalStateException(
-      s"ANN index at $indexPath is STALE: the data files of $tablePath changed " +
-        s"since the index was built (listing fingerprint ${meta.tableFp.take(12)}… " +
-        s"at build vs ${live.take(12)}… now). Cell assignments and codes no longer " +
-        s"describe the live rows — rebuild with AnnIndex.write${kind.capitalize}Index.")
-    // every appended delta must ALSO still be the files it was when it
-    // was appended — the index covers base ∪ parts
-    meta.parts.foreach { case (partPath, partFp) =>
-      val pLive = Layout.tableFingerprint(spark, partPath)
-      if (pLive != partFp) throw new IllegalStateException(
-        s"ANN index at $indexPath is STALE: appended delta table $partPath " +
-          s"changed since it was appended (listing fingerprint ${partFp.take(12)}… " +
-          s"at append vs ${pLive.take(12)}… now) — rebuild with " +
-          s"AnnIndex.write${kind.capitalize}Index, or re-append from a fresh delta.")
-    }
+        s"${builder(kind)}($tablePath, $indexPath, ...).")
+    stamp.checkFresh(spark, indexPath, tablePath, meta.tableFp, meta.parts, builder(kind))
     meta
-  }
-
-  /** Invalidate any existing stamp, so a rebuild that dies midway
-    * leaves an index that FAILS verification instead of one whose old
-    * stamp still matches an unchanged table over half-new codes. */
-  private def dropStamp(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val mp = new org.apache.hadoop.fs.Path(p, metaName)
-    if (fs.exists(mp) && !fs.delete(mp, false)) throw new java.io.IOException(
-      s"could not remove the existing ANN index stamp $mp before rebuild")
-  }
-
-  /** Fingerprint-window guard shared by the three writers: the listing
-    * is captured BEFORE the fit reads a byte and re-checked before the
-    * stamp lands, so a table that changes mid-build can never end up
-    * certified coherent against files the fit never saw. Returns the
-    * start fingerprint to stamp. */
-  private def fpWindow[A](spark: SparkSession, tablePath: String)
-                         (build: => A): String = {
-    val fpAtStart = Layout.tableFingerprint(spark, tablePath)
-    build
-    val fpAtEnd = Layout.tableFingerprint(spark, tablePath)
-    if (fpAtEnd != fpAtStart) throw new IllegalStateException(
-      s"table $tablePath changed WHILE the ANN index build was running " +
-        s"(listing fingerprint ${fpAtStart.take(12)}… at start vs " +
-        s"${fpAtEnd.take(12)}… now) — no stamp was written; re-run the " +
-        "build on a quiet table.")
-    fpAtStart
   }
 
   private def prepped(table: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -244,8 +172,8 @@ object AnnIndex {
                     indexPath: String, idCol: String, vecCol: String,
                     dims: Int, nlist: Int = 16,
                     maxFitVectors: Long = 100000L): Unit = {
-    dropStamp(spark, indexPath)
-    val fp = fpWindow(spark, tablePath) {
+    stamp.drop(spark, indexPath)
+    val (fp, _) = stamp.fitWindow(spark, tablePath, "build") { _ =>
       val v = prepped(table, idCol, vecCol)
       val (assigned, cents) = Similarity.ivfFit(v, dims, nlist, maxFitVectors)
       assigned.select(col("id"), col("v"), Similarity.norm(col("v")).as("nrm"), col("cell"))
@@ -327,54 +255,53 @@ object AnnIndex {
                      indexPath: String, tablePath: String,
                      driftFactor: Double = 4.0,
                      maxDriftSample: Long = 20000L): Unit = {
-    val meta = appendGuard(spark, indexPath, tablePath, deltaPath, "ivf")
-    val deltaFpAtStart = Layout.tableFingerprint(spark, deltaPath)
-    val cents = loadCentroids(spark, indexPath)
-    val centDf = spark.createDataFrame(
-      cents.zipWithIndex.map { case (c, i) =>
-        (i, c.toSeq, c.map(x => x * x).sum) }.toSeq)
-      .toDF("cell", "cv", "cn2")
-    val v = delta.filter(col(meta.vecCol).isNotNull)
-      .select(col(meta.idCol).as("id"),
-        col(meta.vecCol).cast("array<double>").as("v"))
-    // nearest existing cell through the ONE shared metric
-    // ([[Similarity.cellRank]] — the same ranking every probe uses):
-    // entirely row-local, so duplicate delta ids each keep their own
-    // row (writeIvfIndex indexes every row, and the appended==rebuilt
-    // equivalence needs append to do the same — a per-id window here
-    // silently collapsed them, r14 review finding). The true squared
-    // distance |v|² + cdist feeds the drift statistic.
-    val best = element_at(Similarity.cellRank(col("v"), cents), 1)
-    val assigned = v
-      .select(col("id"), col("v"), best.getField("ci").as("cell"),
-        (Similarity.dot(col("v"), col("v")) + best.getField("cdist")).as("_sqdist"))
-      .persist()
-    try {
-      val deltaStats = assigned.agg(count(lit(1)).as("n"),
-        avg(col("_sqdist")).as("d")).collect().head
-      require(deltaStats.getLong(0) > 0,
-        s"delta table $deltaPath has no non-null vectors — nothing to append")
-      // baseline: distance of the stored codes to their OWN cell (the
-      // definition of quantization distortion — |v-c|² expanded, same
-      // algebra as cellRank's metric)
-      val codes = spark.read.parquet(s"$indexPath/codes")
-      driftCheck(deltaPath, deltaStats.getDouble(1), driftFactor,
-        baseline = codes.join(centDf, "cell"),
-        distCol = Similarity.dot(col("v"), col("v")) + col("cn2") -
-          lit(2.0) * Similarity.dot(col("v"), col("cv")),
-        dims = meta.dims, maxDriftSample = maxDriftSample,
-        noRowsMsg = s"ANN index at $indexPath has no code rows — rebuild with " +
-          "AnnIndex.writeIvfIndex before appending",
-        rebuildHint = "rebuild with AnnIndex.writeIvfIndex (scaled nlist)")
-      // stamp drops FIRST: a death between here and the new stamp
-      // leaves an index that fails verification, never one whose old
-      // stamp certifies half-appended codes
-      dropStamp(spark, indexPath)
-      assigned.select(col("id"), col("v"),
-          Similarity.norm(col("v")).as("nrm"), col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
-    } finally assigned.unpersist(blocking = false)
-    sealAppend(spark, indexPath, deltaPath, deltaFpAtStart, meta)
+    appended(spark, indexPath, tablePath, deltaPath, "ivf") { meta =>
+      val cents = loadCentroids(spark, indexPath)
+      val centDf = spark.createDataFrame(
+        cents.zipWithIndex.map { case (c, i) =>
+          (i, c.toSeq, c.map(x => x * x).sum) }.toSeq)
+        .toDF("cell", "cv", "cn2")
+      val v = delta.filter(col(meta.vecCol).isNotNull)
+        .select(col(meta.idCol).as("id"),
+          col(meta.vecCol).cast("array<double>").as("v"))
+      // nearest existing cell through the ONE shared metric
+      // ([[Similarity.cellRank]] — the same ranking every probe uses):
+      // entirely row-local, so duplicate delta ids each keep their own
+      // row (writeIvfIndex indexes every row, and the appended==rebuilt
+      // equivalence needs append to do the same — a per-id window here
+      // silently collapsed them, r14 review finding). The true squared
+      // distance |v|² + cdist feeds the drift statistic.
+      val best = element_at(Similarity.cellRank(col("v"), cents), 1)
+      val assigned = v
+        .select(col("id"), col("v"), best.getField("ci").as("cell"),
+          (Similarity.dot(col("v"), col("v")) + best.getField("cdist")).as("_sqdist"))
+        .persist()
+      try {
+        val deltaStats = assigned.agg(count(lit(1)).as("n"),
+          avg(col("_sqdist")).as("d")).collect().head
+        require(deltaStats.getLong(0) > 0,
+          s"delta table $deltaPath has no non-null vectors — nothing to append")
+        // baseline: distance of the stored codes to their OWN cell (the
+        // definition of quantization distortion — |v-c|² expanded, same
+        // algebra as cellRank's metric)
+        val codes = spark.read.parquet(s"$indexPath/codes")
+        driftCheck(deltaPath, deltaStats.getDouble(1), driftFactor,
+          baseline = codes.join(centDf, "cell"),
+          distCol = Similarity.dot(col("v"), col("v")) + col("cn2") -
+            lit(2.0) * Similarity.dot(col("v"), col("cv")),
+          dims = meta.dims, maxDriftSample = maxDriftSample,
+          noRowsMsg = s"ANN index at $indexPath has no code rows — rebuild with " +
+            "AnnIndex.writeIvfIndex before appending",
+          rebuildHint = "rebuild with AnnIndex.writeIvfIndex (scaled nlist)")
+        // stamp drops FIRST: a death between here and the new stamp
+        // leaves an index that fails verification, never one whose old
+        // stamp certifies half-appended codes
+        stamp.drop(spark, indexPath)
+        assigned.select(col("id"), col("v"),
+            Similarity.norm(col("v")).as("nrm"), col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
+      } finally assigned.unpersist(blocking = false)
+    }
   }
 
   /** Shared drift refusal for the append family: the delta's mean
@@ -407,47 +334,29 @@ object AnnIndex {
           s"data; $rebuildHint instead of appending.")
   }
 
-  /** Shared append-entry guard: an append needs an EXISTING verified
-    * index of the right kind (no silent v0 restart — appending to an
-    * unstamped path refuses with a build hint instead of quietly
-    * creating a fresh index), and each delta may be appended once.
-    * Paths compare FS-QUALIFIED (trailing slashes, `file:` prefixes,
-    * relative forms all normalize), so an alias of the base table or
-    * of an already-appended delta cannot slip duplicate codes past
-    * the guard into an index that still verifies. */
-  private def appendGuard(spark: SparkSession, indexPath: String,
-                          tablePath: String, deltaPath: String,
-                          kind: String): AnnIndexMeta = {
-    val meta = stampText(spark, indexPath) match {
-      case None => throw new IllegalStateException(
-        s"ANN index at $indexPath has no $metaName coherence stamp — an append " +
-          "needs an existing verified index (no silent v0 restart); build one " +
-          s"first with AnnIndex.write${kind.capitalize}Index($tablePath, $indexPath, ...)")
-      case Some(_) => verify(spark, tablePath, indexPath, kind)
-    }
+  /** The append lifecycle shared by the four kinds: an append needs an
+    * EXISTING verified index of the right kind (no silent v0 restart),
+    * and each delta may be appended once — paths compare FS-QUALIFIED
+    * (trailing slashes, `file:` prefixes, relative forms all
+    * normalize), so an alias of the base table or of an
+    * already-appended delta cannot slip duplicate codes past the guard
+    * into an index that still verifies. `body` runs inside the delta's
+    * fingerprint window and drops the stamp before its first code
+    * lands, so every death window leaves a loudly-unverifiable index
+    * that a rebuild heals; the new part is stamped last. */
+  private def appended(spark: SparkSession, indexPath: String,
+                       tablePath: String, deltaPath: String, kind: String)
+                      (body: AnnIndexMeta => Unit): Unit = {
+    stamp.requireForAppend(spark, indexPath, tablePath, builder(kind))
+    val meta = verify(spark, tablePath, indexPath, kind)
     def canon(p: String): String = Layout.qualifiedPath(spark, p)
     val deltaC = canon(deltaPath)
     require(deltaC != canon(tablePath) && !meta.parts.exists(x => canon(x._1) == deltaC),
       s"delta table $deltaPath is already part of the index at $indexPath — " +
         "each append must bring a NEW table (re-appending would duplicate codes)")
-    meta
-  }
-
-  /** Shared append-exit seal: re-check the delta listing is unchanged
-    * since the append started (the fit-window discipline), then stamp
-    * the new part. The stamp was dropped before any code landed, so
-    * every death window inside an append leaves a loudly-unverifiable
-    * index that a rebuild heals. */
-  private def sealAppend(spark: SparkSession, indexPath: String,
-                         deltaPath: String, deltaFpAtStart: String,
-                         meta: AnnIndexMeta): Unit = {
-    val deltaFpAtEnd = Layout.tableFingerprint(spark, deltaPath)
-    if (deltaFpAtEnd != deltaFpAtStart) throw new IllegalStateException(
-      s"delta table $deltaPath changed WHILE the append was running — no stamp " +
-        "was written; the index fails verification until rebuilt or re-appended " +
-        "from a quiet delta.")
+    val (deltaFp, _) = stamp.fitWindow(spark, deltaPath, "append")(_ => body(meta))
     writeMeta(spark, indexPath, meta.copy(version = meta.version + 1,
-      parts = meta.parts :+ (deltaPath, deltaFpAtStart)))
+      parts = meta.parts :+ (deltaPath, deltaFp)))
   }
 
   /**
@@ -456,18 +365,16 @@ object AnnIndex {
    * probe-side scan cost is file-count-shaped — so, like the near-dup
    * state chain's compaction, the lifecycle periodically rewrites the
    * codes into one file per cell (a hash exchange on the cell id) with
-   * rows, stamp parts, and probe results unchanged. Swap discipline is
-   * the Avro sink's: stage → move the live dir aside → rename staging
-   * in → restore the old dir if the rename fails (the data is never in
-   * only a half-written state); the stamp drops before the swap and
-   * re-lands after, so any death window leaves a loudly-unverifiable
-   * index whose data is still intact in a named directory.
+   * rows, stamp parts, and probe results unchanged. The rewrite stages
+   * beside the live codes and lands through
+   * [[StampedArtifact.swapStamped]]: the data is never in only a
+   * half-written state, and any death window leaves a
+   * loudly-unverifiable index whose data is intact in a named
+   * directory.
    */
   def compactIvfIndex(spark: SparkSession, indexPath: String,
                       tablePath: String): Unit = {
-    val meta = verify(spark, tablePath, indexPath, "ivf")
-    compactCodesSwap(spark, indexPath, meta, "compactIvfIndex",
-      "AnnIndex.writeIvfIndex")(cellStaging(spark, indexPath))
+    compacted(spark, indexPath, tablePath, "ivf")(cellStaging(spark, indexPath))
   }
 
   /**
@@ -478,9 +385,7 @@ object AnnIndex {
    */
   def compactPqIndex(spark: SparkSession, indexPath: String,
                      tablePath: String): Unit = {
-    val meta = verify(spark, tablePath, indexPath, "pq")
-    compactCodesSwap(spark, indexPath, meta, "compactPqIndex",
-      "AnnIndex.writePqIndex")(cellStaging(spark, indexPath))
+    compacted(spark, indexPath, tablePath, "pq")(cellStaging(spark, indexPath))
   }
 
   /**
@@ -493,9 +398,7 @@ object AnnIndex {
    */
   def compactBinaryIndex(spark: SparkSession, indexPath: String,
                          tablePath: String): Unit = {
-    val meta = verify(spark, tablePath, indexPath, "binary")
-    compactCodesSwap(spark, indexPath, meta, "compactBinaryIndex",
-      "AnnIndex.writeBinaryIndex")(coalescedStaging(spark, indexPath))
+    compacted(spark, indexPath, tablePath, "binary")(coalescedStaging(spark, indexPath))
   }
 
   /**
@@ -505,9 +408,7 @@ object AnnIndex {
    */
   def compactLshIndex(spark: SparkSession, indexPath: String,
                       tablePath: String): Unit = {
-    val meta = verify(spark, tablePath, indexPath, "lsh")
-    compactCodesSwap(spark, indexPath, meta, "compactLshIndex",
-      "AnnIndex.writeLshIndex")(coalescedStaging(spark, indexPath))
+    compacted(spark, indexPath, tablePath, "lsh")(coalescedStaging(spark, indexPath))
   }
 
   /** Staging rewrite for the CELL-partitioned kinds (ivf, pq): one
@@ -529,50 +430,22 @@ object AnnIndex {
     codes.coalesce(nFiles).write.mode("overwrite").parquet(staging)
   }
 
-  /** The shared compaction swap: stage the rewritten codes, drop the
-    * stamp, move the live dir aside, rename staging in, restore (and
-    * re-stamp, so a plain retry heals) if the rename fails — the data
-    * is never in only a half-written state, and every death window
-    * leaves a loudly-unverifiable index whose data is intact in a
-    * named directory. Stamps version+1 on success. */
-  private def compactCodesSwap(spark: SparkSession, indexPath: String,
-                               meta: AnnIndexMeta, retryName: String,
-                               rebuildWith: String)
-                              (writeStaging: String => Unit): Unit = {
-    val (fs, _) = fsFor(spark, indexPath)
-    val codesDir = new org.apache.hadoop.fs.Path(s"$indexPath/codes")
-    val staging = new org.apache.hadoop.fs.Path(s"$indexPath/codes_compacting")
-    val oldDir = new org.apache.hadoop.fs.Path(s"$indexPath/codes_precompact")
-    fs.delete(staging, true); fs.delete(oldDir, true)
+  /** The shared compaction: verify, stage the rewritten codes in
+    * `codes_compacting`, then [[StampedArtifact.swapStamped]] them in
+    * with `codes_precompact` as the backup — a failed rename restores
+    * and re-stamps the original codes, so a plain retry heals. Stamps
+    * version+1 on success. */
+  private def compacted(spark: SparkSession, indexPath: String, tablePath: String,
+                        kind: String)(writeStaging: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val meta = verify(spark, tablePath, indexPath, kind)
+    val staging = new Path(s"$indexPath/codes_compacting")
     writeStaging(staging.toString)
-    dropStamp(spark, indexPath)
-    if (!fs.rename(codesDir, oldDir)) {
-      // nothing moved — re-certify the untouched index so the caller
-      // can simply retry (compaction verifies at entry, so an
-      // unstamped index could NOT be healed by re-running it)
-      writeMeta(spark, indexPath, meta)
-      throw new java.io.IOException(
-        s"compaction could not move $codesDir aside — nothing changed; the " +
-          s"index was re-stamped and stays live; re-run $retryName")
-    }
-    if (!fs.rename(staging, codesDir)) {
-      if (fs.rename(oldDir, codesDir)) {
-        writeMeta(spark, indexPath, meta) // restored — re-certify for retry
-        throw new java.io.IOException(
-          s"compaction could not swap $staging into place — original codes " +
-            s"restored and re-stamped; staging preserved at $staging; re-run " +
-            retryName)
-      }
-      throw new java.io.IOException(
-        s"compaction could not swap $staging into place AND could not restore " +
-          s"$oldDir — index UNSTAMPED; the data is intact at $oldDir (originals) " +
-          s"and $staging (compacted); restore one of them to $codesDir manually, " +
-          s"or rebuild with $rebuildWith")
-    }
-    if (!fs.delete(oldDir, true))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"compaction landed but the pre-compaction codes at $oldDir could not be " +
-          "deleted — remove them manually; the live index is correct and stamped")
+    stamp.swapStamped(spark, indexPath,
+      Seq(StampedArtifact.Swap(staging, new Path(s"$indexPath/codes"),
+        new Path(s"$indexPath/codes_precompact"))),
+      previous = metaJson(meta), retry = s"AnnIndex.compact${kind.capitalize}Index",
+      rebuild = builder(kind))
     writeMeta(spark, indexPath, meta.copy(version = meta.version + 1))
   }
 
@@ -588,8 +461,8 @@ object AnnIndex {
                    dims: Int, nlist: Int = 16, m: Int = 16, ksub: Int = 32,
                    maxFitVectors: Long = 100000L): Unit = {
     require(dims % m == 0, s"dims ($dims) must divide evenly into m ($m) subspaces")
-    dropStamp(spark, indexPath)
-    val fp = fpWindow(spark, tablePath) {
+    stamp.drop(spark, indexPath)
+    val (fp, _) = stamp.fitWindow(spark, tablePath, "build") { _ =>
       val sd = dims / m
       val v = prepped(table, idCol, vecCol)
       val (assigned, cents, fitSample) =
@@ -733,80 +606,79 @@ object AnnIndex {
                     driftFactor: Double = 4.0,
                     maxDriftSample: Long = 20000L,
                     baseTable: DataFrame = null): Unit = {
-    val meta = appendGuard(spark, indexPath, tablePath, deltaPath, "pq")
-    val deltaFpAtStart = Layout.tableFingerprint(spark, deltaPath)
-    val cents = loadCentroids(spark, indexPath)
-    val v = delta.filter(col(meta.vecCol).isNotNull)
-      .select(col(meta.idCol).as("id"),
-        col(meta.vecCol).cast("array<double>").as("v"))
-    val best = element_at(Similarity.cellRank(col("v"), cents), 1)
-    val assigned = v
-      .select(col("id"), col("v"), best.getField("ci").as("cell"),
-        (Similarity.dot(col("v"), col("v")) + best.getField("cdist")).as("_sqdist"))
-      .persist()
-    try {
-      val deltaStats = assigned.agg(count(lit(1)).as("n"),
-        avg(col("_sqdist")).as("d")).collect().head
-      require(deltaStats.getLong(0) > 0,
-        s"delta table $deltaPath has no non-null vectors — nothing to append")
-      // baseline from the stamped base TABLE (pq codes carry no float
-      // vectors); `baseTable` lets the caller pass the same adapted
-      // view the writer fitted on — the raw read is the fallback and
-      // ASSUMES the files carry meta.idCol/meta.vecCol under their
-      // stored names and types (writePqIndex may have fitted on a
-      // schema-ADAPTED view; an adapted table must pass `baseTable`
-      // or the check below refuses loudly instead of throwing an
-      // unresolved-column error mid-plan — r14 advisory)
-      val baseRaw = Option(baseTable).getOrElse {
-        val raw = spark.read.parquet(tablePath)
-        // resolver semantics, not String ==: Spark's analyzer resolves
-        // column names case-insensitively by default, so an index
-        // fitted as "Embedding" over files storing "embedding" works —
-        // the guard must not refuse what the plan would resolve
-        val resolver = spark.sessionState.analyzer.resolver
-        val missing = Seq(meta.idCol, meta.vecCol)
-          .filterNot(n => raw.columns.exists(c => resolver(c, n)))
-        if (missing.nonEmpty) throw new IllegalStateException(
-          s"appendPqIndex's drift baseline read $tablePath directly but the " +
-            s"files lack column(s) ${missing.mkString("'", "', '", "'")} the " +
-            "index was fitted on — the index was built over a schema-adapted " +
-            "view; pass that view as baseTable so the baseline measures the " +
-            "same data the codebooks describe.")
-        raw
-      }
-      val base = baseRaw
-        .filter(col(meta.vecCol).isNotNull)
+    appended(spark, indexPath, tablePath, deltaPath, "pq") { meta =>
+      val cents = loadCentroids(spark, indexPath)
+      val v = delta.filter(col(meta.vecCol).isNotNull)
         .select(col(meta.idCol).as("id"),
           col(meta.vecCol).cast("array<double>").as("v"))
-      val baseBest = element_at(Similarity.cellRank(col("v"), cents), 1)
-      driftCheck(deltaPath, deltaStats.getDouble(1), driftFactor,
-        baseline = base,
-        distCol = Similarity.dot(col("v"), col("v")) + baseBest.getField("cdist"),
-        dims = meta.dims, maxDriftSample = maxDriftSample,
-        noRowsMsg = s"table $tablePath has no vector rows — rebuild with " +
-          "AnnIndex.writePqIndex before appending",
-        rebuildHint = "rebuild with AnnIndex.writePqIndex")
-      // codebooks load only AFTER the guards: a refused append stays
-      // metadata-cheap (the m·ksub·subdim literal trees are the
-      // encode step's cost, not the refusal path's)
-      val bookRows = spark.read.parquet(s"$indexPath/codebooks")
-        .orderBy("j", "c").collect()
-      val booksFlat: Array[Double] = bookRows.flatMap(_.getSeq[Double](2))
-      val cn2Flat: Array[Double] = bookRows.map(_.getSeq[Double](2).map(x => x * x).sum)
-      graft.functions.Registry.ensure(spark)
-      val booksLit = lit(booksFlat)
-      val cn2Lit = lit(cn2Flat)
-      dropStamp(spark, indexPath)
-      assigned
-        .withColumn("codes",
-          call_function("pq_encode", col("v"), booksLit, lit(meta.m), lit(meta.ksub)))
-        .withColumn("rn",
-          sqrt(call_function("pq_cn2", col("codes"), cn2Lit, lit(meta.ksub))))
-        .filter(col("rn") > 0)
-        .select(col("id"), col("codes"), col("rn"), col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
-    } finally assigned.unpersist(blocking = false)
-    sealAppend(spark, indexPath, deltaPath, deltaFpAtStart, meta)
+      val best = element_at(Similarity.cellRank(col("v"), cents), 1)
+      val assigned = v
+        .select(col("id"), col("v"), best.getField("ci").as("cell"),
+          (Similarity.dot(col("v"), col("v")) + best.getField("cdist")).as("_sqdist"))
+        .persist()
+      try {
+        val deltaStats = assigned.agg(count(lit(1)).as("n"),
+          avg(col("_sqdist")).as("d")).collect().head
+        require(deltaStats.getLong(0) > 0,
+          s"delta table $deltaPath has no non-null vectors — nothing to append")
+        // baseline from the stamped base TABLE (pq codes carry no float
+        // vectors); `baseTable` lets the caller pass the same adapted
+        // view the writer fitted on — the raw read is the fallback and
+        // ASSUMES the files carry meta.idCol/meta.vecCol under their
+        // stored names and types (writePqIndex may have fitted on a
+        // schema-ADAPTED view; an adapted table must pass `baseTable`
+        // or the check below refuses loudly instead of throwing an
+        // unresolved-column error mid-plan — r14 advisory)
+        val baseRaw = Option(baseTable).getOrElse {
+          val raw = spark.read.parquet(tablePath)
+          // resolver semantics, not String ==: Spark's analyzer resolves
+          // column names case-insensitively by default, so an index
+          // fitted as "Embedding" over files storing "embedding" works —
+          // the guard must not refuse what the plan would resolve
+          val resolver = spark.sessionState.analyzer.resolver
+          val missing = Seq(meta.idCol, meta.vecCol)
+            .filterNot(n => raw.columns.exists(c => resolver(c, n)))
+          if (missing.nonEmpty) throw new IllegalStateException(
+            s"appendPqIndex's drift baseline read $tablePath directly but the " +
+              s"files lack column(s) ${missing.mkString("'", "', '", "'")} the " +
+              "index was fitted on — the index was built over a schema-adapted " +
+              "view; pass that view as baseTable so the baseline measures the " +
+              "same data the codebooks describe.")
+          raw
+        }
+        val base = baseRaw
+          .filter(col(meta.vecCol).isNotNull)
+          .select(col(meta.idCol).as("id"),
+            col(meta.vecCol).cast("array<double>").as("v"))
+        val baseBest = element_at(Similarity.cellRank(col("v"), cents), 1)
+        driftCheck(deltaPath, deltaStats.getDouble(1), driftFactor,
+          baseline = base,
+          distCol = Similarity.dot(col("v"), col("v")) + baseBest.getField("cdist"),
+          dims = meta.dims, maxDriftSample = maxDriftSample,
+          noRowsMsg = s"table $tablePath has no vector rows — rebuild with " +
+            "AnnIndex.writePqIndex before appending",
+          rebuildHint = "rebuild with AnnIndex.writePqIndex")
+        // codebooks load only AFTER the guards: a refused append stays
+        // metadata-cheap (the m·ksub·subdim literal trees are the
+        // encode step's cost, not the refusal path's)
+        val bookRows = spark.read.parquet(s"$indexPath/codebooks")
+          .orderBy("j", "c").collect()
+        val booksFlat: Array[Double] = bookRows.flatMap(_.getSeq[Double](2))
+        val cn2Flat: Array[Double] = bookRows.map(_.getSeq[Double](2).map(x => x * x).sum)
+        graft.functions.Registry.ensure(spark)
+        val booksLit = lit(booksFlat)
+        val cn2Lit = lit(cn2Flat)
+        stamp.drop(spark, indexPath)
+        assigned
+          .withColumn("codes",
+            call_function("pq_encode", col("v"), booksLit, lit(meta.m), lit(meta.ksub)))
+          .withColumn("rn",
+            sqrt(call_function("pq_cn2", col("codes"), cn2Lit, lit(meta.ksub))))
+          .filter(col("rn") > 0)
+          .select(col("id"), col("codes"), col("rn"), col("cell"))
+          .write.mode("append").partitionBy("cell").parquet(s"$indexPath/codes")
+      } finally assigned.unpersist(blocking = false)
+    }
   }
 
   /**
@@ -821,8 +693,8 @@ object AnnIndex {
   def writeBinaryIndex(spark: SparkSession, table: DataFrame, tablePath: String,
                        indexPath: String, idCol: String, vecCol: String,
                        dims: Int): Unit = {
-    dropStamp(spark, indexPath)
-    val fp = fpWindow(spark, tablePath) {
+    stamp.drop(spark, indexPath)
+    val (fp, _) = stamp.fitWindow(spark, tablePath, "build") { _ =>
       table.filter(col(vecCol).isNotNull)
         .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
         .select(col("id"), Similarity.signPack(col("v"), dims).as("bits"))
@@ -845,20 +717,19 @@ object AnnIndex {
    */
   def appendBinaryIndex(spark: SparkSession, delta: DataFrame, deltaPath: String,
                         indexPath: String, tablePath: String): Unit = {
-    val meta = appendGuard(spark, indexPath, tablePath, deltaPath, "binary")
-    val deltaFpAtStart = Layout.tableFingerprint(spark, deltaPath)
-    val bits = delta.filter(col(meta.vecCol).isNotNull)
-      .select(col(meta.idCol).as("id"),
-        col(meta.vecCol).cast("array<double>").as("v"))
-      .select(col("id"), Similarity.signPack(col("v"), meta.dims).as("bits"))
-      .persist()
-    try {
-      require(bits.count() > 0,
-        s"delta table $deltaPath has no non-null vectors — nothing to append")
-      dropStamp(spark, indexPath)
-      bits.write.mode("append").parquet(s"$indexPath/codes")
-    } finally bits.unpersist(blocking = false)
-    sealAppend(spark, indexPath, deltaPath, deltaFpAtStart, meta)
+    appended(spark, indexPath, tablePath, deltaPath, "binary") { meta =>
+      val bits = delta.filter(col(meta.vecCol).isNotNull)
+        .select(col(meta.idCol).as("id"),
+          col(meta.vecCol).cast("array<double>").as("v"))
+        .select(col("id"), Similarity.signPack(col("v"), meta.dims).as("bits"))
+        .persist()
+      try {
+        require(bits.count() > 0,
+          s"delta table $deltaPath has no non-null vectors — nothing to append")
+        stamp.drop(spark, indexPath)
+        bits.write.mode("append").parquet(s"$indexPath/codes")
+      } finally bits.unpersist(blocking = false)
+    }
   }
 
   /**
@@ -878,9 +749,9 @@ object AnnIndex {
   def writeLshIndex(spark: SparkSession, table: DataFrame, tablePath: String,
                     indexPath: String, idCol: String, vecCol: String,
                     dims: Int, planes: Int = 8, tables: Int = 4): Unit = {
-    dropStamp(spark, indexPath)
+    stamp.drop(spark, indexPath)
     graft.functions.Registry.ensure(spark)
-    val fp = fpWindow(spark, tablePath) {
+    val (fp, _) = stamp.fitWindow(spark, tablePath, "build") { _ =>
       table.filter(col(vecCol).isNotNull)
         .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
         .withColumn("bs", call_function("lsh_buckets",
@@ -974,24 +845,23 @@ object AnnIndex {
    */
   def appendLshIndex(spark: SparkSession, delta: DataFrame, deltaPath: String,
                      indexPath: String, tablePath: String): Unit = {
-    val meta = appendGuard(spark, indexPath, tablePath, deltaPath, "lsh")
-    val deltaFpAtStart = Layout.tableFingerprint(spark, deltaPath)
-    graft.functions.Registry.ensure(spark)
-    val bs = delta.filter(col(meta.vecCol).isNotNull)
-      .select(col(meta.idCol).as("id"),
-        col(meta.vecCol).cast("array<double>").as("v"))
-      .withColumn("bs", call_function("lsh_buckets",
-        col("v"), lit(meta.dims), lit(meta.planes), lit(meta.tables)))
-      .select(col("id") +:
-        (0 until meta.tables).map(t => col("bs").getItem(t).as(s"b_$t")): _*)
-      .persist()
-    try {
-      require(bs.count() > 0,
-        s"delta table $deltaPath has no non-null vectors — nothing to append")
-      dropStamp(spark, indexPath)
-      bs.write.mode("append").parquet(s"$indexPath/codes")
-    } finally bs.unpersist(blocking = false)
-    sealAppend(spark, indexPath, deltaPath, deltaFpAtStart, meta)
+    appended(spark, indexPath, tablePath, deltaPath, "lsh") { meta =>
+      graft.functions.Registry.ensure(spark)
+      val bs = delta.filter(col(meta.vecCol).isNotNull)
+        .select(col(meta.idCol).as("id"),
+          col(meta.vecCol).cast("array<double>").as("v"))
+        .withColumn("bs", call_function("lsh_buckets",
+          col("v"), lit(meta.dims), lit(meta.planes), lit(meta.tables)))
+        .select(col("id") +:
+          (0 until meta.tables).map(t => col("bs").getItem(t).as(s"b_$t")): _*)
+        .persist()
+      try {
+        require(bs.count() > 0,
+          s"delta table $deltaPath has no non-null vectors — nothing to append")
+        stamp.drop(spark, indexPath)
+        bs.write.mode("append").parquet(s"$indexPath/codes")
+      } finally bs.unpersist(blocking = false)
+    }
   }
 
   /**

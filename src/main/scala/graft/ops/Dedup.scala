@@ -392,16 +392,6 @@ object Dedup {
       .withColumnRenamed("_rank", "rank")
   }
 
-  /** Go-parity composite dedup key string (processor.go:283-291). */
-  def compositeKey(df: DataFrame, keys: Seq[String]): Column = {
-    val parts = keys.sorted.map { k =>
-      val c = df(k)
-      val dt = df.schema.fields.find(_.name == k).map(_.dataType).getOrElse(StringType)
-      coalesce(GoValues.goCanonicalString(c, dt), lit("<ETL_NIL_OR_MISSING>"))
-    }
-    concat_ws("||", parts: _*)
-  }
-
   // ------------------------------------------------------------------
   // Near-duplicate detection (LLM-pipeline operators)
   // ------------------------------------------------------------------

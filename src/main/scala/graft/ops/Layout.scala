@@ -540,7 +540,7 @@ object Layout {
   /** The sha-256 over a walk's sorted (rel path, length, mtime)
     * entries — split from [[tableFingerprint]] so a caller that
     * already walked ([[writeBloomIndex]]) does not list again. */
-  private def fingerprintOf(walk: Seq[(String, org.apache.hadoop.fs.FileStatus)]): String = {
+  private[ops] def fingerprintOf(walk: Seq[(String, org.apache.hadoop.fs.FileStatus)]): String = {
     val entries = walk.map { case (rel, s) =>
       s"$rel:${s.getLen}:${s.getModificationTime}"
     }
@@ -597,7 +597,7 @@ object Layout {
     * profile (r15 bloom decomposition). Hidden files AND hidden
     * directories (`_`/`.` prefix: _SUCCESS, .crc, staging dirs) are
     * skipped, directories before descent. */
-  private def walkDataFiles(spark: org.apache.spark.sql.SparkSession,
+  private[ops] def walkDataFiles(spark: org.apache.spark.sql.SparkSession,
                             tablePath: String): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     val hPath = new org.apache.hadoop.fs.Path(tablePath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -621,56 +621,37 @@ object Layout {
   }
 
   /** The self-describing coherence stamp written beside a bloom index
-    * (`_graft_index_meta.json`, hidden from the parquet reader): enough
-    * to VERIFY the index against the live table ([[bloomPrunedRead]])
-    * and to REBUILD it without external knowledge ([[compactFiles]]).
-    * `itemsPerFile`/`fpp` are the caller's DECLARED params (what a
-    * rebuild re-runs with — the clamp re-derives); `effItemsPerFile`/
-    * `effFpp` describe the sketch that was ACTUALLY built after the
-    * [[effSketchParams]] clamps, so the stamp is honest for auditing
-    * (-1 on stamps written before the eff fields existed). */
+    * (the `bloom` [[StampedArtifact]], hidden from the parquet reader):
+    * enough to VERIFY the index against the live table
+    * ([[bloomPrunedRead]]) and to REBUILD it without external knowledge
+    * ([[compactFiles]]). `itemsPerFile`/`fpp` are the caller's DECLARED
+    * params (what a rebuild re-runs with — the clamp re-derives);
+    * `effItemsPerFile`/`effFpp` describe the sketch that was ACTUALLY
+    * built after the [[effSketchParams]] clamps, so the stamp is honest
+    * for auditing (-1 on stamps written before the eff fields existed). */
   case class BloomIndexMeta(column: String, itemsPerFile: Long,
                             fpp: Double, tableFp: String,
                             effItemsPerFile: Long = -1L,
                             effFpp: Double = -1.0)
 
-  private val bloomMetaName = "_graft_index_meta.json"
+  private val bloomStamp = StampedArtifact.bloom
 
-  private def writeBloomIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                                  indexPath: org.apache.hadoop.fs.Path,
-                                  meta: BloomIndexMeta): Unit = {
-    val json =
-      s"""{"column":"${StampJson.esc(meta.column)}","items_per_file":${meta.itemsPerFile},""" +
-        s""""fpp":${meta.fpp},"eff_items_per_file":${meta.effItemsPerFile},""" +
-        s""""eff_fpp":${meta.effFpp},"table_fp":"${StampJson.esc(meta.tableFp)}"}"""
-    val out = fs.create(new org.apache.hadoop.fs.Path(indexPath, bloomMetaName), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def parseBloomIndexMeta(text: String): Option[BloomIndexMeta] = for {
+    c <- StampJson.strField(text, "column")
+    n <- StampJson.dblField(text, "items_per_file")
+    f <- StampJson.dblField(text, "fpp")
+    fp <- StampJson.strField(text, "table_fp")
+  } yield BloomIndexMeta(c, n.toLong, f, fp,
+    // optional: stamps written before r16 carry no eff fields
+    effItemsPerFile = StampJson.dblField(text, "eff_items_per_file")
+      .map(_.toLong).getOrElse(-1L),
+    effFpp = StampJson.dblField(text, "eff_fpp").getOrElse(-1.0))
 
   /** Read an index's coherence stamp; None if the sidecar is absent
-    * (an index not produced by [[writeBloomIndex]]). Fixed four-field
-    * schema, so the parse is a deliberate micro-matcher — no JSON
-    * library dependency for a 4-field sidecar. */
+    * (an index not produced by [[writeBloomIndex]]) or unparseable. */
   def readBloomIndexMeta(fs: org.apache.hadoop.fs.FileSystem,
-                         indexPath: org.apache.hadoop.fs.Path): Option[BloomIndexMeta] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, bloomMetaName)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    for {
-      c <- StampJson.strField(text, "column")
-      n <- StampJson.dblField(text, "items_per_file")
-      f <- StampJson.dblField(text, "fpp")
-      fp <- StampJson.strField(text, "table_fp")
-    } yield BloomIndexMeta(c, n.toLong, f, fp,
-      // optional: stamps written before r16 carry no eff fields
-      effItemsPerFile = StampJson.dblField(text, "eff_items_per_file")
-        .map(_.toLong).getOrElse(-1L),
-      effFpp = StampJson.dblField(text, "eff_fpp").getOrElse(-1.0))
-  }
+                         indexPath: org.apache.hadoop.fs.Path): Option[BloomIndexMeta] =
+    bloomStamp.read(fs, indexPath).flatMap(parseBloomIndexMeta)
 
   /** Build [[bloomIndex]] and persist it as the table's side index,
     * stamped with the table's file-listing fingerprint so readers can
@@ -679,38 +660,32 @@ object Layout {
   def writeBloomIndex(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                       indexPath: String, column: String,
                       itemsPerFile: Long = 1000000L, fpp: Double = 0.01): Unit = {
-    // ONE walk serves the start fingerprint, the output-file sizing,
-    // and the sketch sizing (a redundant recursive listing is real
-    // driver time at 1M files — r15 review); likewise ONE
-    // effSketchParams serves the build and the stamp (its footer walk
-    // is metadata I/O worth not repeating). The end fingerprint
-    // re-walks by design, that is the fit window.
-    val walkAtStart = walkDataFiles(spark, tablePath)
-    val fpAtStart = fingerprintOf(walkAtStart)
-    val (effItems, effFpp) = effSketchParams(spark, walkAtStart, itemsPerFile, fpp)
-    // the sidecar has ONE row per data file — without a bound the
-    // groupBy sprays those rows across shuffle-partition-count
-    // near-empty files and every probe's index scan is
-    // file-count-shaped (r14 scale probe: the probe leg grew 2.6× at
-    // 10× on listing/open overhead alone). One index file per ~64 data
-    // files keeps the probe scan flat, and a 1M-file 100 TB table
-    // still gets a healthy ~16k-way index scan.
-    val nIdxFiles = (walkAtStart.size / 64 + 1).min(10000)
-    bloomIndexFrom(spark, tablePath, column, effItems, effFpp)
-      .coalesce(nIdxFiles)
-      .write.mode("overwrite").parquet(indexPath)
-    val fpAtEnd = tableFingerprint(spark, tablePath)
-    if (fpAtEnd != fpAtStart) throw new IllegalStateException(
-      s"table $tablePath changed WHILE the bloom index build was running " +
-        s"(listing fingerprint ${fpAtStart.take(12)}… at start vs " +
-        s"${fpAtEnd.take(12)}… now) — no stamp was written; re-run " +
-        "Layout.writeBloomIndex on a quiet table.")
-    val hIdx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // ONE walk (the fit window's first listing) serves the start
+    // fingerprint, the output-file sizing, and the sketch sizing (a
+    // redundant recursive listing is real driver time at 1M files —
+    // r15 review); likewise ONE effSketchParams serves the build and
+    // the stamp (its footer walk is metadata I/O worth not repeating).
+    // The overwrite of `indexPath` removes any earlier stamp first.
+    val (fp, (effItems, effFpp)) = bloomStamp.fitWindow(spark, tablePath, "build") { walk =>
+      val eff = effSketchParams(spark, walk, itemsPerFile, fpp)
+      // the sidecar has ONE row per data file — without a bound the
+      // groupBy sprays those rows across shuffle-partition-count
+      // near-empty files and every probe's index scan is
+      // file-count-shaped (r14 scale probe: the probe leg grew 2.6× at
+      // 10× on listing/open overhead alone). One index file per ~64 data
+      // files keeps the probe scan flat, and a 1M-file 100 TB table
+      // still gets a healthy ~16k-way index scan.
+      val nIdxFiles = (walk.size / 64 + 1).min(10000)
+      bloomIndexFrom(spark, tablePath, column, eff._1, eff._2)
+        .coalesce(nIdxFiles)
+        .write.mode("overwrite").parquet(indexPath)
+      eff
+    }
     // stamp BOTH the declared params (what a rebuild re-runs with) and
     // the effective clamped sizing the sketch was actually built at
-    writeBloomIndexMeta(fs, hIdx,
-      BloomIndexMeta(column, itemsPerFile, fpp, fpAtStart, effItems, effFpp))
+    bloomStamp.write(spark, indexPath, StampJson.obj("column" -> column,
+      "items_per_file" -> itemsPerFile, "fpp" -> fpp,
+      "eff_items_per_file" -> effItems, "eff_fpp" -> effFpp, "table_fp" -> fp))
   }
 
   /**
@@ -721,24 +696,17 @@ object Layout {
    * asks for, or (c) is STALE — the table's data files changed since
    * the build (compaction, overwrite), so the file-granular sketches
    * name files that no longer exist or miss files that now do.
+   * [[compactFiles]] rebuilds stamped sibling indexes automatically.
    */
   def verifyBloomIndex(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                        indexPath: String, column: String): BloomIndexMeta = {
-    val hIdx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = readBloomIndexMeta(fs, hIdx).getOrElse(throw new IllegalStateException(
-      s"bloom index at $indexPath has no $bloomMetaName coherence stamp — " +
-        s"rebuild it with Layout.writeBloomIndex($tablePath, $indexPath, ...)"))
+    val meta = bloomStamp.load(spark, indexPath, tablePath, "Layout.writeBloomIndex")(
+      parseBloomIndexMeta)
     if (meta.column != column) throw new IllegalStateException(
       s"bloom index at $indexPath indexes column '${meta.column}', not '$column' — " +
         "wrong index for this lookup")
-    val live = tableFingerprint(spark, tablePath)
-    if (live != meta.tableFp) throw new IllegalStateException(
-      s"bloom index at $indexPath is STALE: the data files of $tablePath changed " +
-        s"since the index was built (listing fingerprint ${meta.tableFp.take(12)}… " +
-        s"at build vs ${live.take(12)}… now — a compaction or rewrite). Rebuild " +
-        "with Layout.writeBloomIndex; Layout.compactFiles rebuilds stamped " +
-        "sibling indexes automatically.")
+    bloomStamp.checkFresh(spark, indexPath, tablePath, meta.tableFp, Nil,
+      "Layout.writeBloomIndex")
     meta
   }
 

@@ -1,9 +1,9 @@
 package graft.ops
 
 /**
- * Shared micro-serializer for the coherence stamps the persisted
- * artifacts carry ([[Layout]] bloom sidecar, [[AnnIndex]], [[LmIndex]],
- * [[TokenizerIndex]]) — a handful of fixed string/number fields, which
+ * Shared micro-serializer for the coherence stamps of the
+ * [[StampedArtifact]] protocol (bloom side index, ANN index, mkn3 LM,
+ * tokenizer) — a handful of fixed string/number fields, which
  * is why the stamp family deliberately carries no JSON library. The one
  * thing raw interpolation got wrong (r13 advisory) was ESCAPING: a
  * column name containing a quote or backslash produced malformed JSON
@@ -12,6 +12,19 @@ package graft.ops
  * escaped grammar and unescape — round-trip exact for any string.
  */
 private[graft] object StampJson {
+
+  /** One stamp object, fields in the given order: strings quote and
+    * escape, a `Seq` of (path, fp) pairs is the appended-parts list,
+    * anything else is a bare number. */
+  def obj(fields: (String, Any)*): String = fields.map { case (k, v) =>
+    val body = v match {
+      case s: String => "\"" + esc(s) + "\""
+      case parts: Seq[_] => parts.map { case (p: String, f: String) =>
+        s"""{"path":"${esc(p)}","fp":"${esc(f)}"}""" }.mkString("[", ",", "]")
+      case n => n.toString
+    }
+    "\"" + k + "\":" + body
+  }.mkString("{", ",", "}")
 
   /** JSON string-body escape: backslash, quote, and control chars. */
   def esc(s: String): String = {

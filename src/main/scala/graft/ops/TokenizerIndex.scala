@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
  * in-session faces refit per run, which re-pays the corpus-volume
  * word-frequency shuffle (and the unigram EM) every time.
  *
- * Same stamped-coherence contract as the bloom side-index /
- * [[AnnIndex]] / [[LmIndex]]: the model table (merge ranks for the
+ * The [[StampedArtifact]] protocol, shared with the bloom side index,
+ * [[AnnIndex]] and [[LmIndex]]: the model table (merge ranks for the
  * BPE pair, the vocabulary for WordPiece, (piece, logprob) for
  * unigram) is persisted beside a stamp carrying the train table's
  * file-listing fingerprint plus the fit parameters; the stamp is
@@ -37,36 +37,8 @@ object TokenizerIndex {
   case class TokIndexMeta(family: String, textCol: String, param: Int,
                           tableFp: String, fitFertMicro: Long = -1L)
 
-  private val metaName = "_graft_tok_meta.json"
+  private val stamp = StampedArtifact.tokenizer
   private val families = Set("bpe", "bbpe", "wordpiece", "unigram")
-
-  private def fsFor(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def writeMeta(spark: SparkSession, indexPath: String,
-                        meta: TokIndexMeta): Unit = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val json = s"""{"family":"${StampJson.esc(meta.family)}",""" +
-      s""""text_col":"${StampJson.esc(meta.textCol)}",""" +
-      s""""param":${meta.param},"fit_fert_micro":${meta.fitFertMicro},""" +
-      s""""table_fp":"${StampJson.esc(meta.tableFp)}"}"""
-    val out = fs.create(new org.apache.hadoop.fs.Path(p, metaName), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Raw stamp text; None if the stamp FILE is absent (distinct from
-    * present-but-unparseable, which [[verify]] reports separately). */
-  private def stampText(spark: SparkSession, indexPath: String): Option[String] = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val mp = new org.apache.hadoop.fs.Path(p, metaName)
-    if (!fs.exists(mp)) return None
-    val in = fs.open(mp)
-    Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close())
-  }
 
   private def parseMeta(text: String): Option[TokIndexMeta] = for {
     fam <- StampJson.strField(text, "family")
@@ -79,35 +51,18 @@ object TokenizerIndex {
       .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(-1L))
 
   def readMeta(spark: SparkSession, indexPath: String): Option[TokIndexMeta] =
-    stampText(spark, indexPath).flatMap(parseMeta)
+    stamp.read(spark, indexPath).flatMap(parseMeta)
 
   def verify(spark: SparkSession, trainPath: String, indexPath: String,
              family: String, textCol: String): TokIndexMeta = {
-    val text = stampText(spark, indexPath).getOrElse(throw new IllegalStateException(
-      s"tokenizer artifact at $indexPath has no $metaName coherence stamp — " +
-        s"rebuild it with TokenizerIndex.write($trainPath, $indexPath, ...)"))
-    val meta = parseMeta(text).getOrElse(throw new IllegalStateException(
-      s"tokenizer artifact at $indexPath has a $metaName stamp that does not " +
-        s"parse (truncated write or a foreign writer) — rebuild it with " +
-        s"TokenizerIndex.write($trainPath, $indexPath, ...)"))
+    val meta = stamp.load(spark, indexPath, trainPath, "TokenizerIndex.write")(parseMeta)
     if (meta.family != family || meta.textCol != textCol) throw new IllegalStateException(
       s"tokenizer artifact at $indexPath is (family '${meta.family}', textCol " +
         s"'${meta.textCol}'), not (family '$family', textCol '$textCol') — " +
         "wrong model for this encoder")
-    val live = Layout.tableFingerprint(spark, trainPath)
-    if (live != meta.tableFp) throw new IllegalStateException(
-      s"tokenizer artifact at $indexPath is STALE: the data files of $trainPath " +
-        s"changed since the fit (listing fingerprint ${meta.tableFp.take(12)}… at " +
-        s"fit vs ${live.take(12)}… now). The persisted merges/vocabulary describe " +
-        "a corpus that no longer exists — rebuild with TokenizerIndex.write.")
+    stamp.checkFresh(spark, indexPath, trainPath, meta.tableFp, Nil,
+      "TokenizerIndex.write")
     meta
-  }
-
-  private def dropStamp(spark: SparkSession, indexPath: String): Unit = {
-    val (fs, p) = fsFor(spark, indexPath)
-    val mp = new org.apache.hadoop.fs.Path(p, metaName)
-    if (fs.exists(mp) && !fs.delete(mp, false)) throw new java.io.IOException(
-      s"could not remove the existing tokenizer artifact stamp $mp before rebuild")
   }
 
   /**
@@ -123,54 +78,47 @@ object TokenizerIndex {
             family: String, textCol: String, param: Int): Unit = {
     require(families(family),
       s"tokenizer family '$family' — expected one of ${families.toSeq.sorted.mkString(" | ")}")
-    dropStamp(spark, indexPath)
-    // fingerprint BEFORE the fit reads a byte, re-checked before the
-    // stamp lands (r13 advisory): a table that changes mid-fit must not
-    // end up certified coherent against data the trainer never saw
-    val fpAtStart = Layout.tableFingerprint(spark, trainPath)
-    val train = spark.read.parquet(trainPath)
-    import spark.implicits._
-    // each branch persists the model AND returns the per-family
-    // fertility report over the IN-MEMORY model (merge tables are
-    // numMerges-bounded; vocab/logprob maps are already driver-local),
-    // so the fit-time baseline costs one bounded-sample pass, not a
-    // verified reload of the artifact just written
-    val fertOf: DataFrame => DataFrame = family match {
-      case "bpe" =>
-        Tokenizer.bpeTrain(train, textCol, numMerges = param)
-          .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
-        // read the numMerges-bounded table BACK from the written model
-        // (collecting the training frame would re-run the corpus fit)
-        val merges = writtenMerges(spark, indexPath)
-        df => Tokenizer.bpeFertility(df, textCol, "_fert_src", merges,
-          nativeEncode = true)
-      case "bbpe" =>
-        Tokenizer.bbpeTrain(train, textCol, numMerges = param)
-          .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
-        val merges = writtenMerges(spark, indexPath)
-        df => Tokenizer.bbpeFertility(df, textCol, "_fert_src", merges,
-          nativeEncode = true)
-      case "wordpiece" =>
-        val vocab = Tokenizer.wordpieceVocabFrom(train, textCol, numMerges = param)
-        vocab.toSeq.sorted.toDF("symbol")
-          .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
-        df => Tokenizer.wordpieceFertility(df, textCol, "_fert_src", vocab)
-      case "unigram" =>
-        val vocab = Tokenizer.unigramTrainLocalFrom(train, textCol, vocabSize = param)
-        vocab.toSeq.sortBy(_._1).toDF("piece", "logprob")
-          .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
-        df => Tokenizer.unigramFertility(df, textCol, "_fert_src", vocab)
+    stamp.drop(spark, indexPath)
+    val (fp, fitFert) = stamp.fitWindow(spark, trainPath, "fit") { _ =>
+      val train = spark.read.parquet(trainPath)
+      import spark.implicits._
+      // each branch persists the model AND returns the per-family
+      // fertility report over the IN-MEMORY model (merge tables are
+      // numMerges-bounded; vocab/logprob maps are already driver-local),
+      // so the fit-time baseline costs one bounded-sample pass, not a
+      // verified reload of the artifact just written
+      val fertOf: DataFrame => DataFrame = family match {
+        case "bpe" =>
+          Tokenizer.bpeTrain(train, textCol, numMerges = param)
+            .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
+          // read the numMerges-bounded table BACK from the written model
+          // (collecting the training frame would re-run the corpus fit)
+          val merges = writtenMerges(spark, indexPath)
+          df => Tokenizer.bpeFertility(df, textCol, "_fert_src", merges,
+            nativeEncode = true)
+        case "bbpe" =>
+          Tokenizer.bbpeTrain(train, textCol, numMerges = param)
+            .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
+          val merges = writtenMerges(spark, indexPath)
+          df => Tokenizer.bbpeFertility(df, textCol, "_fert_src", merges,
+            nativeEncode = true)
+        case "wordpiece" =>
+          val vocab = Tokenizer.wordpieceVocabFrom(train, textCol, numMerges = param)
+          vocab.toSeq.sorted.toDF("symbol")
+            .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
+          df => Tokenizer.wordpieceFertility(df, textCol, "_fert_src", vocab)
+        case "unigram" =>
+          val vocab = Tokenizer.unigramTrainLocalFrom(train, textCol, vocabSize = param)
+          vocab.toSeq.sortBy(_._1).toDF("piece", "logprob")
+            .repartition(1).write.mode("overwrite").parquet(s"$indexPath/model")
+          df => Tokenizer.unigramFertility(df, textCol, "_fert_src", vocab)
+      }
+      corpusFertMicro(fertOf(
+        fertilitySample(train, textCol).withColumn("_fert_src", lit("all"))))
     }
-    val fitFert = corpusFertMicro(fertOf(
-      fertilitySample(train, textCol).withColumn("_fert_src", lit("all"))))
-    val fpAtEnd = Layout.tableFingerprint(spark, trainPath)
-    if (fpAtEnd != fpAtStart) throw new IllegalStateException(
-      s"train table $trainPath changed WHILE the tokenizer fit was running " +
-        s"(listing fingerprint ${fpAtStart.take(12)}… at start vs " +
-        s"${fpAtEnd.take(12)}… now) — no stamp was written; re-run " +
-        "TokenizerIndex.write on a quiet table.")
-    writeMeta(spark, indexPath, TokIndexMeta(family, textCol, param, fpAtStart,
-      fitFertMicro = fitFert))
+    stamp.write(spark, indexPath, StampJson.obj("family" -> family,
+      "text_col" -> textCol, "param" -> param, "fit_fert_micro" -> fitFert,
+      "table_fp" -> fp))
   }
 
   /** Rank-ordered merge table read back from a just-written model

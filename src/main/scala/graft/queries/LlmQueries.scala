@@ -792,7 +792,7 @@ object LlmQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val tbl = s"$dir/documents.parquet"
-        val idx = s"/tmp/graft_tok_idx_bpe_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("tok_idx_")}/idx"
         graft.ops.TokenizerIndex.write(s, tbl, idx, "bpe", "text", param = 1000)
         val loaded = graft.ops.TokenizerIndex.fertilityIndexed(s, docs, "bpe",
             "text", "source", tbl, idx)
@@ -997,7 +997,7 @@ object LlmQueries {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val tbl = s"$dir/embeddings.parquet"
-        val idx = s"/tmp/graft_ann_idx_ivf_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("ann_persist_")}/idx"
         graft.ops.AnnIndex.writeIvfIndex(s, e, tbl, idx, "vec_id", "embedding",
           dims = 64, nlist = 16)
         val queries = e.filter(col("vec_id") % 50 === 0)
@@ -2828,7 +2828,7 @@ object LlmQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val tbl = s"$dir/documents.parquet"
-        val idx = s"/tmp/graft_lm_idx_mkn_${math.abs(dir.hashCode)}"
+        val idx = s"${graft.ops.CachedRelations.tempDir("mkn_idx_")}/idx"
         graft.ops.LmIndex.writeMknIndex(s, tbl, idx, "doc_id", "text")
         val loaded = graft.ops.LmIndex.scoreMknIndexed(s, docs, "doc_id", "text", tbl, idx)
           .select(col("doc_id"), col("n_tokens").as("l_nt"),

@@ -60,6 +60,19 @@ class StreamingPlaybookSpec extends SparkTestBase with graft.TempDirs {
       |""".stripMargin)
   }
 
+  test("streaming min/max dedup: a quietPeriod with a month part is rejected at load") {
+    def load(quiet: String) = PlaybookLoader.fromString(s"""
+      |source: {type: parquet, file: /tmp/in.parquet, streaming: true}
+      |destination: {type: parquet, file: /tmp/out, checkpoint: /tmp/ck}
+      |deduplication: {keys: [k], strategy: max, strategyField: v, tsCol: ts, quietPeriod: $quiet}
+      |errorHandling: {mode: skip}
+      |""".stripMargin)
+    val e = intercept[IllegalArgumentException](load("1 month"))
+    assert(e.getMessage.contains("quietPeriod '1 month' has a month or year part"),
+      e.getMessage)
+    load("30 days")
+  }
+
   test("row-local r11 ops run on a stream: gopher filter -> pii redact -> chunk") {
     val tmp = tempDir("graft_stream_rowlocal").toString
     val in = s"$tmp/in"

@@ -1,6 +1,6 @@
 package graft.io
 
-import graft.SparkTestBase
+import graft.{FailSwapRenameFs, SparkTestBase}
 import graft.config.{DestinationConfig, PlaybookLoader, SourceConfig}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -239,20 +239,4 @@ class AvroSpec extends SparkTestBase with graft.TempDirs {
     }
     assert(e2.getMessage.contains("not in parquet,orc,jsonl"))
   }
-}
-
-/** Local filesystem whose ONLY failure is the avro sink's final
-  * stage→destination swap (src inside a staging dir AND dst the final
-  * `swapfail.avro`), so the committer's own renames and the
-  * backup/restore renames pass through — isolates the one filesystem
-  * op the loss-window spec needs to break. Registered per-test via
-  * `fs.failswap.impl`; instantiated reflectively by Hadoop. */
-class FailSwapRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "failswap"
-  override def getUri: java.net.URI = java.net.URI.create("failswap:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean =
-    if (src.toString.contains(".spark-staging-") &&
-        dst.toString.endsWith("swapfail.avro")) false
-    else super.rename(src, dst)
 }
