@@ -168,11 +168,13 @@ private[graft] object StampedArtifact {
     // a leftover backup would swallow the move-aside (a rename onto an
     // existing directory moves INTO it)
     dirs.foreach(d => fs.delete(d.backup, true))
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Swap]
-    val landed = scala.collection.mutable.ArrayBuffer.empty[Swap]
+    val moved = scala.collection.mutable.Set.empty[Swap]
+    val landed = scala.collection.mutable.Set.empty[Swap]
     def fail(src: Path, dst: Path): Nothing = {
-      val restored = landed.reverse.forall(d => fs.rename(d.live, d.staged)) &&
-        moved.reverse.forall(d => fs.rename(d.backup, d.live))
+      // every directory is tried, even after one fails to go back
+      val restored = dirs.reverse.map { d =>
+        (!landed(d) || fs.rename(d.live, d.staged)) && (!moved(d) || fs.rename(d.backup, d.live))
+      }.forall(identity)
       val staged = dirs.map(_.staged).filter(fs.exists)
       throw new SwapFailed(
         s"rename $src -> $dst failed; the staged data is preserved at " +
