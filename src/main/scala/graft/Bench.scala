@@ -60,8 +60,7 @@ object Bench {
     // line; the field is the red flag).
     val failedQueries = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
+      val (ok, ms) = graft.tools.Profiler.timed {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           val first = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -74,7 +73,8 @@ object Bench {
         // window (the release is part of the query's honest cost, and a
         // leaked index would make pass 2 measure a different query)
         finally graft.ops.CachedRelations.releaseAll()
-      if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+      }
+      if (ok) Some(ms / 1e3) else None
     }
     // The surface is every registered query but the correctness
     // fixtures (`Q.benched = false`, each says why at its definition).

@@ -27,11 +27,8 @@ object RecallCheck {
 
   /** recall@k per production ANN path + |truth|. The persisted-index
     * paths build into a work dir that is deleted before this returns. */
-  def headline(spark: SparkSession, dir: String, k: Int = 3): (Map[String, Double], Int) = {
-    val work = java.nio.file.Files.createTempDirectory("graft_recall_")
-    try headlineIn(spark, dir, k, work.toString)
-    finally graft.io.Writers.deleteTree(work.toFile)
-  }
+  def headline(spark: SparkSession, dir: String, k: Int = 3): (Map[String, Double], Int) =
+    graft.io.Writers.withWorkDir("graft_recall_")(headlineIn(spark, dir, k, _))
 
   private def headlineIn(spark: SparkSession, dir: String, k: Int,
                          work: String): (Map[String, Double], Int) = {

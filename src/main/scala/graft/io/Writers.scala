@@ -113,13 +113,11 @@ object Writers {
   }
 
   /** Sorted headers, Go-stringified values, single file (csv.go:218-273). */
-  def writeCsv(df: DataFrame, path: String): Unit = {
-    val tmp = path + ".spark-tmp"
+  def writeCsv(df: DataFrame, path: String): Unit = landed(path) { tmp =>
     stringified(df).coalesce(1).write.mode("overwrite")
       .option("header", "true")
       .option("emptyValue", "")
       .csv(tmp)
-    moveSinglePart(tmp, path)
   }
 
   /**
@@ -135,10 +133,11 @@ object Writers {
     * number of data rows in it, counted while it was written. */
   final class StagedAppend private[Writers] (path: String, val rows: Long) {
     private val tmp = path + ".spark-tmp"
-    def commit(): Unit = withSinglePart(tmp) { part =>
+    def commit(): Unit = {
       val out = new java.io.FileOutputStream(path, /*append=*/ true)
-      try java.nio.file.Files.copy(part, out)
+      try java.nio.file.Files.copy(singlePart(tmp), out)
       finally out.close()
+      discard()
     }
     def discard(): Unit = deleteTree(new java.io.File(tmp))
   }
@@ -176,14 +175,13 @@ object Writers {
   /** Indented (2-space) JSON ARRAY file — the reference's shape
     * (json.go:51-87) — streamed via toLocalIterator (never a full
     * driver collect). */
-  def writeJsonArray(df: DataFrame, path: String): Unit = {
+  def writeJsonArray(df: DataFrame, path: String): Unit = landed(path) { tmp =>
     // Go's encoding/json marshals nil fields explicitly (json.go:51-87)
     val jsonCol = to_json(struct(df.columns.map(col).toIndexedSeq: _*),
       Map("ignoreNullFields" -> "false"))
     val it = df.select(jsonCol.as("j")).as[String](org.apache.spark.sql.Encoders.STRING)
       .toLocalIterator()
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      new java.io.FileOutputStream(path), "UTF-8"))
+    val w = utf8Writer(tmp)
     try {
       if (!it.hasNext) w.write("[]")
       else {
@@ -200,26 +198,23 @@ object Writers {
   }
 
   /** rootTag/recordTag XML, sorted string fields (xml.go:162-262). */
-  def writeXml(df: DataFrame, dest: DestinationConfig): Unit = {
-    val tmp = dest.file + ".spark-tmp"
+  def writeXml(df: DataFrame, dest: DestinationConfig): Unit = landed(dest.file) { tmp =>
     stringified(df).coalesce(1).write.mode("overwrite")
       .format("xml")
       .option("rootTag", dest.xmlRootTag.getOrElse("records"))
       .option("rowTag", dest.xmlRecordTag.getOrElse("record"))
       .save(tmp)
-    moveSinglePart(tmp, dest.file)
   }
 
   /** YAML sequence of maps, indent 2 (yaml.go:71-127). */
-  def writeYaml(df: DataFrame, path: String): Unit = {
+  def writeYaml(df: DataFrame, path: String): Unit = landed(path) { tmp =>
     val opts = new org.yaml.snakeyaml.DumperOptions
     opts.setDefaultFlowStyle(org.yaml.snakeyaml.DumperOptions.FlowStyle.BLOCK)
     opts.setIndent(2)
     val yaml = new org.yaml.snakeyaml.Yaml(opts)
     val names = df.columns
     val it = df.toLocalIterator()
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      new java.io.FileOutputStream(path), "UTF-8"))
+    val w = utf8Writer(tmp)
     try {
       var wrote = false
       while (it.hasNext) {
@@ -247,22 +242,39 @@ object Writers {
     case other => other
   }
 
-  /** Move the single part file of a one-partition write to `path`. */
-  private def moveSinglePart(tmpDir: String, path: String): Unit =
-    withSinglePart(tmpDir) { part =>
-      val target = new java.io.File(path)
-      if (target.exists()) target.delete()
-      java.nio.file.Files.move(part, target.toPath)
-    }
+  private def utf8Writer(path: String): java.io.Writer =
+    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      new java.io.FileOutputStream(path), "UTF-8"))
 
-  /** Hand the part file of a one-partition write in `tmpDir` to `use`,
-    * then delete `tmpDir`. */
-  private def withSinglePart(tmpDir: String)(use: java.nio.file.Path => Unit): Unit = {
-    val dir = new java.io.File(tmpDir)
-    val part = dir.listFiles().find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $tmpDir"))
-    use(part.toPath)
-    deleteTree(dir)
+  /** The single-file sinks' landing: `write` fills `<path>.spark-tmp`,
+    * either the file itself or a one-partition write directory, and
+    * that file or the directory's part file then replaces `path` in one
+    * atomic rename. Until then `path` holds its previous output, and
+    * the staging entry is deleted whether the write succeeds or fails. */
+  private def landed(path: String)(write: String => Unit): Unit = {
+    val tmp = path + ".spark-tmp"
+    try {
+      write(tmp)
+      val staged = if (new java.io.File(tmp).isDirectory) singlePart(tmp)
+        else java.nio.file.Paths.get(tmp)
+      java.nio.file.Files.move(staged, java.nio.file.Paths.get(path),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally deleteTree(new java.io.File(tmp))
+  }
+
+  /** The part file of a one-partition write in `dir`. */
+  private def singlePart(dir: String): java.nio.file.Path =
+    new java.io.File(dir).listFiles().find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $dir")).toPath
+
+  /** Runs `body` on a fresh work dir `<prefix>…` under `java.io.tmpdir`
+    * and deletes the dir with its contents afterwards. Not a
+    * [[graft.ops.CachedRelations.tempDir]]: callers that run
+    * `releaseAll` in between keep their inputs. */
+  private[graft] def withWorkDir[T](prefix: String)(body: String => T): T = {
+    val work = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(work.getAbsolutePath) finally deleteTree(work)
   }
 
   private[graft] def deleteTree(f: java.io.File): Unit = {

@@ -26,19 +26,43 @@ object Dedup {
    * Deterministic ingest-order key for `first`/`last` strategies.
    * `monotonically_increasing_id` alone is partition-index-dependent
    * and Spark packs file splits by size (not path order) — so we order
-   * by (file_path, block_start, within-partition id), which is total
-   * and stable for file-based scans regardless of split packing.
+   * by (file, block_start, within-partition id), which is total and
+   * stable for file-based scans regardless of split packing. The file
+   * is its ordinal in path order ([[fileOrdinal]]), not the path: the
+   * key rides through the dedup shuffle, and a path string would make
+   * the shuffle's size depend on where the data lives.
    */
   def withIngestSeq(df: DataFrame, col_name: String = "_seq"): DataFrame = {
     val hasMeta = scala.util.Try(df("_metadata")).isSuccess
     if (hasMeta)
       df.withColumn(col_name,
-        struct(col("_metadata.file_path").as("f"),
+        struct(fileOrdinal(df, col("_metadata.file_path")).as("f"),
                col("_metadata.file_block_start").as("b"),
                monotonically_increasing_id().as("i")))
     else
       df.withColumn(col_name, struct(lit("").as("f"), lit(0L).as("b"),
         monotonically_increasing_id().as("i")))
+  }
+
+  /** The rank of `path` (a `_metadata.file_path`) among `df`'s input
+    * files, in the byte order Spark compares the path strings in, so
+    * ordering by the rank orders as the path did. `inputFiles` is
+    * driver metadata (no job runs) but may render a URI differently
+    * (`file:///x` for `file:/x`); rebuilt from its parts, each renders
+    * as Hadoop's `Path` and so `_metadata.file_path` do. The lookup is a
+    * codegen'd binary search of the sorted literal; a path outside it
+    * fails the task. */
+  private def fileOrdinal(df: DataFrame, path: Column): Column = {
+    val files = df.inputFiles.map { f =>
+      val u = new java.net.URI(f)
+      org.apache.spark.unsafe.types.UTF8String.fromString(
+        new java.net.URI(u.getScheme, u.getAuthority, u.getPath, null, null).toString)
+    }.sorted.map(_.toString)
+    import org.apache.spark.sql.graft.ColumnBridge
+    val rank = ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.ArrayBinarySearch(
+      ColumnBridge.expression(typedLit(files.toSeq)), ColumnBridge.expression(path)))
+    when(rank < 0, raise_error(concat(path, lit(" is not an input file of the scan"))))
+      .otherwise(rank)
   }
 
   /** Keep the first/last record per key in ingest order. */

@@ -321,6 +321,22 @@ class IoSpec extends SparkTestBase with graft.TempDirs {
     assert(back.columns.sorted.toSeq == Seq("id", "name"))
   }
 
+  test("single-file sinks: a failed job leaves the previous output and no staging entry") {
+    import org.apache.spark.sql.functions._
+    // ids 2 and 3 form the second partition; 3 raises
+    val failing = spark.range(0, 4, 1, 2)
+      .select(when(col("id") === 3, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    val sinks = Seq("csv", "xml", "json", "yaml")
+    sinks.foreach { kind =>
+      val p = tmp(s".$kind")
+      val before = s"previous $kind output\n".getBytes("UTF-8")
+      Files.write(java.nio.file.Paths.get(p), before)
+      intercept[Exception](Writers.write(failing, DestinationConfig(kind, file = p)))
+      assert(Files.readAllBytes(java.nio.file.Paths.get(p)).sameElements(before), kind)
+      assert(!new java.io.File(p + ".spark-tmp").exists(), kind)
+    }
+  }
+
   test("csv: tab delimiter and header-only file -> 0 records") {
     val p = tmp(".csv")
     Files.writeString(java.nio.file.Paths.get(p), "a\tb\n1\t2\n")

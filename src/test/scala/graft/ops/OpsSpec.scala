@@ -563,6 +563,23 @@ class OpsSpec extends SparkTestBase with graft.TempDirs {
     assert(keptLast.head.getAs[String]("tag") == "f2-first")
   }
 
+  test("ingest-order file ordinals follow the rendered file_path, URL-encoding included") {
+    import spark.implicits._
+    val dir = tempDir("graft-seq-names").toString
+    // a space and a '%' render URL-encoded, so "a b" sorts after "a!b"
+    // as a rendered path and before it as a raw one
+    val names = Seq("a b", "a%b", "a!b", "a+b", "plain")
+    names.zipWithIndex.foreach { case (n, i) =>
+      Seq((i.toLong, "k")).toDF("id", "k").coalesce(1).write.parquet(s"$dir/$n")
+    }
+    val df = spark.read.parquet(names.map(n => s"$dir/$n"): _*)
+    val seq = Dedup.withIngestSeq(df)
+      .select(col("_metadata.file_path").as("p"), col("_seq.f").as("f"))
+    val byPath = seq.orderBy("p").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(byPath.map(_._2) == byPath.indices, byPath)
+    assert(byPath.exists(_._1.contains("a%20b")) && byPath.exists(_._1.contains("a%25b")), byPath)
+  }
+
   test("minhash near-dup pairs finds the planted near-duplicate only") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
